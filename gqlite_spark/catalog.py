@@ -30,9 +30,11 @@ import shutil
 from dataclasses import dataclass, field
 from typing import Any, Optional
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .errors import (GQLiteError, GraphNotExistError, GroupNotExistError,
                      KeyTypeMismatchError)
@@ -176,10 +178,14 @@ class Group:
         self._mat_cache: Optional[DataFrame] = None
         # ANN model cache for the {similar:} statement: (method, prop) →
         # quantizer state (IVF centroids / PQ codebooks / LSH offsets) —
-        # model-sized driver objects, rebuilt lazily after any mutation
+        # model-sized driver objects, rebuilt lazily after any mutation;
+        # plus the routed $near path's loaded index handles
+        # (("knn_ivf_idx"|"knn_ivfpq_idx", attr)), which local writes
+        # keep while the index stays attached (see _invalidate)
         self._ann_cache: dict = {}
-        # cached row count for cost-based routing decisions ($near exact
-        # vs ANN); invalidated with the other caches on any mutation
+        # cached BULK-side row count for cost-based routing decisions
+        # ($near exact vs ANN); row_count() adds the overlay size, so
+        # only bulk mutations invalidate it
         self._count_cache: Optional[int] = None
         # attr → persisted IVF index path (attach_ivf_index); the routed
         # $near path prunes to the index's precomputed inverted lists.
@@ -392,14 +398,17 @@ class Group:
         routed query treats local rows as always-exact candidates
         (excluding shadowed ids from the index scan) — the engine
         analogue of the reference's incremental HNSW insert
-        (GHNSW::insert), with no index rebuild per OLTP write.  Bulk
-        mutations (register_df / update_where / delete_* / cascades)
-        detach: the persisted assignment would be stale or cover deleted
-        rows."""
+        (GHNSW::insert), with no index rebuild per OLTP write.  A local
+        write also keeps the LOADED index handle (``_ann_cache``'s
+        ``knn_ivf_idx`` / ``knn_ivfpq_idx`` entries: params, centroids,
+        listed files) and the bulk row count, since it changes neither;
+        ``{similar:}`` quantizers are dropped, as they are fitted over
+        the overlay too.  Bulk mutations (register_df / update_where /
+        delete_* / cascades) detach and drop everything: the persisted
+        assignment would be stale or cover deleted rows."""
         self._mat_cache = None
-        self._ann_cache = {}
-        self._count_cache = None
         if not local_only:
+            self._count_cache = None
             self._ivf_attach = {}
             self._ivfpq_attach = {}
             self._detach_layout()
@@ -411,6 +420,10 @@ class Group:
             # results after a local edge upsert — detach instead
             self._ivf_attach = {}
             self._ivfpq_attach = {}
+        self._ann_cache = {
+            key: v for key, v in self._ann_cache.items()
+            if (key[0] == "knn_ivf_idx" and key[1] in self._ivf_attach)
+            or (key[0] == "knn_ivfpq_idx" and key[1] in self._ivfpq_attach)}
 
     def attach_layout(self, path: str) -> str:
         """Point this group's SCANS at a ``{layout}`` export (VERDICT r8
@@ -651,6 +664,8 @@ class Group:
         ``_overwrite_index_lists``) — rebuild it instead."""
         self._refuse_torn_index(path, "ivf.parquet")
         self._ivf_attach[attr] = path
+        # a rebuild may rewrite the same path: never reuse its old handle
+        self._ann_cache.pop(("knn_ivf_idx", attr), None)
 
     def _refuse_torn_index(self, path: str, data_dir: str) -> None:
         from . import fsio
@@ -679,6 +694,7 @@ class Group:
         :meth:`attach_ivf_index`."""
         self._refuse_torn_index(path, "ivfpq.parquet")
         self._ivfpq_attach[attr] = path
+        self._ann_cache.pop(("knn_ivfpq_idx", attr), None)
 
     def build_ivf_index(self, attr: str, path: str,
                         nlist: "Optional[int]" = None,
@@ -963,20 +979,19 @@ class Group:
         return {"lists_rewritten": len(affected), "rows_added": rows_added}
 
     def row_count(self) -> int:
-        """Cached group cardinality (bulk + local rows; the tiny
-        overcount when a local row shadows a bulk key is irrelevant for
-        the routing decisions this feeds).  One count job on first use
-        per mutation epoch — parquet counts are metadata-cheap."""
+        """Group cardinality for routing decisions: the cached bulk count
+        plus the overlay size (the tiny overcount when a local row
+        shadows a bulk key is irrelevant for the routing decisions this
+        feeds).  Only the bulk count is cached, so local writes keep it
+        and cost no job; one count job on first use after a bulk
+        mutation — parquet counts are metadata-cheap."""
         if self._count_cache is None:
-            n = len(self.rows)
             base = self.bulk_df
             if base is None:
                 base = self._layout_base()  # layout-only group (fresh
                 # session attach): the copy IS the bulk side
-            if base is not None:
-                n += base.count()
-            self._count_cache = n
-        return self._count_cache
+            self._count_cache = 0 if base is None else base.count()
+        return self._count_cache + len(self.rows)
 
     # ------------------------------------------------------------- loading
     def register_df(self, df: DataFrame, key_col: str = "id",
@@ -1027,20 +1042,30 @@ class Group:
         return T.StructType(fields)
 
     def _local_df(self) -> Optional[DataFrame]:
-        """Materialize ONLY the local dict rows (never the bulk side)."""
-        schema = self.schema_struct()
-        prop_names = sorted(self.meta.props)
-        data = []
-        for key, props in self.rows.items():
-            props = props or {}
-            if self.meta.is_edge:
-                base = [key[0], key[2], key[1]]
-            else:
-                base = [key]
-            data.append(tuple(base + [props.get(p) for p in prop_names]))
-        if not data and self.bulk_df is not None:
+        """Materialize ONLY the local dict rows (never the bulk side).
+
+        The rows go to Spark as one typed ``pyarrow.Table``, so the plan
+        is an in-plan ``LocalRelation``: reading it (collect, filter,
+        broadcast) runs no Spark job.  A list of tuples would instead be
+        parallelized as pickled rows and re-serialized through a Python
+        worker on every read.  Columns are built straight from the dict,
+        not via pandas, which would turn an integer column holding a
+        ``None`` into floats."""
+        if not self.rows and self.bulk_df is not None:
             return None
-        return self.spark.createDataFrame(data, schema)
+        schema = self.schema_struct()
+        arrow_schema = to_arrow_schema(schema)
+        keys = list(self.rows)
+        # edge keys are (src, direction, dst); columns are src, dst, direction
+        cols = ([[k[i] for k in keys] for i in (0, 2, 1)]
+                if self.meta.is_edge else [keys])
+        props = [p or {} for p in self.rows.values()]
+        cols += [[row.get(p) for row in props]
+                 for p in sorted(self.meta.props)]
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+            schema=arrow_schema)
+        return self.spark.createDataFrame(table, schema)
 
     def restore_overlay(self, df: DataFrame) -> int:
         """Rehydrate the OLTP overlay dict from a saved overlay parquet

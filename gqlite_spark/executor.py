@@ -1457,7 +1457,7 @@ class GQLite:
                             .alias(attr))
                     .filter(F.col(attr).isNotNull()))
 
-        log.warning(
+        log.debug(
             "$near+limit on %r routed to ANN (persisted IVF index, "
             "nlist=%s nprobe=%d, %s%s); add 'exact: true' to the $near "
             "spec to force the exact plan",
@@ -1621,7 +1621,7 @@ class GQLite:
         candidates = _iconf("spark.gqlite.knn.pq_candidates", 0)
         if candidates <= 0:
             candidates = max(1000, grp.row_count() // 1000, c * k)
-        log.warning(
+        log.debug(
             "$near+limit on %r routed to IVFPQ ADC (nlist=%s nprobe=%d "
             "m=%s, codes-only pruned read, candidates=%d%s); add "
             "'exact: true' to the $near spec to force the exact plan",

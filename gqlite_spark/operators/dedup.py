@@ -27,20 +27,23 @@ ROWS_PER_BAND = NUM_HASHES // NUM_BANDS
 
 def _shingles_expr(text_col: str, n: int = 3):
     """Distinct character n-gram shingles of a string column (built-ins only:
-    sequence + transform + array_distinct — JVM-side, codegen-friendly)."""
-    # substr(text, i, n) for i in 1..len-n+1, distinct
+    sequence + transform + array_distinct — JVM-side, codegen-friendly).
+    A text shorter than ``n`` is one whole-text shingle."""
+    # substr(text, i, n) for i in 1..max(len-n+1, 1), distinct
     return F.array_distinct(F.expr(
-        f"transform(sequence(1, greatest(length({text_col}) - {n - 1}, 0)),"
+        f"transform(sequence(1, greatest(length({text_col}) - {n - 1}, 1)),"
         f" i -> substring({text_col}, i, {n}))"))
 
 
 def _word_shingles_expr(text_col: str, n: int = 3):
     """Distinct word n-gram shingles.  On natural/word-level corpora these
     are far more discriminative than character n-grams (char 3-grams of a
-    shared vocabulary collide across most documents)."""
+    shared vocabulary collide across most documents).  A document of
+    fewer than ``n`` words is one whole-text shingle (a start index of
+    0 would make ``slice`` fail)."""
     toks = f"split({text_col}, ' ')"
     return F.array_distinct(F.expr(
-        f"transform(sequence(1, greatest(size({toks}) - {n - 1}, 0)),"
+        f"transform(sequence(1, greatest(size({toks}) - {n - 1}, 1)),"
         f" i -> concat_ws(' ', slice({toks}, i, {n})))"))
 
 
@@ -61,7 +64,7 @@ def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     toks = df.select(F.col(id_col).alias("id"),
                      F.split(F.col(text_col), " ").alias("_toks"))
     sh = F.array_distinct(F.expr(
-        f"transform(sequence(1, greatest(size(_toks) - {n - 1}, 0)),"
+        f"transform(sequence(1, greatest(size(_toks) - {n - 1}, 1)),"
         f" i -> concat_ws(' ', slice(_toks, i, {n})))"))
     return toks.select("id", F.explode(sh).alias("s"))
 

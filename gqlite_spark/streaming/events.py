@@ -214,13 +214,17 @@ def await_drained(q, timeout: float = 120.0, idle_batches: int = 3,
     ``idle_batches`` consecutive completed batches read zero input
     rows, so this helper stops the query then, or returns earlier on
     natural termination.  Returns True when the query ended or drained
-    within ``timeout``; False (query left running) otherwise."""
+    within ``timeout``; False (query left running) otherwise.  A query
+    that died raises its own error (``q.exception()``) instead."""
     import time as _t
     deadline = _t.monotonic() + timeout
     last_seen = -1
     idle = 0
     while _t.monotonic() < deadline:
         if not q.isActive:
+            err = q.exception()
+            if err is not None:
+                raise err
             return True
         for p in q.recentProgress:
             bid = p.get("batchId", -1)

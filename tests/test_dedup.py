@@ -52,7 +52,7 @@ def _py_word_jaccard(ta: str, tb: str, n: int = 3) -> float:
     def sh(t):
         toks = t.split(" ")
         return {" ".join(toks[i:i + n])
-                for i in range(max(len(toks) - n + 1, 0))}
+                for i in range(max(len(toks) - n + 1, 1))}
     a, b = sh(ta), sh(tb)
     inter = len(a & b)
     return inter / (len(a) + len(b) - inter)
@@ -135,3 +135,15 @@ def test_closure_respects_verified_pairs(spark, sparse_corpus):
     kept = [r for r in clusters if r["keep"]]
     assert len(kept) == len({r["cluster_rep"] for r in clusters})
     assert all(r["doc_id"] == r["cluster_rep"] for r in kept)
+
+
+def test_word_shingles_of_short_documents(spark):
+    """A document of fewer than n words is one whole-text shingle (a
+    start index of 0 would make ``slice`` fail)."""
+    from gqlite_spark.operators.dedup import shingles
+    df = spark.createDataFrame(
+        [(1, "hello"), (2, "hello world"), (3, "a b c"), (4, "a b c d")],
+        "doc_id long, text string")
+    got = sorted(tuple(r) for r in shingles(df, n=3, unit="word").collect())
+    assert got == [(1, "hello"), (2, "hello world"), (3, "a b c"),
+                   (4, "a b c"), (4, "b c d")]

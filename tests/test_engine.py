@@ -499,9 +499,9 @@ def test_knn_cost_based_ann_routing(spark, tmp_path):
         assert ("knn_ivf_idx", "vec") in grp._ann_cache
         # LOCAL upserts keep the index attached (incremental-insert
         # parity, GHNSW::insert): new rows join the candidate set as
-        # exact overlay candidates...
+        # exact overlay candidates, and the count is bulk + overlay...
         grp.upsert_vertex(999, {"vec": [-0.5, 0.0]})
-        assert grp._ivf_attach and grp._count_cache is None
+        assert grp._ivf_attach and grp.row_count() == 201
         over = db.query_df(gql)
         assert "list_id" in over._jdf.queryExecution().toString()
         assert [r["id"] for r in over.collect()] == [0, 999, 1]

@@ -3,6 +3,8 @@ onto the operators/ library (VERDICT r4 #6) — the ENGINE, not just the
 Python API, covers the training-data pipeline.  Goldens on a small fixture
 + parse-error surface."""
 
+import re
+
 import pytest
 
 SETUP = """
@@ -47,6 +49,23 @@ def test_gql_dedup_minhash_finds_near_dup(pdb):
     assert (1, 2) in pairs                    # identical docs always pair
     assert all(a < b for a, b in pairs)
     assert not any(4 in p for p in pairs)     # unrelated doc stays out
+
+
+def test_gql_dedup_short_documents(db):
+    """Documents shorter than the 3-word shingle (1 and 2 words) are one
+    whole-text shingle each: identical short docs pair, different ones
+    do not, and neither minhash nor its clustering crashes."""
+    for r in db.exec("""
+{create: 'sg', group: ['docs']};
+{upset: 'docs', vertex: [
+  [1, {text: 'hello'}], [2, {text: 'hello'}],
+  [3, {text: 'hello world'}], [4, {text: 'hello world'}],
+  [5, {text: 'other'}]]};"""):
+        assert r.error is None, r.error
+    res = _one(db, "{dedup: 'docs', in: 'sg', method: 'minhash'};")
+    assert {(r[0], r[1]) for r in res.rows} == {(1, 2), (3, 4)}
+    res = _one(db, "{dedup: 'docs', in: 'sg', method: 'clusters'};")
+    assert {r[0]: r[1] for r in res.rows} == {1: 1, 2: 1, 3: 3, 4: 3}
 
 
 def test_gql_chunk(pdb):
@@ -182,7 +201,13 @@ def test_gql_pipeline_profile_and_ast(pdb):
     from gqlite_spark.gql.ast import ChunkStmt
     assert isinstance(res.value, ChunkStmt)
     res = _one(pdb, "profile {similar: 'vecs', in: 'pg', to: [1.0, 0.0]};")
-    assert "TakeOrderedAndProject" in res.value
+    # the all-local group is a LocalRelation with maxRows <= k, so
+    # Catalyst drops the limit (EliminateLimits): the ordering node is a
+    # Sort here, a TakeOrderedAndProject over bulk data
+    assert res.value.startswith("== Physical Plan ==")
+    assert re.search(r"\) (Sort|TakeOrderedAndProject)\n(.+\n)*?"
+                     r"Arguments: (\d+, )?\[cosine#\d+ DESC", res.value), \
+        res.value
 
 
 def test_gql_similar_caches_quantizer_until_mutation(pdb):

@@ -1,0 +1,179 @@
+"""The driver-side overlay (``Group.rows``) as an in-plan local relation.
+
+Count-pinning guards (tiny data, no wall clocks): reading the overlay
+runs no Spark job, and a local write keeps the loaded kNN index handle
+and the bulk row count, so planning the next routed ``$near`` runs no
+job either.  Plus a type round-trip: the Arrow-built overlay reads back
+the same rows as the list-of-tuples builder it replaced."""
+
+import contextlib
+import itertools
+
+from pyspark.sql import functions as F
+
+from gqlite_spark.catalog import Group
+from gqlite_spark.gql.ast import BinaryLit, DatetimeLit
+
+_GROUPS = itertools.count()
+
+
+@contextlib.contextmanager
+def _count_jobs(spark):
+    """Count the Spark jobs the body submits (under its own job group)."""
+    sc = spark.sparkContext
+    group = f"overlay-test-{next(_GROUPS)}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    out = {}
+    sc.setJobGroup(group, group)
+    try:
+        yield out
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+        # job-start events reach the status store asynchronously
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        out["jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _group(spark, name, is_edge=False):
+    from gqlite_spark import GQLite
+    db = GQLite(spark)
+    db.catalog.create_graph(name)
+    g = db.catalog.graphs[name]
+    return db, g.create_group("g", is_edge=is_edge)
+
+
+def test_local_df_is_a_job_free_local_table_scan(spark):
+    _, grp = _group(spark, "ov_scan")
+    for i in range(20):
+        grp.upsert_vertex(i, {"n": i, "vec": [float(i), 1.0]})
+    df = grp._local_df()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan, plan
+    with _count_jobs(spark) as c:
+        rows = df.collect()
+    assert c["jobs"] == 0
+    assert sorted(r["id"] for r in rows) == list(range(20))
+
+
+def test_local_write_keeps_index_handle_and_bulk_count(spark, tmp_path):
+    """After a local upsert on a group whose index was already probed,
+    planning the routed $near and row_count() run no job; a bulk delete
+    still detaches the index and re-counts."""
+    db, grp = _group(spark, "ov_knn")
+    grp.register_df(spark.createDataFrame(
+        [(i, [float(i), 0.0]) for i in range(200)],
+        "id long, vec array<double>"))
+    gql = ("{query: 'g', in: 'ov_knn',"
+           " where: {vec: {limit: 3, $near: [0, 0]}}};")
+    spark.conf.set("spark.gqlite.knn.ann_threshold", "50")
+    try:
+        grp.build_ivf_index("vec", str(tmp_path / "ivf"))
+        assert [r["id"] for r in db.query_df(gql).collect()] == [0, 1, 2]
+        assert ("knn_ivf_idx", "vec") in grp._ann_cache
+
+        grp.upsert_vertex(999, {"vec": [-0.5, 0.0]})
+        with _count_jobs(spark) as c:
+            routed = db.query_df(gql)
+            n = grp.row_count()
+        assert c["jobs"] == 0
+        assert n == 201
+        assert "list_id" in routed._jdf.queryExecution().toString()
+        assert [r["id"] for r in routed.collect()] == [0, 999, 1]
+
+        grp.delete_where(F.col("id") == F.lit(999))
+        assert not grp._ivf_attach and not grp._ann_cache
+        with _count_jobs(spark) as c:
+            n = grp.row_count()
+        assert c["jobs"] >= 1
+        assert n == 200
+    finally:
+        spark.conf.set("spark.gqlite.knn.ann_threshold", "100000")
+
+
+def test_reattach_does_not_reuse_stale_index_handle(spark, tmp_path):
+    """A rebuild at the same path must reload: local writes keep the
+    loaded handle, so attach is what drops it."""
+    _, grp = _group(spark, "ov_reattach")
+    grp.register_df(spark.createDataFrame(
+        [(i, [float(i), 0.0]) for i in range(60)],
+        "id long, vec array<double>"))
+    path = str(tmp_path / "ivf")
+    grp.attach_ivf_index("vec", path)
+    grp._ann_cache[("knn_ivf_idx", "vec")] = ("stale", {}, path)
+    grp.upsert_vertex(1000, {"vec": [1.0, 1.0]})
+    assert ("knn_ivf_idx", "vec") in grp._ann_cache
+    grp.attach_ivf_index("vec", path)
+    assert ("knn_ivf_idx", "vec") not in grp._ann_cache
+
+
+def _list_local_df(self):
+    """The list-of-tuples overlay builder the Arrow one replaced."""
+    schema = self.schema_struct()
+    prop_names = sorted(self.meta.props)
+    data = []
+    for key, props in self.rows.items():
+        props = props or {}
+        base = [key[0], key[2], key[1]] if self.meta.is_edge else [key]
+        data.append(tuple(base + [props.get(p) for p in prop_names]))
+    if not data and self.bulk_df is not None:
+        return None
+    return self.spark.createDataFrame(data, schema)
+
+
+def _read_both(monkeypatch, grp, keycols):
+    out = []
+    for builder in (_list_local_df, Group._local_df):
+        with monkeypatch.context() as m:
+            m.setattr(Group, "_local_df", builder)
+            grp._mat_cache = None
+            df = grp.to_df()
+            out.append((df.schema, sorted(
+                df.collect(), key=lambda r: tuple(r[c] for c in keycols))))
+    grp._mat_cache = None
+    return out
+
+
+def test_overlay_type_round_trip_vertex(spark, monkeypatch):
+    _, grp = _group(spark, "ov_types_v")
+    grp.register_df(spark.createDataFrame(
+        [(1, 10, "bulk"), (2, 20, "shadowed")], "id long, n long, s string"))
+    grp.upsert_vertex(2, {
+        "n": 7, "x": 2.5, "s": "over", "d": DatetimeLit(1700000000.0),
+        "b": BinaryLit(b"\x00\xffhi"), "v": [1, 2.5], "o": {"a": [1, 2]}})
+    grp.upsert_vertex(3, {"n": True, "x": 4, "v": [0.0, -1.0]})
+    grp.upsert_vertex(4, None)
+    grp.upsert_vertex(5, {"s": None, "o": "plain", "b": b"raw"})
+    (schema_old, old), (schema_new, new) = _read_both(
+        monkeypatch, grp, ["id"])
+    assert schema_old == schema_new
+    assert old == new
+    assert [r["id"] for r in new] == [1, 2, 3, 4, 5]
+    assert new[2]["n"] == 1 and new[2]["x"] == 4.0      # bool, widened int
+    assert bytes(new[1]["b"]) == b"\x00\xffhi"
+    assert new[1]["d"] == 1700000000.0 and new[1]["o"] == '{"a": [1, 2]}'
+    assert new[3]["n"] is None and new[3]["v"] is None
+
+    # int -> number widening after the fact: cells written while the
+    # column was integer stay Python ints in the dict; the Arrow column
+    # reads them as doubles (the list builder refused them)
+    grp.upsert_vertex(6, {"w": 3})
+    grp.upsert_vertex(7, {"w": 0.5})
+    got = {r["id"]: r["w"] for r in grp._local_df().collect()}
+    assert got[6] == 3.0 and isinstance(got[6], float) and got[7] == 0.5
+
+
+def test_overlay_type_round_trip_edge(spark, monkeypatch):
+    _, grp = _group(spark, "ov_types_e", is_edge=True)
+    grp.upsert_edge(1, "->", 2, {"w": 1.5, "label": "a", "k": 3})
+    grp.upsert_edge(3, "<-", 2, {"w": 2, "v": [1.0, 0.0],
+                                 "t": DatetimeLit(5.0)})
+    grp.upsert_edge(4, "->", 5, None)
+    grp.upsert_edge(1, "->", 5, {"k": False, "bin": BinaryLit(b"e"),
+                                 "o": {"x": None}})
+    (schema_old, old), (schema_new, new) = _read_both(
+        monkeypatch, grp, ["src", "dst"])
+    assert schema_old == schema_new
+    assert old == new
+    assert [(r["src"], r["direction"], r["dst"]) for r in new] == [
+        (1, "->", 2), (1, "->", 5), (2, "->", 3), (4, "->", 5)]
+    assert new[1]["k"] == 0 and new[2]["w"] == 2.0

@@ -698,3 +698,21 @@ def test_semantic_hits_stream_matches_batch_twin(spark, tmp_path):
     save_ivf_index(bench, idx2, nlist=2, include_vectors=False)
     with pytest.raises(ValueError, match="MATERIALIZED"):
         semantic_hits_stream(stream, idx2)
+
+
+def test_await_drained_raises_failed_query_error(spark, tmp_path):
+    """A streaming query that dies must surface its own error, not read
+    as 'drained'."""
+    from pyspark.errors import StreamingQueryException
+    src = str(tmp_path / "src")
+    spark.range(3).write.parquet(src)
+
+    def boom(batch_df, batch_id):
+        raise ValueError("planted batch failure")
+
+    q = (spark.readStream.schema("id long").parquet(src)
+         .writeStream.foreachBatch(boom)
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .trigger(availableNow=True).start())
+    with pytest.raises(StreamingQueryException, match="planted batch"):
+        await_drained(q, timeout=60)
