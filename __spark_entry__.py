@@ -222,8 +222,7 @@ def q_knn_routed(spark, sf_dir):
                 spark.conf.set(key, val)
         # detach so later entries on the shared cached engine see the
         # group in its default (exact-path) state
-        grp._ivf_attach.pop("embedding", None)
-        grp._ann_cache.pop(("knn_ivf_idx", "embedding"), None)
+        grp._vindex.pop("embedding", None)
     return df.select(F.col("id").alias("vec_id"), "label")
 
 
@@ -272,8 +271,7 @@ def q_knn_filtered(spark, sf_dir):
                 spark.conf.unset(key)
             else:
                 spark.conf.set(key, val)
-        grp._ivf_attach.pop("embedding", None)
-        grp._ann_cache.pop(("knn_ivf_idx", "embedding"), None)
+        grp._vindex.pop("embedding", None)
     return df.select(F.col("id").alias("vec_id"), "label")
 
 
@@ -346,7 +344,7 @@ def q_knn_compacted(spark, sf_dir):
         grp.rows = {}
         grp._mat_cache = None
         grp._count_cache = None
-        grp._ivf_attach.pop("embedding", None)
+        grp._vindex.pop("embedding", None)
         grp._ann_cache = {}
 
 
@@ -1139,11 +1137,11 @@ def q_ann_ivfpq_indexed(spark, sf_dir):
 def q_knn_pq(spark, sf_dir):
     """Routed $near+limit served by a PERSISTED IVFPQ index (VERDICT r8
     missing #2 / next #3): only the codes-sized index is attached
-    (attach_ivfpq_index — the 100 TB form, ~dim·4/m smaller than a
+    (attach_index — the 100 TB form, ~dim·4/m smaller than a
     full-vector index), so the router reads the query's nprobe
     inverted lists as (id, codes) rows, ranks them by ADC, and
     exact-re-ranks the top-`candidates` ids against the corpus via a
-    broadcast id join (executor._knn_ivfpq).  Sampling quantizers
+    broadcast id join (executor._apply_knn_routed).  Sampling quantizers
     (refine_iters=0) + pinned nlist/nprobe/candidates so the DuckDB
     oracle replays the WHOLE route bit-for-bit: centroids → codebooks
     → assignments → codes → ADC sums on the probed rows only → top-100
@@ -1165,7 +1163,7 @@ def q_knn_pq(spark, sf_dir):
     idx = tempfile.mkdtemp(prefix="gqlite_knnpqidx_")
     save_ivfpq_index(emb, idx, nlist=16, m=4, ksub=16, refine_iters=0,
                      metric="l2")
-    grp.attach_ivfpq_index("embedding", idx)
+    grp.attach_index("embedding", idx)
     confs = {"spark.gqlite.knn.ann_threshold": "1",
              "spark.gqlite.knn.nprobe": "4",
              "spark.gqlite.knn.pq_candidates": "100"}
@@ -1187,8 +1185,7 @@ def q_knn_pq(spark, sf_dir):
             else:
                 spark.conf.set(key, val)
         # shared cached engine: leave the group in its default state
-        grp._ivfpq_attach.pop("embedding", None)
-        grp._ann_cache.pop(("knn_ivfpq_idx", "embedding"), None)
+        grp._vindex.pop("embedding", None)
     return df.select(F.col("id").alias("vec_id"), "label")
 
 
@@ -2510,7 +2507,7 @@ def _ann_ivfpq_sql(nlist: int = 16, nprobe: int = 4, m: int = 4,
 def _knn_pq_sql(nlist: int = 16, nprobe: int = 4, m: int = 4,
                 dsub: int = 16, ksub: int = 16, candidates: int = 100,
                 k: int = 10, query_id: int = 3) -> str:
-    """Routed-$near-over-IVFPQ oracle (executor._knn_ivfpq replay):
+    """Routed-$near-over-IVFPQ oracle (executor._apply_knn_routed replay):
     the same full-index rebuild as :func:`_ann_ivfpq_sql` — sampling
     centroids, sampling codebooks, argmin assignments/codes, ADC sums
     over the PROBED rows only, top-``candidates`` by (adc, vec_id) —

@@ -810,72 +810,43 @@ class GQLite:
             # attach-only: re-wire an EXISTING persisted index (fresh
             # session — no rebuild; kind discovered from the sidecar,
             # symmetric with {layout attach:})
-            from . import fsio
-            if grp.meta.key_type not in (None, "integer"):
-                raise GQLiteError(
-                    f"vindex: group '{stmt.group}' has "
-                    f"{grp.meta.key_type} keys; IVF indexes require "
-                    "integer vertex keys")
-            if fsio.exists(self.spark,
-                           fsio.join(stmt.path, "ivf_params.json")):
-                params = fsio.read_json(
-                    self.spark, fsio.join(stmt.path, "ivf_params.json"))
-                attach_fn, kind = grp.attach_ivf_index, "attach_ivf"
-            elif fsio.exists(self.spark,
-                             fsio.join(stmt.path, "ivfpq_params.json")):
-                params = fsio.read_json(
-                    self.spark,
-                    fsio.join(stmt.path, "ivfpq_params.json"))
-                attach_fn, kind = grp.attach_ivfpq_index, "attach_ivfpq"
-            else:
-                raise GQLiteError(
-                    f"vindex attach: no index sidecar at '{stmt.path}' "
-                    "— build one first ({vindex} / {vindex pq: true})")
-            if params.get("metric", "l2") != "l2":
-                raise GQLiteError(
-                    f"vindex attach: index at '{stmt.path}' has metric="
-                    f"{params.get('metric')!r}; $near routing needs 'l2'")
-            # the sidecar must describe THIS column: an index built for
-            # a different column (or a different-dim corpus) would
-            # silently serve wrong $near neighbors
-            side_col = params.get("vec_col")
-            if side_col is not None and side_col != stmt.on:
-                raise GQLiteError(
-                    f"vindex attach: index at '{stmt.path}' was built "
-                    f"for column '{side_col}', not '{stmt.on}'")
-            cents = params.get("centroids") or []
+            prev = grp._vindex.get(stmt.on)
+            rec = grp.attach_index(stmt.on, stmt.path)
+            # an index built on a different-dim corpus would silently
+            # serve wrong $near neighbors; a refused attach restores
+            # whatever was attached before
+            cents = rec.params["centroids"]
             if cents:
                 idx_dim = len(cents[0][1])
                 row = (df.filter(F.col(stmt.on).isNotNull())
                        .select(F.size(stmt.on).alias("_d")).head(1))
                 if row and row[0]["_d"] != idx_dim:
+                    if prev is None:
+                        del grp._vindex[stmt.on]
+                    else:
+                        grp._vindex[stmt.on] = prev
                     raise GQLiteError(
                         f"vindex attach: index at '{stmt.path}' is "
                         f"{idx_dim}-dimensional but group "
                         f"'{stmt.group}'.{stmt.on} vectors have "
                         f"{row[0]['_d']} dims")
-            attach_fn(stmt.on, stmt.path)
-            return StatementResult(
-                status="QUERY SUCCESS",
-                rows=[[kind, int(params.get("nlist") or 0)]],
-                value=int(params.get("nlist") or 0))
+            nlist = int(rec.params.get("nlist") or 0)
+            return StatementResult(status="QUERY SUCCESS",
+                                   rows=[["attach_" + rec.kind, nlist]],
+                                   value=nlist)
         if stmt.compact:
             # fold the OLTP overlay into the existing index in place —
             # rewrites only the affected list partitions.  Re-attaches
-            # first if needed (e.g. after an engine restart).  pq: true
-            # compacts the IVFPQ index (codes rewritten) instead.
-            attach_map = (grp._ivfpq_attach if stmt.pq
-                          else grp._ivf_attach)
-            attach_fn = (grp.attach_ivfpq_index if stmt.pq
-                         else grp.attach_ivf_index)
-            if stmt.on not in attach_map:
-                attach_fn(stmt.on, stmt.path)
-            elif attach_map[stmt.on] != stmt.path:
+            # first if needed (e.g. after an engine restart); the kind
+            # comes from the sidecar, so ``pq: true`` is optional here.
+            rec = grp._vindex.get(stmt.on)
+            if rec is None:
+                grp.attach_index(stmt.on, stmt.path)
+            elif rec.path != stmt.path:
                 raise GQLiteError(
                     f"vindex: index for '{stmt.on}' is attached at "
-                    f"'{attach_map[stmt.on]}', not '{stmt.path}'")
-            rep = (grp.compact_into_pq_index(stmt.on) if stmt.pq
-                   else grp.compact_into_index(stmt.on))
+                    f"'{rec.path}', not '{stmt.path}'")
+            rep = grp.compact_into_index(stmt.on)
             return StatementResult(
                 status="QUERY SUCCESS",
                 rows=[[rep["lists_rewritten"], rep["rows_added"]]],
@@ -883,8 +854,7 @@ class GQLite:
         n_vecs = df.filter(F.col(stmt.on).isNotNull()).count()
         if stmt.pq:
             # IVFPQ form: codes-only inverted lists (~dim·4/m smaller);
-            # routed $near serves them via ADC + exact re-rank when no
-            # full-vector index is attached (executor._knn_ivfpq)
+            # routed $near serves them via ADC + exact re-rank
             nlist = grp.build_ivfpq_index(
                 stmt.on, stmt.path, nlist=stmt.nlist, m=stmt.m,
                 ksub=stmt.ksub, refine_iters=stmt.refine,
@@ -1327,45 +1297,64 @@ class GQLite:
         r7 on measurement).
 
         Below ``spark.gqlite.knn.ann_threshold`` rows (default 100 000)
-        — or whenever no l2-metric IVF index is attached — the exact
-        path runs: TakeOrderedAndProject is a single shuffle-free scan
-        computing ONE distance per row, and its results are bit-stable
-        for external oracles.
+        — or whenever no vector index is attached to the property — the
+        exact path runs: TakeOrderedAndProject is a single shuffle-free
+        scan computing ONE distance per row, and its results are
+        bit-stable for external oracles.
 
-        Above the threshold WITH an attached index
-        (``Group.attach_ivf_index``; built by ``save_ivf_index(metric=
-        'l2')``), the query probes its ``nprobe`` nearest inverted
-        lists:
+        Above the threshold WITH an attached l2 index
+        (``Group.attach_index``; one per property, kind read from its
+        sidecar) the query probes the index's ``nprobe`` nearest
+        inverted lists — a partition-pruned scan — and drops the ids the
+        local overlay shadows from it (the index holds their PRE-upsert
+        entries; overlay rows join as always-exact candidates instead).
+        Then one candidate step per index shape:
 
-        * **materialized index** (``include_vectors=True`` — the
-          production form): top-k runs directly on the partition-pruned
-          index parquet, so only ~nprobe/nlist of the vector data is
-          READ; the k winners broadcast-join back to the group for the
-          full rows.  With plain predicates beside the ``$near``
-          (``pure_knn`` False) the oversample route keeps the pruned
-          read: top-(c·k) candidates off the index, predicates applied
-          to the recovered rows, bounded refill, exact fallback — see
-          :meth:`_knn_oversample`.
-        * **id-only index**: semi-join the pruned (id, list_id)
+        * **materialized IVF, no other predicate** (``include_vectors=
+          True`` — the production form): top-k over the pruned vectors
+          ∪ the overlay vectors, so only ~nprobe/nlist of the vector
+          data is READ; the k winners broadcast-join back to the group
+          for the full rows.  No count job.
+        * **id-only IVF**: semi-join the pruned (id, list_id)
           assignment against the (predicate-filtered) corpus, then
           exact top-k.  Bounds top-k input, not the scan.
+        * **materialized IVF with plain predicates, or IVFPQ**: a
+          bounded refill loop.  Rank the candidates — by exact distance
+          on ``_vec``, or by ADC on ``codes`` (driver-side m×ksub
+          distance table inlined as a scalar expression, IVFPQ's
+          codes-only read is ~dim·4/m smaller) — take the best
+          ``width`` ids, exact-re-rank them against ``df`` (already
+          predicate-filtered) via a broadcast id join, and count the
+          survivors.  Fewer than k: double ``width`` (bounded by
+          ``spark.gqlite.knn.oversample_retries``, default 2; each
+          retry re-reads only the pruned partitions), and fall back to
+          the EXACT scan when the probed pool is exhausted or retries
+          are spent — a selective predicate degrades to the correct
+          full plan, never to a silently short result.  The initial
+          width is ``spark.gqlite.knn.oversample``·k (default 4·k) on
+          vectors; on codes it is ``spark.gqlite.knn.pq_candidates``,
+          defaulting to the measured candidates law (PLANS.md 'IVFPQ
+          at 256d': recall saturates only once the candidate set
+          exceeds the rows indistinguishable at code resolution, and
+          ≥0.1% of the corpus cleared the 90% bar at every measured
+          config) — max(1000, corpus/1000, oversample·k).
 
         An earlier design also offered an INLINE quantizer (a per-row
         nlist-centroid argmin filter expression) as the no-index
         fallback.  Measured at 1 M × 64d it is a 100× LOSS — exact scan
-        1.0 s vs 124 s routed (tools/scale_probe.py --r7): the
-        assignment evaluates nlist distances per scanned row to save
-        only the top-k heap, and it cannot prune I/O.  ANN that does
-        not change what is READ is slower than exact, so without an
-        index the router now stays exact and logs the hint.
+        1.0 s vs 124 s routed (PLANS.md 'Cost-based $near+limit
+        routing'): the assignment evaluates nlist distances per scanned
+        row to save only the top-k heap, and it cannot prune I/O.  ANN
+        that does not change what is READ is slower than exact, so
+        without an index the router stays exact and logs the hint.
 
         Conf: ``spark.gqlite.knn.ann_threshold`` (-1 forces exact),
         ``spark.gqlite.knn.nprobe`` (default max(8, nlist//64) —
         ``operators.similarity.default_nprobe`` — so the probed
-        fraction holds as auto_nlist grows with √n).  Per-query opt-out:
-        ``exact: true`` beside ``$near``.  Routing to ANN is logged
-        (the semantics flip from exact to approximate is otherwise
-        invisible at the query surface)."""
+        fraction holds as auto_nlist grows with √n),
+        ``spark.gqlite.knn.overlay_isin_max``.  Per-query opt-out:
+        ``exact: true`` beside ``$near``.  The route decision is
+        logged at debug level."""
         from .operators import similarity as S
         spark = df.sparkSession
 
@@ -1381,32 +1370,16 @@ class GQLite:
             return apply_knn(df, knn)
         attr = knn["attr"]
         log = logging.getLogger("gqlite_spark.knn")
-
-        idx_path = grp._ivf_attach.get(attr)
-        if idx_path is None:
-            pq_path = grp._ivfpq_attach.get(attr)
-            if pq_path is not None:
-                return self._knn_ivfpq(grp, df, knn, pq_path, _iconf, log)
+        rec = grp._vindex.get(attr)
+        if rec is None:
             log.info(
                 "$near+limit on %r: %d rows exceed the ann_threshold "
-                "but no l2 IVF index is attached — running the exact "
-                "scan (build one with save_ivf_index(metric='l2', "
-                "include_vectors=True) + attach_ivf_index to prune "
-                "the read)", attr, grp.row_count())
+                "but no vector index is attached — running the exact "
+                "scan (build one with {vindex} or attach one with "
+                "Group.attach_index to prune the read)",
+                attr, grp.row_count())
             return apply_knn(df, knn)
-
-        cached = grp._ann_cache.get(("knn_ivf_idx", attr))
-        if cached is None or cached[2] != idx_path:
-            index, params = S.load_ivf_index(spark, idx_path)
-            cached = (index, params, idx_path)
-            grp._ann_cache[("knn_ivf_idx", attr)] = cached
-        index, params, _ = cached
-        if params.get("metric", "ip") != "l2":
-            log.warning(
-                "attached IVF index for %r has metric=%r (need 'l2' "
-                "for $near routing) — running the exact scan",
-                attr, params.get("metric", "ip"))
-            return apply_knn(df, knn)
+        params = rec.params
 
         # default probe width scales with the index's nlist so the
         # probed FRACTION doesn't shrink as auto_nlist grows with √n
@@ -1417,12 +1390,11 @@ class GQLite:
             S.default_nprobe(int(params.get("nlist") or 0))))
         probe = S.l2_probe_lists(knn["geometry"], params["centroids"],
                                  nprobe)
-        pruned = index.where(F.col("list_id").isin(probe))
-        materialized = bool(params.get("include_vectors"))
+        pruned = rec.frame(spark).where(F.col("list_id").isin(probe))
         # local-overlay rows (OLTP upserts since the index was built) are
         # NOT in the index: they join the candidate set as always-exact
         # candidates, and ids they shadow are dropped from the index side
-        # (the index holds the PRE-upsert vector).  This is why local
+        # (the index holds the PRE-upsert entry).  This is why local
         # writes don't detach the index — incremental-insert parity with
         # the reference's GHNSW::insert, no rebuild per write.
         local_keys = ([] if grp.meta.is_edge else list(grp.rows))
@@ -1430,230 +1402,103 @@ class GQLite:
         # literal isin (plan-stable, no extra join); above it the literal
         # would grow the expression tree unboundedly, so switch to a
         # broadcast anti-join on a DataFrame of local keys and tell the
-        # user a rebuild would fold the overlay back into the index
+        # user a compaction would fold the overlay back into the index
         overlay_cap = _iconf("spark.gqlite.knn.overlay_isin_max", 1000)
         if len(local_keys) > overlay_cap:
             log.warning(
                 "group %r carries %d local-overlay rows over an attached "
-                "IVF index (cap for inline plans: %d) — excluding "
+                "vector index (cap for inline plans: %d) — excluding "
                 "shadowed ids via broadcast anti-join; run {vindex ... "
                 "compact: true} (Group.compact_into_index) to fold the "
                 "overlay into the index, rewriting only affected lists",
                 grp.meta.name, len(local_keys), overlay_cap)
-
-        def _minus_overlay(cand):
-            """Drop index rows shadowed by the local overlay."""
-            if not local_keys:
-                return cand
-            if len(local_keys) <= overlay_cap:
-                return cand.filter(~F.col("id").isin(local_keys))
-            return cand.join(
+            pruned = pruned.join(
                 F.broadcast(grp._local_df().select("id")), "id",
                 "left_anti")
+        elif local_keys:
+            pruned = pruned.filter(~F.col("id").isin(local_keys))
 
-        def _overlay_vecs():
-            return (grp._local_df()
-                    .select("id", F.col(attr).cast("array<double>")
-                            .alias(attr))
-                    .filter(F.col(attr).isNotNull()))
-
+        pq = rec.kind == "ivfpq"
+        materialized = pq or bool(params.get("include_vectors"))
         log.debug(
-            "$near+limit on %r routed to ANN (persisted IVF index, "
-            "nlist=%s nprobe=%d, %s%s); add 'exact: true' to the $near "
-            "spec to force the exact plan",
-            attr, params.get("nlist"), nprobe,
-            ("partition-pruned read" if pure_knn
-             else "partition-pruned oversample") if materialized
-            else "id semi-join",
+            "$near+limit on %r routed to ANN (%s index, nlist=%s "
+            "nprobe=%d, %s%s); add 'exact: true' to the $near spec to "
+            "force the exact plan", attr, rec.kind, params.get("nlist"),
+            nprobe,
+            "id semi-join" if not materialized
+            else "partition-pruned read" if pure_knn and not pq
+            else "partition-pruned refill",
             f", +{len(local_keys)} local overlay rows" if local_keys
             else "")
-        if materialized and pure_knn:
-            # top-k over the pruned index partitions (reads only the
-            # probed lists' vectors) ∪ the local overlay, then recover
-            # the k full rows and re-establish distance order — k rows,
-            # broadcast join
-            cand = _minus_overlay(pruned.select(
-                "id", F.col("_vec").cast("array<double>").alias(attr)))
-            if local_keys:
-                cand = cand.unionByName(_overlay_vecs())
-            top = apply_knn(cand, knn)
-            return apply_knn(
-                df.join(F.broadcast(top.select("id")), "id"), knn)
-        if materialized:
-            return self._knn_oversample(grp, df, knn, pruned, local_keys,
-                                        _minus_overlay, _overlay_vecs,
-                                        _iconf, log)
-        base = df.filter(F.col(attr).isNotNull())
-        cand_ids = pruned.select("id")
-        if local_keys:
+        if not materialized:
             # df rows for shadowed ids already carry the NEW vector, so
-            # including their ids is sufficient — distances come from df
-            cand_ids = cand_ids.unionByName(
-                grp._local_df().select("id")).distinct()
-        return apply_knn(base.join(cand_ids, "id"), knn)
-
-    def _knn_oversample(self, grp, df: DataFrame, knn: dict,
-                        pruned: DataFrame, local_keys: list,
-                        minus_overlay, overlay_vecs,
-                        _iconf, log) -> DataFrame:
-        """Predicate + ``$near``+limit over a MATERIALIZED index
-        (VERDICT r7 missing #2): keep the partition-pruned read even
-        when plain predicates ride along.
-
-        Previously any non-$near conjunct forced the id semi-join form
-        — top-k input bounded but the whole corpus still READ.  Here
-        the top-(c·k) nearest candidates come off the pruned index
-        partitions first (vector I/O stays ~nprobe/nlist of the
-        corpus), then the plain predicates apply to the recovered rows
-        and the final top-k runs over the survivors.  If fewer than k
-        survive, double c (bounded retries — each retry re-reads only
-        the pruned partitions), and fall back to the EXACT scan when
-        oversampling cannot reach k (candidate pool exhausted or
-        retries spent): a selective predicate degrades to the correct
-        full plan, never to a silently short result.
-
-        Each refill decision needs a count of the surviving rows — a
-        driver-side action per attempt, bounded by
-        ``spark.gqlite.knn.oversample_retries`` (default 2).  Conf:
-        ``spark.gqlite.knn.oversample`` (initial c, default 4)."""
-        attr = knn["attr"]
-        k = int(knn["limit"])
-        c = max(1, _iconf("spark.gqlite.knn.oversample", 4))
-        retries = max(0, _iconf("spark.gqlite.knn.oversample_retries", 2))
-        cand = minus_overlay(pruned.select(
-            "id", F.col("_vec").cast("array<double>").alias(attr)))
-        if local_keys:
-            cand = cand.unionByName(overlay_vecs())
-        for attempt in range(retries + 1):
-            n_cand = c * k
-            top_ids = apply_knn(cand, {**knn, "limit": n_cand}) \
-                .select("id")
-            hits = df.join(F.broadcast(top_ids), "id")
-            result = apply_knn(hits, knn)
-            got = result.count()
-            if got >= k:
-                if attempt:
-                    log.info("$near oversample refilled to %d rows at "
-                             "c=%d (attempt %d)", got, c, attempt + 1)
-                return result
-            pool = top_ids.count()
-            if pool < n_cand:
-                # probed lists exhausted — widening c adds nothing
-                break
-            c *= 2
-        log.warning(
-            "$near oversample found %d/%d rows within the probed lists "
-            "(c=%d) — falling back to the exact scan so the predicate "
-            "query stays complete", got, k, c)
-        return apply_knn(df, knn)
-
-    def _knn_ivfpq(self, grp, df: DataFrame, knn: dict, path: str,
-                   _iconf, log) -> DataFrame:
-        """``$near``+limit over a persisted IVFPQ index (VERDICT r8
-        missing #2) — the route when only the codes-sized index is
-        attached (``Group.attach_ivfpq_index``), i.e. the 100 TB shape
-        where a full-vector index would double storage:
-
-        1. partition-pruned read of the query's ``nprobe`` inverted
-           lists — (id, codes) rows only, ~dim·4/m smaller than the
-           materialized-vector read;
-        2. ADC ranking (driver-side m×ksub distance table inlined as a
-           scalar expression) picks the ``candidates`` best ids;
-        3. exact re-rank against the corpus via broadcast id-join —
-           the k winners carry true distances, and any plain
-           predicates (already applied to ``df`` upstream) filter the
-           recovered rows naturally;
-        4. bounded refill: if predicates/radius leave fewer than k
-           survivors, double ``candidates`` and retry (each retry
-           re-reads only the pruned partitions); when the probed pool
-           is exhausted or retries are spent, fall back to the EXACT
-           scan — never a silently short result.
-
-        ``candidates`` default follows the measured candidates law
-        (PLANS.md 'IVFPQ at 256d'): recall saturates only once the
-        candidate set exceeds the count of corpus rows
-        indistinguishable at code resolution, and ≥0.1% of the corpus
-        cleared the 90% bar at every measured config — so the default
-        is max(1000, corpus/1000, oversample·k), overridable via
-        ``spark.gqlite.knn.pq_candidates``.  Local-overlay rows join
-        as always-exact candidates and their shadowed ids leave the
-        ADC pool, same contract as the full-vector route."""
-        from .operators import similarity as S
-        spark = df.sparkSession
-        attr = knn["attr"]
-        k = int(knn["limit"])
-        cached = grp._ann_cache.get(("knn_ivfpq_idx", attr))
-        if cached is None or cached[2] != path:
-            index, params = S.load_ivfpq_index(spark, path)
-            cached = (index, params, path)
-            grp._ann_cache[("knn_ivfpq_idx", attr)] = cached
-        index, params, _ = cached
-        if params.get("metric", "l2") != "l2":
-            log.warning(
-                "attached IVFPQ index for %r has metric=%r (need 'l2' "
-                "for $near routing) — running the exact scan",
-                attr, params.get("metric"))
-            return apply_knn(df, knn)
-        q = [float(x) for x in knn["geometry"]]
-        nprobe = max(1, _iconf(
-            "spark.gqlite.knn.nprobe",
-            S.default_nprobe(int(params.get("nlist") or 0))))
-        probe = S.l2_probe_lists(q, params["centroids"], nprobe)
-        pruned = index.where(F.col("list_id")
-                             .isin([int(x) for x in probe]))
-        local_keys = [] if grp.meta.is_edge else list(grp.rows)
-        overlay_cap = _iconf("spark.gqlite.knn.overlay_isin_max", 1000)
-        if local_keys:
-            if len(local_keys) <= overlay_cap:
-                pruned = pruned.filter(~F.col("id").isin(local_keys))
-            else:
-                log.warning(
-                    "group %r carries %d local-overlay rows over an "
-                    "attached IVFPQ index (cap for inline plans: %d) — "
-                    "excluding shadowed ids via broadcast anti-join; "
-                    "rebuild the index to fold the overlay in",
-                    grp.meta.name, len(local_keys), overlay_cap)
-                pruned = pruned.join(
-                    F.broadcast(grp._local_df().select("id")), "id",
-                    "left_anti")
-        c = max(1, _iconf("spark.gqlite.knn.oversample", 4))
-        retries = max(0, _iconf("spark.gqlite.knn.oversample_retries", 2))
-        candidates = _iconf("spark.gqlite.knn.pq_candidates", 0)
-        if candidates <= 0:
-            candidates = max(1000, grp.row_count() // 1000, c * k)
-        log.debug(
-            "$near+limit on %r routed to IVFPQ ADC (nlist=%s nprobe=%d "
-            "m=%s, codes-only pruned read, candidates=%d%s); add "
-            "'exact: true' to the $near spec to force the exact plan",
-            attr, params.get("nlist"), nprobe, params.get("m"),
-            candidates,
-            f", +{len(local_keys)} local overlay rows" if local_keys
-            else "")
-        adc = pruned.select("id",
-                            S._adc_expr(q, params["books"]).alias("_adc"))
-        got = 0
-        for attempt in range(retries + 1):
-            top = (adc.orderBy(F.col("_adc").asc(), F.col("id").asc())
-                   .limit(candidates))
-            cand_ids = top.select("id")
+            # including the overlay ids is sufficient — distances come
+            # from df
+            cand_ids = pruned.select("id")
             if local_keys:
                 cand_ids = cand_ids.unionByName(
                     grp._local_df().select("id")).distinct()
+            return apply_knn(
+                df.filter(F.col(attr).isNotNull()).join(cand_ids, "id"),
+                knn)
+        k = int(knn["limit"])
+        c = max(1, _iconf("spark.gqlite.knn.oversample", 4))
+        retries = max(0, _iconf("spark.gqlite.knn.oversample_retries", 2))
+        extra_ids = None
+        if pq:
+            q = [float(x) for x in knn["geometry"]]
+            adc = pruned.select(
+                "id", S._adc_expr(q, params["books"]).alias("_adc"))
+
+            def top_ids(width):
+                return (adc.orderBy(F.col("_adc").asc(), F.col("id").asc())
+                        .limit(width).select("id"))
+            width = _iconf("spark.gqlite.knn.pq_candidates", 0)
+            if width <= 0:
+                width = max(1000, grp.row_count() // 1000, c * k)
+            if local_keys:
+                extra_ids = grp._local_df().select("id")
+        else:
+            cand = pruned.select(
+                "id", F.col("_vec").cast("array<double>").alias(attr))
+            if local_keys:
+                cand = cand.unionByName(
+                    grp._local_df()
+                    .select("id", F.col(attr).cast("array<double>")
+                            .alias(attr))
+                    .filter(F.col(attr).isNotNull()))
+            if pure_knn:
+                # top-k over the pruned index partitions (reads only the
+                # probed lists' vectors) ∪ the local overlay, then
+                # recover the k full rows and re-establish distance
+                # order — k rows, broadcast join
+                top = apply_knn(cand, knn)
+                return apply_knn(
+                    df.join(F.broadcast(top.select("id")), "id"), knn)
+
+            def top_ids(width):
+                return apply_knn(cand, {**knn, "limit": width}).select("id")
+            width = c * k
+        got = 0
+        for attempt in range(retries + 1):
+            ids = top_ids(width)
+            cand_ids = (ids if extra_ids is None
+                        else ids.unionByName(extra_ids).distinct())
             result = apply_knn(df.join(F.broadcast(cand_ids), "id"), knn)
             got = result.count()
             if got >= k:
                 if attempt:
-                    log.info("$near IVFPQ refilled to %d rows at "
-                             "candidates=%d (attempt %d)", got,
-                             candidates, attempt + 1)
+                    log.info("$near %s refilled to %d rows at width=%d "
+                             "(attempt %d)", rec.kind, got, width,
+                             attempt + 1)
                 return result
-            if top.count() < candidates:
+            if ids.count() < width:
                 break  # probed lists exhausted — widening adds nothing
-            candidates *= 2
+            width *= 2
         log.warning(
-            "$near IVFPQ found %d/%d rows within the probed lists "
-            "(candidates=%d) — falling back to the exact scan so the "
-            "query stays complete", got, k, candidates)
+            "$near %s found %d/%d rows within the probed lists "
+            "(width=%d) — falling back to the exact scan so the query "
+            "stays complete", rec.kind, got, k, width)
         return apply_knn(df, knn)
 
     def _target_group(self, target: Any) -> tuple[str, Optional[list[str]]]:

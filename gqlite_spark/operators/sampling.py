@@ -559,11 +559,10 @@ def _guarded_broadcast_ids(ids: DataFrame) -> DataFrame:
     threshold.  An oversized set falls back to the unhinted shuffle
     anti-join, which is the correct plan at that size."""
     from .ckpt import materialize_probed
-    spark = ids.sparkSession
-    try:
-        thr = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    except Exception:
-        thr = 10 * 1024 * 1024
+    from .graph_algos import _parse_bytes_conf
+    # Spark returns a set value verbatim ('1m'), so parse the suffixes
+    thr = _parse_bytes_conf(ids.sparkSession.conf.get(
+        "spark.sql.autoBroadcastJoinThreshold", "10m"), 10 * 1024 * 1024)
     out, probe = materialize_probed(ids, F.count(F.lit(1)))
     if thr > 0 and int(probe[0]) * 32 <= thr:
         return F.broadcast(out)

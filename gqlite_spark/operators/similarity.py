@@ -846,7 +846,7 @@ def save_ivf_index(df: DataFrame, path: str, nlist: int = 16,
 
     ``metric='l2'`` assigns by min squared L2 instead of max inner
     product — the index form the cost-routed GQL ``$near``+limit path
-    consumes (``Group.attach_ivf_index``).  ``refine_iters`` Lloyd
+    consumes (``Group.attach_index``).  ``refine_iters`` Lloyd
     iterations are metric-matched (assignment uses the chosen metric;
     see :func:`lloyd_refine`); leave 0 when an external SQL oracle must
     rebuild the index bit-for-bit (refined centroids are float means).

@@ -170,3 +170,23 @@ def test_parse_bytes_conf_forms():
     assert _parse_bytes_conf("64MB", 0) == 64 * 1024 * 1024
     assert _parse_bytes_conf("1g", 0) == 1024 ** 3
     assert _parse_bytes_conf("bogus", 7) == 7
+
+
+def test_guarded_broadcast_reads_suffixed_threshold(spark):
+    """autoBroadcastJoinThreshold comes back verbatim ('1k'); the guard
+    must scale the suffix, not fall back to the 10 MB default and
+    broadcast a set 10x past what the user allowed."""
+    from gqlite_spark.operators.sampling import _guarded_broadcast_ids
+
+    def hinted(n):
+        out = _guarded_broadcast_ids(spark.range(n).toDF("id"))
+        plan = out._jdf.queryExecution().analyzed().toString()
+        return "broadcast" in plan.lower()
+
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1k")
+    try:
+        assert not hinted(40)       # 40 ids x 32 B > 1 KB
+        assert hinted(20)           # 640 B fits
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)

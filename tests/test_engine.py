@@ -495,13 +495,13 @@ def test_knn_cost_based_ann_routing(spark, tmp_path):
                       " $near: {$geometry: [0, 0], $lte: 6.25}}}};")
         assert [r["id"] for r in db.query_df(radius_gql).collect()] \
             == [0, 1, 2]
-        # the loaded index is cached on the group
-        assert ("knn_ivf_idx", "vec") in grp._ann_cache
+        # the loaded index is cached on the attach record
+        assert grp._vindex["vec"].df is not None
         # LOCAL upserts keep the index attached (incremental-insert
         # parity, GHNSW::insert): new rows join the candidate set as
         # exact overlay candidates, and the count is bulk + overlay...
         grp.upsert_vertex(999, {"vec": [-0.5, 0.0]})
-        assert grp._ivf_attach and grp.row_count() == 201
+        assert grp._vindex and grp.row_count() == 201
         over = db.query_df(gql)
         assert "list_id" in over._jdf.queryExecution().toString()
         assert [r["id"] for r in over.collect()] == [0, 999, 1]
@@ -512,7 +512,7 @@ def test_knn_cost_based_ann_routing(spark, tmp_path):
         # BULK mutation detaches; queries fall back to exact
         from pyspark.sql import functions as SF
         grp.delete_where(SF.col("id") == SF.lit(999))
-        assert not grp._ivf_attach
+        assert not grp._vindex
         back = db.query_df(gql)
         assert "list_id" not in back._jdf.queryExecution().toString()
         assert [r["id"] for r in back.collect()] == [1, 2, 3]
@@ -595,7 +595,7 @@ def test_knn_routed_idonly_ivf_index(spark, tmp_path):
     idx = str(tmp_path / "ivf_l2")
     save_ivf_index(grp.to_df(), idx, nlist=8, id_col="id",
                    vec_col="vec", metric="l2")
-    grp.attach_ivf_index("vec", idx)
+    grp.attach_index("vec", idx)
     spark.conf.set("spark.gqlite.knn.ann_threshold", "50")
     try:
         gql = ("{query: 'pts', in: 'knnrt_i', where:"
@@ -608,14 +608,14 @@ def test_knn_routed_idonly_ivf_index(spark, tmp_path):
         # LOCAL overlay on the semi-join path: the upserted row's id
         # joins the candidate set and its df-side (current) vector wins
         grp.upsert_vertex(1000, {"vec": [-0.25, 0.0]})
-        assert grp._ivf_attach                # index stays attached
+        assert grp._vindex                    # index stays attached
         routed2 = db.query_df(gql)
         assert "list_id" in routed2._jdf.queryExecution().toString()
         assert [r["id"] for r in routed2.collect()] == [0, 1000, 1]
         # BULK mutation (update_where) detaches; exact path takes over
         from pyspark.sql import functions as SF
         grp.update_where(SF.col("id") == 5, {"vec": [5.5, 0.0]})
-        assert not grp._ivf_attach
+        assert not grp._vindex
         routed3 = db.query_df(gql)
         assert "list_id" not in routed3._jdf.queryExecution().toString()
         assert [r["id"] for r in routed3.collect()] == [0, 1000, 1]
@@ -623,7 +623,7 @@ def test_knn_routed_idonly_ivf_index(spark, tmp_path):
         spark.conf.set("spark.gqlite.knn.ann_threshold", "100000")
 
 
-def test_knn_oversample_keeps_pruned_read_with_predicate(spark, tmp_path):
+def test_knn_routed_oversample_keeps_pruned_read(spark, tmp_path):
     """Predicate + $near over a MATERIALIZED index (VERDICT r7 missing
     #2): a mildly selective predicate is served from the top-(c·k)
     oversample off the pruned index partitions — the physical plan still
@@ -690,7 +690,7 @@ def test_overlay_cap_switches_to_antijoin(spark, tmp_path):
         grp.upsert_vertex(0, {"vec": [500.0, 0.0]})
         for i in range(7):
             grp.upsert_vertex(900 + i, {"vec": [300.0 + i, 0.0]})
-        assert grp._ivf_attach            # still attached (local writes)
+        assert grp._vindex                # still attached (local writes)
         gql = ("{query: 'pts', in: 'knnov', where:"
                " {vec: {limit: 3, $near: [0, 0]}}};")
         routed = db.query_df(gql)
@@ -708,14 +708,15 @@ def test_edge_group_local_upsert_detaches_index(spark, tmp_path):
     local edge upsert must DETACH an attached index rather than keep
     serving stale results."""
     from gqlite_spark import GQLite
+    from gqlite_spark.catalog import VectorIndex
     db = GQLite(spark)
     db.catalog.create_graph("edgeidx")
     g = db.catalog.graphs["edgeidx"]
     ge = g.create_group("rel", is_edge=True)
     ge.upsert_edge(1, "->", 2, {"w": 1.0})
-    ge._ivf_attach["vec"] = str(tmp_path / "fake")
+    ge._vindex["vec"] = VectorIndex("ivf", str(tmp_path / "fake"), {})
     ge.upsert_edge(2, "->", 3, {"w": 2.0})
-    assert not ge._ivf_attach
+    assert not ge._vindex
 
 
 def test_vindex_requires_integer_keys(spark, tmp_path):
@@ -797,7 +798,7 @@ def test_compact_overlay_into_index(spark, tmp_path):
         assert len(after) >= len(before)      # new lists may appear
         # overlay is gone, index attached, routed results correct:
         # id 0 now ranks by its far vector, 999 by its near one
-        assert not grp.rows and grp._ivf_attach
+        assert not grp.rows and grp._vindex
         gql = ("{query: 'pts', in: 'knncp', where:"
                " {vec: {limit: 3, $near: [0, 0]}}};")
         routed = db.query_df(gql)
@@ -826,7 +827,7 @@ def test_vindex_compact_gql_statement(spark, tmp_path):
     rep = db.exec(
         f"{{vindex: 'vecs', in: 'vcg', path: '{p}', compact: true}};")[0]
     assert rep.error is None and rep.rows == [[1, 1]], rep.rows
-    assert not grp.rows and grp._ivf_attach
+    assert not grp.rows and grp._vindex
     # compact with nothing to fold is a no-op
     rep2 = db.exec(
         f"{{vindex: 'vecs', in: 'vcg', path: '{p}', compact: true}};")[0]
@@ -889,7 +890,7 @@ def test_knn_routed_ivfpq_codes_read(spark, tmp_path):
     idx = str(tmp_path / "pqidx")
     save_ivfpq_index(grp.to_df(), idx, nlist=8, m=2, ksub=8,
                      id_col="id", vec_col="vec", metric="l2")
-    grp.attach_ivfpq_index("vec", idx)
+    grp.attach_index("vec", idx)
     spark.conf.set("spark.gqlite.knn.ann_threshold", "50")
     spark.conf.set("spark.gqlite.knn.nprobe", "3")
     try:
@@ -912,11 +913,12 @@ def test_knn_routed_ivfpq_codes_read(spark, tmp_path):
         # local overlay: new row joins as an exact candidate, shadowed
         # id's stale codes leave the ADC pool
         grp.upsert_vertex(999, {"vec": [-0.5, 0.0]})
-        assert grp._ivfpq_attach  # local writes keep the attach
+        assert grp._vindex["vec"].kind == "ivfpq"  # local writes keep it
         assert [r["id"] for r in db.query_df(gql).collect()] == [0, 999, 1]
         grp.upsert_vertex(0, {"vec": [500.0, 0.0]})
         assert [r["id"] for r in db.query_df(gql).collect()] == [999, 1, 2]
-        # a full-vector IVF index outranks the PQ route when attached
+        # one index per property: building the full-vector index
+        # replaces the PQ one, and the last built serves the route
         nlist = grp.build_ivf_index("vec", str(tmp_path / "fullvec"))
         assert nlist == 16
         plan2 = db.query_df(gql)._jdf.queryExecution().executedPlan() \
@@ -924,9 +926,9 @@ def test_knn_routed_ivfpq_codes_read(spark, tmp_path):
         # the materialized index's vector column is in the scan; the
         # ADC code-lookup expression is gone
         assert "_vec" in plan2 and "element_at(codes" not in plan2, plan2
-        # BULK mutation detaches both; queries fall back to exact
+        # BULK mutation detaches; queries fall back to exact
         grp.delete_where(SF.col("id") == SF.lit(999))
-        assert not grp._ivfpq_attach and not grp._ivf_attach
+        assert not grp._vindex
         back = db.query_df(gql)
         assert "list_id" not in back._jdf.queryExecution().toString()
         assert [r["id"] for r in back.collect()] == [1, 2, 3]
@@ -935,7 +937,7 @@ def test_knn_routed_ivfpq_codes_read(spark, tmp_path):
         spark.conf.unset("spark.gqlite.knn.nprobe")
 
 
-def test_knn_ivfpq_refill_and_exact_fallback(spark, tmp_path):
+def test_knn_routed_ivfpq_refill_and_exact_fallback(spark, tmp_path):
     """A selective predicate exhausts the small candidate set → the
     route doubles `candidates` (bounded) and, when the probed pool is
     spent, falls back to the complete exact scan — never a silently
@@ -945,7 +947,7 @@ def test_knn_ivfpq_refill_and_exact_fallback(spark, tmp_path):
     idx = str(tmp_path / "pqf")
     save_ivfpq_index(grp.to_df(), idx, nlist=8, m=2, ksub=8,
                      id_col="id", vec_col="vec", metric="l2")
-    grp.attach_ivfpq_index("vec", idx)
+    grp.attach_index("vec", idx)
     spark.conf.set("spark.gqlite.knn.ann_threshold", "50")
     spark.conf.set("spark.gqlite.knn.nprobe", "2")
     spark.conf.set("spark.gqlite.knn.pq_candidates", "4")
@@ -993,7 +995,7 @@ def test_vindex_pq_compaction(spark, tmp_path):
     lists_rewritten, rows_added = r.rows[0]
     assert rows_added == 2 and lists_rewritten >= 1
     assert not grp.rows                  # overlay merged into bulk
-    assert grp._ivfpq_attach             # index stays attached
+    assert grp._vindex["vec"].kind == "ivfpq"   # index stays attached
     after = {(x["id"], tuple(x["codes"]), x["list_id"])
              for x in load_ivfpq_index(spark, idx)[0].collect()}
     # old id-0 codes gone, id 999 present, id count conserved
@@ -1061,11 +1063,40 @@ def test_compaction_deletes_emptied_lists(spark, tmp_path):
     pq = str(tmp_path / "pq")
     grp2.build_ivfpq_index("vec", pq, nlist=8, m=2, ksub=8)
     grp2.upsert_vertex(3, {"vec": [30000.0, 0.0]})
-    rep = grp2.compact_into_pq_index("vec")
+    rep = grp2.compact_into_index("vec")
     assert rep["rows_added"] == 1
     pidx, _ = load_ivfpq_index(spark, pq)
     assert pidx.count() == 8
     assert pidx.filter("id = 3").count() == 1   # exactly the new entry
+
+
+def test_compaction_detaches_other_properties_indexes(spark, tmp_path):
+    """Compacting property ``a`` merges the overlay into the bulk side.
+    The index on ``b`` missed that fold, so it must detach: kept, its
+    routed $near would find the folded row in neither the index nor
+    the overlay."""
+    from gqlite_spark import GQLite
+    db = GQLite(spark)
+    db.catalog.create_graph("kmulti")
+    grp = db.catalog.graphs["kmulti"].create_group("pts")
+    grp.register_df(spark.createDataFrame(
+        [(i, [float(i), 0.0], [float(i), 0.0]) for i in range(200)],
+        "id long, a array<double>, b array<double>"))
+    grp.build_ivf_index("a", str(tmp_path / "ia"))
+    grp.build_ivf_index("b", str(tmp_path / "ib"))
+    grp.upsert_vertex(999, {"a": [-0.5, 0.0], "b": [-0.5, 0.0]})
+    grp.compact_into_index("a")
+    gql = ("{query: 'pts', in: 'kmulti',"
+           " where: {b: {limit: 3, %s$near: [0, 0]}}};")
+    spark.conf.set("spark.gqlite.knn.ann_threshold", "50")
+    try:
+        routed = [r["id"] for r in db.query_df(gql % "").collect()]
+        exact = [r["id"] for r in
+                 db.query_df(gql % "exact: true, ").collect()]
+    finally:
+        spark.conf.set("spark.gqlite.knn.ann_threshold", "100000")
+    assert routed == exact == [0, 999, 1], (routed, exact)
+    assert list(grp._vindex) == ["a"]
 
 
 def test_torn_compaction_marker_refuses_attach(spark, tmp_path,
@@ -1096,13 +1127,13 @@ def test_torn_compaction_marker_refuses_attach(spark, tmp_path,
     assert os.path.exists(marker)
     # a fresh attach (new session / re-wire) refuses the torn index
     grp2 = db.catalog.graphs["knntorn"].group("pts")
-    grp2._ivf_attach.clear()
+    grp2._vindex.clear()
     with pytest.raises(GQLiteError, match="torn compaction"):
-        grp2.attach_ivf_index("vec", idx)
+        grp2.attach_index("vec", idx)
     r = db.exec("{vindex: 'pts', in: 'knntorn', on: 'vec', path: '" +
                 idx + "', attach: true};")[0]
     assert r.error and "torn compaction" in r.error
     # rebuild overwrites the whole index and clears the marker
     grp2.build_ivf_index("vec", idx)
     assert not os.path.exists(marker)
-    assert grp2._ivf_attach.get("vec") == idx
+    assert grp2._vindex["vec"].path == idx

@@ -572,7 +572,8 @@ def test_gql_vindex_pq_builds_and_routes(pdb, tmp_path, spark):
     assert res.rows[0][0] == 2                  # nlist used
     assert res.rows[0][1] >= 4                  # vectors indexed
     grp = pdb.catalog.graphs["pg"].group("vecs")
-    assert grp._ivfpq_attach.get("embedding") == p
+    assert grp._vindex["embedding"].path == p
+    assert grp._vindex["embedding"].kind == "ivfpq"
     spark.conf.set("spark.gqlite.knn.ann_threshold", "1")
     try:
         out = pdb.query_df("{query: 'vecs', in: 'pg', where:"
@@ -612,18 +613,16 @@ def test_gql_vindex_attach_existing(pdb, tmp_path, spark):
               f" path: '{p_pq}', nlist: 2, pq: true, m: 2, ksub: 2}};")
     grp = pdb.catalog.graphs["pg"].group("vecs")
     # simulate a fresh session: drop the attaches
-    grp._ivf_attach.clear()
-    grp._ivfpq_attach.clear()
-    grp._ann_cache.clear()
+    grp._vindex.clear()
     res = _one(pdb, f"{{vindex: 'vecs', in: 'pg', path: '{p_ivf}',"
                     " attach: true};")
     assert res.rows == [["attach_ivf", 2]]
-    assert grp._ivf_attach.get("embedding") == p_ivf
-    grp._ivf_attach.clear()
+    assert grp._vindex["embedding"].path == p_ivf
     res = _one(pdb, f"{{vindex: 'vecs', in: 'pg', path: '{p_pq}',"
                     " attach: true};")
     assert res.rows == [["attach_ivfpq", 2]]
-    assert grp._ivfpq_attach.get("embedding") == p_pq
+    # the attach replaced the IVF record: one index per property
+    assert grp._vindex["embedding"].path == p_pq
     # routed query works off the re-attached PQ index
     spark.conf.set("spark.gqlite.knn.ann_threshold", "1")
     try:
@@ -670,7 +669,7 @@ def test_gql_vindex_attach_rejects_wrong_index(pdb, tmp_path):
                  " attach: true};")[0]
     assert r.error and "2-dimensional" in r.error and "3 dims" in r.error
     grp = pdb.catalog.graphs["pg"].group("w2")
-    assert not grp._ivf_attach and not grp._ivfpq_attach
+    assert not grp._vindex
 
 
 def test_gql_rollup_cms_metric(db, tmp_path):

@@ -501,7 +501,9 @@ def test_layout_attach_survives_graph_save_load(db, tmp_path, spark):
 def test_vindex_attach_survives_graph_save_load(spark, tmp_path):
     """Attached vector indexes persist across Graph.save/load too —
     otherwise a reloaded graph silently loses the routed $near path
-    (exact-scan fallback) until a manual re-attach.  A vanished index
+    (exact-scan fallback) until a manual re-attach.  With IVFPQ and
+    then IVF built on one property, the reloaded graph routes through
+    the one the live session did: the last built.  A vanished index
     degrades loudly to exact, not a failed load."""
     import shutil
 
@@ -515,17 +517,27 @@ def test_vindex_attach_survives_graph_save_load(spark, tmp_path):
             "id", "array(cast(id % 20 as double),"
             " cast(id % 7 as double)) as vec"),
         key_col="id")
+    grp.build_ivfpq_index("vec", str(tmp_path / "pq_sl"), m=2, ksub=8)
     ip = str(tmp_path / "ivf_sl")
     grp.build_ivf_index("vec", ip)
     root = str(tmp_path / "vroot")
     db.catalog.graphs["vp"].save(root)
     g2 = Graph.load(spark, root, "vp")
-    grp2 = g2.group("pts")
-    assert grp2._ivf_attach == {"vec": ip}
+    db.catalog.graphs["vp"] = g2
+    spark.conf.set("spark.gqlite.knn.ann_threshold", "50")
+    try:
+        plan = (db.query_df("{query: 'pts', in: 'vp',"
+                            " where: {vec: {limit: 3, $near: [0, 0]}}};")
+                ._jdf.queryExecution().executedPlan().toString())
+    finally:
+        spark.conf.set("spark.gqlite.knn.ann_threshold", "100000")
+    assert "_vec" in plan and "element_at(codes" not in plan, plan
+    assert {a: (r.kind, r.path) for a, r in g2.group("pts")._vindex
+            .items()} == {"vec": ("ivf", ip)}
     # vanished index: load succeeds, $near attach state falls back
     shutil.rmtree(ip)
     g3 = Graph.load(spark, root, "vp")
-    assert g3.group("pts")._ivf_attach == {}
+    assert g3.group("pts")._vindex == {}
 
 
 def test_layout_attach_save_load_preserves_overlay(db, tmp_path,

@@ -69,7 +69,7 @@ def test_local_write_keeps_index_handle_and_bulk_count(spark, tmp_path):
     try:
         grp.build_ivf_index("vec", str(tmp_path / "ivf"))
         assert [r["id"] for r in db.query_df(gql).collect()] == [0, 1, 2]
-        assert ("knn_ivf_idx", "vec") in grp._ann_cache
+        assert grp._vindex["vec"].df is not None
 
         grp.upsert_vertex(999, {"vec": [-0.5, 0.0]})
         with _count_jobs(spark) as c:
@@ -81,7 +81,7 @@ def test_local_write_keeps_index_handle_and_bulk_count(spark, tmp_path):
         assert [r["id"] for r in routed.collect()] == [0, 999, 1]
 
         grp.delete_where(F.col("id") == F.lit(999))
-        assert not grp._ivf_attach and not grp._ann_cache
+        assert not grp._vindex and not grp._ann_cache
         with _count_jobs(spark) as c:
             n = grp.row_count()
         assert c["jobs"] >= 1
@@ -92,18 +92,18 @@ def test_local_write_keeps_index_handle_and_bulk_count(spark, tmp_path):
 
 def test_reattach_does_not_reuse_stale_index_handle(spark, tmp_path):
     """A rebuild at the same path must reload: local writes keep the
-    loaded handle, so attach is what drops it."""
+    loaded handle, so re-attaching is what replaces it."""
     _, grp = _group(spark, "ov_reattach")
     grp.register_df(spark.createDataFrame(
         [(i, [float(i), 0.0]) for i in range(60)],
         "id long, vec array<double>"))
     path = str(tmp_path / "ivf")
-    grp.attach_ivf_index("vec", path)
-    grp._ann_cache[("knn_ivf_idx", "vec")] = ("stale", {}, path)
+    grp.build_ivf_index("vec", path)
+    grp._vindex["vec"].df = "stale"
     grp.upsert_vertex(1000, {"vec": [1.0, 1.0]})
-    assert ("knn_ivf_idx", "vec") in grp._ann_cache
-    grp.attach_ivf_index("vec", path)
-    assert ("knn_ivf_idx", "vec") not in grp._ann_cache
+    assert grp._vindex["vec"].df == "stale"
+    grp.attach_index("vec", path)
+    assert grp._vindex["vec"].df is None
 
 
 def _list_local_df(self):
@@ -177,3 +177,88 @@ def test_overlay_type_round_trip_edge(spark, monkeypatch):
     assert [(r["src"], r["direction"], r["dst"]) for r in new] == [
         (1, "->", 2), (1, "->", 5), (2, "->", 3), (4, "->", 5)]
     assert new[1]["k"] == 0 and new[2]["w"] == 2.0
+
+
+def _line_group(spark, name, n=200):
+    db, grp = _group(spark, name)
+    grp.register_df(spark.createDataFrame(
+        [(i, [float(i), 0.0], i % 2) for i in range(n)],
+        "id long, vec array<double>, flag long"))
+    return db, grp
+
+
+def _route_jobs(spark, db, gql):
+    """(jobs to plan, jobs to collect, ids) of a routed $near, measured
+    after one warm-up run has loaded the index and the bulk count."""
+    db.query_df(gql).collect()
+    with _count_jobs(spark) as plan:
+        df = db.query_df(gql)
+    with _count_jobs(spark) as run:
+        ids = [r["id"] for r in df.collect()]
+    return plan["jobs"], run["jobs"], ids
+
+
+def _routed_conf(spark, **extra):
+    confs = {"spark.gqlite.knn.ann_threshold": "50", **extra}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    return lambda: [spark.conf.unset(k) for k in confs]
+
+
+def test_oversample_route_job_counts(spark, tmp_path):
+    """Materialized IVF plus a plain predicate: the bounded refill loop
+    ranks exact distances off the pruned index and pays one count job
+    to see that k rows survived."""
+    db, _ = _line_group(spark, "ov_jobs_os")
+    db.exec(f"{{vindex: 'g', in: 'ov_jobs_os', on: 'vec',"
+            f" path: '{tmp_path / 'ivf'}'}};")
+    reset = _routed_conf(spark)
+    try:
+        got = _route_jobs(spark, db, (
+            "{query: 'g', in: 'ov_jobs_os', where: {$and: [{flag: 0},"
+            " {vec: {limit: 3, $near: [0, 0]}}]}};"))
+    finally:
+        reset()
+    assert got == (2, 2, [0, 2, 4]), got
+
+
+def test_idonly_route_job_counts(spark, tmp_path):
+    """An id-only IVF index routes by semi-join: planning runs no job."""
+    from gqlite_spark.operators.similarity import save_ivf_index
+    db, grp = _line_group(spark, "ov_jobs_id")
+    idx = str(tmp_path / "ivf_ids")
+    save_ivf_index(grp.to_df(), idx, nlist=8, id_col="id",
+                   vec_col="vec", metric="l2")
+    db.exec(f"{{vindex: 'g', in: 'ov_jobs_id', on: 'vec', path: '{idx}',"
+            " attach: true};")
+    reset = _routed_conf(spark)
+    try:
+        got = _route_jobs(spark, db, (
+            "{query: 'g', in: 'ov_jobs_id',"
+            " where: {vec: {limit: 3, $near: [0, 0]}}};"))
+    finally:
+        reset()
+    assert got == (0, 2, [0, 1, 2]), got
+
+
+def test_ivfpq_route_job_counts(spark, tmp_path):
+    """IVFPQ with every list probed: the first 4 candidates hold k rows
+    for the plain $near; ``id >= 3`` leaves one survivor among them, so
+    the loop counts the pool and refills once at 8 candidates."""
+    db, _ = _line_group(spark, "ov_jobs_pq")
+    db.exec(f"{{vindex: 'g', in: 'ov_jobs_pq', on: 'vec',"
+            f" path: '{tmp_path / 'pq'}', nlist: 8, pq: true, m: 2,"
+            " ksub: 8};")
+    reset = _routed_conf(spark, **{"spark.gqlite.knn.nprobe": "8",
+                                   "spark.gqlite.knn.pq_candidates": "4"})
+    try:
+        pure = _route_jobs(spark, db, (
+            "{query: 'g', in: 'ov_jobs_pq',"
+            " where: {vec: {limit: 3, $near: [0, 0]}}};"))
+        refill = _route_jobs(spark, db, (
+            "{query: 'g', in: 'ov_jobs_pq', where: {id: {$gte: 3},"
+            " vec: {limit: 3, $near: [0, 0]}}};"))
+    finally:
+        reset()
+    assert pure == (2, 2, [0, 1, 2]), pure
+    assert refill == (5, 2, [3, 4, 5]), refill

@@ -237,9 +237,10 @@ def main() -> None:
             return cosine_topk(pruned, q, k=K)
 
         scaled = default_nprobe(nlist)
-        # the routed $near default (executor._knn_ivfpq's candidates
-        # law) is part of the sweep so the default itself is what gets
-        # validated, not just hand-picked points
+        # the routed $near default (the IVFPQ candidates law in
+        # executor._apply_knn_routed) is part of the sweep so the
+        # default itself is what gets validated, not just hand-picked
+        # points
         law = max(1000, n_vecs // 1000, 4 * K)
         for np_ in sorted({4, scaled, 2 * scaled}):
             for cand in sorted({10 * K, 100 * K, law}):
