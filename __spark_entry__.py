@@ -1163,7 +1163,7 @@ def q_knn_pq(spark, sf_dir):
     idx = tempfile.mkdtemp(prefix="gqlite_knnpqidx_")
     save_ivfpq_index(emb, idx, nlist=16, m=4, ksub=16, refine_iters=0,
                      metric="l2")
-    grp.attach_index("embedding", idx)
+    grp.attach_index("embedding", idx, "ivfpq")
     confs = {"spark.gqlite.knn.ann_threshold": "1",
              "spark.gqlite.knn.nprobe": "4",
              "spark.gqlite.knn.pq_candidates": "100"}

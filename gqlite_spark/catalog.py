@@ -167,11 +167,10 @@ class VectorIndex:
 
     ``kind`` is ``'ivf'`` (full-vector inverted lists, ``_vec`` column;
     id-only when built without ``include_vectors``) or ``'ivfpq'``
-    (codes-only lists, ``codes`` column), read from whichever params
-    sidecar exists at ``path``; ``params`` is that sidecar.  The index
-    DataFrame loads on first probe and is then reused until the record
-    is replaced or dropped — the handle cache of the routed ``$near``
-    path."""
+    (codes-only lists, ``codes`` column); ``params`` is that kind's
+    sidecar at ``path``.  The index DataFrame loads on first probe and
+    is then reused until the record is replaced or dropped — the
+    handle cache of the routed ``$near`` path."""
     kind: str
     path: str
     params: dict
@@ -179,9 +178,9 @@ class VectorIndex:
 
     def frame(self, spark: SparkSession) -> DataFrame:
         if self.df is None:
-            from . import fsio
+            from .operators.similarity import index_data_path
             self.df = spark.read.parquet(
-                fsio.join(self.path, self.kind + ".parquet"))
+                index_data_path(self.path, self.kind))
         return self.df
 
 
@@ -661,32 +660,40 @@ class Group:
             self._ann_cache = {}
         return {"rows_folded": len(new_ids), "rows_kept": kept}
 
-    def attach_index(self, attr: str, path: str) -> VectorIndex:
+    def attach_index(self, attr: str, path: str,
+                     kind: "Optional[str]" = None,
+                     dim: "Optional[int]" = None) -> VectorIndex:
         """Attach the persisted l2 vector index at ``path`` (written by
         ``operators.similarity.save_ivf_index`` / ``save_ivfpq_index``
         with ``metric='l2'``) to ``attr``, replacing any index already
-        on it: the last built or attached index serves the route.  The
-        kind comes from whichever params sidecar exists
-        (``ivf_params.json`` first, then ``ivfpq_params.json``).  While
-        attached, the cost-routed ``$near``+limit path probes the index
-        instead of scanning everything (executor._apply_knn_routed):
-        a MATERIALIZED full-vector index (``include_vectors=True``) or
-        an IVFPQ index reads only the probed lists.  Refuses a
-        non-``l2`` index, one built for another column, and one
-        carrying a torn-compaction marker (see
-        ``_overwrite_index_lists``) — rebuild that instead.  Local
+        on it: the last built or attached index serves the route.
+        ``kind`` ('ivf' or 'ivfpq') names the index to attach; callers
+        that know it must pass it, because one path can hold both kinds
+        and each build overwrites only its own files.  When None, the
+        kind is whichever params sidecar exists (``ivf`` first, then
+        ``ivfpq``).  While attached, the cost-routed ``$near``+limit
+        path probes the index instead of scanning everything
+        (executor._apply_knn_routed): a MATERIALIZED full-vector index
+        (``include_vectors=True``) or an IVFPQ index reads only the
+        probed lists.  Refuses a non-``l2`` index, one built for
+        another column, one whose centroids are not ``dim``-dimensional
+        (when ``dim`` is given), and one carrying a torn-compaction
+        marker (see ``_overwrite_index_lists``) — rebuild that instead.
+        A refused attach leaves the previous record in place.  Local
         overlay writes keep the attach; bulk mutations detach it."""
         from . import fsio
+        from .operators.similarity import (index_data_path,
+                                           index_params_path,
+                                           load_index_params)
         self._check_index_keys()
-        for kind in ("ivf", "ivfpq"):
-            sidecar = fsio.join(path, kind + "_params.json")
-            if fsio.exists(self.spark, sidecar):
+        for kind in ((kind,) if kind else ("ivf", "ivfpq")):
+            if fsio.exists(self.spark, index_params_path(path, kind)):
                 break
         else:
             raise GQLiteError(
                 f"vindex attach: no index sidecar at '{path}' "
                 "— build one first ({vindex} / {vindex pq: true})")
-        marker = fsio.join(path, kind + ".parquet", COMPACT_MARKER)
+        marker = fsio.join(index_data_path(path, kind), COMPACT_MARKER)
         if fsio.exists(self.spark, marker):
             raise GQLiteError(
                 f"index at '{path}' has a torn compaction "
@@ -695,7 +702,7 @@ class Group:
                 "some stale, and the overlay that patched them is "
                 "gone — rebuild the index ({vindex} / "
                 "{vindex pq: true} overwrite clears this)")
-        params = fsio.read_json(self.spark, sidecar)
+        params = load_index_params(self.spark, path, kind)
         if params.get("metric", "l2") != "l2":
             raise GQLiteError(
                 f"vindex attach: index at '{path}' has metric="
@@ -707,7 +714,12 @@ class Group:
             raise GQLiteError(
                 f"vindex attach: index at '{path}' was built "
                 f"for column '{side_col}', not '{attr}'")
-        params["centroids"] = [(cid, cv) for cid, cv in params["centroids"]]
+        cents = params["centroids"]
+        if dim is not None and cents and len(cents[0][1]) != dim:
+            raise GQLiteError(
+                f"vindex attach: index at '{path}' is "
+                f"{len(cents[0][1])}-dimensional but group "
+                f"'{self.meta.name}'.{attr} vectors have {dim} dims")
         rec = self._vindex[attr] = VectorIndex(kind, path, params)
         return rec
 
@@ -722,11 +734,12 @@ class Group:
                 f"{self.meta.key_type} keys; IVF indexes require "
                 "integer vertex keys")
 
-    def _build_index(self, attr: str, path: str, nlist: "Optional[int]",
-                     n_vectors: "Optional[int]", save) -> int:
+    def _build_index(self, attr: str, path: str, kind: str,
+                     nlist: "Optional[int]", n_vectors: "Optional[int]",
+                     save) -> int:
         """Shared build preamble: key check, non-null vectors, √n-auto
-        nlist unless given, ``save(df, nlist)``, attach.  Returns the
-        nlist used."""
+        nlist unless given, ``save(df, nlist)``, attach the ``kind``
+        just written.  Returns the nlist used."""
         from .operators.similarity import auto_nlist
         self._check_index_keys()
         df = self.to_df()
@@ -739,7 +752,7 @@ class Group:
         n = nlist or auto_nlist(n_vectors if n_vectors is not None
                                 else df.count())
         save(df, n)
-        self.attach_index(attr, path)
+        self.attach_index(attr, path, kind)
         return n
 
     def build_ivf_index(self, attr: str, path: str,
@@ -759,7 +772,7 @@ class Group:
         (HNSW.cpp:282-328)."""
         from .operators.similarity import save_ivf_index
         return self._build_index(
-            attr, path, nlist, n_vectors,
+            attr, path, "ivf", nlist, n_vectors,
             lambda df, n: save_ivf_index(
                 df, path, nlist=n, refine_iters=refine_iters,
                 id_col="id", vec_col=attr, metric="l2",
@@ -780,7 +793,7 @@ class Group:
         for bit-exact external SQL replay).  Returns the nlist used."""
         from .operators.similarity import save_ivfpq_index
         return self._build_index(
-            attr, path, nlist, n_vectors,
+            attr, path, "ivfpq", nlist, n_vectors,
             lambda df, n: save_ivfpq_index(
                 df, path, nlist=n, m=m, ksub=ksub,
                 refine_iters=refine_iters, id_col="id", vec_col=attr,
@@ -810,8 +823,8 @@ class Group:
         Spark engine batches overlay rows and re-quantizes only the
         lists they land in.  Returns
         ``{"lists_rewritten": n, "rows_added": m}``."""
-        from . import fsio
-        from .operators.similarity import _ivf_assign_col, _pq_codes_col
+        from .operators.similarity import (_ivf_assign_col, _pq_codes_col,
+                                           index_data_path)
         rec = self._vindex.get(attr)
         if rec is None:
             raise GQLiteError(
@@ -865,7 +878,7 @@ class Group:
             # its own plan reads); materialized size ∝ affected lists
             out = out.localCheckpoint(eager=True)
             self._overwrite_index_lists(
-                fsio.join(rec.path, rec.kind + ".parquet"), out, affected)
+                index_data_path(rec.path, rec.kind), out, affected)
         # merge the overlay into the bulk side; this index now covers
         # the whole group again, so it stays attached (bespoke cache
         # reset — _invalidate() would detach) and reloads its changed
@@ -1290,7 +1303,7 @@ class Graph:
                 continue
             for attr, rec in per.items():
                 try:
-                    g.attach_index(attr, rec["path"])
+                    g.attach_index(attr, rec["path"], rec.get("kind"))
                 except Exception:
                     # a vanished or refused index must mean NO attach,
                     # not a failed graph load

@@ -809,27 +809,13 @@ class GQLite:
         if stmt.attach:
             # attach-only: re-wire an EXISTING persisted index (fresh
             # session — no rebuild; kind discovered from the sidecar,
-            # symmetric with {layout attach:})
-            prev = grp._vindex.get(stmt.on)
-            rec = grp.attach_index(stmt.on, stmt.path)
-            # an index built on a different-dim corpus would silently
-            # serve wrong $near neighbors; a refused attach restores
-            # whatever was attached before
-            cents = rec.params["centroids"]
-            if cents:
-                idx_dim = len(cents[0][1])
-                row = (df.filter(F.col(stmt.on).isNotNull())
-                       .select(F.size(stmt.on).alias("_d")).head(1))
-                if row and row[0]["_d"] != idx_dim:
-                    if prev is None:
-                        del grp._vindex[stmt.on]
-                    else:
-                        grp._vindex[stmt.on] = prev
-                    raise GQLiteError(
-                        f"vindex attach: index at '{stmt.path}' is "
-                        f"{idx_dim}-dimensional but group "
-                        f"'{stmt.group}'.{stmt.on} vectors have "
-                        f"{row[0]['_d']} dims")
+            # symmetric with {layout attach:}).  An index built on a
+            # different-dim corpus would silently serve wrong $near
+            # neighbors, so attach checks the column's dimension.
+            row = (df.filter(F.col(stmt.on).isNotNull())
+                   .select(F.size(stmt.on).alias("_d")).head(1))
+            rec = grp.attach_index(stmt.on, stmt.path,
+                                   dim=row[0]["_d"] if row else None)
             nlist = int(rec.params.get("nlist") or 0)
             return StatementResult(status="QUERY SUCCESS",
                                    rows=[["attach_" + rec.kind, nlist]],
@@ -837,11 +823,13 @@ class GQLite:
         if stmt.compact:
             # fold the OLTP overlay into the existing index in place —
             # rewrites only the affected list partitions.  Re-attaches
-            # first if needed (e.g. after an engine restart); the kind
-            # comes from the sidecar, so ``pq: true`` is optional here.
+            # first if needed (e.g. after an engine restart): ``pq:
+            # true`` names the IVFPQ index, otherwise the kind comes
+            # from the sidecar.
             rec = grp._vindex.get(stmt.on)
             if rec is None:
-                grp.attach_index(stmt.on, stmt.path)
+                grp.attach_index(stmt.on, stmt.path,
+                                 "ivfpq" if stmt.pq else None)
             elif rec.path != stmt.path:
                 raise GQLiteError(
                     f"vindex: index for '{stmt.on}' is attached at "
@@ -1303,8 +1291,8 @@ class GQLite:
         bit-stable for external oracles.
 
         Above the threshold WITH an attached l2 index
-        (``Group.attach_index``; one per property, kind read from its
-        sidecar) the query probes the index's ``nprobe`` nearest
+        (``Group.attach_index``; one per property, the kind named by
+        its attach record) the query probes the index's ``nprobe`` nearest
         inverted lists — a partition-pruned scan — and drops the ids the
         local overlay shadows from it (the index holds their PRE-upsert
         entries; overlay rows join as always-exact candidates instead).

@@ -877,18 +877,38 @@ def save_ivf_index(df: DataFrame, path: str, nlist: int = 16,
     if include_vectors:
         cols.append(F.col(vec_col).alias("_vec"))
     (df.select(*cols).write.mode("overwrite").partitionBy("list_id")
-     .parquet(fsio.join(path, "ivf.parquet")))
-    fsio.write_json(df.sparkSession, fsio.join(path, "ivf_params.json"),
+     .parquet(index_data_path(path, "ivf")))
+    fsio.write_json(df.sparkSession, index_params_path(path, "ivf"),
                     {"nlist": nlist, "id_col": id_col, "vec_col": vec_col,
                      "metric": metric, "include_vectors": include_vectors,
                      "centroids": [[cid, cv] for cid, cv in cents]})
 
 
-def load_ivf_index(spark, path: str) -> "tuple[DataFrame, dict]":
+def index_data_path(path: str, kind: str) -> str:
+    """The inverted-list parquet of a persisted ``kind`` ('ivf' or
+    'ivfpq') index at ``path``."""
     from .. import fsio
-    params = fsio.read_json(spark, fsio.join(path, "ivf_params.json"))
+    return fsio.join(path, kind + ".parquet")
+
+
+def index_params_path(path: str, kind: str) -> str:
+    """The params sidecar of a persisted ``kind`` index at ``path``."""
+    from .. import fsio
+    return fsio.join(path, kind + "_params.json")
+
+
+def load_index_params(spark, path: str, kind: str) -> dict:
+    """Read the params sidecar of a persisted ``kind`` index, with the
+    centroids as ``(cid, vector)`` tuples."""
+    from .. import fsio
+    params = fsio.read_json(spark, index_params_path(path, kind))
     params["centroids"] = [(cid, cv) for cid, cv in params["centroids"]]
-    return spark.read.parquet(fsio.join(path, "ivf.parquet")), params
+    return params
+
+
+def load_ivf_index(spark, path: str) -> "tuple[DataFrame, dict]":
+    params = load_index_params(spark, path, "ivf")
+    return spark.read.parquet(index_data_path(path, "ivf")), params
 
 
 def ivf_topk_indexed(df: DataFrame, query_vec: list[float],
@@ -1302,8 +1322,8 @@ def save_ivfpq_index(df: DataFrame, path: str, nlist: int = 16,
                _ivf_assign_col(cents, vec_col, metric).alias("list_id"),
                _pq_codes_col(books, vec_col).alias("codes"))
      .write.mode("overwrite").partitionBy("list_id")
-     .parquet(fsio.join(path, "ivfpq.parquet")))
-    fsio.write_json(df.sparkSession, fsio.join(path, "ivfpq_params.json"),
+     .parquet(index_data_path(path, "ivfpq")))
+    fsio.write_json(df.sparkSession, index_params_path(path, "ivfpq"),
                     {"nlist": nlist, "m": m, "ksub": ksub,
                      "id_col": id_col, "vec_col": vec_col,
                      "metric": metric,
@@ -1312,10 +1332,8 @@ def save_ivfpq_index(df: DataFrame, path: str, nlist: int = 16,
 
 
 def load_ivfpq_index(spark, path: str) -> "tuple[DataFrame, dict]":
-    from .. import fsio
-    params = fsio.read_json(spark, fsio.join(path, "ivfpq_params.json"))
-    params["centroids"] = [(cid, cv) for cid, cv in params["centroids"]]
-    return spark.read.parquet(fsio.join(path, "ivfpq.parquet")), params
+    params = load_index_params(spark, path, "ivfpq")
+    return spark.read.parquet(index_data_path(path, "ivfpq")), params
 
 
 def ivfpq_topk_indexed(df: DataFrame, query_vec: list[float],

@@ -932,6 +932,16 @@ def test_knn_routed_ivfpq_codes_read(spark, tmp_path):
         back = db.query_df(gql)
         assert "list_id" not in back._jdf.queryExecution().toString()
         assert [r["id"] for r in back.collect()] == [1, 2, 3]
+        # an IVFPQ rebuild at the full-vector index's path attaches
+        # the IVFPQ index just written, not the stale IVF sidecar that
+        # still sits beside it
+        grp.build_ivfpq_index("vec", str(tmp_path / "fullvec"), nlist=8,
+                              m=2, ksub=8)
+        assert grp._vindex["vec"].kind == "ivfpq"
+        rebuilt = db.query_df(gql)
+        plan3 = rebuilt._jdf.queryExecution().executedPlan().toString()
+        assert "element_at(codes" in plan3, plan3
+        assert [r["id"] for r in rebuilt.collect()] == [1, 2, 3]
     finally:
         spark.conf.set("spark.gqlite.knn.ann_threshold", "100000")
         spark.conf.unset("spark.gqlite.knn.nprobe")
@@ -980,6 +990,9 @@ def test_vindex_pq_compaction(spark, tmp_path):
     from gqlite_spark.operators.similarity import load_ivfpq_index
     db, grp = _line_fixture_group(spark, "knnrt_pqc")
     idx = str(tmp_path / "pqc")
+    # a full-vector index shares the path: its sidecar stays beside
+    # the IVFPQ one, and `pq: true` must still pick the IVFPQ index
+    grp.build_ivf_index("vec", idx, nlist=8)
     r = db.exec("{vindex: 'pts', in: 'knnrt_pqc', on: 'vec',"
                 f" path: '{idx}', nlist: 8, pq: true, m: 2,"
                 " ksub: 8};")[0]
@@ -989,6 +1002,8 @@ def test_vindex_pq_compaction(spark, tmp_path):
     # overlay: move id 0 far away, add a new near-origin vector
     grp.upsert_vertex(0, {"vec": [500.0, 0.0]})
     grp.upsert_vertex(999, {"vec": [-0.5, 0.0]})
+    # fresh session: compaction re-attaches the index `pq: true` names
+    grp._vindex.clear()
     r = db.exec("{vindex: 'pts', in: 'knnrt_pqc', on: 'vec',"
                 " path: '" + idx + "', pq: true, compact: true};")[0]
     assert r.error is None, r.error

@@ -534,6 +534,14 @@ def test_vindex_attach_survives_graph_save_load(spark, tmp_path):
     assert "_vec" in plan and "element_at(codes" not in plan, plan
     assert {a: (r.kind, r.path) for a, r in g2.group("pts")._vindex
             .items()} == {"vec": ("ivf", ip)}
+    # IVFPQ rebuilt at the IVF index's path: the saved kind, not the
+    # stale IVF sidecar still beside it, is what the reload attaches
+    g2.group("pts").build_ivfpq_index("vec", ip, m=2, ksub=8)
+    root2 = str(tmp_path / "vroot2")
+    g2.save(root2)
+    g4 = Graph.load(spark, root2, "vp")
+    assert {a: (r.kind, r.path) for a, r in g4.group("pts")._vindex
+            .items()} == {"vec": ("ivfpq", ip)}
     # vanished index: load succeeds, $near attach state falls back
     shutil.rmtree(ip)
     g3 = Graph.load(spark, root, "vp")
