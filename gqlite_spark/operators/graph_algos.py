@@ -6,13 +6,26 @@ most are stubs; we implement them for real on Spark.  The driver mandate is
 "GraphX for analytics queries" — GraphX's Pregel model is Scala-only, so from
 PySpark we express the same vertex-program iteration directly over
 DataFrames: superstep = join(messages = frontier ⋈ edges) → groupBy(min/sum)
-→ compare-and-update.  Every loop:
+→ compare-and-update.
 
-- localCheckpoint()s periodically to break lineage (mandatory for iterative
-  algorithms at scale — otherwise plan depth grows linearly);
-- keeps state keyed by vertex id so each superstep is ONE shuffle on id
-  (co-partitioned joins reuse the exchange);
-- never collects more than scalars/paths to the driver.
+Every loop is a ``step`` (message logic only: ``step(state, i)`` returns the
+next state as a lazy plan) run by ONE superstep driver, :func:`_supersteps`.
+The driver owns everything else:
+
+- lineage truncation — eager checkpoints on a cadence, or a checkpoint
+  fused with the convergence probe into one job; lazy checkpoints exist
+  only inside the driver, where the job that materializes them is known;
+- the reliable/local checkpoint branch (operators/ckpt.py);
+- the convergence rule — a fixed superstep count, an empty frontier, or
+  a repeated state digest (one order-independent xxhash64 sum);
+- the exhaustion policy — an empty-frontier or digest loop that runs out
+  of ``max_iter`` warns (``RuntimeWarning``) instead of returning a
+  silently truncated result.
+
+State stays keyed by vertex id so each superstep is ONE shuffle on id, and
+nothing but scalars/paths is collected to the driver.  Shortest path and
+the weighted centralities share one Bellman-Ford relaxation
+(:func:`_relax`).
 """
 
 from __future__ import annotations
@@ -127,28 +140,123 @@ def _ckpt(df: DataFrame) -> DataFrame:
     return materialize(df, eager=True, coalesce=True)
 
 
-def _ckpt_probe(df: DataFrame, *aggs):
-    """Checkpoint + convergence probe fused into ONE job (see
-    operators/ckpt.py::materialize_probed) — the loops' per-batch
-    ``agg(sum(xxhash64)).collect()`` otherwise re-reads the state in a
-    second job right after the eager checkpoint wrote it."""
-    from .ckpt import materialize_probed
-    return materialize_probed(df, *aggs, coalesce=True)
+def _supersteps(state: DataFrame, step, until: str, bound: int, *,
+                every: int = 1, batch: int = 1, probe=None,
+                seed: bool = False, warn: "str | None" = None):
+    """The superstep driver: runs ``step(state, i) -> next state`` and
+    yields every state it materializes.
+
+    ``until`` is the convergence rule:
+
+    - ``"count"``: exactly ``bound`` supersteps, an eager checkpoint
+      after every ``every``-th one; no probe job.
+    - ``"empty"``: each new state is checkpointed and probed in ONE job
+      (``probe``, default ``count(*)`` — the frontier size); the loop
+      stops at the first zero, which is not yielded.
+    - ``"fixpoint"``: ``batch`` supersteps per probe; stops when the
+      state digest (``probe``, default the decimal sum of
+      ``xxhash64(*columns)``: order-independent and type-agnostic — a
+      plain sum over string ids would be NULL — collision odds ~2^-64)
+      repeats.  In local mode with ``batch`` > 1, the penultimate
+      superstep's state is checkpointed LAZILY: the batch's probe job
+      computes every partition of it (the last superstep aggregates the
+      whole state), so digesting it afterwards is a shuffle-free
+      mini-job and the fixpoint is caught at +1-superstep granularity
+      instead of one full batch late.  Otherwise (reliable checkpoints —
+      a lazy reliable checkpoint re-runs its lineage when the files are
+      written — ``batch`` == 1, or ``seed``) consecutive batch digests
+      are compared; ``seed`` probes the initial state first, so the
+      first batch can already confirm the fixpoint.
+
+    An ``"empty"`` or ``"fixpoint"`` loop that uses up ``bound``
+    supersteps without converging emits ``warn`` as a RuntimeWarning;
+    ``warn=None`` only where the bound IS the answer (k_hop's ``hops``)."""
+    from .ckpt import materialize, materialize_probed, reliable_enabled
+    if until == "count":
+        for i in range(bound):
+            state = step(state, i)
+            if (i + 1) % every == 0:
+                state = _ckpt(state)
+            yield state
+        return
+    if until == "empty":
+        probe = F.count(F.lit(1)) if probe is None else probe
+        for i in range(bound):
+            state, p = materialize_probed(step(state, i), probe)
+            if p[0] == 0:
+                return
+            yield state
+    else:
+        digest = (F.sum(F.xxhash64(*state.columns).cast("decimal(38,0)"))
+                  if probe is None else probe)
+        cross = seed or batch == 1 or reliable_enabled(state.sparkSession)
+        prev, i = None, 0
+        if seed:
+            state, p = materialize_probed(state, digest)
+            prev = p[0]
+        for _ in range(0, bound, batch):
+            for _ in range(batch if cross else batch - 1):
+                state, i = step(state, i), i + 1
+            if cross:
+                state, p = materialize_probed(state, digest)
+                done, prev = p[0] == prev, p[0]
+            else:
+                penult = materialize(state, eager=False)
+                state, p = materialize_probed(step(penult, i), digest)
+                i += 1
+                done = p[0] == penult.agg(digest).collect()[0][0]
+            yield state
+            if done:
+                return
+    if warn:
+        warnings.warn(warn, RuntimeWarning)
 
 
-def _lazy_or_eager_ckpt(df: DataFrame) -> DataFrame:
-    """Lineage-truncating checkpoint whose materialization is SAFE to
-    defer to the next full-coverage job (r15): with local checkpoints
-    the caller's immediately-following probe/aggregate computes every
-    partition, so the lazy form saves one job per superstep; reliable-
-    checkpoint sessions stay eager (a lazy reliable checkpoint re-runs
-    its lineage when the files are written).  Callers must guarantee the
-    next action covers ALL partitions — see ckpt.materialize_probed's
-    take(1) warning."""
-    from .ckpt import materialize, reliable_enabled
-    if reliable_enabled(df.sparkSession):
-        return _ckpt(df)
-    return materialize(df, eager=False, coalesce=True)
+def _converge(state: DataFrame, step, until: str, bound: int, **kw):
+    """:func:`_supersteps` run to the end: the last materialized state
+    (``state`` itself if no superstep yielded one)."""
+    for state in _supersteps(state, step, until, bound, **kw):
+        pass
+    return state
+
+
+def _relax(best: DataFrame, expand, keys: list, vals: list, bound: int,
+           warn: str) -> DataFrame:
+    """Bellman-Ford frontier relaxation, shared by shortest_path and the
+    weighted centralities.  ``best`` holds (*keys, *vals); ``expand``
+    turns the frontier into candidate rows of the same shape.  Per
+    superstep: min-aggregate bests ∪ candidates on ``keys`` (lexicographic
+    over ``vals``), left-join the old bests and flag improved rows
+    ``_live`` — only those re-expand.  Bests and frontier are ONE
+    checkpointed state, so the frontier probe (count of live rows) is the
+    only job per superstep.  Re-expanding on ANY improvement of the
+    ``vals`` tuple, not just the first column, lets an equal-cost,
+    lexicographically smaller path that arrives later still propagate
+    downstream (shortest_path's deterministic tie-break)."""
+    def tup(side):
+        cols = [F.col(f"{side}.{c}") for c in vals]
+        return cols[0] if len(cols) == 1 else F.struct(*cols)
+
+    def step(state, _):
+        cur = state.drop("_live")
+        cand = cur.unionByName(expand(state.filter("_live").drop("_live")))
+        if len(vals) == 1:
+            new = cand.groupBy(*keys).agg(F.min(vals[0]).alias(vals[0]))
+        else:
+            # min(struct) = lexicographic — one partial-aggregating shuffle
+            new = (cand.groupBy(*keys).agg(F.min(F.struct(*vals)).alias("_m"))
+                   .select(*keys, *[F.col(f"_m.{c}").alias(c) for c in vals]))
+        return (new.alias("n").join(cur.alias("o"), keys, "left")
+                .select(*keys, *[F.col(f"n.{c}").alias(c) for c in vals],
+                        (F.col(f"o.{vals[0]}").isNull() | (tup("n") < tup("o")))
+                        .alias("_live")))
+
+    # the superstep that finds no improvement reproduces the last yielded
+    # bests exactly, so the last yielded state IS the fixpoint
+    state = _converge(best.withColumn("_live", F.lit(True)), step, "empty",
+                      bound, probe=F.count(F.when(F.col("_live"), 1)),
+                      warn=warn)
+    return state.drop("_live")
 
 
 def normalize_edges(edges: DataFrame, weight_col: Optional[str] = None,
@@ -171,52 +279,30 @@ def shortest_path(edges: DataFrame, src, dst, weight_col: Optional[str] = None,
     reference's A* walker, include/walk/AStarWalk.h:27-95 — a global
     priority queue does not distribute; frontier relaxation does).
     Returns (cost, [path ids]) or None if unreachable.  Deterministic:
-    ties broken by lexicographically smallest path.
+    ties broken by lexicographically smallest path.  Warns
+    (``RuntimeWarning``) if the relaxation is still improving after
+    ``max_iter`` supersteps — a path longer than that many hops would
+    otherwise be reported as unreachable or too expensive.
     """
     spark = edges.sparkSession
     e = normalize_edges(edges, weight_col, undirected)
     e = e.repartition("src").cache()
 
     id_type = dict(e.dtypes)["src"]
-    best = spark.createDataFrame([(src, 0.0, [src])],
+    seed = spark.createDataFrame([(src, 0.0, [src])],
                                  f"id {id_type}, cost double, path array<{id_type}>")
-    frontier = best
-    for it in range(max_iter):
-        msgs = (frontier.alias("f").join(e.alias("e"),
-                                         F.col("f.id") == F.col("e.src"))
-                .select(F.col("e.dst").alias("id"),
-                        (F.col("f.cost") + F.col("e.w")).alias("cost"),
-                        F.concat(F.col("f.path"),
-                                 F.array(F.col("e.dst"))).alias("path")))
-        # min(struct) = lexicographic (cost, path) — one partial-aggregating
-        # shuffle per superstep, no window sort
-        new_best = (best.unionByName(msgs).groupBy("id")
-                    .agg(F.min(F.struct("cost", "path")).alias("cp"))
-                    .select("id", F.col("cp.cost").alias("cost"),
-                            F.col("cp.path").alias("path")))
-        # LAZY localCheckpoint (r15): the frontier probe job below joins
-        # every partition of new_best, so it materializes this state as a
-        # by-product — one job per superstep where the eager checkpoint +
-        # probe pair cost two.  The next iteration reads the stored
-        # blocks, lineage truncated all the same.
-        new_best = _lazy_or_eager_ckpt(new_best)
-        # re-expand on ANY (cost, path) improvement, not just strictly lower
-        # cost: an equal-cost lexicographically-smaller path that arrives in
-        # a later superstep must still propagate downstream, or descendants
-        # keep a non-minimal tie (deterministic tie-break contract)
-        frontier = (new_best.alias("n")
-                    .join(best.alias("o"), "id", "left")
-                    .filter(F.col("o.cost").isNull() |
-                            (F.struct(F.col("n.cost"), F.col("n.path")) <
-                             F.struct(F.col("o.cost"), F.col("o.path"))))
-                    .select("id", F.col("n.cost").alias("cost"),
-                            F.col("n.path").alias("path")))
-        # frontier checkpoint + emptiness check in ONE job (r15): the old
-        # eager _ckpt + take(1) pair cost two actions per superstep
-        frontier, probe = _ckpt_probe(frontier, F.count(F.lit(1)))
-        best = new_best
-        if probe[0] == 0:
-            break
+    best = _relax(
+        seed,
+        lambda f: (f.alias("f").join(e.alias("e"),
+                                     F.col("f.id") == F.col("e.src"))
+                   .select(F.col("e.dst").alias("id"),
+                           (F.col("f.cost") + F.col("e.w")).alias("cost"),
+                           F.concat(F.col("f.path"),
+                                    F.array(F.col("e.dst"))).alias("path"))),
+        ["id"], ["cost", "path"], max_iter,
+        f"shortest_path: relaxation did not converge within "
+        f"max_iter={max_iter} supersteps; the returned path (or None) "
+        f"ignores paths of more hops")
     hit = best.filter(F.col("id") == F.lit(dst)).collect()
     e.unpersist()
     if not hit:
@@ -240,23 +326,18 @@ def k_hop(edges: DataFrame, start, hops: int,
     e = e.select("src", "dst").distinct().cache()
     id_type = dict(e.dtypes)["src"]
     visited = spark.createDataFrame([(start,)], f"id {id_type}")
-    frontier = visited
-    for _ in range(hops):
-        nxt = (frontier.alias("f").join(e.alias("e"),
-                                        F.col("f.id") == F.col("e.src"))
-               .select(F.col("e.dst").alias("id")).distinct()
-               .join(visited, "id", "left_anti"))
-        # checkpoint the frontier WITH the emptiness probe in one job
-        # (r15): the old shape paid a take(1) job computing `nxt`
-        # unmaterialized, then a second job re-computing it inside the
-        # visited-union checkpoint.  `visited` becomes a lazy union of
-        # checkpointed frontiers (bounded by `hops`, like closeness's
-        # dist table) — one job per hop instead of two.
-        nxt, probe = _ckpt_probe(nxt, F.count(F.lit(1)))
-        if probe[0] == 0:
-            break
+
+    def hop(frontier, _):
+        return (frontier.alias("f").join(e.alias("e"),
+                                         F.col("f.id") == F.col("e.src"))
+                .select(F.col("e.dst").alias("id")).distinct()
+                .join(visited, "id", "left_anti"))
+
+    # `visited` is a lazy union of checkpointed frontiers (bounded by
+    # `hops`, like closeness's dist table) — one job per hop; `hops` is
+    # the query's own bound, so reaching it is no truncation
+    for nxt in _supersteps(visited, hop, "empty", hops):
         visited = visited.unionByName(nxt)
-        frontier = nxt
     e.unpersist()
     return visited.filter(F.col("id") != F.lit(start))
 
@@ -329,7 +410,8 @@ def pagerank(edges: DataFrame, iterations: int = 10,
     dangmark = verts.join(outdeg.select("id"), "id", "left_anti") \
                     .withColumn("_is_dang", F.lit(True)).cache()
     has_dangling = bool(dangmark.take(1))
-    for it in range(iterations):
+
+    def step(ranks, _):
         contribs = (links.join(ranks.withColumnRenamed("id", "src"), "src")
                     .select(F.col("dst").alias("id"),
                             (F.col("rank") / F.col("outdeg")).alias("c")))
@@ -344,20 +426,20 @@ def pagerank(edges: DataFrame, iterations: int = 10,
             base = ((F.lit(1.0 - damping)
                      + F.lit(damping) * F.col("_dang_mass") / F.lit(float(n)))
                     * tele)
-            ranks = (verts.join(agg, "id", "left")
-                     .crossJoin(F.broadcast(dang))
-                     .select("id", (base + F.lit(damping) *
-                                    F.coalesce(F.col("s"), F.lit(0.0)))
-                             .alias("rank")))
-        else:
-            # teleport + dangling mass land on the teleport distribution
-            # (uniform: tele == 1 everywhere; personalized: sources only)
-            base = F.lit(1.0 - damping) * tele
-            ranks = (verts.join(agg, "id", "left")
-                     .select("id", (base + F.lit(damping) *
-                                    F.coalesce(F.col("s"), F.lit(0.0)))
-                             .alias("rank")))
-        ranks = _ckpt(ranks)
+            return (verts.join(agg, "id", "left")
+                    .crossJoin(F.broadcast(dang))
+                    .select("id", (base + F.lit(damping) *
+                                   F.coalesce(F.col("s"), F.lit(0.0)))
+                            .alias("rank")))
+        # teleport + dangling mass land on the teleport distribution
+        # (uniform: tele == 1 everywhere; personalized: sources only)
+        base = F.lit(1.0 - damping) * tele
+        return (verts.join(agg, "id", "left")
+                .select("id", (base + F.lit(damping) *
+                               F.coalesce(F.col("s"), F.lit(0.0)))
+                        .alias("rank")))
+
+    ranks = _converge(ranks, step, "count", iterations)
     dangmark.unpersist()
     links.unpersist()
     e.unpersist()
@@ -369,7 +451,8 @@ def connected_components(edges: DataFrame, max_iter: int = 32,
     """Undirected connected components via min-label propagation
     (distributed HashMin; the large-star/small-star variant is the scale
     path for power-law graphs).  Returns (id, component) with component =
-    min vertex id in the component.
+    min vertex id in the component.  Needs about diameter supersteps;
+    warns (``RuntimeWarning``) if ``max_iter`` runs out first.
 
     ``edge_count_hint``: a caller-measured edge count (e.g. the free row
     count from a ``materialize_probed`` checkpoint of the edge list) lets
@@ -381,20 +464,12 @@ def connected_components(edges: DataFrame, max_iter: int = 32,
 
 
 def _cc_impl(edges: DataFrame, max_iter: int) -> DataFrame:
-    from .ckpt import materialize, materialize_probed, reliable_enabled
     e = normalize_edges(edges, undirected=True).select("src", "dst").distinct().cache()
     labels = (e.select(F.col("src").alias("id"))
               .unionByName(e.select(F.col("dst").alias("id")))
               .distinct().withColumn("component", F.col("id")))
-    # labels only decrease per id → the (id, component) multiset changes iff
-    # any label changed; detect via sum(xxhash64(id, component)) — TYPE-
-    # AGNOSTIC (string-keyed graphs too: sum over a string column is NULL
-    # and would false-converge after the first batch), one cheap aggregate
-    # action per 3-step batch, no diff join.  Collision odds ~2^-64.
-    # (decimal sum: a long sum of 64-bit hashes overflows under ANSI)
-    chg = F.sum(F.xxhash64("id", "component").cast("decimal(38,0)"))
 
-    def _step(lbl: DataFrame) -> DataFrame:
+    def step(lbl: DataFrame, _) -> DataFrame:
         msgs = (lbl.alias("l").join(e.alias("e"),
                                     F.col("l.id") == F.col("e.src"))
                 .select(F.col("e.dst").alias("id"), F.col("l.component")
@@ -402,47 +477,20 @@ def _cc_impl(edges: DataFrame, max_iter: int) -> DataFrame:
         return (lbl.unionByName(msgs)
                 .groupBy("id").agg(F.min("component").alias("component")))
 
-    batch = 3
-    if reliable_enabled(labels.sparkSession):
-        # reliable checkpoints can't fuse a lazy parent into the probe
-        # job (a lazy reliable checkpoint re-runs its lineage when the
-        # files are written), so convergence compares consecutive batch
-        # digests: fixpoint detected one full batch late.
-        prev_sum = None
-        for it in range(0, max_iter, batch):
-            for _ in range(batch):
-                labels = _step(labels)
-            labels, probe = _ckpt_probe(labels, chg)
-            new_sum = probe[0]
-            if prev_sum is not None and new_sum == prev_sum:
-                break
-            prev_sum = new_sum
-        e.unpersist()
-        return labels
-    # Within-batch convergence (r15): lazily localCheckpoint the
-    # PENULTIMATE superstep's state — the batch's probe job materializes
-    # it as a by-product (every partition feeds the last superstep's
-    # aggregate), so a follow-up block-scan digest of the penultimate
-    # state costs a shuffle-free mini-job.  digest(last) ==
-    # digest(penult) ⟺ the final superstep changed nothing ⟺ fixpoint —
-    # detected at +1-superstep granularity instead of paying a full
-    # confirmation batch (the old cross-batch compare re-ran `batch`
-    # supersteps, 2 data-sized exchanges each, just to see the digest
-    # repeat).  Same fixpoint, fewer supersteps.
-    for it in range(0, max_iter, batch):
-        for _ in range(batch - 1):
-            labels = _step(labels)
-        penult = materialize(labels, eager=False, coalesce=True)
-        labels, probe = materialize_probed(_step(penult), chg)
-        if probe[0] == penult.agg(chg).collect()[0][0]:
-            break
+    # labels only decrease per id, so the (id, component) digest repeats
+    # iff nothing changed — one cheap probe per 3-superstep batch
+    labels = _converge(
+        labels, step, "fixpoint", max_iter, batch=3,
+        warn=f"connected_components: labels still changing after "
+             f"max_iter={max_iter} supersteps; components are split "
+             f"along paths longer than that (raise max_iter, or use "
+             f"connected_components_twophase on high-diameter graphs)")
     e.unpersist()
     return labels
 
 
 def connected_components_twophase(edges: DataFrame,
-                                  max_rounds: int = 24,
-                                  fixed_rounds: bool = False) -> DataFrame:
+                                  max_rounds: int = 24) -> DataFrame:
     """Connected components via alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
     the scale path for HIGH-DIAMETER graphs: HashMin label propagation
@@ -455,30 +503,18 @@ def connected_components_twophase(edges: DataFrame,
     same one-keyed-shuffle discipline as the other loops; convergence is
     the edge multiset reaching a fixpoint (type-agnostic xxhash sum,
     like the HashMin loop).  Returns (id, component = min id in the
-    component), identical to :func:`connected_components`.
-
-    ``fixed_rounds=True`` runs exactly ``max_rounds`` rounds with NO
-    per-round convergence probe (VERDICT r6 wrong #3): the probe is a
-    scalar-only collect but still ~2 driver actions per round; when the
-    caller knows the bound (rounds ≈ log2(n) + slack — 24 covers any
-    graph under ~16 M nodes), skipping the probe removes every
-    mid-loop driver action.  Extra rounds past the fixpoint are cheap
-    no-ops (the edge set is already stable)."""
+    component), identical to :func:`connected_components`.  ``max_rounds``
+    = 24 covers any graph under ~16 M vertices (rounds ≈ log2(n) +
+    slack); running out of rounds warns (``RuntimeWarning``)."""
     with _iterative_shuffle_scope(edges):
         und = (normalize_edges(edges, undirected=True)
                .select("src", "dst").distinct())
         verts = (und.select(F.col("src").alias("id")).distinct().cache())
         # work on directed (u → current-parent) pairs, self-loops included
         # so isolated vertices survive the contraction
-        chg = F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)"))
         e0 = (und.filter(F.col("src") != F.col("dst"))
               .unionByName(verts.select(F.col("id").alias("src"),
                                         F.col("id").alias("dst"))))
-        if fixed_rounds:
-            e, prev = _ckpt(e0), None
-        else:
-            e, probe = _ckpt_probe(e0, chg)
-            prev = probe[0]
 
         def star(edges_uv: DataFrame, large: bool) -> DataFrame:
             # neighborhoods in BOTH orientations; m = min(N(u) ∪ {u})
@@ -507,16 +543,15 @@ def connected_components_twophase(edges: DataFrame,
                                              F.col("m").alias("dst"))))
             return out.distinct()
 
-        for _ in range(max_rounds):
-            e = _ckpt(star(e, large=True))
-            if fixed_rounds:
-                e = _ckpt(star(e, large=False))
-            else:
-                e, probe = _ckpt_probe(star(e, large=False), chg)
-                cur = probe[0]
-                if cur == prev:
-                    break
-                prev = cur
+        # one round = large star, eager checkpoint, small star; the edge
+        # multiset digest repeating is the fixpoint (seeded: the input
+        # edge set is probed when it is checkpointed)
+        e = _converge(
+            e0, lambda uv, _: star(_ckpt(star(uv, large=True)), large=False),
+            "fixpoint", max_rounds, seed=True,
+            warn=f"connected_components_twophase: edge set still changing "
+                 f"after max_rounds={max_rounds} rounds; components may be "
+                 f"split")
         # at the fixpoint every node's min neighbor IS the component root
         nbrs = e.unionByName(e.select(F.col("dst").alias("src"),
                                       F.col("src").alias("dst")))
@@ -574,127 +609,83 @@ def _scc_impl(spark, edges: DataFrame, max_rounds: int = 16) -> DataFrame:
     id_type = dict(e.dtypes)["src"]
     assigned = spark.createDataFrame([], f"id {id_type}, component {id_type}")
 
-    def _one_step(labels: DataFrame, ed: DataFrame) -> DataFrame:
-        # Messages need no same-color filter join (removed r15, one less
-        # message-sized exchange per superstep): ``ed`` only ever
-        # connects same-color endpoints — round 0 colors every vertex 0,
-        # and every later edge set is rebuilt as join(active on src) ⋈
-        # join(active on dst) filtered to _sc == _dc — so a message's
-        # src color IS its dst's color and every dst is in ``labels``.
-        # The old (id, color) inner join against ``labels`` re-shuffled
-        # the whole message set per superstep to enforce an invariant
-        # the edge rebuild already guarantees.
-        msgs = (labels.alias("l")
-                .join(ed.alias("e"), F.col("l.id") == F.col("e.src"))
-                .select(F.col("e.dst").alias("id"),
-                        F.col("l.color").alias("color"),
-                        F.col("l.lab").alias("lab")))
-        return (labels.unionByName(msgs)
-                .groupBy("id", "color").agg(F.min("lab").alias("lab")))
-
-    def _min_propagate(labels: DataFrame, ed: DataFrame,
-                       max_iter: int = 32, batch: int = 3) -> DataFrame:
+    def _min_propagate(labels: DataFrame, ed: DataFrame) -> DataFrame:
         """labels: (id, color, lab) — propagate min lab along ed within
-        color to fixpoint.  Convergence check: labels only ever decrease
-        per id, so the (id, color, lab) multiset is unchanged ⟺ fixpoint;
-        detected via sum(xxhash64(id, color, lab)) — type-agnostic (string
-        vertex ids sum to NULL and would false-converge).  Collision odds
-        ~2^-64.  (Decimal sum: a long sum of 64-bit hashes overflows
-        under ANSI.)
+        color to fixpoint; labels only ever decrease per id, so the
+        (id, color, lab) digest repeats ⟺ fixpoint.
 
-        Within-batch detection (r15, see _cc_impl): the PENULTIMATE
-        superstep's state is lazily localCheckpointed so the batch's
-        probe job materializes it as a by-product; a shuffle-free
-        mini-job digests it, and digest(last) == digest(penult) detects
-        the fixpoint at +1-superstep granularity instead of re-running a
-        full confirmation batch.  Reliable-checkpoint sessions keep the
-        old cross-batch compare (a lazy reliable checkpoint re-runs its
-        lineage on file write).
+        Messages need no same-color filter join (one less message-sized
+        exchange per superstep): ``ed`` only ever connects
+        same-color endpoints — round 0 colors every vertex 0, and every
+        later edge set is rebuilt as join(active on src) ⋈ join(active
+        on dst) filtered to _sc == _dc — so a message's src color IS its
+        dst's color and every dst is in ``labels``.
 
         (A joint fwd+bwd propagation in one double-width state table was
         probed in r14 and measured ~60% SLOWER at sf0.001: each
         superstep's union/groupBy then carries both message sets and the
         convergence probe waits for the slower direction — two lean loops
         beat one fused loop here.)"""
-        from .ckpt import materialize, materialize_probed, reliable_enabled
-        chg = F.sum(F.xxhash64("id", "color", "lab").cast("decimal(38,0)"))
-        if reliable_enabled(labels.sparkSession):
-            prev_sum = None
-            for it in range(0, max_iter, batch):
-                for _ in range(batch):
-                    labels = _one_step(labels, ed)
-                labels, probe = _ckpt_probe(labels, chg)
-                new_sum = probe[0]
-                if prev_sum is not None and new_sum == prev_sum:
-                    break
-                prev_sum = new_sum
-            return labels
-        for it in range(0, max_iter, batch):
-            for _ in range(batch - 1):
-                labels = _one_step(labels, ed)
-            penult = materialize(labels, eager=False, coalesce=True)
-            labels, probe = materialize_probed(_one_step(penult, ed), chg)
-            if probe[0] == penult.agg(chg).collect()[0][0]:
-                break
-        return labels
+        def step(lbl: DataFrame, _) -> DataFrame:
+            msgs = (lbl.alias("l")
+                    .join(ed.alias("e"), F.col("l.id") == F.col("e.src"))
+                    .select(F.col("e.dst").alias("id"),
+                            F.col("l.color").alias("color"),
+                            F.col("l.lab").alias("lab")))
+            return (lbl.unionByName(msgs)
+                    .groupBy("id", "color").agg(F.min("lab").alias("lab")))
+        return _converge(
+            labels, step, "fixpoint", 32, batch=3,
+            warn="strongly_connected_components: min-label propagation "
+                 "still changing after 32 supersteps; components may be "
+                 "split")
 
-    rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     # `done` slices are NOT checkpointed per round: each derives from the
     # round's checkpointed fwd/bwd state, so accumulating them in a list
     # and unioning once at the end keeps lineage bounded while saving one
-    # data-sized checkpoint job per round.  The per-round activity probe
-    # (was a take(1) action at the top of the next round) rides the
-    # `active` checkpoint as a fused count.  (The old up-front
-    # ``active.take(1)`` empty-graph guard is gone too — round 0 on an
-    # empty graph converges in one cheap empty batch, and every
-    # non-empty invocation saves the guard job.)
+    # data-sized checkpoint job per round.
     assigned_parts = []
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        for _ in range(max_rounds):
-            init = active.withColumn("lab", F.col("id"))
-            # fwd and bwd propagation are independent until the (id,
-            # color) join — run them as CONCURRENT jobs (guide §2.6:
-            # actions are only sequential because the driver calls them
-            # sequentially; each direction's tail tasks back-fill the
-            # other's idle cores).  Determinism is untouched: each
-            # direction converges to its unique min-label fixpoint
-            # regardless of scheduling.
-            fwd_job = pool.submit(_min_propagate, init, e)
-            bwd = _min_propagate(init, rev)
-            fwd = fwd_job.result()
-            both = (fwd.withColumnRenamed("lab", "fwd")
-                    .join(bwd.withColumnRenamed("lab", "bwd"),
-                          ["id", "color"]))
-            done = both.filter(F.col("fwd") == F.col("bwd")) \
-                       .select("id", F.col("fwd").alias("component"))
-            assigned_parts.append(done)
-            remaining = both.filter(F.col("fwd") != F.col("bwd"))
-            # new color = dense key over (old color, fwd, bwd)
-            active, probe = _ckpt_probe(
-                remaining.select(
-                    "id", F.xxhash64("color", "fwd", "bwd").alias("color")),
-                F.count(F.lit(1)))
-            if probe[0] == 0:
-                break
-            # restrict edges to endpoints still active and same color.
-            # LAZY localCheckpoint (r15): the next round's first
-            # propagate batch computes every partition of the new edge
-            # set (its join touches all of them), so the materialization
-            # rides that job and the per-round eager edge-checkpoint job
-            # disappears; lineage is truncated all the same once that
-            # job runs.
+
+    def peel(active: DataFrame, i: int) -> DataFrame:
+        nonlocal e
+        if i:
+            # restrict edges to endpoints still active and same color;
+            # EAGER: the concurrent fwd and bwd jobs below both read it,
+            # and neither may be the one that first materializes it
             a1 = active.select(F.col("id").alias("src"),
                                F.col("color").alias("_sc"))
             a2 = active.select(F.col("id").alias("dst"),
                                F.col("color").alias("_dc"))
-            from .ckpt import materialize
-            e = materialize(e.join(a1, "src").join(a2, "dst")
-                            .filter(F.col("_sc") == F.col("_dc"))
-                            .select("src", "dst"),
-                            eager=False, coalesce=True)
-            rev = e.select(F.col("dst").alias("src"),
-                           F.col("src").alias("dst"))
+            e = _ckpt(e.join(a1, "src").join(a2, "dst")
+                      .filter(F.col("_sc") == F.col("_dc"))
+                      .select("src", "dst"))
+        rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        init = active.withColumn("lab", F.col("id"))
+        # fwd and bwd propagation are independent until the (id, color)
+        # join — run them as CONCURRENT jobs (guide §2.6: actions are only
+        # sequential because the driver calls them sequentially; each
+        # direction's tail tasks back-fill the other's idle cores).
+        # Determinism is untouched: each direction converges to its
+        # unique min-label fixpoint regardless of scheduling.
+        fwd_job = pool.submit(_min_propagate, init, e)
+        bwd = _min_propagate(init, rev)
+        fwd = fwd_job.result()
+        both = (fwd.withColumnRenamed("lab", "fwd")
+                .join(bwd.withColumnRenamed("lab", "bwd"), ["id", "color"]))
+        assigned_parts.append(both.filter(F.col("fwd") == F.col("bwd"))
+                              .select("id", F.col("fwd").alias("component")))
+        # still-unassigned vertices; new color = dense key over
+        # (old color, fwd, bwd)
+        return (both.filter(F.col("fwd") != F.col("bwd"))
+                .select("id", F.xxhash64("color", "fwd", "bwd")
+                        .alias("color")))
+
+    from concurrent.futures import ThreadPoolExecutor
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        _converge(active, peel, "empty", max_rounds,
+                  warn=f"strongly_connected_components: vertices still "
+                       f"unassigned after max_rounds={max_rounds} peeling "
+                       f"rounds are missing from the result")
     for done in assigned_parts:
         assigned = assigned.unionByName(done)
     return assigned
@@ -729,23 +720,24 @@ def random_walk(edges: DataFrame, starts: DataFrame, steps: int = 5,
     walks = starts.select(F.col("id").alias("walk_id"),
                           F.col("id").alias("cur"),
                           F.array(F.col("id")).alias("path"))
-    for step in range(steps):
+
+    def step(walks, i):
         if hash_family == "md5":
             key = F.concat_ws(":", F.col("walk_id").cast("string"),
-                              F.lit(str(step)), F.lit(str(seed)))
+                              F.lit(str(i)), F.lit(str(seed)))
             h = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("bigint")
         else:
-            h = F.xxhash64(F.col("walk_id"), F.lit(step), F.lit(seed))
+            h = F.xxhash64(F.col("walk_id"), F.lit(i), F.lit(seed))
         pick = F.pmod(h, F.col("_deg"))
-        nxt = (walks.join(ranked, walks.cur == ranked.src, "left")
-               .filter(F.col("src").isNull() | (F.col("_rk") == pick))
-               .select("walk_id",
-                       F.coalesce(F.col("dst"), F.col("cur")).alias("cur"),
-                       F.when(F.col("dst").isNotNull(),
-                              F.concat("path", F.array(F.col("dst"))))
-                       .otherwise(F.col("path")).alias("path")))
-        walks = _ckpt(nxt) if step % _CHECKPOINT_EVERY == \
-            _CHECKPOINT_EVERY - 1 else nxt
+        return (walks.join(ranked, walks.cur == ranked.src, "left")
+                .filter(F.col("src").isNull() | (F.col("_rk") == pick))
+                .select("walk_id",
+                        F.coalesce(F.col("dst"), F.col("cur")).alias("cur"),
+                        F.when(F.col("dst").isNotNull(),
+                               F.concat("path", F.array(F.col("dst"))))
+                        .otherwise(F.col("path")).alias("path")))
+
+    walks = _converge(walks, step, "count", steps, every=_CHECKPOINT_EVERY)
     ranked.unpersist()
     return walks.select("walk_id", "path")
 
@@ -761,8 +753,9 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 64) -> DataFrame:
     Scale notes: the symmetric edge table is built once and cached; each
     superstep is two semi-joins (edges x alive, keyed on the endpoint) +
     one groupBy count — all shuffles keyed on vertex id, state is
-    vertex-sized.  Convergence check is a strictly-decreasing count(), so
-    one cheap action per superstep and no diff join.  Beyond-reference
+    vertex-sized.  Convergence: the (monotone decreasing) survivor count
+    stops changing — one fused checkpoint+count job per two supersteps,
+    no diff join; still peeling at ``max_iter`` warns.  Beyond-reference
     analytics in the spirit of src/operand/analysis (DegreeCentrality /
     Tarjan stubs)."""
     with _iterative_shuffle_scope(edges):
@@ -770,30 +763,25 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 64) -> DataFrame:
                .select("src", "dst").filter(F.col("src") != F.col("dst"))
                .distinct().cache())
         alive = sym.select(F.col("src").alias("id")).distinct()
-        n_alive = alive.count()
-        survivors = None
-        # Two peel rounds chained lazily per action (counts are monotone
-        # decreasing, so equal counts two rounds apart ⇒ fixpoint) —
-        # halves the per-superstep job-launch overhead.
-        batch = 2
-        for _ in range(0, max_iter, batch):
-            for _b in range(batch):
-                live = (sym.join(alive.withColumnRenamed("id", "src"),
-                                 "src", "left_semi")
-                        .join(alive.withColumnRenamed("id", "dst"),
-                              "dst", "left_semi"))
-                deg = (live.groupBy(F.col("src").alias("id"))
-                       .agg(F.count("*").alias("core_degree")))
-                survivors = deg.filter(F.col("core_degree") >= k)
-                alive = survivors.select("id")
-            # checkpoint + survivor count fused into one job (r15; was
-            # an eager _ckpt job followed by a count() job per batch)
-            survivors, probe = _ckpt_probe(survivors, F.count(F.lit(1)))
-            alive = survivors.select("id")
-            n_next = probe[0]
-            if n_next == n_alive:
-                break
-            n_alive = n_next
+
+        def peel(state, _):
+            alive = state.select("id")
+            live = (sym.join(alive.withColumnRenamed("id", "src"),
+                             "src", "left_semi")
+                    .join(alive.withColumnRenamed("id", "dst"),
+                          "dst", "left_semi"))
+            return (live.groupBy(F.col("src").alias("id"))
+                    .agg(F.count("*").alias("core_degree"))
+                    .filter(F.col("core_degree") >= k))
+
+        # Two peel rounds chained lazily per probe; survivor counts are
+        # monotone decreasing, so an unchanged count (seeded with the
+        # vertex count) is the fixpoint
+        survivors = _converge(
+            alive, peel, "fixpoint", max_iter, batch=2, seed=True,
+            probe=F.count(F.lit(1)),
+            warn=f"k_core: still peeling after max_iter={max_iter} "
+                 f"supersteps; the result is a superset of the {k}-core")
         sym.unpersist()
         return survivors
 
@@ -818,13 +806,15 @@ def label_propagation(edges: DataFrame, iterations: int = 4) -> DataFrame:
         labels = verts.withColumn("label", F.col("id"))
         w = Window.partitionBy("id").orderBy(F.col("c").desc(),
                                              F.col("label").asc())
-        for _ in range(iterations):
+
+        def step(labels, _):
             msgs = (sym.join(labels.withColumnRenamed("id", "src"), "src")
                     .select(F.col("dst").alias("id"), "label"))
             counts = msgs.groupBy("id", "label").agg(F.count("*").alias("c"))
-            labels = _ckpt(
-                counts.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1).select("id", "label"))
+            return (counts.withColumn("_rn", F.row_number().over(w))
+                    .filter(F.col("_rn") == 1).select("id", "label"))
+
+        labels = _converge(labels, step, "count", iterations)
         sym.unpersist()
         return labels
 
@@ -891,7 +881,8 @@ def clustering_coefficient(edges: DataFrame) -> DataFrame:
 def _auto_landmark_count(n: int) -> int:
     """Landmark count for an ``n``-vertex graph when the caller didn't
     choose one: max(64, √n), capped at 1024.  The √n growth follows the
-    measured accuracy curve (tools/landmark_probe.py, PLANS.md): sampled-
+    measured accuracy curve (PLANS.md, "Hub-graph landmark fidelity
+    (r7)" and "Landmark-centrality approximation error"): sampled-
     Brandes rank fidelity scales like O(1/√|S|) (ρ 0.687 → 0.757 → 0.839
     at 64/128/256 landmarks on the 2 k worst-case fixture), so a fixed
     64 would silently degrade as graphs grow while √n holds the relative
@@ -917,8 +908,8 @@ def _guard_all_sources(edges: DataFrame, sources, fn_name: str,
       default for closeness, where the output IS the sampled vertices:
       on a 20 k preferential-attachment fixture, a uniform √n sample
       contained 0/50 of the true top-closeness vertices (the hubs)
-      while the degree∪md5 mix covered 47/50 (tools/landmark_probe.py
-      --pa, PLANS.md).  One extra degree aggregation (one keyed
+      while the degree∪md5 mix covered 47/50 (PLANS.md, "Hub-graph
+      landmark fidelity (r7)").  One extra degree aggregation (one keyed
       shuffle) at selection time.
     * ``'md5'``: uniform over vertices (lowest md5(id) order) — the
       unbiased SOURCE sample, and the right default for betweenness,
@@ -1010,24 +1001,23 @@ def closeness_centrality(edges: DataFrame, sources: "Optional[list]" = None,
                 else verts)
         dist = srcs.select(F.col("id").alias("s"), F.col("id").alias("v"),
                            F.lit(0).alias("d"))
-        frontier = dist
-        for _ in range(max_iter):
-            nxt = (frontier.join(e, frontier.v == e.src)
-                   .select("s", F.col("dst").alias("v"),
-                           (F.col("d") + 1).alias("d"))
-                   .distinct()
-                   .join(dist.select("s", "v"), ["s", "v"], "left_anti"))
-            # checkpoint + emptiness probe fused into one job per hop
-            # (r15; was an eager _ckpt job followed by a take(1) job —
-            # 2 actions x diameter supersteps)
-            nxt, probe = _ckpt_probe(nxt, F.count(F.lit(1)))
-            if probe[0] == 0:
-                break
-            # dist is a union of already-checkpointed frontiers — plan
-            # grows O(diameter) in width but every leaf is materialized,
-            # so re-checkpointing the union would only add an action
+
+        def hop(frontier, _):
+            return (frontier.join(e, frontier.v == e.src)
+                    .select("s", F.col("dst").alias("v"),
+                            (F.col("d") + 1).alias("d"))
+                    .distinct()
+                    .join(dist.select("s", "v"), ["s", "v"], "left_anti"))
+
+        # dist is a union of already-checkpointed frontiers — plan grows
+        # O(diameter) in width but every leaf is materialized, so
+        # re-checkpointing the union would only add an action
+        for nxt in _supersteps(
+                dist, hop, "empty", max_iter,
+                warn=f"closeness_centrality: BFS frontier still non-empty "
+                     f"after max_iter={max_iter} hops; farther vertices "
+                     f"are missing from reachable/closeness"):
             dist = dist.unionByName(nxt)
-            frontier = nxt
         e.unpersist()
         return _closeness_agg(dist, harmonic)
 
@@ -1050,38 +1040,30 @@ def _closeness_agg(dist: DataFrame, harmonic: bool) -> DataFrame:
                     .otherwise(F.lit(0.0)).alias("closeness")))
 
 
-def _weighted_closeness(edges: DataFrame, sources, max_iter: int,
-                        harmonic: bool, weight_col: str) -> DataFrame:
-    """Multi-source Bellman-Ford relaxation: per superstep, min-aggregate
-    the union of current bests and one-step extensions; only improved
-    (source, vertex) rows re-expand."""
-    e = (normalize_edges(edges, weight_col, undirected=True)
-         .filter(F.col("src") != F.col("dst")).cache())
+def _source_distances(e: DataFrame, sources, max_iter: int,
+                      warn: str) -> DataFrame:
+    """(s, v, d) weighted distances from every source (all vertices of
+    ``e`` when ``sources`` is None) by multi-source :func:`_relax`."""
     verts = e.select(F.col("src").alias("id")).distinct()
     srcs = verts.filter(F.col("id").isin(sources)) if sources else verts
-    best = srcs.select(F.col("id").alias("s"), F.col("id").alias("v"),
-                       F.lit(0.0).alias("d"))
-    frontier = best
-    for _ in range(max_iter):
-        msgs = (frontier.join(e, frontier.v == e.src)
-                .select("s", F.col("dst").alias("v"),
-                        (F.col("d") + F.col("w")).alias("d")))
-        # lazy checkpoint (r15): the frontier probe job joins every
-        # partition of new_best, materializing it as a by-product — one
-        # job per superstep instead of an eager-checkpoint + probe pair
-        new_best = _lazy_or_eager_ckpt(
-            best.unionByName(msgs).groupBy("s", "v")
-            .agg(F.min("d").alias("d")))
-        # frontier checkpoint + emptiness probe in one job (r15)
-        frontier, probe = _ckpt_probe(
-            new_best.alias("n")
-            .join(best.alias("o"), ["s", "v"], "left")
-            .filter(F.col("o.d").isNull() | (F.col("n.d") < F.col("o.d")))
-            .select("s", "v", F.col("n.d").alias("d")),
-            F.count(F.lit(1)))
-        best = new_best
-        if probe[0] == 0:
-            break
+    return _relax(
+        srcs.select(F.col("id").alias("s"), F.col("id").alias("v"),
+                    F.lit(0.0).alias("d")),
+        lambda f: (f.join(e, f.v == e.src)
+                   .select("s", F.col("dst").alias("v"),
+                           (F.col("d") + F.col("w")).alias("d"))),
+        ["s", "v"], ["d"], max_iter, warn)
+
+
+def _weighted_closeness(edges: DataFrame, sources, max_iter: int,
+                        harmonic: bool, weight_col: str) -> DataFrame:
+    """Closeness over multi-source Bellman-Ford distances."""
+    e = (normalize_edges(edges, weight_col, undirected=True)
+         .filter(F.col("src") != F.col("dst")).cache())
+    best = _source_distances(
+        e, sources, max_iter,
+        f"closeness_centrality: relaxation did not converge within "
+        f"max_iter={max_iter} supersteps; distances are upper bounds")
     e.unpersist()
     return _closeness_agg(best, harmonic)
 
@@ -1137,60 +1119,49 @@ def betweenness_centrality(edges: DataFrame,
                         F.lit(0).alias("d"),
                         F.lit(1).cast("long").alias("sigma"))
         layers = [f]          # f[k] = (s, v, d=k, sigma), checkpointed
-        frontier = f
-        depth = 0
-        for k in range(1, max_iter + 1):
-            contrib = (frontier.join(e, frontier.v == e.src)
-                       .select("s", F.col("dst").alias("v"), "sigma"))
-            seen = f.select("s", "v")
-            newf = (contrib.groupBy("s", "v")
-                    .agg(F.sum("sigma").alias("sigma"))
-                    .join(seen, ["s", "v"], "left_anti")
-                    .select("s", "v", F.lit(k).alias("d"), "sigma"))
-            # layer checkpoint + emptiness probe in one job (r15)
-            newf, probe = _ckpt_probe(newf, F.count(F.lit(1)))
-            if probe[0] == 0:
-                break
+
+        def layer(frontier, i):
+            return (frontier.join(e, frontier.v == e.src)
+                    .select("s", F.col("dst").alias("v"), "sigma")
+                    .groupBy("s", "v").agg(F.sum("sigma").alias("sigma"))
+                    .join(f.select("s", "v"), ["s", "v"], "left_anti")
+                    .select("s", "v", F.lit(i + 1).alias("d"), "sigma"))
+
+        for newf in _supersteps(
+                f, layer, "empty", max_iter,
+                warn=f"betweenness_centrality: BFS layers still growing "
+                     f"after max_iter={max_iter} hops; paths longer than "
+                     f"that are ignored"):
             layers.append(newf)
             f = f.unionByName(newf)
-            depth = k
-            frontier = newf
-        # backward accumulation: delta = 0 at the deepest layer
-        acc = None
-        delta = layers[depth].select("s", "v", "sigma",
-                                     F.lit(0.0).alias("delta"))
-        for k in range(depth, 0, -1):
-            acc = delta if acc is None else acc.unionByName(delta)
+        depth = len(layers) - 1
+
+        def back(delta, i):
+            # layer k's dependencies from layer k + 1's
+            up = layers[depth - i - 1]
             preds = (delta.join(e, delta.v == e.dst)
                      .select("s", F.col("src").alias("v"),
                              (F.lit(1.0) + F.col("delta")).alias("w1"),
                              F.col("sigma").alias("sigma_w")))
-            up = layers[k - 1]
             contrib = (preds.join(up.select("s", "v", "sigma"), ["s", "v"])
                        .select("s", "v", "sigma",
                                (F.col("sigma") / F.col("sigma_w")
                                 * F.col("w1")).alias("c")))
-            delta = _ckpt(
-                up.select("s", "v", "sigma")
-                .join(contrib.groupBy("s", "v", "sigma")
-                      .agg(F.sum("c").alias("delta")),
-                      ["s", "v", "sigma"], "left")
-                .fillna(0.0, subset=["delta"]))
-        if acc is not None:
+            return (up.select("s", "v", "sigma")
+                    .join(contrib.groupBy("s", "v", "sigma")
+                          .agg(F.sum("c").alias("delta")),
+                          ["s", "v", "sigma"], "left")
+                    .fillna(0.0, subset=["delta"]))
+
+        # backward accumulation: delta = 0 at the deepest layer
+        acc = layers[depth].select("s", "v", "sigma",
+                                   F.lit(0.0).alias("delta"))
+        for delta in _supersteps(acc, back, "count", depth):
             acc = acc.unionByName(delta)
-        else:
-            acc = delta
         e.unpersist()
         return (acc.filter(F.col("v") != F.col("s"))
                 .groupBy(F.col("v").alias("id"))
                 .agg(F.round(F.sum("delta") / 2.0, 4).alias("betweenness")))
-
-
-def _hash_fixpoint_agg(cols: list[str]):
-    """Order-independent state digest aggregate (the _cc_impl
-    convergence trick): decimal sum of per-row xxhash64 — fused into the
-    checkpoint job via _ckpt_probe."""
-    return F.sum(F.xxhash64(*cols).cast("decimal(38,0)"))
 
 
 def _weighted_betweenness(edges: DataFrame, sources, max_iter: int,
@@ -1199,8 +1170,8 @@ def _weighted_betweenness(edges: DataFrame, sources, max_iter: int,
     (source, vertex) — BFS layers don't exist under weights, so each
     phase runs to a hash-detected fixpoint instead:
 
-    1. distances: multi-source Bellman-Ford relaxation (the
-       _weighted_closeness shape) — O(max hop count of shortest paths)
+    1. distances: multi-source Bellman-Ford relaxation
+       (:func:`_source_distances`) — O(max hop count of shortest paths)
        supersteps;
     2. sigma (shortest-path counts): propagate counts along the
        shortest-path DAG (edges u→v with d(u) + w(u,v) == d(v)) from
@@ -1223,39 +1194,13 @@ def _weighted_betweenness(edges: DataFrame, sources, max_iter: int,
     e = (normalize_edges(edges, weight_col, undirected=True)
          .filter(F.col("src") != F.col("dst"))
          .groupBy("src", "dst").agg(F.min("w").alias("w")).cache())
-    verts = e.select(F.col("src").alias("id")).distinct()
-    srcs = verts.filter(F.col("id").isin(sources)) if sources else verts
 
     # -- phase 1: distances --------------------------------------------
-    best = srcs.select(F.col("id").alias("s"), F.col("id").alias("v"),
-                       F.lit(0.0).alias("d"))
-    frontier = best
-    for _ in range(max_iter):
-        msgs = (frontier.join(e, frontier.v == e.src)
-                .select("s", F.col("dst").alias("v"),
-                        (F.col("d") + F.col("w")).alias("d")))
-        # lazy checkpoint (r15): the frontier probe job joins every
-        # partition of new_best, materializing it as a by-product — one
-        # job per superstep instead of an eager-checkpoint + probe pair
-        new_best = _lazy_or_eager_ckpt(
-            best.unionByName(msgs).groupBy("s", "v")
-            .agg(F.min("d").alias("d")))
-        # frontier checkpoint + emptiness probe in one job (r15)
-        frontier, probe = _ckpt_probe(
-            new_best.alias("n")
-            .join(best.alias("o"), ["s", "v"], "left")
-            .filter(F.col("o.d").isNull() | (F.col("n.d") < F.col("o.d")))
-            .select("s", "v", F.col("n.d").alias("d")),
-            F.count(F.lit(1)))
-        best = new_best
-        if probe[0] == 0:
-            break
-    else:
-        warnings.warn(
-            f"weighted betweenness: distance phase did not converge within "
-            f"max_iter={max_iter} supersteps; results are truncated at that "
-            f"hop depth and downstream sigma/delta phases inherit the error",
-            RuntimeWarning)
+    best = _source_distances(
+        e, sources, max_iter,
+        f"weighted betweenness: distance phase did not converge within "
+        f"max_iter={max_iter} supersteps; results are truncated at that "
+        f"hop depth and downstream sigma/delta phases inherit the error")
 
     # -- shortest-path DAG (per source), materialized once -------------
     du = best.select("s", F.col("v").alias("u"), F.col("d").alias("du"))
@@ -1269,35 +1214,29 @@ def _weighted_betweenness(edges: DataFrame, sources, max_iter: int,
         .select("s", "u", "v"))
 
     # -- phase 2: sigma fixpoint (only nonzero rows tracked) -----------
-    seeds = srcs.select(F.col("id").alias("s"), F.col("id").alias("v"),
-                        F.lit(1).cast("long").alias("sigma"))
-    sig = seeds
-    prev = None
-    for _ in range(max_iter):
+    seeds = (best.filter(F.col("s") == F.col("v"))     # the sources
+             .select("s", "v", F.lit(1).cast("long").alias("sigma")))
+
+    def sigma_step(sig, _):
         sig_u = sig.select("s", F.col("v").alias("u"),
                            F.col("sigma").alias("sig_u"))
-        prop = (dag.join(sig_u, ["s", "u"])
-                .groupBy("s", "v").agg(F.sum("sig_u").alias("sigma")))
-        sig, probe = _ckpt_probe(seeds.unionByName(prop),
-                                 _hash_fixpoint_agg(["s", "v", "sigma"]))
-        h = probe[0]
-        if h == prev:
-            break
-        prev = h
-    else:
-        warnings.warn(
-            f"weighted betweenness: sigma phase did not reach its fixpoint "
-            f"within max_iter={max_iter} supersteps; path counts (and the "
-            f"delta phase that consumes them) may be wrong", RuntimeWarning)
+        return seeds.unionByName(
+            dag.join(sig_u, ["s", "u"])
+            .groupBy("s", "v").agg(F.sum("sig_u").alias("sigma")))
+
+    sig = _converge(
+        seeds, sigma_step, "fixpoint", max_iter,
+        warn=f"weighted betweenness: sigma phase did not reach its fixpoint "
+             f"within max_iter={max_iter} supersteps; path counts (and the "
+             f"delta phase that consumes them) may be wrong")
 
     # -- phase 3: delta fixpoint ---------------------------------------
     sig_u = sig.select("s", F.col("v").alias("u"),
                        F.col("sigma").alias("sig_u"))
     sig_v = sig.select("s", "v", F.col("sigma").alias("sig_v"))
     pairs = best.select("s", "v")
-    delta = pairs.withColumn("delta", F.lit(0.0))
-    prev = None
-    for _ in range(max_iter):
+
+    def delta_step(delta, _):
         dl_v = delta.select("s", "v", F.col("delta").alias("delta_v"))
         contrib = (dag.join(sig_u, ["s", "u"]).join(sig_v, ["s", "v"])
                    .join(dl_v, ["s", "v"])
@@ -1305,20 +1244,16 @@ def _weighted_betweenness(edges: DataFrame, sources, max_iter: int,
                            (F.col("sig_u") / F.col("sig_v")
                             * (F.lit(1.0) + F.col("delta_v"))).alias("c"))
                    .groupBy("s", "u").agg(F.sum("c").alias("delta")))
-        delta, probe = _ckpt_probe(
-            pairs.join(contrib.withColumnRenamed("u", "v"), ["s", "v"],
-                       "left")
-            .fillna(0.0, subset=["delta"]),
-            _hash_fixpoint_agg(["s", "v", "delta"]))
-        h = probe[0]
-        if h == prev:
-            break
-        prev = h
-    else:
-        warnings.warn(
-            f"weighted betweenness: delta phase did not reach its fixpoint "
-            f"within max_iter={max_iter} supersteps; dependency scores are "
-            f"truncated at that DAG depth", RuntimeWarning)
+        return (pairs.join(contrib.withColumnRenamed("u", "v"), ["s", "v"],
+                           "left")
+                .fillna(0.0, subset=["delta"]))
+
+    delta = _converge(
+        pairs.withColumn("delta", F.lit(0.0)), delta_step, "fixpoint",
+        max_iter,
+        warn=f"weighted betweenness: delta phase did not reach its fixpoint "
+             f"within max_iter={max_iter} supersteps; dependency scores are "
+             f"truncated at that DAG depth")
 
     e.unpersist()
     return (delta.filter(F.col("v") != F.col("s"))

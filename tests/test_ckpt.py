@@ -50,17 +50,34 @@ def test_reliable_mode_writes_checkpoint(spark, reliable):
     assert files, f"no checkpoint partitions under {reliable}"
 
 
+# tiny fixed graphs shared by the reliable-parity and job-count tests:
+# 0 → (1 → 2 → 3 → 1), 4 → 5 — a tail into a 3-cycle plus a pair — and
+# a weighted diamond with one co-optimal detour
+TINY = [(0, 1), (1, 2), (2, 3), (3, 1), (4, 5)]
+W_TINY = [(0, 1, 1.0), (1, 2, 2.0), (0, 2, 3.0), (2, 3, 1.0)]
+
+
 def test_graph_algo_under_reliable_mode(spark, reliable):
-    """pagerank's superstep loop runs unchanged under the reliable
-    strategy and produces the same ranks as the default path."""
-    from gqlite_spark.operators.graph_algos import pagerank
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long")
-    rel = {r["id"]: round(r["rank"], 6)
-           for r in pagerank(edges, iterations=3).collect()}
+    """Every convergence rule's reliable-checkpoint branch gives the
+    same result as the default local path: pagerank (fixed count),
+    CC and SCC (digest fixpoint), k_hop (empty frontier) and weighted
+    betweenness (relaxation, then digest fixpoints)."""
+    from gqlite_spark.operators import graph_algos as G
+    g = spark.createDataFrame(TINY, "src long, dst long")
+    w = spark.createDataFrame(W_TINY, "src long, dst long, w double")
+    runs = {
+        "pagerank": lambda: [
+            (r["id"], round(r["rank"], 6))
+            for r in G.pagerank(g, iterations=3).collect()],
+        "cc": lambda: G.connected_components(g).collect(),
+        "scc": lambda: G.strongly_connected_components(g).collect(),
+        "k_hop": lambda: G.k_hop(g, 0, 2).collect(),
+        "weighted_betweenness": lambda: G.betweenness_centrality(
+            w, weight_col="w").collect(),
+    }
+    rel = {name: sorted(map(tuple, run())) for name, run in runs.items()}
     spark.conf.set(RELIABLE_KEY, "false")
-    loc = {r["id"]: round(r["rank"], 6)
-           for r in pagerank(edges, iterations=3).collect()}
+    loc = {name: sorted(map(tuple, run())) for name, run in runs.items()}
     assert rel == loc
 
 
@@ -190,3 +207,68 @@ def test_guarded_broadcast_reads_suffixed_threshold(spark):
         assert hinted(20)           # 640 B fits
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def _spark_jobs(spark, fn) -> int:
+    """Spark jobs run by ``fn()``: its job group, plus new ungrouped jobs
+    (SCC's concurrent forward propagation runs on a pool thread, which
+    does not inherit the caller's job group)."""
+    import uuid
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    group = f"pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return (len(tracker.getJobIdsForGroup(group))
+            + len(set(tracker.getJobIdsForGroup(None)) - before))
+
+
+def test_graph_job_counts_pinned(spark):
+    """Regression guard for the superstep driver: Spark jobs per graph
+    algorithm on tiny fixed graphs, one algorithm per loop shape (the
+    graph loops cost seconds each even on tiny inputs, so not every
+    algorithm is pinned).  A change that adds a job per superstep (an
+    unfused probe, an extra eager checkpoint) moves these counts.  SCC
+    has varied by a job between runs, so it is pinned as a bound."""
+    from gqlite_spark.operators import graph_algos as G
+    g = spark.createDataFrame(TINY, "src long, dst long")
+    w = spark.createDataFrame(W_TINY, "src long, dst long, w double")
+    runs = {
+        # digest fixpoint, penultimate-state detection
+        "connected_components": (
+            lambda: G.connected_components(g).collect(), 3),
+        # digest fixpoint seeded with the input's survivor count
+        "k_core": (lambda: G.k_core(g, 2).collect(), 7),
+        # relaxation
+        "shortest_path": (
+            lambda: G.shortest_path(w, 0, 3, weight_col="w"), 8),
+        # empty frontier
+        "k_hop": (lambda: G.k_hop(g, 0, 2).collect(), 4),
+        # fixed count, checkpoint every superstep / every 5th
+        "pagerank": (lambda: G.pagerank(g, iterations=2).collect(), 16),
+        "random_walk": (lambda: G.random_walk(
+            g, spark.range(2), steps=6).collect(), 2),
+    }
+    # near_dup_clusters' measured edge count: the hint turns AQE off
+    # inside the loop, so this count holds on an AQE session
+    hinted = _spark_jobs(spark, lambda: G.connected_components(
+        g, edge_count_hint=5).collect())
+    # AQE off for the rest: every job is then one action — the driver's
+    # checkpoints, probes and collects — not one per adaptive query stage
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        got = {name: _spark_jobs(spark, run)
+               for name, (run, _) in runs.items()}
+        scc = _spark_jobs(
+            spark, lambda: G.strongly_connected_components(g).collect())
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert got == {name: pin for name, (_, pin) in runs.items()}
+    assert hinted == 3
+    # measured 18: one job of slack for the concurrent fwd/bwd jobs
+    assert scc <= 19

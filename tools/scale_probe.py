@@ -36,8 +36,7 @@ def _probe_r7_cc(spark, F) -> None:
     # -- two-phase CC on a high-diameter path graph ----------------------
     # a 2M-edge chain has diameter 2M: HashMin label propagation would
     # need 2M supersteps (never finishes); large-star/small-star must
-    # close it in O(log n) rounds.  fixed_rounds=24 also demonstrates
-    # the zero-mid-loop-driver-action mode at its design scale.
+    # close it in O(log n) rounds.
     from gqlite_spark.operators.graph_algos import (
         connected_components_twophase)
     n_chain = 2_000_000
@@ -46,11 +45,10 @@ def _probe_r7_cc(spark, F) -> None:
                      (F.col("id") + 1).alias("dst"))).persist()
     chain.count()
     t = time.time()
-    cc = connected_components_twophase(chain, max_rounds=24,
-                                       fixed_rounds=True)
+    cc = connected_components_twophase(chain, max_rounds=24)
     ncomp = cc.select("component").distinct().count()
     print(f"cc_twophase(path graph, {n_chain:,} edges, diameter "
-          f"{n_chain:,}, fixed 24 rounds): {time.time()-t:.1f}s  "
+          f"{n_chain:,}, max 24 rounds): {time.time()-t:.1f}s  "
           f"components={ncomp} (HashMin would need {n_chain:,} "
           f"supersteps)")
     chain.unpersist()
