@@ -1044,67 +1044,67 @@ def q_ann_pq(spark, sf_dir):
 def q_ann_pq_indexed(spark, sf_dir):
     """PQ ANN against a PERSISTED index (reference index persistence
     HNSW.cpp:282-328): save_pq_index writes the (id, codes) parquet +
-    codebook sidecar, pq_topk_indexed ADC-ranks the codes table only
+    codebook sidecar, topk_indexed ADC-ranks the codes table only
     (no corpus vector math) and exact-cosine re-ranks the broadcast
     candidate ids.  Sampling codebooks (refine_iters=0) so DuckDB
     rebuilds the identical index; query vector = vec_id 1,
     candidates=100 to distinguish from the in-query sim_ann_pq."""
     import tempfile
 
-    from gqlite_spark.operators.similarity import (load_pq_index,
-                                                   pq_topk_indexed,
-                                                   save_pq_index)
+    from gqlite_spark.operators.similarity import (load_index,
+                                                   save_pq_index,
+                                                   topk_indexed)
     emb = _load(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 1).select("embedding").collect()[0][0]
     path = tempfile.mkdtemp(prefix="gqlite_pqidx_")
     save_pq_index(emb, path, m=4, ksub=16, refine_iters=0)
-    codes, params = load_pq_index(spark, path)
-    return (pq_topk_indexed(emb, [float(x) for x in qvec], codes, params,
-                            k=10, candidates=100)
+    codes, params = load_index(spark, path, "pq")
+    return (topk_indexed(emb, [float(x) for x in qvec], codes, params,
+                         k=10, candidates=100)
             .withColumnRenamed("id", "vec_id"))
 
 
 def q_ann_lsh_indexed(spark, sf_dir):
     """LSH ANN against a PERSISTED bucket index (HNSW.cpp:282-328
     persistence parity): save_ann_index writes the (table, bucket, id)
-    parquet sorted for row-group pruning; ann_topk_indexed prunes by the
+    parquet sorted for row-group pruning; topk_indexed prunes by the
     query's bucket keys, semi-joins the corpus, exact-cosine re-ranks —
     no projection recomputation over the corpus.  Query vec_id 2 to
     distinguish from in-query sim_ann_lsh."""
     import tempfile
 
-    from gqlite_spark.operators.similarity import (ann_topk_indexed,
-                                                   load_ann_index,
-                                                   save_ann_index)
+    from gqlite_spark.operators.similarity import (load_index,
+                                                   save_ann_index,
+                                                   topk_indexed)
     emb = _load(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 2).select("embedding").collect()[0][0]
     path = tempfile.mkdtemp(prefix="gqlite_lshidx_")
     save_ann_index(emb, path, dim=len(qvec), n_planes=4, n_tables=2)
-    index, params = load_ann_index(spark, path)
-    return (ann_topk_indexed(emb, [float(x) for x in qvec], index, params,
-                             k=10)
+    index, params = load_index(spark, path, "lsh")
+    return (topk_indexed(emb, [float(x) for x in qvec], index, params,
+                         k=10)
             .withColumnRenamed("id", "vec_id"))
 
 
 def q_ann_ivf_indexed(spark, sf_dir):
     """IVF ANN against a PERSISTED inverted file: save_ivf_index writes
     (id, list_id) partitioned by list_id (probes read only their
-    partitions) + centroid sidecar; ivf_topk_indexed partition-prunes,
+    partitions) + centroid sidecar; topk_indexed partition-prunes,
     semi-joins, exact-cosine re-ranks.  Sampling centroids
     (refine_iters=0) so DuckDB rebuilds the identical index; query
     vec_id 2."""
     import tempfile
 
-    from gqlite_spark.operators.similarity import (ivf_topk_indexed,
-                                                   load_ivf_index,
-                                                   save_ivf_index)
+    from gqlite_spark.operators.similarity import (load_index,
+                                                   save_ivf_index,
+                                                   topk_indexed)
     emb = _load(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 2).select("embedding").collect()[0][0]
     path = tempfile.mkdtemp(prefix="gqlite_ivfidx_")
     save_ivf_index(emb, path, nlist=16, refine_iters=0)
-    index, params = load_ivf_index(spark, path)
-    return (ivf_topk_indexed(emb, [float(x) for x in qvec], index, params,
-                             nprobe=4, k=10)
+    index, params = load_index(spark, path, "ivf")
+    return (topk_indexed(emb, [float(x) for x in qvec], index, params,
+                         nprobe=4, k=10)
             .withColumnRenamed("id", "vec_id"))
 
 
@@ -1120,17 +1120,17 @@ def q_ann_ivfpq_indexed(spark, sf_dir):
     $near-routing form)."""
     import tempfile
 
-    from gqlite_spark.operators.similarity import (ivfpq_topk_indexed,
-                                                   load_ivfpq_index,
-                                                   save_ivfpq_index)
+    from gqlite_spark.operators.similarity import (load_index,
+                                                   save_ivfpq_index,
+                                                   topk_indexed)
     emb = _load(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 3).select("embedding").collect()[0][0]
     path = tempfile.mkdtemp(prefix="gqlite_ivfpqidx_")
     save_ivfpq_index(emb, path, nlist=16, m=4, ksub=16, refine_iters=0,
                      metric="l2")
-    index, params = load_ivfpq_index(spark, path)
-    return (ivfpq_topk_indexed(emb, [float(x) for x in qvec], index, params,
-                               nprobe=4, k=10, candidates=100)
+    index, params = load_index(spark, path, "ivfpq")
+    return (topk_indexed(emb, [float(x) for x in qvec], index, params,
+                         nprobe=4, k=10, candidates=100)
             .withColumnRenamed("id", "vec_id"))
 
 

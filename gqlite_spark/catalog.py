@@ -751,7 +751,12 @@ class Group:
         # scan just to size nlist (VERDICT r7 wrong #1)
         n = nlist or auto_nlist(n_vectors if n_vectors is not None
                                 else df.count())
-        save(df, n)
+        try:
+            save(df, n)
+        except ValueError as e:
+            raise GQLiteError(
+                f"vindex: cannot build an index on group "
+                f"'{self.meta.name}' property '{attr}': {e}") from e
         self.attach_index(attr, path, kind)
         return n
 

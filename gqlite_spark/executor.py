@@ -511,32 +511,26 @@ class GQLite:
 
     def _similar_indexed(self, grp, df: DataFrame, prop: str,
                          q: list, k: int, m: str, path: str) -> DataFrame:
-        """{similar index: 'dir'} search paths — each loads the persisted
-        index once per statement and runs the *_topk_indexed form (bucket
-        or partition pruned; no quantizer recomputation over the
-        corpus)."""
+        """{similar index: 'dir'} search paths — load the persisted
+        ``m`` index once per statement and run
+        ``similarity.topk_indexed`` (bucket or partition pruned; no
+        quantizer recomputation over the corpus)."""
         from .operators import similarity as S
-        spark = grp.spark
-        loaders = {"lsh": (S.load_ann_index, S.ann_topk_indexed),
-                   "ivf": (S.load_ivf_index, S.ivf_topk_indexed),
-                   "pq": (S.load_pq_index, S.pq_topk_indexed),
-                   "ivfpq": (S.load_ivfpq_index, S.ivfpq_topk_indexed)}
-        if m not in loaders:
+        if m not in ("lsh", "ivf", "pq", "ivfpq"):
             raise GQLiteError(
                 f"similar: method '{m}' has no persisted-index form "
                 "(want lsh|ivf|pq|ivfpq)")
-        load, search = loaders[m]
         try:
-            index, params = load(spark, path)
+            index, params = S.load_index(grp.spark, path, m)
         except FileNotFoundError as e:
             raise GQLiteError(f"similar: no persisted index at "
                               f"'{path}' ({e})") from e
-        # the *_topk_indexed forms address the corpus by the index's
-        # recorded id/vec column names
+        # topk_indexed addresses the corpus by the index's recorded
+        # id/vec column names
         corpus = (df.select(F.col("id"), F.col(prop))
                   .withColumnRenamed("id", params["id_col"])
                   .withColumnRenamed(prop, params["vec_col"]))
-        return search(corpus, q, index, params, k=k)
+        return S.topk_indexed(corpus, q, index, params, k=k)
 
     def _chunk(self, stmt: ChunkStmt) -> StatementResult:
         """``{chunk: 'docs', in: 'g', size: 64, overlap: 8};`` — document
@@ -1347,10 +1341,12 @@ class GQLite:
         spark = df.sparkSession
 
         def _iconf(key: str, default: int) -> int:
+            raw = spark.conf.get(key, str(default))
             try:
-                return int(spark.conf.get(key, str(default)))
-            except Exception:
-                return default
+                return int(raw)
+            except ValueError:
+                raise GQLiteError(
+                    f"{key} must be an integer, got {raw!r}") from None
 
         threshold = _iconf("spark.gqlite.knn.ann_threshold", 100000)
         if knn.get("exact") or threshold < 0 \
@@ -1376,8 +1372,8 @@ class GQLite:
         nprobe = max(1, _iconf(
             "spark.gqlite.knn.nprobe",
             S.default_nprobe(int(params.get("nlist") or 0))))
-        probe = S.l2_probe_lists(knn["geometry"], params["centroids"],
-                                 nprobe)
+        probe = S.probe_lists(knn["geometry"], params["centroids"],
+                              nprobe, "l2")
         pruned = rec.frame(spark).where(F.col("list_id").isin(probe))
         # local-overlay rows (OLTP upserts since the index was built) are
         # NOT in the index: they join the candidate set as always-exact

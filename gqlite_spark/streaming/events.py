@@ -155,9 +155,8 @@ def semantic_hits_stream(docs: DataFrame, index_path: str,
     vector's list is outside the doc's probed lists — raise ``nprobe``
     to trade compute for recall."""
     from ..operators.similarity import (_dot, _ivf_probe_col, _norm,
-                                        default_nprobe, load_ivf_index)
-    spark = docs.sparkSession
-    index, params = load_ivf_index(spark, index_path)
+                                        default_nprobe, load_index)
+    index, params = load_index(docs.sparkSession, index_path, "ivf")
     if not params.get("include_vectors"):
         raise ValueError("semantic_hits_stream requires a MATERIALIZED "
                          "index (save_ivf_index(include_vectors=True))")

@@ -859,8 +859,8 @@ def test_compact_preserves_float_index_storage(spark, tmp_path):
     assert rep["rows_added"] == 1
     # index still reads, stays float-typed, and the routed query sees
     # the compacted row
-    from gqlite_spark.operators.similarity import load_ivf_index
-    index, _ = load_ivf_index(spark, idx)
+    from gqlite_spark.operators.similarity import load_index
+    index, _ = load_index(spark, idx, "ivf")
     el = index.schema["_vec"].dataType.elementType.simpleString()
     assert el == "float", el
     spark.conf.set("spark.gqlite.knn.ann_threshold", "10")
@@ -987,7 +987,7 @@ def test_vindex_pq_compaction(spark, tmp_path):
     stale codes leave their lists, untouched partitions stay
     bit-identical, and the zero-overlay routed query equals exact."""
     from gqlite_spark import GQLite
-    from gqlite_spark.operators.similarity import load_ivfpq_index
+    from gqlite_spark.operators.similarity import load_index
     db, grp = _line_fixture_group(spark, "knnrt_pqc")
     idx = str(tmp_path / "pqc")
     # a full-vector index shares the path: its sidecar stays beside
@@ -998,7 +998,7 @@ def test_vindex_pq_compaction(spark, tmp_path):
                 " ksub: 8};")[0]
     assert r.error is None, r.error
     before = {(x["id"], tuple(x["codes"]), x["list_id"])
-              for x in load_ivfpq_index(spark, idx)[0].collect()}
+              for x in load_index(spark, idx, "ivfpq")[0].collect()}
     # overlay: move id 0 far away, add a new near-origin vector
     grp.upsert_vertex(0, {"vec": [500.0, 0.0]})
     grp.upsert_vertex(999, {"vec": [-0.5, 0.0]})
@@ -1012,7 +1012,7 @@ def test_vindex_pq_compaction(spark, tmp_path):
     assert not grp.rows                  # overlay merged into bulk
     assert grp._vindex["vec"].kind == "ivfpq"   # index stays attached
     after = {(x["id"], tuple(x["codes"]), x["list_id"])
-             for x in load_ivfpq_index(spark, idx)[0].collect()}
+             for x in load_index(spark, idx, "ivfpq")[0].collect()}
     # old id-0 codes gone, id 999 present, id count conserved
     ids_after = {t[0] for t in after}
     assert 999 in ids_after and len(ids_after) == 201
@@ -1040,8 +1040,7 @@ def test_compaction_deletes_emptied_lists(spark, tmp_path):
     fixture (8 vectors, nlist=8): id 3 moves far away; both index
     kinds must drop it from its old list."""
     from gqlite_spark import GQLite
-    from gqlite_spark.operators.similarity import (load_ivf_index,
-                                                   load_ivfpq_index)
+    from gqlite_spark.operators.similarity import load_index
     db = GQLite(spark)
     db.catalog.create_graph("cempty")
     grp = db.catalog.graphs["cempty"].create_group("pts")
@@ -1055,7 +1054,7 @@ def test_compaction_deletes_emptied_lists(spark, tmp_path):
     grp.upsert_vertex(3, {"vec": [30000.0, 0.0]})
     rep = grp.compact_into_index("vec")
     assert rep["rows_added"] == 1
-    index, _ = load_ivf_index(spark, ivf)
+    index, _ = load_index(spark, ivf, "ivf")
     got = {(r["id"], tuple(r["_vec"])) for r in index.collect()}
     assert (3, (30.0, 0.0)) not in got          # stale entry GONE
     assert (3, (30000.0, 0.0)) in got           # new entry present
@@ -1080,7 +1079,7 @@ def test_compaction_deletes_emptied_lists(spark, tmp_path):
     grp2.upsert_vertex(3, {"vec": [30000.0, 0.0]})
     rep = grp2.compact_into_index("vec")
     assert rep["rows_added"] == 1
-    pidx, _ = load_ivfpq_index(spark, pq)
+    pidx, _ = load_index(spark, pq, "ivfpq")
     assert pidx.count() == 8
     assert pidx.filter("id = 3").count() == 1   # exactly the new entry
 

@@ -36,10 +36,10 @@ def test_join_is_uri_safe():
 
 
 def test_ivf_index_roundtrip_through_scheme_path(spark, tmp_path):
-    """save_ivf_index / load_ivf_index accept the same path schemes the
+    """save_ivf_index / load_index accept the same path schemes the
     parquet writer accepts — the routed-ANN lifecycle is no longer
     pinned to the driver's local disk."""
-    from gqlite_spark.operators.similarity import (load_ivf_index,
+    from gqlite_spark.operators.similarity import (load_index,
                                                    save_ivf_index)
     df = spark.createDataFrame(
         [(i, [float(i), 0.0]) for i in range(40)],
@@ -47,7 +47,7 @@ def test_ivf_index_roundtrip_through_scheme_path(spark, tmp_path):
     path = f"file://{tmp_path}/ivf_idx"
     save_ivf_index(df, path, nlist=4, id_col="id", vec_col="vec",
                    metric="l2", include_vectors=True)
-    index, params = load_ivf_index(spark, path)
+    index, params = load_index(spark, path, "ivf")
     assert params["nlist"] == 4 and params["metric"] == "l2"
     assert index.count() == 40
     assert {"id", "_vec", "list_id"} <= set(index.columns)
@@ -91,7 +91,7 @@ def test_single_pass_materialized_build_plan(spark, tmp_path):
     path = str(tmp_path / "sp_idx")
     S.save_ivf_index(df, path, nlist=4, id_col="id", vec_col="vec",
                      metric="l2", include_vectors=True)
-    index, params = S.load_ivf_index(spark, path)
+    index, params = S.load_index(spark, path, "ivf")
     joined = (index.withColumnRenamed("_vec", "iv")
               .join(df, "id"))
     assert joined.count() == 30

@@ -354,6 +354,81 @@ def test_gql_similar_with_persisted_index(pdb, tmp_path, spark):
     assert r.error and "path string" in r.error
 
 
+def test_gql_similar_index_probes_by_the_index_metric(db, tmp_path):
+    """{similar method: 'ivf', index:} over a {vindex} index probes its
+    lists by the index's own l2 metric.  Probing by inner product picks
+    the largest-norm centroids 8, 7, 6, 5 instead of the nearest 1..4
+    and returns ids 5, 7 and 8 at cosine 0.995; the brute-force answer
+    is [1, 100, 101] at 1.0."""
+    for r in db.exec("""
+      {create: 'pm', group: ['v']};
+      {upset: 'v', vertex: [
+        [1, {embedding: [1.0, 0.1]}], [2, {embedding: [2.0, 0.0]}],
+        [3, {embedding: [3.0, 0.0]}], [4, {embedding: [4.0, 0.0]}],
+        [5, {embedding: [5.0, 0.0]}], [6, {embedding: [6.0, -1.0]}],
+        [7, {embedding: [7.0, 0.0]}], [8, {embedding: [8.0, 0.0]}],
+        [100, {embedding: [1.0, 0.1]}], [101, {embedding: [1.1, 0.11]}]]};
+    """):
+        assert r.error is None, r.error
+    p = str(tmp_path / "l2idx")
+    assert _one(db, "{vindex: 'v', in: 'pm', on: 'embedding',"
+                    f" path: '{p}', nlist: 8}};").rows == [[8, 10]]
+    brute = _one(db, "{similar: 'v', in: 'pm', to: [1.0, 0.1], top: 3,"
+                     " method: 'brute'};")
+    via_idx = _one(db, "{similar: 'v', in: 'pm', to: [1.0, 0.1], top: 3,"
+                       f" method: 'ivf', index: '{p}'}};")
+    assert brute.rows == [[1, 1.0], [100, 1.0], [101, 1.0]]
+    assert via_idx.rows == brute.rows
+
+
+def test_gql_vindex_over_no_vectors_is_an_engine_error(db, spark,
+                                                       tmp_path):
+    """Building an index over a property with no non-null vectors is a
+    clean engine error naming the group and property (the quantizer
+    fetch raises ValueError), for both index kinds and for the
+    Group API."""
+    from gqlite_spark.errors import GQLiteError
+    from gqlite_spark.operators.similarity import save_ivf_index
+    db.exec("{create: 'nv', group: ['v']};")
+    grp = db.catalog.graphs["nv"].group("v")
+    grp.register_df(spark.createDataFrame(
+        [(1, None), (2, None)], "id long, embedding array<double>"))
+    p = str(tmp_path / "nvidx")
+    for pq in ("", " pq: true,"):
+        r = db.exec(f"{{vindex: 'v', in: 'nv', on: 'embedding',{pq}"
+                    f" path: '{p}'}};")[0]
+        assert r.error and "group 'v'" in r.error \
+            and "'embedding'" in r.error, r.error
+    with pytest.raises(GQLiteError, match="group 'v' property 'embedding'"):
+        grp.build_ivf_index("embedding", p, nlist=4)
+    assert not grp._vindex
+    with pytest.raises(ValueError, match="no 'embedding' vectors"):
+        save_ivf_index(grp.to_df().filter("embedding is not null"), p,
+                       id_col="id")
+
+
+def test_gql_knn_routed_rejects_malformed_int_conf(pdb, tmp_path, spark):
+    """A routed $near reads its integer confs strictly: a value that is
+    not an integer is an engine error naming the key and the value, not
+    a silent fall-back to the default."""
+    p = str(tmp_path / "conf_idx")
+    _one(pdb, "{vindex: 'vecs', in: 'pg', on: 'embedding',"
+              f" path: '{p}', nlist: 2}};")
+    gql = ("{query: 'vecs', in: 'pg', where:"
+           " {embedding: {limit: 1, $near: [1.0, 0.0]}}};")
+    spark.conf.set("spark.gqlite.knn.ann_threshold", "1")
+    spark.conf.set("spark.gqlite.knn.nprobe", "eight")
+    try:
+        r = pdb.exec(gql)[0]
+        assert r.error and "spark.gqlite.knn.nprobe" in r.error \
+            and "'eight'" in r.error, r.error
+        spark.conf.set("spark.gqlite.knn.nprobe", "2")
+        assert [r["id"] for r in pdb.query_df(gql).collect()] == [10]
+    finally:
+        spark.conf.unset("spark.gqlite.knn.nprobe")
+        spark.conf.set("spark.gqlite.knn.ann_threshold", "100000")
+
+
 def test_gql_similar_join_form(pdb):
     """{similar ... queries: 'grp'} — every vector in the query group
     searches the corpus group; brute and ivf agree when every list is

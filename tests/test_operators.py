@@ -584,41 +584,41 @@ def test_ann_index_save_load_roundtrip(spark, tmp_path):
     queries against the saved index skip corpus-wide bucket recomputation
     and return the same results as the inline path."""
     import math
-    from gqlite_spark.operators.similarity import (ann_topk, ann_topk_indexed,
-                                                   load_ann_index,
-                                                   save_ann_index)
+    from gqlite_spark.operators.similarity import (ann_topk, load_index,
+                                                   save_ann_index,
+                                                   topk_indexed)
     vecs = [(i, [math.cos(i / 7), math.sin(i / 7), math.cos(i / 3),
                  math.sin(i / 3)]) for i in range(200)]
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
     path = str(tmp_path / "annidx")
     save_ann_index(df, path, dim=4, n_planes=4, n_tables=2)
-    idx, params = load_ann_index(spark, path)
+    idx, params = load_index(spark, path, "lsh")
     q = [math.cos(0.1), math.sin(0.1), math.cos(0.23), math.sin(0.23)]
-    via_index = ann_topk_indexed(df, q, idx, params, k=5).collect()
+    via_index = topk_indexed(df, q, idx, params, k=5).collect()
     inline = ann_topk(df, q, dim=4, k=5, n_planes=4, n_tables=2).collect()
     assert [(r["id"], r["cosine"]) for r in via_index] == \
            [(r["id"], r["cosine"]) for r in inline]
     # the index plan scans the persisted bucket parquet with the query's
     # (table, bucket) keys PUSHED to the scan — no corpus projections
-    plan = ann_topk_indexed(df, q, idx, params, k=5) \
+    plan = topk_indexed(df, q, idx, params, k=5) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "table:int,bucket:bigint" in plan          # index scan schema
     assert "EqualTo(bucket" in plan                   # pushed bucket filter
 
 
 def test_ann_index_centered(spark, tmp_path):
-    from gqlite_spark.operators.similarity import (ann_topk_indexed,
-                                                   load_ann_index,
-                                                   save_ann_index)
+    from gqlite_spark.operators.similarity import (load_index,
+                                                   save_ann_index,
+                                                   topk_indexed)
     # anisotropic (all-positive) corpus: centered index still finds the nn
     vecs = [(i, [1.0 + (i % 10) / 10, 2.0 + (i % 7) / 7, 3.0]) for i in range(100)]
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
     path = str(tmp_path / "cidx")
     save_ann_index(df, path, dim=3, n_planes=3, n_tables=4, center=True)
-    idx, params = load_ann_index(spark, path)
+    idx, params = load_index(spark, path, "lsh")
     assert params["center"] and params["offsets"]
     q = [1.5, 2.5, 3.0]
-    rows = ann_topk_indexed(df, q, idx, params, k=3).collect()
+    rows = topk_indexed(df, q, idx, params, k=3).collect()
     assert rows  # candidates found despite anisotropy
 
 
@@ -666,7 +666,7 @@ def test_ivf_assign_vectorized_matches_expression(spark):
     exactly with the expression path (same argmin/argmax, same smallest-
     cid tie-break by construction)."""
     import math
-    from gqlite_spark.operators.similarity import (_ivf_assign_pandas,
+    from gqlite_spark.operators.similarity import (_nearest_udf,
                                                    ivf_assign,
                                                    ivf_centroids)
     vecs = [(i, [math.cos(i / 9), math.sin(i / 9), float(i % 7)])
@@ -676,9 +676,9 @@ def test_ivf_assign_vectorized_matches_expression(spark):
         cents = ivf_centroids(df, nlist=12)
         expr = {r["id"]: r["list_id"]
                 for r in ivf_assign(df, cents, metric=metric).collect()}
-        vect = {r["id"]: r["list_id"]
-                for r in _ivf_assign_pandas(df, cents, "vec_id",
-                                            "embedding", metric).collect()}
+        vect = {r["vec_id"]: r["list_id"] for r in df.select(
+            "vec_id", _nearest_udf("embedding", [cents], metric, 1, "long")
+            .alias("list_id")).collect()}
         assert expr == vect, metric
     # the auto-switch engages past the expression cap
     big_cents = [(i, [float(i), 0.0, 0.0]) for i in range(200)]
@@ -703,16 +703,16 @@ def test_ivf_index_save_load_roundtrip(spark, tmp_path):
     returns the same top-k as the inline path."""
     import math
     from gqlite_spark.operators.similarity import (
-        ivf_centroids, ivf_topk, ivf_topk_indexed, load_ivf_index,
-        save_ivf_index)
+        ivf_centroids, ivf_topk, load_index, save_ivf_index,
+        topk_indexed)
     vecs = [(i, [math.cos(i / 7), math.sin(i / 7), math.cos(i / 3),
                  math.sin(i / 3)]) for i in range(150)]
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
     path = str(tmp_path / "ivfidx")
     save_ivf_index(df, path, nlist=6)
-    idx, params = load_ivf_index(spark, path)
+    idx, params = load_index(spark, path, "ivf")
     q = [math.cos(0.1), math.sin(0.1), math.cos(0.2), math.sin(0.2)]
-    via_index = ivf_topk_indexed(df, q, idx, params, nprobe=3, k=5).collect()
+    via_index = topk_indexed(df, q, idx, params, nprobe=3, k=5).collect()
     cents = ivf_centroids(df, nlist=6)
     inline = ivf_topk(df, q, cents, nprobe=3, k=5).collect()
     assert [(r["id"], r["cosine"]) for r in via_index] == \
@@ -725,17 +725,16 @@ def test_pq_index_save_load_roundtrip(spark, tmp_path):
     consider enough candidates."""
     import math
     from gqlite_spark.operators.similarity import (
-        load_pq_index, pq_codebooks, pq_topk, pq_topk_indexed,
-        save_pq_index)
+        load_index, pq_codebooks, pq_topk, save_pq_index, topk_indexed)
     vecs = [(i, [math.cos(i / 7), math.sin(i / 7), math.cos(i / 3),
                  math.sin(i / 3)]) for i in range(150)]
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
     path = str(tmp_path / "pqidx")
     save_pq_index(df, path, m=2, ksub=8)
-    codes, params = load_pq_index(spark, path)
+    codes, params = load_index(spark, path, "pq")
     q = [math.cos(0.1), math.sin(0.1), math.cos(0.2), math.sin(0.2)]
-    via_index = pq_topk_indexed(df, q, codes, params, k=5,
-                                candidates=40).collect()
+    via_index = topk_indexed(df, q, codes, params, k=5,
+                             candidates=40).collect()
     books = pq_codebooks(df, m=2, ksub=8)
     inline = pq_topk(df, q, books, k=5, candidates=40).collect()
     assert [(r["id"], r["cosine"]) for r in via_index] == \
@@ -749,17 +748,16 @@ def test_ivfpq_index_roundtrip_exact_when_full_probe(spark, tmp_path):
     the candidate set)."""
     import math
     from gqlite_spark.operators.similarity import (
-        cosine_topk, ivfpq_topk_indexed, load_ivfpq_index,
-        save_ivfpq_index)
+        cosine_topk, load_index, save_ivfpq_index, topk_indexed)
     vecs = [(i, [math.cos(i / 7), math.sin(i / 7), math.cos(i / 3),
                  math.sin(i / 3)]) for i in range(150)]
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
     path = str(tmp_path / "ivfpqidx")
     save_ivfpq_index(df, path, nlist=6, m=2, ksub=8)
-    idx, params = load_ivfpq_index(spark, path)
+    idx, params = load_index(spark, path, "ivfpq")
     q = [math.cos(0.1), math.sin(0.1), math.cos(0.2), math.sin(0.2)]
-    via_index = ivfpq_topk_indexed(df, q, idx, params, nprobe=6, k=5,
-                                   candidates=150).collect()
+    via_index = topk_indexed(df, q, idx, params, nprobe=6, k=5,
+                             candidates=150).collect()
     exact = cosine_topk(df, q, 5).collect()
     assert [(r["id"], r["cosine"]) for r in via_index] == \
            [(r["id"], r["cosine"]) for r in exact]
@@ -771,8 +769,8 @@ def test_ivfpq_probe_is_partition_pruned(spark, tmp_path):
     source, not filtered after a full read — and the index rows carry
     codes, never vectors."""
     import math
-    from gqlite_spark.operators.similarity import (l2_probe_lists,
-                                                   load_ivfpq_index,
+    from gqlite_spark.operators.similarity import (load_index,
+                                                   probe_lists,
                                                    save_ivfpq_index)
     from pyspark.sql import functions as F
     vecs = [(i, [math.cos(i / 7), math.sin(i / 7), math.cos(i / 3),
@@ -780,10 +778,10 @@ def test_ivfpq_probe_is_partition_pruned(spark, tmp_path):
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
     path = str(tmp_path / "ivfpqidx2")
     save_ivfpq_index(df, path, nlist=6, m=2, ksub=8)
-    idx, params = load_ivfpq_index(spark, path)
+    idx, params = load_index(spark, path, "ivfpq")
     assert set(idx.columns) == {"id", "codes", "list_id"}
     q = [1.0, 0.0, 1.0, 0.0]
-    lists = l2_probe_lists(q, params["centroids"], 2)
+    lists = probe_lists(q, params["centroids"], 2, "l2")
     pruned = idx.where(F.col("list_id").isin([int(x) for x in lists]))
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "list_id" in plan
@@ -794,13 +792,12 @@ def test_ivfpq_probe_is_partition_pruned(spark, tmp_path):
 def test_ivfpq_works_on_parquet_corpus(spark, tmp_path):
     """IVFPQ end-to-end against a file-backed corpus (the deployment
     shape): broadcast-join re-rank (the measured fetch winner — see
-    pq_topk_indexed docstring / PLANS.md 'IVFPQ re-rank fetch') matches
+    topk_indexed docstring / PLANS.md 'IVFPQ re-rank fetch') matches
     brute force at full probe, and the candidate side of the join is a
     broadcast exchange, not a shuffle."""
     import math
     from gqlite_spark.operators.similarity import (
-        cosine_topk, ivfpq_topk_indexed, load_ivfpq_index,
-        save_ivfpq_index)
+        cosine_topk, load_index, save_ivfpq_index, topk_indexed)
     vecs = [(i, [math.cos(i / 7), math.sin(i / 7), math.cos(i / 3),
                  math.sin(i / 3)]) for i in range(150)]
     mem = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
@@ -809,10 +806,10 @@ def test_ivfpq_works_on_parquet_corpus(spark, tmp_path):
     df = spark.read.parquet(cpath)
     path = str(tmp_path / "ivfpqidx3")
     save_ivfpq_index(df, path, nlist=6, m=2, ksub=8)
-    idx, params = load_ivfpq_index(spark, path)
+    idx, params = load_index(spark, path, "ivfpq")
     q = [math.cos(0.1), math.sin(0.1), math.cos(0.2), math.sin(0.2)]
-    res = ivfpq_topk_indexed(df, q, idx, params, nprobe=6, k=5,
-                             candidates=40)
+    res = topk_indexed(df, q, idx, params, nprobe=6, k=5,
+                       candidates=40)
     plan = res._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
     got = [(r["id"], r["cosine"]) for r in res.collect()]
@@ -826,8 +823,8 @@ def test_pq_encode_pandas_matches_expression(spark):
     code-for-code on a non-degenerate fixture (same first-min
     tie-break), and the auto-switch engages past the fold cap."""
     import math
-    from gqlite_spark.operators.similarity import (_pq_codes_expr,
-                                                   _pq_codes_pandas_col,
+    from gqlite_spark.operators.similarity import (_nearest_udf,
+                                                   _pq_codes_col,
                                                    pq_codebooks,
                                                    pq_encode)
     vecs = [(i, [math.cos(i / 9), math.sin(i / 9), math.cos(i / 4),
@@ -836,11 +833,17 @@ def test_pq_encode_pandas_matches_expression(spark):
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
     books = pq_codebooks(df, m=4, ksub=8)
     expr = {r["vec_id"]: list(r["c"]) for r in df.select(
-        "vec_id", _pq_codes_expr(books, "embedding").alias("c")).collect()}
+        "vec_id", _pq_codes_col(books, "embedding").alias("c")).collect()}
     vect = {r["vec_id"]: list(r["c"]) for r in df.select(
-        "vec_id", _pq_codes_pandas_col(books, "embedding").alias("c"))
+        "vec_id", _nearest_udf("embedding",
+                               [list(enumerate(b)) for b in books],
+                               "l2", 1, "array<int>").alias("c"))
         .collect()}
     assert expr == vect
+    # a null vector keeps null codes on the expression path
+    nulls = spark.createDataFrame([(999, None)], df.schema)
+    assert nulls.select(_pq_codes_col(pq_codebooks(df, m=2, ksub=4),
+                                      "embedding")).first()[0] == [None, None]
     # a ksub=256 codebook (4*256 folds > 512 cap) switches to Arrow
     big = [[[float(j + c)] * 2 for c in range(256)] for j in range(4)]
     plan = pq_encode(df, big)._jdf.queryExecution().toString()
@@ -1517,16 +1520,16 @@ def test_pq_default_recall_tripwire(spark, tmp_path):
     """Recall tripwire for the PQ defaults (VERDICT r5 #6): on a dense-
     cluster corpus (16 clusters × ~250 vectors — the regime where a
     coarse codebook actually loses neighbours) the default
-    save_pq_index → pq_topk_indexed path must hold recall@10 ≥ 0.9 at
+    save_pq_index → topk_indexed path must hold recall@10 ≥ 0.9 at
     candidates = 2% of the corpus.  The remediated m=8/ksub=64/refine=2
     config measures 1.0 here; the old m=4/ksub=16 config measures 0.66 —
     any future quantizer change that silently regresses gets caught."""
     import hashlib
 
     from gqlite_spark.operators.similarity import (cosine_topk,
-                                                   load_pq_index,
-                                                   pq_topk_indexed,
-                                                   save_pq_index)
+                                                   load_index,
+                                                   save_pq_index,
+                                                   topk_indexed)
     DIM, NCL = 16, 16
     cl = F.pmod(F.xxhash64("id"), F.lit(NCL))
     vec = F.transform(
@@ -1546,14 +1549,14 @@ def test_pq_default_recall_tripwire(spark, tmp_path):
                         for i, x in enumerate(v)])
     path = str(tmp_path / "pqidx")
     save_pq_index(corpus, path)                 # DEFAULTS under test
-    codes, params = load_pq_index(spark, path)
+    codes, params = load_index(spark, path, "pq")
     codes = codes.cache()
     recalls = []
     for q in queries:
         exact = {r["id"] for r in cosine_topk(corpus, q, 10).collect()}
         ann = {r["id"] for r in
-               pq_topk_indexed(corpus, q, codes, params,
-                               k=10, candidates=80).collect()}
+               topk_indexed(corpus, q, codes, params,
+                            k=10, candidates=80).collect()}
         recalls.append(len(ann & exact) / len(exact))
     corpus.unpersist()
     codes.unpersist()
@@ -1733,14 +1736,13 @@ def test_build_ivf_index_refined(spark, tmp_path):
 
 def test_ivf_probe_col_matches_driver_probe(spark):
     """The per-row probe-list Column agrees with the driver-side
-    ivf_probe_lists / l2_probe_lists for every row, on both the literal-
-    expression path and the Arrow-batched path.  Non-borderline data, as
-    in the assignment twin test: an EXACT tie in the true metric can
-    resolve differently under the BLAS path's expanded-form distances
-    (same caveat as _ivf_assign_pandas_col)."""
+    probe_lists for every row, on both the literal-expression path and
+    the Arrow-batched path.  Non-borderline data, as in the assignment
+    twin test: an EXACT tie in the true metric can resolve differently
+    under the BLAS path's expanded-form distances (same caveat as
+    _nearest_udf)."""
     from gqlite_spark.operators.similarity import (
-        _ivf_probe_col, _ivf_probe_pandas_col, ivf_centroids,
-        ivf_probe_lists, l2_probe_lists)
+        _ivf_probe_col, _nearest_udf, ivf_centroids, probe_lists)
     # hash-derived components: lattices (cos/sin or modular) put pairs
     # of centroids EXACTLY equidistant from rows between them, which is
     # precisely the borderline-tie case the two formulas may split on
@@ -1750,15 +1752,15 @@ def test_ivf_probe_col_matches_driver_probe(spark):
             for i in range(120)]
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
     cents = ivf_centroids(df, nlist=10)
-    for metric, ref in (("ip", ivf_probe_lists), ("l2", l2_probe_lists)):
+    for metric in ("ip", "l2"):
         got = {r["vec_id"]: list(r["p"]) for r in df.select(
             "vec_id", _ivf_probe_col(cents, "embedding", 3, metric)
             .alias("p")).collect()}
         vect = {r["vec_id"]: list(r["p"]) for r in df.select(
-            "vec_id", _ivf_probe_pandas_col(cents, "embedding", 3, metric)
-            .alias("p")).collect()}
+            "vec_id", _nearest_udf("embedding", [cents], metric, 3,
+                                   "array<long>").alias("p")).collect()}
         for i, v in vecs:
-            assert got[i] == ref(v, cents, 3), (metric, i)
+            assert got[i] == probe_lists(v, cents, 3, metric), (metric, i)
             assert vect[i] == got[i], (metric, i)
 
 

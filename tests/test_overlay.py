@@ -3,7 +3,8 @@
 Count-pinning guards (tiny data, no wall clocks): reading the overlay
 runs no Spark job, and a local write keeps the loaded kNN index handle
 and the bulk row count, so planning the next routed ``$near`` runs no
-job either.  Plus a type round-trip: the Arrow-built overlay reads back
+job either; and the Spark jobs of each persisted-index build.  Plus a
+type round-trip: the Arrow-built overlay reads back
 the same rows as the list-of-tuples builder it replaced."""
 
 import contextlib
@@ -262,3 +263,37 @@ def test_ivfpq_route_job_counts(spark, tmp_path):
         reset()
     assert pure == (2, 2, [0, 1, 2]), pure
     assert refill == (5, 2, [3, 4, 5]), refill
+
+
+def test_index_build_job_counts(spark, tmp_path):
+    """Spark jobs per persisted-index build on a cached 400×8 corpus:
+    the sampling-quantizer fetch, each Lloyd/codebook refinement pass
+    and the LSH centering pass are one job each, plus the index write."""
+    import math
+
+    from gqlite_spark.operators import similarity as S
+    df = spark.createDataFrame(
+        [(i, [math.cos(i / (j + 2)) for j in range(8)]) for i in range(400)],
+        "vec_id long, embedding array<double>").cache()
+    df.count()
+    builds = {
+        "lsh": (lambda p: S.save_ann_index(df, p, dim=8), 2),
+        "lsh_center": (lambda p: S.save_ann_index(df, p, dim=8,
+                                                  center=True), 4),
+        "ivf": (lambda p: S.save_ivf_index(df, p), 2),
+        "ivf_refine": (lambda p: S.save_ivf_index(df, p, refine_iters=2), 6),
+        "pq": (lambda p: S.save_pq_index(df, p), 6),
+        "pq_norefine": (lambda p: S.save_pq_index(df, p, refine_iters=0), 2),
+        "ivfpq": (lambda p: S.save_ivfpq_index(df, p), 2),
+        "ivfpq_refine": (lambda p: S.save_ivfpq_index(df, p,
+                                                      refine_iters=1), 6),
+    }
+    try:
+        got = {}
+        for name, (build, _) in builds.items():
+            with _count_jobs(spark) as c:
+                build(str(tmp_path / name))
+            got[name] = c["jobs"]
+    finally:
+        df.unpersist()
+    assert got == {name: n for name, (_, n) in builds.items()}, got
