@@ -736,11 +736,13 @@ class Group:
 
     def _build_index(self, attr: str, path: str, kind: str,
                      nlist: "Optional[int]", n_vectors: "Optional[int]",
-                     save) -> int:
-        """Shared build preamble: key check, non-null vectors, √n-auto
-        nlist unless given, ``save(df, nlist)``, attach the ``kind``
-        just written.  Returns the nlist used."""
-        from .operators.similarity import auto_nlist
+                     refine_iters: int, m: int = 0, ksub: int = 0) -> int:
+        """Build the l2 ``kind`` ('ivf': materialized vectors, or
+        'ivfpq') index for ``attr`` at ``path`` with the one index build
+        (``operators.similarity._save_index``) over the non-null
+        vectors — √n-auto nlist unless given — then attach it.  Returns
+        the fitted nlist (smaller than asked on a smaller corpus)."""
+        from .operators.similarity import _save_index, auto_nlist
         self._check_index_keys()
         df = self.to_df()
         if df is None:
@@ -752,13 +754,16 @@ class Group:
         n = nlist or auto_nlist(n_vectors if n_vectors is not None
                                 else df.count())
         try:
-            save(df, n)
+            params = _save_index(df, path, kind, nlist=n, m=m, ksub=ksub,
+                                 refine_iters=refine_iters, id_col="id",
+                                 vec_col=attr, metric="l2",
+                                 include_vectors=kind == "ivf")
         except ValueError as e:
             raise GQLiteError(
                 f"vindex: cannot build an index on group "
                 f"'{self.meta.name}' property '{attr}': {e}") from e
         self.attach_index(attr, path, kind)
-        return n
+        return params["nlist"]
 
     def build_ivf_index(self, attr: str, path: str,
                         nlist: "Optional[int]" = None,
@@ -771,17 +776,12 @@ class Group:
         ``refine_iters`` adds metric-matched Lloyd iterations (better-
         balanced lists on clustered data; 0 keeps the sampling quantizer
         an external SQL oracle can rebuild bit-for-bit).  Returns the
-        nlist used.  The index is a one-time build cost (one scan + one
+        fitted nlist.  The index is a one-time build cost (one scan + one
         partitioned write) amortized over every later routed query — the
         reference's build-once/search-many HNSW lifecycle
         (HNSW.cpp:282-328)."""
-        from .operators.similarity import save_ivf_index
-        return self._build_index(
-            attr, path, "ivf", nlist, n_vectors,
-            lambda df, n: save_ivf_index(
-                df, path, nlist=n, refine_iters=refine_iters,
-                id_col="id", vec_col=attr, metric="l2",
-                include_vectors=True))
+        return self._build_index(attr, path, "ivf", nlist, n_vectors,
+                                 refine_iters)
 
     def build_ivfpq_index(self, attr: str, path: str,
                           nlist: "Optional[int]" = None,
@@ -795,14 +795,10 @@ class Group:
         ``operators.similarity.save_ivfpq_index`` for the measured
         economics and the candidates law).  √n-auto nlist unless
         given; ``refine_iters`` Lloyd-refines BOTH quantizers (leave 0
-        for bit-exact external SQL replay).  Returns the nlist used."""
-        from .operators.similarity import save_ivfpq_index
-        return self._build_index(
-            attr, path, "ivfpq", nlist, n_vectors,
-            lambda df, n: save_ivfpq_index(
-                df, path, nlist=n, m=m, ksub=ksub,
-                refine_iters=refine_iters, id_col="id", vec_col=attr,
-                metric="l2"))
+        for bit-exact external SQL replay).  Returns the fitted
+        nlist."""
+        return self._build_index(attr, path, "ivfpq", nlist, n_vectors,
+                                 refine_iters, m, ksub)
 
     def compact_into_index(self, attr: str) -> dict:
         """Fold the local OLTP overlay into ``attr``'s attached index by
@@ -828,8 +824,7 @@ class Group:
         Spark engine batches overlay rows and re-quantizes only the
         lists they land in.  Returns
         ``{"lists_rewritten": n, "rows_added": m}``."""
-        from .operators.similarity import (_ivf_assign_col, _pq_codes_col,
-                                           index_data_path)
+        from .operators.similarity import _index_columns, index_data_path
         rec = self._vindex.get(attr)
         if rec is None:
             raise GQLiteError(
@@ -851,18 +846,15 @@ class Group:
         # must not silently double at 100 TB); IVFPQ encodes at the
         # CORPUS element type, as the build did, so a rebuild
         # reproduces the same codes.  Either way the list a row lands
-        # in is a pure function of the stored/encoded values.
+        # in is a pure function of the stored/encoded values, and the
+        # row columns are the build's own (_index_columns).
         payload = "codes" if pq else "_vec"
         vec_dt = (merged.schema[attr] if pq
                   else index.schema["_vec"]).dataType
-        vecs = (local.filter(F.col(attr).isNotNull())
-                .select(F.col("id"), F.col(attr).cast(vec_dt).alias("_vec")))
-        assigned = vecs.select(
-            F.col("id"),
-            (_pq_codes_col(rec.params["books"], "_vec") if pq
-             else F.col("_vec")).alias(payload),
-            _ivf_assign_col(rec.params["centroids"], "_vec", "l2")
-            .alias("list_id"))
+        assigned = (local.filter(F.col(attr).isNotNull())
+                    .select(F.col("id"), F.col(attr).cast(vec_dt)
+                            .alias("_vec"))
+                    .select("id", *_index_columns(rec.params, "_vec")))
         local_ids = local.select("id")
         # affected lists = lists holding a shadowed id's OLD entry ∪
         # lists receiving a new one — both collects are overlay-sized

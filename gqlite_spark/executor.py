@@ -607,21 +607,8 @@ class GQLite:
             # embedding-cluster-balanced: the quantizer is cached on the
             # Group (same discipline as {similar}'s IVF centroids —
             # invalidated by any mutation)
-            from pyspark.sql import types as T
-
             from .operators.similarity import ivf_centroids
-            if stmt.on not in df.columns:
-                raise GQLiteError(
-                    f"group '{stmt.group}' has no property '{stmt.on}'")
-            dtype = df.schema[stmt.on].dataType
-            if not (isinstance(dtype, T.ArrayType)
-                    and isinstance(dtype.elementType,
-                                   (T.DoubleType, T.FloatType,
-                                    T.IntegerType, T.LongType,
-                                    T.ShortType))):
-                raise GQLiteError(
-                    f"sample: property '{stmt.on}' is "
-                    f"{dtype.simpleString()}, not a numeric vector")
+            _check_vector_prop(df, stmt.group, stmt.on, "sample")
             cache_key = ("cluster", stmt.on, stmt.clusters)
             cents = grp._ann_cache.get(cache_key)
             if cents is None:
@@ -746,19 +733,7 @@ class GQLite:
             if vdf is None:
                 return StatementResult(status="QUERY SUCCESS", rows=[],
                                        df=None)
-            if stmt.von not in vdf.columns:
-                raise GQLiteError(
-                    f"group '{stmt.vectors}' has no property "
-                    f"'{stmt.von}'")
-            dtype = vdf.schema[stmt.von].dataType
-            if not (isinstance(dtype, T.ArrayType)
-                    and isinstance(dtype.elementType,
-                                   (T.DoubleType, T.FloatType,
-                                    T.IntegerType, T.LongType,
-                                    T.ShortType))):
-                raise GQLiteError(
-                    f"retrieve: property '{stmt.von}' is "
-                    f"{dtype.simpleString()}, not a numeric vector")
+            _check_vector_prop(vdf, stmt.vectors, stmt.von, "retrieve")
             out = hybrid_topk(df, vdf, stmt.near, stmt.terms,
                               k=stmt.top, k_each=max(stmt.top, 20),
                               c=stmt.fuse, doc_id_col="id",
@@ -782,24 +757,14 @@ class GQLite:
         reference's persisted HNSW lifecycle (HNSW.cpp:282-328 /
         358-374).  ``pq: true`` builds the IVFPQ (codes-only) form
         instead — Group.build_ivfpq_index, served by the ADC route.
-        Result row: (nlist, n_vectors)."""
+        Result row: (nlist, n_vectors), nlist the fitted one (at most
+        n_vectors; rows without a vector are skipped)."""
         graph = self._graph(stmt.graph)
         grp = graph.group(stmt.group)
         df = grp.to_df()
         if df is None:
             return StatementResult(status="QUERY SUCCESS", rows=[], df=None)
-        if stmt.on not in df.columns:
-            raise GQLiteError(
-                f"group '{stmt.group}' has no property '{stmt.on}'")
-        from pyspark.sql import types as T
-        dtype = df.schema[stmt.on].dataType
-        if not (isinstance(dtype, T.ArrayType)
-                and isinstance(dtype.elementType,
-                               (T.DoubleType, T.FloatType, T.IntegerType,
-                                T.LongType, T.ShortType))):
-            raise GQLiteError(
-                f"vindex: property '{stmt.on}' is {dtype.simpleString()}, "
-                "not a numeric vector")
+        _check_vector_prop(df, stmt.group, stmt.on, "vindex")
         if stmt.attach:
             # attach-only: re-wire an EXISTING persisted index (fresh
             # session — no rebuild; kind discovered from the sidecar,
@@ -834,18 +799,11 @@ class GQLite:
                 rows=[[rep["lists_rewritten"], rep["rows_added"]]],
                 value=rep["rows_added"])
         n_vecs = df.filter(F.col(stmt.on).isNotNull()).count()
-        if stmt.pq:
-            # IVFPQ form: codes-only inverted lists (~dim·4/m smaller);
-            # routed $near serves them via ADC + exact re-rank
-            nlist = grp.build_ivfpq_index(
-                stmt.on, stmt.path, nlist=stmt.nlist, m=stmt.m,
-                ksub=stmt.ksub, refine_iters=stmt.refine,
-                n_vectors=n_vecs)
-        else:
-            nlist = grp.build_ivf_index(stmt.on, stmt.path,
-                                        nlist=stmt.nlist,
-                                        refine_iters=stmt.refine,
-                                        n_vectors=n_vecs)
+        # pq: true builds the IVFPQ form: codes-only inverted lists
+        # (~dim·4/m smaller) the routed $near serves via ADC + re-rank
+        nlist = grp._build_index(stmt.on, stmt.path,
+                                 "ivfpq" if stmt.pq else "ivf", stmt.nlist,
+                                 n_vecs, stmt.refine, stmt.m, stmt.ksub)
         return StatementResult(
             status="QUERY SUCCESS",
             rows=[[nlist, n_vecs]], value=nlist)
@@ -1770,6 +1728,23 @@ class GQLite:
                 else:
                     lines.append(f"{{upset: '{name}', edge: [{sk}, {arrow}, {dk}]}};")
         return "\n".join(lines)
+
+
+def _check_vector_prop(df: DataFrame, group: str, prop: str,
+                       verb: str) -> None:
+    """The vector statements' one property check: ``group``'s frame
+    ``df`` must hold ``prop`` as an array of numbers; ``verb`` prefixes
+    the type error."""
+    from pyspark.sql import types as T
+    if prop not in df.columns:
+        raise GQLiteError(f"group '{group}' has no property '{prop}'")
+    dtype = df.schema[prop].dataType
+    if not (isinstance(dtype, T.ArrayType)
+            and isinstance(dtype.elementType,
+                           (T.DoubleType, T.FloatType, T.IntegerType,
+                            T.LongType, T.ShortType))):
+        raise GQLiteError(f"{verb}: property '{prop}' is "
+                          f"{dtype.simpleString()}, not a numeric vector")
 
 
 def _norm_fs_path(p: str) -> str:

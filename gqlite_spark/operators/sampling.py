@@ -226,11 +226,12 @@ def cluster_sample(df: DataFrame, centroids: "list[tuple]",
     sample key — deterministic, engine-independent, and re-runs give
     the same sample).  Output size is nlist × per_cluster regardless of
     corpus size, so downstream never sees the skew.  Rank ties break by
-    id: bit-exact SQL-oracle replayable."""
+    id: bit-exact SQL-oracle replayable.  A row without a vector is in
+    no cluster and never sampled."""
     from pyspark.sql import Window
 
     from .similarity import _ivf_assign_col
-    assigned = df.withColumn(
+    assigned = df.where(F.col(vec_col).isNotNull()).withColumn(
         "cluster_id", _ivf_assign_col(centroids, vec_col, metric))
     w = (Window.partitionBy("cluster_id")
          .orderBy(sample_key(id_col), F.col(id_col)))

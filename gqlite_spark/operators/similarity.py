@@ -13,6 +13,16 @@ Spark-native strategies:
 
 The access-path choice (brute vs LSH by corpus size) mirrors the reference's
 cost-ordered candidate plans (GScanPlan::evaluate, ScanPlan.cpp:564-573).
+
+The quantized indexes (IVF, PQ, IVFPQ) share one build, ``_save_index``:
+one sample of the lowest-id rows with a non-null vector feeds every
+quantizer (``_sample``), one Lloyd loop refines them all in one
+aggregation per iteration (``_lloyd``), and one per-row columns step
+(``_index_columns``, also used by ``Group.compact_into_index``) computes
+the rows ``_write_index`` persists beside the params sidecar.  All of
+them select nearest centroids with one kernel (``_centroid_structs``
+below the expression caps, ``_nearest_udf`` above them), and one
+``topk_indexed`` searches every persisted kind.
 """
 
 from __future__ import annotations
@@ -211,7 +221,9 @@ def _nearest_udf(vec_col: str, books: "list[list[tuple]]", metric: str,
     centroids are cid-sorted, so ties break like the expression; but
     an exact tie of the in-order fold may not be one in the expanded
     BLAS form (−2·v·c + ‖c‖²), so borderline rows can differ — which
-    is why oracle-replayed paths stay under the caps."""
+    is why oracle-replayed paths stay under the caps.  A null vector
+    gets a null result (null codes for 'array<int>'), as in the
+    expression."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -227,16 +239,25 @@ def _nearest_udf(vec_col: str, books: "list[list[tuple]]", metric: str,
     ip = metric == "ip"
 
     def _nearest(v):
-        M = np.array(v.tolist(), dtype=np.float64)
+        vs = v.tolist()
+        null = [x is None for x in vs]
+        if any(null):                  # scored as zeros, answered null
+            vs = [np.zeros(m * dsub) if z else x for z, x in zip(null, vs)]
+        M = np.array(vs, dtype=np.float64)
         dots = M.reshape(len(M), m, dsub).transpose(1, 0, 2) @ Ct
         score = -dots if ip else -2.0 * dots + c_norms
         idx = (score.argmin(axis=2)[:, :, None] if n == 1
                else np.argsort(score, axis=2, kind="stable")[:, :, :n])
         best = cids[sub, idx]                     # m × batch × n
         if rtype == "long":
-            return pd.Series(best[0, :, 0])
-        rows = best[0] if rtype == "array<long>" else best[:, :, 0].T
-        return pd.Series([r.tolist() for r in rows])
+            out = best[0, :, 0]
+        else:
+            rows = best[0] if rtype == "array<long>" else best[:, :, 0].T
+            out = [r.tolist() for r in rows]
+        if any(null):
+            gap = [None] * m if rtype == "array<int>" else None
+            out = [gap if z else x for z, x in zip(null, out)]
+        return pd.Series(out)
 
     # real class objects, not strings: this module's `from __future__
     # import annotations` would otherwise leave pyspark unable to
@@ -248,14 +269,14 @@ def _nearest_udf(vec_col: str, books: "list[list[tuple]]", metric: str,
 def _ivf_assign_col(centroids: list[tuple], vec_col: str, metric: str):
     """IVF list-id Column: the cid of the nearest centroid by
     ``metric`` ('ip' = max inner product, 'l2' = min squared L2; ties →
-    smallest cid), zero shuffle.  Bit-exact literal expression up to
-    ``IVF_ASSIGN_EXPR_MAX_NLIST`` centroids (the SQL-oracle form), the
-    numpy fallback beyond."""
+    smallest cid), zero shuffle; null for a null vector.  Bit-exact
+    literal expression up to ``IVF_ASSIGN_EXPR_MAX_NLIST`` centroids
+    (the SQL-oracle form), the numpy fallback beyond."""
     if len(centroids) > IVF_ASSIGN_EXPR_MAX_NLIST:
         return _nearest_udf(vec_col, [centroids], metric, 1, "long")
-    structs = _centroid_structs(f"cast({vec_col} as array<double>)",
-                                centroids, metric)
-    return F.expr(f"array_min({structs}).c")
+    vsql = f"cast({vec_col} as array<double>)"
+    structs = _centroid_structs(vsql, centroids, metric)
+    return F.expr(f"if({vsql} is null, null, array_min({structs}).c)")
 
 
 def _ivf_probe_col(centroids: list[tuple], vec_col: str, nprobe: int,
@@ -619,66 +640,28 @@ def save_ann_index(df: DataFrame, path: str, dim: int, n_planes: int = 8,
 # IVF (inverted-file) ANN: coarse quantizer -> list assignment -> probe
 # ---------------------------------------------------------------------------
 
-def _lowest_id_rows(df: DataFrame, n: int, id_col: str,
-                    vec_col: str) -> "list[tuple]":
-    """The ``n`` lowest-id corpus rows as [(id, vector), ...] — the
-    shared sampling-quantizer fetch (one TakeOrdered scan of the
-    corpus).  ``save_ivfpq_index`` derives BOTH its coarse centroids and
-    its PQ codebooks from a single call (r15): the two quantizers used
-    to issue separate orderBy(id).limit(...) jobs, i.e. two full corpus
-    scans per index build for rows that are a prefix of one another."""
-    rows = (df.orderBy(id_col).limit(n)
-            .select(F.col(id_col).alias("cid"),
-                    F.col(vec_col).cast("array<double>").alias("cv"))
-            .collect())
-    if not rows:
-        raise ValueError(f"no '{vec_col}' vectors to sample a quantizer "
-                         "from: the corpus is empty")
-    return [(r["cid"], list(r["cv"])) for r in rows]
-
-
 def ivf_centroids(df: DataFrame, nlist: int = 16, id_col: str = "vec_id",
                   vec_col: str = "embedding") -> list[tuple]:
     """Deterministic coarse quantizer: the ``nlist`` lowest-id corpus
     vectors as centroids (a sampling quantizer — reproducible across
     engines with no RNG/training state, so an external SQL oracle can
-    rebuild the identical index).  For production recall, refine with
-    :func:`lloyd_refine`.  Returns [(cid, vector), ...] sorted by cid."""
-    return _lowest_id_rows(df, nlist, id_col, vec_col)
+    rebuild the identical index; :func:`_sample`).  For production
+    recall, refine with :func:`lloyd_refine`.  Returns [(cid, vector),
+    ...] sorted by cid."""
+    return _sample(df, id_col, vec_col, nlist=nlist)["centroids"]
 
 
 def lloyd_refine(df: DataFrame, centroids: list[tuple], iters: int = 2,
                  id_col: str = "vec_id", vec_col: str = "embedding",
                  metric: str = "ip") -> list[tuple]:
-    """k-means (Lloyd) refinement of IVF centroids, DataFrame-native:
-    each iteration assigns by the chosen metric (max inner product or
-    min squared L2; expression at small nlist, Arrow-batched matmul at
-    large — NO join/shuffle on the corpus) then recomputes list means
-    with one groupBy over (list, dim).  Centroid state is nlist×dim
-    doubles on the driver — trivially small at any corpus scale.
-
-    An inverted list that captures no vectors in an iteration keeps its
-    previous centroid (standard empty-cluster handling; preserves
-    nlist).  Refined centroids are float means (engine-order-dependent
-    sums), so use the UNREFINED sampling quantizer when an external
-    oracle must rebuild the index bit-for-bit."""
-    cents = centroids
-    for _ in range(iters):
-        assigned = df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-            _ivf_assign_col(cents, vec_col, metric).alias("list_id"))
-        means = (assigned.select("list_id", F.posexplode("v")
-                                 .alias("pos", "x"))
-                 .groupBy("list_id", "pos").agg(F.avg("x").alias("m")))
-        by_list: dict = {}
-        for r in means.collect():
-            by_list.setdefault(r["list_id"], {})[r["pos"]] = r["m"]
-        prev = dict(cents)
-        cents = [(cid, ([by_list[cid][i] for i in range(len(by_list[cid]))]
-                        if cid in by_list else prev[cid]))
-                 for cid, _ in cents]
-    return cents
+    """k-means (Lloyd) refinement of IVF centroids assigned by the
+    chosen metric (max inner product or min squared L2) — the one
+    build loop, :func:`_lloyd`.  Refined centroids are float means
+    (engine-order-dependent sums), so use the UNREFINED sampling
+    quantizer when an external oracle must rebuild the index
+    bit-for-bit."""
+    return _lloyd(df, vec_col, iters,
+                  {"centroids": centroids, "metric": metric})["centroids"]
 
 
 def ivf_assign(df: DataFrame, centroids: list[tuple],
@@ -753,26 +736,9 @@ def save_ivf_index(df: DataFrame, path: str, nlist: int = 16,
     1.0 s; id-only routing saves nothing; per-row inline centroid
     assignment COSTS 124 s — PLANS.md 'Cost-based $near+limit
     routing')."""
-    cents = ivf_centroids(df, nlist, id_col, vec_col)
-    if refine_iters:
-        # metric-matched Lloyd: better-balanced lists on clustered data
-        # than the sampling quantizer; leave 0 when a SQL oracle must
-        # rebuild the index bit-for-bit (refined centroids = float means)
-        cents = lloyd_refine(df, cents, refine_iters, id_col, vec_col,
-                             metric)
-    # single-pass build: the vector column is carried THROUGH the
-    # assignment select — the earlier (id, list_id) ⋈ corpus re-join was
-    # a second full exchange of the corpus for data the scan already had
-    # in hand (VERDICT r7 wrong #1)
-    cols = [F.col(id_col).alias("id"),
-            _ivf_assign_col(cents, vec_col, metric).alias("list_id")]
-    if include_vectors:
-        cols.append(F.col(vec_col).alias("_vec"))
-    _write_index(df.select(*cols), path, "ivf",
-                 {"nlist": nlist, "id_col": id_col, "vec_col": vec_col,
-                  "metric": metric, "include_vectors": include_vectors,
-                  "centroids": [[cid, cv] for cid, cv in cents]},
-                 partition_by="list_id")
+    _save_index(df, path, "ivf", nlist=nlist, m=1, ksub=0,
+                refine_iters=refine_iters, id_col=id_col, vec_col=vec_col,
+                metric=metric, include_vectors=include_vectors)
 
 
 # Access-path selection threshold: below this corpus size, exact brute-force
@@ -822,63 +788,19 @@ def pq_codebooks(df: DataFrame, m: int = 8, ksub: int = 64,
     candidates = 0.1% of the corpus.  The old m=4/ksub=16 (16 bits) was
     shown too coarse — 13.8% recall@10 — and survives only as an
     explicit argument where an oracle needs a tiny codebook."""
-    vecs = [v for _, v in _lowest_id_rows(df, ksub, id_col, vec_col)]
-    return _books_from_vecs(vecs, m)
-
-
-def _books_from_vecs(vecs: "list[list[float]]",
-                     m: int) -> list[list[list[float]]]:
-    """Slice sampled vectors into per-subspace codebooks (the
-    :func:`pq_codebooks` layout), shared with the fused fetch in
-    :func:`save_ivfpq_index`."""
-    dim = len(vecs[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    return [[vec[j * dsub:(j + 1) * dsub] for vec in vecs]
-            for j in range(m)]
+    return _sample(df, id_col, vec_col, m=m, ksub=ksub)["books"]
 
 
 def pq_refine(df: DataFrame, books: list[list[list[float]]],
               iters: int = 2, id_col: str = "vec_id",
               vec_col: str = "embedding") -> list[list[list[float]]]:
-    """Per-subspace Lloyd (k-means) refinement of PQ codebooks, DataFrame-
-    native: each iteration encodes every subspace with the current books
-    (scalar expressions — no corpus shuffle) and recomputes codeword means
-    with ONE groupBy over (subspace, code, dim).  Codebook state is
-    m × ksub × dsub doubles on the driver — model-sized at any corpus
-    scale.  Empty codewords keep their previous centroid.
-
-    Refined books are float means (engine-order-dependent sums), so use
-    the UNREFINED sampling books when an external oracle must rebuild the
-    codes bit-for-bit; use refined books when recall matters."""
-    m = len(books)
-    dsub = len(books[0][0])
-    for _ in range(iters):
-        v = F.col(vec_col).cast("array<double>")
-        # encode once per row via the switched codes column (expression
-        # or Arrow einsum — the einsum path is what makes refinement
-        # affordable at large m·ksub), then explode per subspace
-        exploded = (df.select(_pq_codes_col(books, vec_col)
-                              .alias("_codes"), v.alias("_v"))
-                    .select(F.posexplode("_codes").alias("j", "code"),
-                            F.col("_v"))
-                    .select("j", "code",
-                            F.slice(F.col("_v"),
-                                    F.col("j") * dsub + 1,
-                                    F.lit(dsub)).alias("sub"))
-                    .select("j", "code",
-                            F.posexplode("sub").alias("pos", "x")))
-        means = (exploded.groupBy("j", "code", "pos")
-                 .agg(F.avg("x").alias("m")).collect())
-        table: dict = {}
-        for r in means:
-            table.setdefault((r["j"], r["code"]), {})[r["pos"]] = r["m"]
-        books = [[([table[(j, c)][i] for i in range(dsub)]
-                   if (j, c) in table else books[j][c])
-                  for c in range(len(books[j]))]
-                 for j in range(m)]
-    return books
+    """Per-subspace Lloyd (k-means) refinement of PQ codebooks — the
+    one build loop, :func:`_lloyd` (every subspace encoded in the same
+    select, every codeword mean in the same groupBy).  Refined books
+    are float means (engine-order-dependent sums), so use the UNREFINED
+    sampling books when an external oracle must rebuild the codes
+    bit-for-bit; use refined books when recall matters."""
+    return _lloyd(df, vec_col, iters, {"books": books})["books"]
 
 
 def _f17(x) -> str:
@@ -916,12 +838,13 @@ def pq_topk(df: DataFrame, query_vec: list[float],
 
     The ADC python floats, the in-plan fold, and the SQL oracle's
     in-order list sums are all left-associated over the same element
-    order, so candidate sets replay exactly cross-engine."""
+    order, so candidate sets replay exactly cross-engine.  A row with a
+    null vector (null codes) ranks after every candidate."""
     q = [float(x) for x in query_vec]
     codes = _pq_code_sqls(f"cast({vec_col} as array<double>)", books)
     cand = (df.select(F.col(id_col), F.col(vec_col),
                       _adc_expr(q, books, codes).alias("_adc"))
-            .orderBy(F.col("_adc").asc(), F.col(id_col).asc())
+            .orderBy(F.col("_adc").asc_nulls_last(), F.col(id_col).asc())
             .limit(candidates))
     return cosine_topk(cand, q, k, id_col, vec_col)
 
@@ -963,12 +886,9 @@ def save_pq_index(df: DataFrame, path: str, m: int = 8, ksub: int = 64,
     external SQL oracle must rebuild the codebooks bit-for-bit (refined
     books are float means — engine-order-dependent); the sampling books
     alone are deterministic."""
-    books = pq_codebooks(df, m, ksub, id_col, vec_col)
-    if refine_iters:
-        books = pq_refine(df, books, refine_iters, id_col, vec_col)
-    _write_index(pq_encode(df, books, id_col, vec_col), path, "pq",
-                 {"m": m, "ksub": ksub, "id_col": id_col,
-                  "vec_col": vec_col, "books": books})
+    _save_index(df, path, "pq", nlist=0, m=m, ksub=ksub,
+                refine_iters=refine_iters, id_col=id_col, vec_col=vec_col,
+                metric="l2")
 
 
 # --------------------------------------------------------------------------
@@ -1018,34 +938,154 @@ def save_ivfpq_index(df: DataFrame, path: str, nlist: int = 16,
     Build is SINGLE-PASS: coarse assignment and PQ encoding are both
     scalar expressions (or one Arrow matmul above
     ``IVF_ASSIGN_EXPR_MAX_NLIST``) carried through one select — no
-    corpus self-join, one write exchange only.  ``refine_iters`` Lloyd
-    iterations refine BOTH quantizers metric-matched; leave 0 when an
+    corpus self-join, one write exchange only.  Each of the
+    ``refine_iters`` Lloyd iterations refines BOTH quantizers in one
+    aggregation (:func:`_lloyd`); leave 0 when an
     external SQL oracle must rebuild the index bit-for-bit (refined
     centroids/codebooks are float means).  Same persistence contract
     (Hadoop-FS sidecars, cluster-portable paths) as save_ivf_index;
     reference index persistence parity HNSW.cpp:282-328."""
-    # ONE TakeOrdered corpus scan feeds both quantizers (r15): the
-    # nlist centroid sample is a prefix of the ksub codebook sample
-    # (both are the lowest-id rows), so the old back-to-back
-    # ivf_centroids + pq_codebooks calls paid a second full corpus scan
-    # for rows the first fetch already held.  Values bit-identical.
-    rows = _lowest_id_rows(df, max(nlist, ksub), id_col, vec_col)
-    cents = rows[:nlist]
-    books = _books_from_vecs([v for _, v in rows[:ksub]], m)
-    if refine_iters:
-        cents = lloyd_refine(df, cents, refine_iters, id_col, vec_col,
-                             metric)
-        books = pq_refine(df, books, refine_iters, id_col, vec_col)
+    _save_index(df, path, "ivfpq", nlist=nlist, m=m, ksub=ksub,
+                refine_iters=refine_iters, id_col=id_col, vec_col=vec_col,
+                metric=metric)
+
+
+# --------------------------------------------------------------------------
+# Index build: one quantizer sample, one Lloyd loop, one per-row columns step
+# --------------------------------------------------------------------------
+
+def _sample(df: DataFrame, id_col: str, vec_col: str, nlist: int = 0,
+            m: int = 1, ksub: int = 0) -> dict:
+    """The sampling quantizers from ONE TakeOrdered fetch of the
+    ``max(nlist, ksub)`` lowest-id rows with a non-null vector: the
+    first ``nlist`` rows are the IVF ``centroids`` [(cid, vector), ...]
+    and the first ``ksub`` rows, sliced into ``m`` sub-spaces, the PQ
+    ``books`` (``books[j][code]`` = sub-vector j of row ``code``).  A
+    smaller corpus yields fewer centroids / codewords.  The dim must
+    divide evenly by ``m``."""
+    rows = (df.where(F.col(vec_col).isNotNull())
+            .orderBy(id_col).limit(max(nlist, ksub))
+            .select(F.col(id_col).alias("cid"),
+                    F.col(vec_col).cast("array<double>").alias("cv"))
+            .collect())
+    if not rows:
+        raise ValueError(f"no '{vec_col}' vectors to sample a quantizer "
+                         "from: the corpus has none")
+    rows = [(r["cid"], list(r["cv"])) for r in rows]
+    q: dict = {}
+    if nlist:
+        q["centroids"] = rows[:nlist]
+    if ksub:
+        dim = len(rows[0][1])
+        if dim % m:
+            raise ValueError(f"dim {dim} not divisible by m={m}")
+        dsub = dim // m
+        q["books"] = [[v[j * dsub:(j + 1) * dsub] for _, v in rows[:ksub]]
+                      for j in range(m)]
+    return q
+
+
+def _lloyd(df: DataFrame, vec_col: str, iters: int, q: dict) -> dict:
+    """Lloyd (k-means) refinement of the quantizers in ``q`` — IVF
+    ``centroids`` under ``q['metric']`` and/or PQ ``books`` (squared
+    L2) — returning a refined copy.  Each quantizer is a list of
+    per-sub-space ``(cid, vector)`` books (IVF: one book, cid = list
+    id; PQ: m books, cid = code).  Each iteration assigns every
+    quantizer in ONE select of the index's own per-row columns
+    (:func:`_index_columns`: no corpus shuffle) and recomputes every
+    mean with ONE groupBy over (quantizer, sub-space, code, pos), so
+    IVFPQ refines both quantizers in one aggregation.  Quantizer state
+    is model-sized on the driver at any corpus scale; a list or
+    codeword that captures no vector keeps its previous value (the
+    standard empty-cluster handling; nlist/ksub are preserved)."""
+    q = dict(q)
+    for _ in range(iters):
+        parts = []
+        if "centroids" in q:
+            parts.append("array(named_struct('q', 0, 'j', 0, "
+                         "'c', cast(list_id as long), 's', _v))")
+        if "books" in q:
+            dsub = len(q["books"][0][0])
+            parts.append(f"transform(codes, (c, j) -> named_struct('q', 1, "
+                         f"'j', j, 'c', cast(c as long), "
+                         f"'s', slice(_v, j * {dsub} + 1, {dsub})))")
+        # a null vector has null codes and no elements: no contribution
+        means = (df.select(F.col(vec_col).cast("array<double>").alias("_v"),
+                           *_index_columns(q, vec_col))
+                 .select(F.explode(F.expr(f"concat({', '.join(parts)})"))
+                         .alias("t"))
+                 .select("t.q", "t.j", "t.c",
+                         F.posexplode("t.s").alias("pos", "x"))
+                 .groupBy("q", "j", "c", "pos")
+                 .agg(F.avg("x").alias("m")).collect())
+        table: dict = {}
+        for r in means:
+            table.setdefault((r["q"], r["j"], r["c"]), {})[r["pos"]] = r["m"]
+
+        def refit(qi, j, book):
+            return [(cid, [table[(qi, j, cid)][i] for i in range(len(cv))]
+                     if (qi, j, cid) in table else cv) for cid, cv in book]
+        if "centroids" in q:
+            q["centroids"] = refit(0, 0, q["centroids"])
+        if "books" in q:
+            q["books"] = [[cv for _, cv in refit(1, j, enumerate(book))]
+                          for j, book in enumerate(q["books"])]
+    return q
+
+
+def _index_columns(params: dict, vec_col: str) -> list:
+    """The per-row columns of the index format from its ``params``:
+    ``list_id`` (the nearest centroid by the params' metric) when they
+    hold ``centroids``, PQ ``codes`` when they hold ``books``, and the
+    vector itself as ``_vec`` when ``include_vectors`` is set — all
+    carried through one select, so a build is one scan and one write
+    (no re-join of the corpus).  The index build, the Lloyd loop and
+    ``Group.compact_into_index`` all compute their rows here."""
+    cols = []
+    if "centroids" in params:
+        cols.append(_ivf_assign_col(params["centroids"], vec_col,
+                                    params.get("metric", "ip"))
+                    .alias("list_id"))
+    if "books" in params:
+        cols.append(_pq_codes_col(params["books"], vec_col).alias("codes"))
+    if params.get("include_vectors"):
+        cols.append(F.col(vec_col).alias("_vec"))
+    return cols
+
+
+def _save_index(df: DataFrame, path: str, kind: str, nlist: int, m: int,
+                ksub: int, refine_iters: int, id_col: str, vec_col: str,
+                metric: str, include_vectors: bool = False) -> dict:
+    """The one quantized-index build behind :func:`save_ivf_index`,
+    :func:`save_pq_index` and :func:`save_ivfpq_index`: over the rows
+    with a non-null vector, sample the quantizers the ``kind`` needs
+    (IVF centroids unless 'pq', PQ books unless 'ivf'; :func:`_sample`),
+    refine them with ``refine_iters`` Lloyd iterations
+    (:func:`_lloyd`), compute the per-row columns
+    (:func:`_index_columns`) and write them with the params sidecar
+    (:func:`_write_index`; IVF kinds partitioned by ``list_id``).  The
+    sidecar records the FITTED nlist/ksub, which are smaller than the
+    requested ones on a corpus with fewer vectors.  Returns the
+    params."""
+    df = df.where(F.col(vec_col).isNotNull())
+    ivf, pq = kind != "pq", kind != "ivf"
+    q = _sample(df, id_col, vec_col, nlist=nlist if ivf else 0, m=m,
+                ksub=ksub if pq else 0)
+    if ivf:
+        q["metric"] = metric
+    q = _lloyd(df, vec_col, refine_iters, q)
+    params = {"nlist": len(q["centroids"]) if ivf else None,
+              "m": m if pq else None,
+              "ksub": len(q["books"][0]) if pq else None,
+              "id_col": id_col, "vec_col": vec_col,
+              "metric": metric if ivf else None,
+              "include_vectors": include_vectors if kind == "ivf" else None,
+              "centroids": q.get("centroids"), "books": q.get("books")}
+    params = {k: v for k, v in params.items() if v is not None}
     _write_index(df.select(F.col(id_col).alias("id"),
-                           _ivf_assign_col(cents, vec_col, metric)
-                           .alias("list_id"),
-                           _pq_codes_col(books, vec_col).alias("codes")),
-                 path, "ivfpq",
-                 {"nlist": nlist, "m": m, "ksub": ksub, "id_col": id_col,
-                  "vec_col": vec_col, "metric": metric,
-                  "centroids": [[cid, cv] for cid, cv in cents],
-                  "books": books},
-                 partition_by="list_id")
+                           *_index_columns(params, vec_col)),
+                 path, kind, params, partition_by="list_id" if ivf else None)
+    return params
 
 
 # --------------------------------------------------------------------------

@@ -407,6 +407,72 @@ def test_gql_vindex_over_no_vectors_is_an_engine_error(db, spark,
                        id_col="id")
 
 
+@pytest.mark.parametrize("udf_side", [False, True])
+def test_null_vectors_are_skipped_by_the_quantizers(db, spark, tmp_path,
+                                                    monkeypatch, udf_side):
+    """A group whose lowest-id vertex has no vector answers {similar}
+    ivf/pq and {sample clusters:} exactly as the same group without
+    that vertex, and the three index builds write the same rows and
+    sidecar; a null vector gets a null list id / null codes from the
+    kernel.  ``udf_side`` drops the expression caps to 0 so every
+    assignment and encode runs the numpy fallback."""
+    import json
+    import math
+
+    from gqlite_spark import fsio
+    from gqlite_spark.operators import similarity as S
+    if udf_side:
+        monkeypatch.setattr(S, "IVF_ASSIGN_EXPR_MAX_NLIST", 0)
+        monkeypatch.setattr(S, "PQ_ENCODE_EXPR_MAX_FOLDS", 0)
+    rows = [(i, [math.cos(i / 3), math.sin(i / 3), math.cos(i / 7),
+                 float(i % 4)]) for i in range(1, 41)]
+    frames = {}
+    for g, extra in (("withnull", [(0, None)]), ("clean", [])):
+        db.exec(f"{{create: '{g}', group: ['v']}};")
+        df = spark.createDataFrame(extra + rows,
+                                   "id long, embedding array<double>")
+        db.catalog.graphs[g].group("v").register_df(df)
+        frames[g] = df.cache()
+
+    def answers(g):
+        out = []
+        for stmt in ("{similar: 'v', in: 'G', to: [1.0, 0.2, 0.5, 1.0],"
+                     " top: 3, method: 'ivf'};",
+                     "{similar: 'v', in: 'G', to: [1.0, 0.2, 0.5, 1.0],"
+                     " top: 3, method: 'pq'};",
+                     "{sample: 'v', in: 'G', clusters: 4, per: 2};"):
+            r = db.exec(stmt.replace("'G'", f"'{g}'"))[0]
+            assert r.error is None, r.error
+            out.append(sorted(map(tuple, r.rows)))
+        for kind, save, kw in (
+                ("ivf", S.save_ivf_index, {"nlist": 4,
+                                           "include_vectors": True}),
+                ("pq", S.save_pq_index, {"m": 2, "ksub": 4,
+                                         "refine_iters": 0}),
+                ("ivfpq", S.save_ivfpq_index, {"nlist": 4, "m": 2,
+                                               "ksub": 4})):
+            p = str(tmp_path / f"{g}_{kind}")
+            save(frames[g], p, id_col="id", **kw)
+            index = spark.read.parquet(S.index_data_path(p, kind))
+            out.append(sorted(json.dumps(r.asDict(), sort_keys=True)
+                              for r in index.collect()))
+            out.append(json.loads(fsio.read_text(
+                spark, S.index_params_path(p, kind))))
+        return out
+
+    try:
+        assert answers("withnull") == answers("clean")
+        null = frames["withnull"].filter("id = 0")
+        cents = S.ivf_centroids(frames["clean"], 4, "id")
+        books = S.pq_codebooks(frames["clean"], 2, 4, "id")
+        assert null.select(S._ivf_assign_col(cents, "embedding", "l2"),
+                           S._pq_codes_col(books, "embedding")
+                           ).first()[:] == (None, [None, None])
+    finally:
+        for df in frames.values():
+            df.unpersist()
+
+
 def test_gql_knn_routed_rejects_malformed_int_conf(pdb, tmp_path, spark):
     """A routed $near reads its integer confs strictly: a value that is
     not an integer is an engine error naming the key and the value, not

@@ -896,6 +896,68 @@ def test_ivf_lloyd_refine_improves_quantization(spark):
     assert sse(refined, vecs) <= sse(raw, vecs) + 1e-9
 
 
+def test_fused_ivfpq_refine_matches_separate_loops(spark, tmp_path):
+    """save_ivfpq_index refines its centroids and codebooks in ONE
+    aggregation per Lloyd iteration; the result equals lloyd_refine
+    followed by pq_refine on the same data (within float summation
+    order)."""
+    import math
+
+    from gqlite_spark.operators.similarity import (ivf_centroids,
+                                                   load_index_params,
+                                                   lloyd_refine,
+                                                   pq_codebooks, pq_refine,
+                                                   save_ivfpq_index)
+    vecs = [(i, [math.cos(i / 5) + (i % 3), math.sin(i / 5),
+                 math.cos(i / 11), math.sin(i / 11) - (i % 2)])
+            for i in range(120)]
+    df = spark.createDataFrame(vecs,
+                               "vec_id long, embedding array<double>").cache()
+    path = str(tmp_path / "fused")
+    try:
+        save_ivfpq_index(df, path, nlist=3, m=2, ksub=4, refine_iters=2)
+        cents = lloyd_refine(df, ivf_centroids(df, 3), 2, metric="l2")
+        books = pq_refine(df, pq_codebooks(df, m=2, ksub=4), 2)
+    finally:
+        df.unpersist()
+    params = load_index_params(spark, path, "ivfpq")
+    assert [cid for cid, _ in params["centroids"]] == [0, 1, 2]
+    got = [x for _, cv in params["centroids"] for x in cv] + [
+        x for book in params["books"] for cv in book for x in cv]
+    want = [x for _, cv in cents for x in cv] + [
+        x for book in books for cv in book for x in cv]
+    assert len(got) == len(want) == 3 * 4 + 2 * 4 * 2
+    assert max(abs(a - b) for a, b in zip(got, want)) < 1e-9
+    raw = ivf_centroids(df, 3)
+    assert cents != raw          # the refinement moved the centroids
+
+
+def test_index_sidecar_records_fitted_sizes(spark, tmp_path, db):
+    """On a corpus smaller than the requested nlist / ksub, the sidecar
+    and {vindex} report the fitted sizes (one centroid / codeword per
+    vector), not the requested ones."""
+    from gqlite_spark.operators.similarity import (load_index_params,
+                                                   save_ivf_index,
+                                                   save_pq_index)
+    df = spark.createDataFrame(
+        [(i, [float(i), float(i % 7), 1.0, -float(i % 3)])
+         for i in range(60)], "vec_id long, embedding array<double>")
+    save_ivf_index(df, str(tmp_path / "ivf"), nlist=130)
+    ivf = load_index_params(spark, str(tmp_path / "ivf"), "ivf")
+    assert ivf["nlist"] == len(ivf["centroids"]) == 60
+    save_pq_index(df, str(tmp_path / "pq"), m=4, ksub=200, refine_iters=0)
+    pq = load_index_params(spark, str(tmp_path / "pq"), "pq")
+    assert pq["ksub"] == len(pq["books"][0]) == 60 and pq["m"] == 4
+    db.exec("{create: 'fit', group: ['v']};")
+    db.catalog.graphs["fit"].group("v").register_df(
+        df.withColumnRenamed("vec_id", "id"))
+    for pq_opt in ("", " pq: true, m: 2, ksub: 4,"):
+        r = db.exec("{vindex: 'v', in: 'fit', on: 'embedding',"
+                    f"{pq_opt} path: '{tmp_path / 'fit'}', nlist: 100}};")[0]
+        assert r.error is None, r.error
+        assert r.rows == [[60, 60]]
+
+
 # --------------------------------------------------------------------------
 # sampling / quantiles / decontamination
 # --------------------------------------------------------------------------

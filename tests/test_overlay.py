@@ -267,8 +267,9 @@ def test_ivfpq_route_job_counts(spark, tmp_path):
 
 def test_index_build_job_counts(spark, tmp_path):
     """Spark jobs per persisted-index build on a cached 400×8 corpus:
-    the sampling-quantizer fetch, each Lloyd/codebook refinement pass
-    and the LSH centering pass are one job each, plus the index write."""
+    the sampling-quantizer fetch and the index write are one job each,
+    the LSH centering pass two, and each Lloyd iteration two (one
+    aggregation, however many quantizers the index refines)."""
     import math
 
     from gqlite_spark.operators import similarity as S
@@ -285,8 +286,9 @@ def test_index_build_job_counts(spark, tmp_path):
         "pq": (lambda p: S.save_pq_index(df, p), 6),
         "pq_norefine": (lambda p: S.save_pq_index(df, p, refine_iters=0), 2),
         "ivfpq": (lambda p: S.save_ivfpq_index(df, p), 2),
+        # one fused Lloyd aggregation refines both quantizers
         "ivfpq_refine": (lambda p: S.save_ivfpq_index(df, p,
-                                                      refine_iters=1), 6),
+                                                      refine_iters=1), 4),
     }
     try:
         got = {}
