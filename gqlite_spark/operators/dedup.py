@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .similarity import dot_sql, sq_norm_sql
+
 # MinHash configuration: 16 hash functions in 4 bands of 4 rows.
 # P(candidate | jaccard=s) = 1-(1-s^4)^4 → ~0.97 at s=0.8, ~0.3 at s=0.4.
 NUM_HASHES = 16
@@ -512,7 +514,7 @@ def embedding_near_dups(df: DataFrame, id_col: str = "vec_id",
     """
     v = df.select(F.col(id_col).alias("id"),
                   F.col(vec_col).cast("array<double>").alias("v"))
-    norm = F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x))
+    norm = F.expr(f"sqrt({sq_norm_sql('v')})")
     v = v.withColumn("nrm", norm).filter(F.col("nrm") > 0).cache()
     n = approx_count if approx_count is not None else v.count()
 
@@ -572,10 +574,7 @@ def embedding_near_dups(df: DataFrame, id_col: str = "vec_id",
                        F.col("nrm").alias("nb"))
         pairs = cand.join(a_v, "doc_a").join(b_v, "doc_b")
 
-    dot = F.aggregate(F.zip_with(F.col("va"), F.col("vb"),
-                                 lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    cos = dot / (F.col("na") * F.col("nb"))
+    cos = F.expr(f"{dot_sql('va', 'vb')} / (na * nb)")
     return (pairs.withColumn("cosine", cos)
             .filter(F.col("cosine") >= threshold)
             .select("doc_a", "doc_b", F.round("cosine", 4).alias("cosine")))

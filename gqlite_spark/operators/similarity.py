@@ -14,6 +14,13 @@ Spark-native strategies:
 The access-path choice (brute vs LSH by corpus size) mirrors the reference's
 cost-ordered candidate plans (GScanPlan::evaluate, ScanPlan.cpp:564-573).
 
+Every vector fold of the engine is written here, once, as SQL text:
+``vec_sql`` (a constant vector literal), ``dot_sql``, ``sq_norm_sql`` and
+``sq_l2_sql``.  The kernels below, ``dedup``, ``streaming.events`` and the
+GQL planner's ``$near`` build their expressions from them, so each use is
+one ``F.expr`` parse (not one py4j ``F.lit`` per element) and every fold
+is the same in-order sum the SQL oracles replay.
+
 The quantized indexes (IVF, PQ, IVFPQ) share one build, ``_save_index``:
 one sample of the lowest-id rows with a non-null vector feeds every
 quantizer (``_sample``), one Lloyd loop refines them all in one
@@ -34,26 +41,60 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, x: acc + x)
+# ---------------------------------------------------------------------------
+# Vector folds: the one place that writes dot, norm and squared-L2 SQL
+# ---------------------------------------------------------------------------
+
+def _f17(x) -> str:
+    """A double literal both Spark and DuckDB parse as DOUBLE (scientific
+    notation — a bare decimal would parse as DECIMAL in Spark SQL) with
+    17 significant digits, the exact round-trip precision."""
+    return "%.17e" % float(x)
 
 
-def _norm(v):
-    return F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
+def vec_sql(values) -> str:
+    """SQL text of a constant vector, ``array(%.17e, …)``: one ``F.expr``
+    parse brings it into a plan, not one py4j ``F.lit`` per element."""
+    return "array(" + ", ".join(_f17(x) for x in values) + ")"
+
+
+def _zip_fold(a: str, b: str, term: str) -> str:
+    return (f"aggregate(zip_with({a}, {b}, (x, y) -> {term}), "
+            "cast(0.0 as double), (acc, x) -> acc + x)")
+
+
+def dot_sql(a: str, b: str) -> str:
+    """SQL text of the inner product of two ``array<double>`` operands
+    (a column name, a cast, a ``slice`` or :func:`vec_sql`): the
+    left-associative fold from 0.0 over the elements in order — the
+    oracle's in-order list sum, so values replay bit-for-bit."""
+    return _zip_fold(a, b, "x * y")
+
+
+def sq_norm_sql(v: str) -> str:
+    """SQL text of the squared L2 norm of an ``array<double>`` operand,
+    the same in-order fold (``sqrt`` of it is the norm)."""
+    return f"aggregate({v}, cast(0.0 as double), (acc, x) -> acc + x * x)"
+
+
+def sq_l2_sql(a: str, b: str) -> str:
+    """SQL text of the squared L2 distance between two ``array<double>``
+    operands, the same in-order fold of ``(a_i - b_i)²``."""
+    return _zip_fold(a, b, "(x - y) * (x - y)")
 
 
 def cosine_topk(df: DataFrame, query_vec: list[float], k: int = 10,
                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Exact top-k by cosine similarity to one query vector.
+    """Exact top-k by cosine similarity to one query vector over the
+    rows with a non-null vector.
     Returns (id, cosine) with cosine rounded to 4 decimals."""
     q = [float(x) for x in query_vec]
     qn = math.sqrt(sum(x * x for x in q)) or 1.0
-    v = df.select(F.col(id_col).alias("id"),
-                  F.col(vec_col).cast("array<double>").alias("v"))
-    # one F.expr parse for the literal array, not dim py4j F.lit calls
-    qcol = F.expr("array(" + ", ".join(_f17(x) for x in q) + ")")
-    cos = _dot(F.col("v"), qcol) / (_norm(F.col("v")) * F.lit(qn))
+    v = df.where(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).cast("array<double>").alias("v"))
+    cos = F.expr(f"{dot_sql('v', vec_sql(q))} / "
+                 f"(sqrt({sq_norm_sql('v')}) * {_f17(qn)})")
     return (v.withColumn("cosine", cos)
             .orderBy(F.col("cosine").desc(), F.col("id").asc())
             .limit(k)
@@ -129,28 +170,15 @@ def knn_join(df: DataFrame, queries: DataFrame, k: int = 5,
 
     Brute-force variant: broadcast the (small) query side against the
     corpus scan, then per-query window top-k — ONE shuffle keyed by query
-    id.  Returns (q_id, id, rank, cosine).
+    id (:func:`_rank_join_pairs`).  Returns (q_id, id, rank, cosine); a
+    null query vector pairs with nothing.
     """
-    # norms are per-ROW quantities: compute them once per corpus/query row
-    # BEFORE the pair stage, not once per (corpus, query) pair — the same
-    # precompute embedding_near_dups uses.  Each pair then pays ONE
-    # interpreted fold (the dot) instead of three.  cosine is the identical
-    # expression tree (dot / (nv · nq)) over identical doubles, so values
-    # are bit-exact either way.
-    v = df.select(F.col(id_col).alias("id"),
-                  F.col(vec_col).cast("array<double>").alias("v"))
-    v = v.withColumn("_nv", _norm(F.col("v")))
-    qd = queries.select(F.col(q_id_col).alias("q_id"),
-                        F.col(q_vec_col).cast("array<double>").alias("qv"))
-    qd = qd.withColumn("_nq", _norm(F.col("qv")))
-    joined = v.crossJoin(F.broadcast(qd))
-    cos = _dot(F.col("v"), F.col("qv")) / (F.col("_nv") * F.col("_nq"))
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(),
-                                           F.col("id").asc())
-    return (joined.withColumn("cosine", cos)
-            .withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .select("q_id", "id", "rank", F.round("cosine", 4).alias("cosine")))
+    v, qd = _with_norms(
+        df.select(F.col(id_col).alias("id"),
+                  F.col(vec_col).cast("array<double>").alias("v")),
+        queries.select(F.col(q_id_col).alias("q_id"),
+                       F.col(q_vec_col).cast("array<double>").alias("qv")))
+    return _rank_join_pairs(v.crossJoin(F.broadcast(qd)), k, "ip")
 
 
 # ---------------------------------------------------------------------------
@@ -185,8 +213,8 @@ def _centroid_structs(vsql: str, centroids: list[tuple], metric: str) -> str:
     is (score, cid), so ``array_min(...).c`` is the nearest centroid
     with ties → smallest cid, and ``array_sort`` ranks them all.
 
-    Each score is the left-assoc zip_with/aggregate fold over the
-    elements in order — the oracle's in-order list sum — and appears
+    Each score is the in-order fold of :func:`dot_sql` /
+    :func:`sq_l2_sql` — the oracle's in-order list sum — and appears
     ONCE in the tree (HOFs get no codegen subexpression elimination, so
     an ``array_position(scores, array_min(scores))`` form would
     evaluate every fold twice).  The whole kernel is one ``F.expr``
@@ -195,15 +223,8 @@ def _centroid_structs(vsql: str, centroids: list[tuple], metric: str) -> str:
     _check_metric(metric)
     structs = []
     for cid, cv in centroids:
-        arr = "array(" + ", ".join(_f17(x) for x in cv) + ")"
-        if metric == "ip":
-            score = (f"-aggregate(zip_with({vsql}, {arr}, "
-                     "(x, y) -> x * y), "
-                     "cast(0.0 as double), (acc, x) -> acc + x)")
-        else:
-            score = (f"aggregate(zip_with({vsql}, {arr}, "
-                     "(a, b) -> (a - b) * (a - b)), "
-                     "cast(0.0 as double), (acc, x) -> acc + x)")
+        score = ("-" + dot_sql(vsql, vec_sql(cv)) if metric == "ip"
+                 else sq_l2_sql(vsql, vec_sql(cv)))
         structs.append(f"named_struct('d', {score}, 'c', {int(cid)}L)")
     return "array(" + ", ".join(structs) + ")"
 
@@ -286,7 +307,8 @@ def _ivf_probe_col(centroids: list[tuple], vec_col: str, nprobe: int,
     driver-side :func:`probe_lists`, for joins where the QUERY side is
     itself a large DataFrame.  Bit-exact literal expression (the sorted
     kernel's first ``nprobe`` cids) up to ``IVF_ASSIGN_EXPR_MAX_NLIST``
-    centroids, the numpy fallback beyond."""
+    centroids, the numpy fallback beyond; null for a null vector on
+    both sides."""
     _check_metric(metric)
     nprobe = min(int(nprobe), len(centroids))
     if nprobe == len(centroids):
@@ -300,10 +322,10 @@ def _ivf_probe_col(centroids: list[tuple], vec_col: str, nprobe: int,
     if len(centroids) > IVF_ASSIGN_EXPR_MAX_NLIST:
         return _nearest_udf(vec_col, [centroids], metric, nprobe,
                             "array<long>")
-    structs = _centroid_structs(f"cast({vec_col} as array<double>)",
-                                centroids, metric)
-    return F.expr(f"transform(slice(array_sort({structs}), 1, {nprobe}), "
-                  "s -> s.c)")
+    vsql = f"cast({vec_col} as array<double>)"
+    structs = _centroid_structs(vsql, centroids, metric)
+    return F.expr(f"if({vsql} is null, null, transform(slice("
+                  f"array_sort({structs}), 1, {nprobe}), s -> s.c))")
 
 
 def _pq_code_sqls(vsql: str, books: list[list[list[float]]]) -> "list[str]":
@@ -390,12 +412,7 @@ def ivf_knn_join(corpus: DataFrame, queries: DataFrame, k: int = 5,
         F.col(q_id_col).alias("q_id"),
         F.col(q_vec_col).cast("array<double>").alias("qv"))
     if metric == "ip":
-        # per-row norms computed BEFORE the list_id join (and, on the query
-        # side, BELOW the probe Generate — once per query row, not once per
-        # probed list) — the pair stage then folds only the dot; values are
-        # bit-exact (see knn_join)
-        c = c.withColumn("_nv", _norm(F.col("v")))
-        qbase = qbase.withColumn("_nq", _norm(F.col("qv")))
+        c, qbase = _with_norms(c, qbase)
     q = qbase.withColumn(
         "list_id", F.explode(_ivf_probe_col(centroids, "qv", nprobe, metric)))
     # each corpus row lives in exactly ONE list, so a (q, c) pair joins
@@ -427,37 +444,37 @@ def ivf_knn_join_indexed(spark, path: str, queries: DataFrame, k: int = 5,
     c = index.select("id", F.col("_vec").cast("array<double>").alias("v"),
                      "list_id")
     if metric == "ip":
-        # per-row norms before the pair stage (see ivf_knn_join)
-        qbase = qbase.withColumn("_nq", _norm(F.col("qv")))
-        c = c.withColumn("_nv", _norm(F.col("v")))
+        c, qbase = _with_norms(c, qbase)
     q = qbase.withColumn(
         "list_id", F.explode(_ivf_probe_col(cents, "qv", nprobe, metric)))
     return _rank_join_pairs(q.join(c, "list_id"), k, metric)
 
 
+def _with_norms(c: DataFrame, q: DataFrame) -> "tuple[DataFrame, DataFrame]":
+    """Attach the per-row norms ``_nv`` (corpus ``v``) and ``_nq``
+    (query ``qv``) that :func:`_rank_join_pairs` needs for 'ip' —
+    computed once per row BEFORE the pair stage (and, on a probed query
+    side, below the probe Generate), not once per pair, so each pair
+    folds only the dot."""
+    return (c.withColumn("_nv", F.expr(f"sqrt({sq_norm_sql('v')})")),
+            q.withColumn("_nq", F.expr(f"sqrt({sq_norm_sql('qv')})")))
+
+
 def _rank_join_pairs(joined: DataFrame, k: int, metric: str) -> DataFrame:
     """Exact re-rank + per-query top-k over (q_id, qv, id, v) candidate
-    pairs: cosine desc for 'ip' (column ``cosine``), squared L2 asc for
-    'l2' (column ``dist2``); ties → smallest id.  When the caller attached
-    per-row norm columns ``_nv``/``_nq`` before the join (the cheap place
-    to compute them — once per row, not per pair), they are used; the
-    cosine expression tree is otherwise identical, so values match
-    bit-for-bit."""
+    pairs: cosine desc for 'ip' (column ``cosine``, over the
+    :func:`_with_norms` columns), squared L2 asc for 'l2' (column
+    ``dist2``); ties → smallest id.  A pair whose score is null (a null
+    vector on either side) is dropped."""
     if metric == "ip":
-        nv = (F.col("_nv") if "_nv" in joined.columns
-              else _norm(F.col("v")))
-        nq = (F.col("_nq") if "_nq" in joined.columns
-              else _norm(F.col("qv")))
-        score = _dot(F.col("v"), F.col("qv")) / (nv * nq)
+        score = f"{dot_sql('v', 'qv')} / (_nv * _nq)"
         order, out_col = F.col("_s").desc(), "cosine"
     else:
-        score = F.aggregate(
-            F.zip_with(F.col("v"), F.col("qv"),
-                       lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0), lambda acc, x: acc + x)
+        score = sq_l2_sql("v", "qv")
         order, out_col = F.col("_s").asc(), "dist2"
     w = Window.partitionBy("q_id").orderBy(order, F.col("id").asc())
-    return (joined.withColumn("_s", score)
+    return (joined.withColumn("_s", F.expr(score))
+            .where(F.col("_s").isNotNull())
             .withColumn("rank", F.row_number().over(w).cast("long"))
             .filter(F.col("rank") <= k)
             .select("q_id", "id", "rank",
@@ -499,8 +516,8 @@ def projection_offsets(df: DataFrame, dim: int, n_planes: int = 8,
         # transform lambda re-evaluates it per element (O(dim²) per row,
         # the winnow_fingerprints lesson); values are bit-identical
         src = (df.select(v.alias("_v"))
-               .select("_v", F.sqrt(F.aggregate(
-                   "_v", F.lit(0.0), lambda a, x: a + x * x)).alias("_nrm")))
+               .select("_v", F.expr(f"sqrt({sq_norm_sql('_v')})")
+                       .alias("_nrm")))
         v = F.transform("_v", lambda x: x / F.col("_nrm"))
     else:
         src = df
@@ -536,7 +553,7 @@ def random_projection_buckets(df: DataFrame, dim: int, n_planes: int = 8,
         # materialize the norm in its own projection FIRST: referencing
         # the norm fold inside the transform lambda would re-evaluate it
         # per element (O(dim²) per row — the winnow_fingerprints lesson)
-        nrm = F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x))
+        nrm = F.expr(f"sqrt({sq_norm_sql('v')})")
         v = (v.select("id", "v", nrm.alias("_nrm"))
              .select("id", F.transform(
                  "v", lambda x: x / F.col("_nrm")).alias("v")))
@@ -548,10 +565,8 @@ def random_projection_buckets(df: DataFrame, dim: int, n_planes: int = 8,
         planes = _projection_vectors(dim, n_planes, f"{seed}:{t}")
         bits = []
         for pi, plane in enumerate(planes):
-            arr = "array(" + ", ".join(_f17(x) for x in plane) + ")"
             off = _f17(offsets[t][pi] if offsets is not None else 0.0)
-            dot = (f"aggregate(zip_with(v, {arr}, (x, y) -> x * y), "
-                   "cast(0.0 as double), (acc, x) -> acc + x)")
+            dot = dot_sql("v", vec_sql(plane))
             bits.append(f"(case when {dot} - {off} >= 0 then 1L else 0L "
                         f"end) * {2 ** pi}L")
         bucket = F.expr("cast(0 as bigint) + " + " + ".join(bits))
@@ -803,13 +818,6 @@ def pq_refine(df: DataFrame, books: list[list[list[float]]],
     return _lloyd(df, vec_col, iters, {"books": books})["books"]
 
 
-def _f17(x) -> str:
-    """A double literal both Spark and DuckDB parse as DOUBLE (scientific
-    notation — a bare decimal would parse as DECIMAL in Spark SQL) with
-    17 significant digits, the exact round-trip precision."""
-    return "%.17e" % float(x)
-
-
 def pq_encode(df: DataFrame, books: list[list[list[float]]],
               id_col: str = "vec_id", vec_col: str = "embedding"
               ) -> DataFrame:
@@ -865,8 +873,7 @@ def _adc_expr(query_vec: list[float], books: list[list[list[float]]],
         qsub = q[j * dsub:(j + 1) * dsub]
         adc = [sum((a - b) * (a - b) for a, b in zip(qsub, cent))
                for cent in book]
-        adc_arr = "array(" + ", ".join(_f17(d) for d in adc) + ")"
-        terms.append(f"element_at({adc_arr}, {code} + 1)")
+        terms.append(f"element_at({vec_sql(adc)}, {code} + 1)")
     return F.expr(" + ".join(terms))
 
 

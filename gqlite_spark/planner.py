@@ -10,6 +10,11 @@ Parquet min/max + pushdown subsume it).
 
 Unlike the reference's flat two-slot AND/OR model (GRAD.h:41-70), ``$and`` /
 ``$or`` nest arbitrarily.
+
+Vector math (the ``$near`` squared distance, the squared norm a scalar is
+compared with) is written by the one fold builder in
+``operators/similarity.py`` (``sq_l2_sql``, ``sq_norm_sql``, ``vec_sql``):
+one ``F.expr`` per use, built only where a statement uses it.
 """
 
 from __future__ import annotations
@@ -27,6 +32,7 @@ from .errors import GQLiteError
 from .gql.ast import (BinaryLit, DatetimeLit, GeohashLit, Lambda, Pred,
                       WalkPattern)
 from .gql.gvm import constant_fold
+from .operators.similarity import sq_l2_sql, sq_norm_sql, vec_sql
 
 _CMP = {"lt": operator.lt, "gt": operator.gt,
         "lte": operator.le, "gte": operator.ge, "eq": operator.eq}
@@ -48,17 +54,20 @@ def _lit_for(meta: GroupMeta, attr: str, value: Any) -> Any:
     return _to_storage(value, kind)
 
 
-def squared_l2(col: Column, point: list[float]) -> Column:
-    """Squared L2 distance between an array<double> column and a constant
+def _vector_sql(attr: str) -> str:
+    """SQL operand of a vector property, as ``array<double>``."""
+    return "cast(`" + attr.replace("`", "``") + "` as array<double>)"
+
+
+def near_dist2(attr: str, point: list) -> Column:
+    """Squared L2 distance between a vector property and a constant
     point — parity with gql::distance2 (src/base/math/Distance.cpp:133-157):
     the reference's ``$near`` compares SQUARED distance against the radius.
-    Pure built-in expression (zip_with + aggregate) → JVM-side, codegen-able,
-    no Python round-trip.
+    One ``F.expr`` of the :func:`~.operators.similarity.sq_l2_sql` fold
+    over the :func:`~.operators.similarity.vec_sql` literal, so its plan
+    cost does not grow with the dimension.
     """
-    pt = F.array(*[F.lit(float(x)) for x in point])
-    return F.aggregate(
-        F.zip_with(col.cast("array<double>"), pt, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0), lambda acc, x: acc + x)
+    return F.expr(sq_l2_sql(_vector_sql(attr), vec_sql(point)))
 
 
 def key_literal(meta: GroupMeta, value: Any) -> Any:
@@ -112,9 +121,7 @@ class PredicateCompiler:
                 # squared L2 norm (distance2-from-origin semantics; the
                 # reference's lambda-predicate case, documented divergence —
                 # it parses but never applies the fold, expect.out:150-167)
-                col = F.aggregate(
-                    F.col(p.attr).cast("array<double>"), F.lit(0.0),
-                    lambda acc, x: acc + x * x)
+                col = F.expr(sq_norm_sql(_vector_sql(p.attr)))
                 return _CMP[p.op](col, F.lit(float(value)))
             lit = _lit_for(self.meta, p.attr, value)
             col = F.col(p.attr)
@@ -127,7 +134,6 @@ class PredicateCompiler:
             geom = spec["geometry"]
             if isinstance(geom, Lambda):
                 geom = constant_fold(geom)
-            dist = squared_l2(F.col(p.attr), [float(x) for x in geom])
             if spec.get("limit"):
                 # kNN: not a pure filter — executor adds order-by + limit
                 self.knn = {"attr": p.attr, "geometry": geom,
@@ -135,8 +141,6 @@ class PredicateCompiler:
                             "radius": spec.get("radius"),
                             "radius_op": spec.get("radius_op", "lte"),
                             "exact": bool(spec.get("exact"))}
-                if spec.get("radius") is None:
-                    return F.lit(True)
             radius = spec.get("radius")
             if radius is None:
                 return F.lit(True)
@@ -151,7 +155,7 @@ class PredicateCompiler:
                 # matching rows.  A radius on the kNN's OWN spec is
                 # exempt: apply_knn re-applies it on the candidate side.
                 self.n_plain += 1
-            return op(dist, F.lit(float(radius)))
+            return op(near_dist2(p.attr, geom), F.lit(float(radius)))
         if p.op == "khop":
             raise GQLiteError("k-hop spec must be handled by the executor")
         raise GQLiteError(f"unsupported predicate op {p.op!r}")
@@ -220,8 +224,8 @@ def apply_knn(df: DataFrame, knn: dict) -> DataFrame:
     HNSW.cpp, is a single-node structure; the distributed analogue for larger
     k / recall control is LSH — see operators/similarity.py.)
     """
-    dist = squared_l2(F.col(knn["attr"]), [float(x) for x in knn["geometry"]])
-    out = df.filter(F.col(knn["attr"]).isNotNull()).withColumn("_dist2", dist)
+    out = df.filter(F.col(knn["attr"]).isNotNull()).withColumn(
+        "_dist2", near_dist2(knn["attr"], knn["geometry"]))
     if knn.get("radius") is not None:
         cmp = operator.le if knn.get("radius_op") == "lte" else operator.lt
         out = out.filter(cmp(F.col("_dist2"), F.lit(float(knn["radius"]))))

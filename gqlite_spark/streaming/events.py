@@ -154,8 +154,9 @@ def semantic_hits_stream(docs: DataFrame, index_path: str,
     Approximate like its batch twin: a hit is missed iff the matching
     vector's list is outside the doc's probed lists — raise ``nprobe``
     to trade compute for recall."""
-    from ..operators.similarity import (_dot, _ivf_probe_col, _norm,
-                                        default_nprobe, load_index)
+    from ..operators.similarity import (_ivf_probe_col, default_nprobe,
+                                        dot_sql, load_index, sq_l2_sql,
+                                        sq_norm_sql)
     index, params = load_index(docs.sparkSession, index_path, "ivf")
     if not params.get("include_vectors"):
         raise ValueError("semantic_hits_stream requires a MATERIALIZED "
@@ -172,14 +173,10 @@ def semantic_hits_stream(docs: DataFrame, index_path: str,
                         "list_id")
     joined = probed.join(cand, "list_id")
     if metric == "ip":
-        score = (_dot(F.col("v"), F.col("qv"))
-                 / (_norm(F.col("v")) * _norm(F.col("qv"))))
-        hit = score >= threshold
+        hit = F.expr(f"{dot_sql('v', 'qv')} / (sqrt({sq_norm_sql('v')}) "
+                     f"* sqrt({sq_norm_sql('qv')}))") >= threshold
     else:
-        d2 = F.aggregate(F.zip_with(F.col("v"), F.col("qv"),
-                                    lambda a, b: (a - b) * (a - b)),
-                         F.lit(0.0), lambda acc, x: acc + x)
-        hit = d2 <= threshold
+        hit = F.expr(sq_l2_sql("v", "qv")) <= threshold
     return (joined.filter(hit)
             .select(id_col, ts_col)
             .withWatermark(ts_col, watermark)

@@ -473,6 +473,51 @@ def test_null_vectors_are_skipped_by_the_quantizers(db, spark, tmp_path,
             df.unpersist()
 
 
+def test_null_vectors_are_left_out_of_cosine_topk(db, spark):
+    """cosine_topk ranks only rows with a vector, so a k above their
+    count returns no null-vector row, and {similar} brute and ivf give
+    the same answer on a group with a null vector."""
+    from gqlite_spark.operators.similarity import cosine_topk
+    df = spark.createDataFrame([(1, None), (2, [1.0, 0.0]), (3, [0.0, 1.0])],
+                               "id long, embedding array<double>")
+    assert [tuple(r) for r in cosine_topk(df, [1.0, 0.0], k=5,
+                                          id_col="id").collect()] \
+        == [(2, 1.0), (3, 0.0)]
+    db.exec("{create: 'nullsim', group: ['v']};")
+    db.catalog.graphs["nullsim"].group("v").register_df(df)
+    answers = {}
+    for method in ("brute", "ivf"):
+        r = db.exec("{similar: 'v', in: 'nullsim', to: [1.0, 0.0], top: 5,"
+                    f" method: '{method}'}};")[0]
+        assert r.error is None, r.error
+        answers[method] = [tuple(x) for x in r.rows]
+    assert answers["brute"] == answers["ivf"] == [(2, 1.0), (3, 0.0)]
+
+
+@pytest.mark.parametrize("metric", ["ip", "l2"])
+def test_null_query_vector_pairs_with_nothing(spark, metric):
+    """A null query vector returns no rows from knn_join and from
+    ivf_knn_join on both sides of IVF_ASSIGN_EXPR_MAX_NLIST (the
+    expression probe lists and the numpy ones)."""
+    from gqlite_spark.operators import similarity as S
+    # rows in the lowest-cid lists: the lists a null query used to probe
+    corpus = spark.createDataFrame(
+        [(i, [i - 2.0, 1.0]) for i in range(1, 5)],
+        "vec_id long, embedding array<double>")
+    queries = spark.createDataFrame([(10, None), (11, [1.0, 1.0])],
+                                    "q_id long, q_vec array<double>")
+    joins = {"ivf_%d" % n: S.ivf_knn_join(
+        corpus, queries, k=2, nprobe=2, metric=metric,
+        centroids=[(c, [c / 10.0, 1.0]) for c in range(n)])
+        for n in (3, S.IVF_ASSIGN_EXPR_MAX_NLIST + 1)}
+    if metric == "ip":
+        joins["brute"] = S.knn_join(corpus, queries, k=2)
+    for name, out in joins.items():
+        got = out.collect()
+        assert {r["q_id"] for r in got} == {11}, (name, got)
+        assert all(r[3] is not None for r in got), (name, got)
+
+
 def test_gql_knn_routed_rejects_malformed_int_conf(pdb, tmp_path, spark):
     """A routed $near reads its integer confs strictly: a value that is
     not an integer is an engine error naming the key and the value, not

@@ -3,7 +3,9 @@
 Count-pinning guards (tiny data, no wall clocks): reading the overlay
 runs no Spark job, and a local write keeps the loaded kNN index handle
 and the bulk row count, so planning the next routed ``$near`` runs no
-job either; and the Spark jobs of each persisted-index build.  Plus a
+job either; the Spark jobs of each persisted-index build; and the
+py4j commands of a ``$near`` plan, which must not grow with the
+vector's dimension.  Plus a
 type round-trip: the Arrow-built overlay reads back
 the same rows as the list-of-tuples builder it replaced."""
 
@@ -33,6 +35,27 @@ def _count_jobs(spark):
         # job-start events reach the status store asynchronously
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         out["jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@contextlib.contextmanager
+def _count_round_trips(spark):
+    """Count the driver→JVM py4j commands the body sends.  Object
+    releases (``m\\nd\\n…``) are left out: Python's garbage collector
+    sends them whenever it frees a proxy, so they come in random
+    bursts."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    out = {"n": 0}
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            out["n"] += 1
+        return send(command, *args, **kwargs)
+    client.send_command = counting
+    try:
+        yield out
+    finally:
+        client.send_command = send
 
 
 def _group(spark, name, is_edge=False):
@@ -299,3 +322,23 @@ def test_index_build_job_counts(spark, tmp_path):
     finally:
         df.unpersist()
     assert got == {name: n for name, (_, n) in builds.items()}, got
+
+
+def test_near_plan_round_trips_do_not_grow_with_dimension(spark):
+    """Planning a $near+limit over a few local rows runs no Spark job
+    and sends as many py4j commands at dimension 128 as at dimension 8:
+    the distance is one SQL fold over one vector literal (one F.lit per
+    element sent ~960 more commands at 128 than at 8)."""
+    counts = {}
+    for dim in (8, 128):
+        db, grp = _group(spark, f"ov_rt{dim}")
+        for i in range(4):
+            grp.upsert_vertex(i, {"vec": [float(i + j) for j in range(dim)]})
+        gql = ("{query: 'g', in: 'ov_rt%d', where: {vec: {limit: 3,"
+               " $near: %s}}};" % (dim, [0.5] * dim))
+        db.query_df(gql)
+        with _count_jobs(spark) as c, _count_round_trips(spark) as rt:
+            db.query_df(gql)
+        assert c["jobs"] == 0
+        counts[dim] = rt["n"]
+    assert abs(counts[128] - counts[8]) <= 10, counts

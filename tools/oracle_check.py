@@ -147,18 +147,24 @@ def main():
         # record which commit actually produced this file (r15: the r14
         # VERDICT flagged that the committed sweeps predated the
         # optimization commits and the identical-output rerun was
-        # indistinguishable in git history)
+        # indistinguishable in git history).  A sweep of an uncommitted
+        # change to the engine is stamped with its parent commit plus
+        # "dirty": true.
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+        def git(*args):
+            return subprocess.run(["git", *args], capture_output=True,
+                                  text=True, cwd=root).stdout.strip()
         try:
-            tree = subprocess.run(
-                ["git", "rev-parse", "HEAD"], capture_output=True,
-                text=True, cwd=os.path.dirname(os.path.dirname(
-                    os.path.abspath(__file__)))).stdout.strip()
+            tree = git("rev-parse", "HEAD")
+            dirty = bool(git("status", "--porcelain", "--", "gqlite_spark",
+                             "__spark_entry__.py"))
         except Exception:
-            tree = None
+            tree, dirty = None, False
         with open(json_out, "w") as f:
             json.dump({"sf_dir": sf_dir, "n_queries": len(report),
-                       "n_failures": failures,
-                       "tree": tree,
+                       "n_failures": failures, "tree": tree,
+                       **({"dirty": True} if dirty else {}),
                        "generated_utc": _time.strftime(
                            "%Y-%m-%dT%H:%M:%SZ", _time.gmtime()),
                        "results": report}, f,
