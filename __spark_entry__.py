@@ -19,6 +19,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gqlite_spark import conf
+
 SF_SMALL = "/root/testdata/sf0.001"
 
 
@@ -201,25 +203,13 @@ def q_knn_routed(spark, sf_dir):
     grp = db.catalog.graphs["tpch"].group("embeddings")
     grp.build_ivf_index("embedding", tempfile.mkdtemp(prefix="gqlite_knnidx_"),
                         nlist=64)
-    confs = {"spark.gqlite.knn.ann_threshold": "1",
-             "spark.gqlite.knn.nprobe": "8"}
-    old = {}
-    for key, val in confs.items():
-        try:
-            old[key] = spark.conf.get(key)
-        except Exception:
-            old[key] = None
-        spark.conf.set(key, val)
     try:
-        df = db.query_df(
-            "{query: 'embeddings', in: 'tpch',"
-            " where: {embedding: {limit: 10, $near: [" + vec_lit + "]}}};")
+        with conf.scoped(spark, {"spark.gqlite.knn.ann_threshold": "1",
+                                 "spark.gqlite.knn.nprobe": "8"}):
+            df = db.query_df(
+                "{query: 'embeddings', in: 'tpch', where: {embedding:"
+                " {limit: 10, $near: [" + vec_lit + "]}}};")
     finally:
-        for key, val in old.items():
-            if val is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, val)
         # detach so later entries on the shared cached engine see the
         # group in its default (exact-path) state
         grp._vindex.pop("embedding", None)
@@ -249,28 +239,17 @@ def q_knn_filtered(spark, sf_dir):
     grp.build_ivf_index("embedding",
                         tempfile.mkdtemp(prefix="gqlite_knnfidx_"),
                         nlist=64)
-    confs = {"spark.gqlite.knn.ann_threshold": "1",
-             "spark.gqlite.knn.nprobe": "8",
-             "spark.gqlite.knn.oversample": "4",
-             "spark.gqlite.knn.oversample_retries": "2"}
-    old = {}
-    for key, val in confs.items():
-        try:
-            old[key] = spark.conf.get(key)
-        except Exception:
-            old[key] = None
-        spark.conf.set(key, val)
     try:
-        df = db.query_df(
-            "{query: 'embeddings', in: 'tpch', where: {$and: ["
-            " {label: [0, 2, 4, 6, 8]},"
-            " {embedding: {limit: 10, $near: [" + vec_lit + "]}}]}};")
+        with conf.scoped(spark, {
+                "spark.gqlite.knn.ann_threshold": "1",
+                "spark.gqlite.knn.nprobe": "8",
+                "spark.gqlite.knn.oversample": "4",
+                "spark.gqlite.knn.oversample_retries": "2"}):
+            df = db.query_df(
+                "{query: 'embeddings', in: 'tpch', where: {$and: ["
+                " {label: [0, 2, 4, 6, 8]},"
+                " {embedding: {limit: 10, $near: [" + vec_lit + "]}}]}};")
     finally:
-        for key, val in old.items():
-            if val is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, val)
         grp._vindex.pop("embedding", None)
     return df.select(F.col("id").alias("vec_id"), "label")
 
@@ -308,35 +287,24 @@ def q_knn_compacted(spark, sf_dir):
     saved_bulk = grp.bulk_df
     idx = tempfile.mkdtemp(prefix="gqlite_knncpidx_")
     grp.build_ivf_index("embedding", idx, nlist=64)
-    confs = {"spark.gqlite.knn.ann_threshold": "1",
-             "spark.gqlite.knn.nprobe": "8"}
-    old = {}
-    for key, val in confs.items():
-        try:
-            old[key] = spark.conf.get(key)
-        except Exception:
-            old[key] = None
-        spark.conf.set(key, val)
     try:
-        grp.upsert_vertex(5, {"embedding": [float(x) + 10.0 for x in v5],
-                              "label": 55})
-        grp.upsert_vertex(10_000_000,
-                          {"embedding": [float(x) + 0.001 for x in v11],
-                           "label": 77})
-        rep = db.exec("{vindex: 'embeddings', in: 'tpch', path: '" + idx
-                      + "', on: 'embedding', compact: true};")[0]
-        if rep.error or grp.rows:
-            raise RuntimeError(f"compaction failed: {rep.error}")
-        df = db.query_df(
-            "{query: 'embeddings', in: 'tpch',"
-            " where: {embedding: {limit: 10, $near: [" + vec_lit + "]}}};")
-        return df.select(F.col("id").alias("vec_id"), "label")
+        with conf.scoped(spark, {"spark.gqlite.knn.ann_threshold": "1",
+                                 "spark.gqlite.knn.nprobe": "8"}):
+            grp.upsert_vertex(
+                5, {"embedding": [float(x) + 10.0 for x in v5],
+                    "label": 55})
+            grp.upsert_vertex(10_000_000,
+                              {"embedding": [float(x) + 0.001 for x in v11],
+                               "label": 77})
+            rep = db.exec("{vindex: 'embeddings', in: 'tpch', path: '"
+                          + idx + "', on: 'embedding', compact: true};")[0]
+            if rep.error or grp.rows:
+                raise RuntimeError(f"compaction failed: {rep.error}")
+            df = db.query_df(
+                "{query: 'embeddings', in: 'tpch', where: {embedding:"
+                " {limit: 10, $near: [" + vec_lit + "]}}};")
+            return df.select(F.col("id").alias("vec_id"), "label")
     finally:
-        for key, val in old.items():
-            if val is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, val)
         # restore the shared cached engine's group to its pristine
         # bulk-only state (compaction replaced bulk_df with the merged
         # plan; the returned DataFrame holds its own immutable plan)
@@ -1164,26 +1132,14 @@ def q_knn_pq(spark, sf_dir):
     save_ivfpq_index(emb, idx, nlist=16, m=4, ksub=16, refine_iters=0,
                      metric="l2")
     grp.attach_index("embedding", idx, "ivfpq")
-    confs = {"spark.gqlite.knn.ann_threshold": "1",
-             "spark.gqlite.knn.nprobe": "4",
-             "spark.gqlite.knn.pq_candidates": "100"}
-    old = {}
-    for key, val in confs.items():
-        try:
-            old[key] = spark.conf.get(key)
-        except Exception:
-            old[key] = None
-        spark.conf.set(key, val)
     try:
-        df = db.query_df(
-            "{query: 'embeddings', in: 'tpch',"
-            " where: {embedding: {limit: 10, $near: [" + vec_lit + "]}}};")
+        with conf.scoped(spark, {"spark.gqlite.knn.ann_threshold": "1",
+                                 "spark.gqlite.knn.nprobe": "4",
+                                 "spark.gqlite.knn.pq_candidates": "100"}):
+            df = db.query_df(
+                "{query: 'embeddings', in: 'tpch', where: {embedding:"
+                " {limit: 10, $near: [" + vec_lit + "]}}};")
     finally:
-        for key, val in old.items():
-            if val is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, val)
         # shared cached engine: leave the group in its default state
         grp._vindex.pop("embedding", None)
     return df.select(F.col("id").alias("vec_id"), "label")
@@ -1708,9 +1664,14 @@ def q_layout_fold_scan(spark, sf_dir):
     r = db.exec("{layout: 'orders', in: 'r11fold', path: '" + p +
                 "', compact: true};")[0]
     assert r.error is None, r.error
-    return db.query_df(
+    # computed while the attach's bucketed-scan pin holds, then detached:
+    # a lazy frame would be planned after this engine is dropped, and
+    # the pin released whenever the GC ran
+    out = db.query_df(
         "{query: 'orders', in: 'r11fold', where:"
-        " {id: [1, 3, 90000001, 90000002, 90000003]}};")
+        " {id: [1, 3, 90000001, 90000002, 90000003]}};").localCheckpoint()
+    db.catalog.graphs["r11fold"].group("orders")._detach_layout()
+    return out
 
 
 def q_bucketed_ingest_scan(spark, sf_dir):

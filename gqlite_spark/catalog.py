@@ -920,20 +920,11 @@ class Group:
         written = {int(r["list_id"]) for r in
                    out.select("list_id").distinct().collect()}
         if written:
-            conf_key = "spark.sql.sources.partitionOverwriteMode"
-            try:
-                old_mode = self.spark.conf.get(conf_key)
-            except Exception:
-                old_mode = None
-            self.spark.conf.set(conf_key, "dynamic")
-            try:
-                (out.write.mode("overwrite").partitionBy("list_id")
-                 .parquet(data_path))
-            finally:
-                if old_mode is None:
-                    self.spark.conf.unset(conf_key)
-                else:
-                    self.spark.conf.set(conf_key, old_mode)
+            # a per-write option, not the session conf: concurrent
+            # compactions cannot restore each other's mode
+            (out.write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy("list_id").parquet(data_path))
         for lid in affected:
             if int(lid) not in written:
                 fsio.delete(self.spark,

@@ -18,7 +18,7 @@ from typing import Any, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import beautify
+from . import beautify, conf
 from .catalog import (K_BINARY, K_DATETIME, K_VECTOR, Catalog, Graph, Group)
 from .errors import (GQLiteError, GQLParseError, GraphNotExistError,
                      GroupNotExistError)
@@ -1288,25 +1288,16 @@ class GQLite:
         that does not change what is READ is slower than exact, so
         without an index the router stays exact and logs the hint.
 
-        Conf: ``spark.gqlite.knn.ann_threshold`` (-1 forces exact),
-        ``spark.gqlite.knn.nprobe`` (default max(8, nlist//64) —
-        ``operators.similarity.default_nprobe`` — so the probed
-        fraction holds as auto_nlist grows with √n),
-        ``spark.gqlite.knn.overlay_isin_max``.  Per-query opt-out:
+        Conf: the ``knn.*`` keys of :mod:`gqlite_spark.conf` (the one
+        list of keys and defaults); ``knn.nprobe`` defaults to
+        ``operators.similarity.default_nprobe`` so the probed fraction
+        holds as auto_nlist grows with √n.  Per-query opt-out:
         ``exact: true`` beside ``$near``.  The route decision is
         logged at debug level."""
         from .operators import similarity as S
         spark = df.sparkSession
 
-        def _iconf(key: str, default: int) -> int:
-            raw = spark.conf.get(key, str(default))
-            try:
-                return int(raw)
-            except ValueError:
-                raise GQLiteError(
-                    f"{key} must be an integer, got {raw!r}") from None
-
-        threshold = _iconf("spark.gqlite.knn.ann_threshold", 100000)
+        threshold = conf.get(spark, "knn.ann_threshold")
         if knn.get("exact") or threshold < 0 \
                 or grp.row_count() <= threshold:
             return apply_knn(df, knn)
@@ -1327,8 +1318,8 @@ class GQLite:
         # probed FRACTION doesn't shrink as auto_nlist grows with √n
         # (fixed nprobe=8 reads 0.25% of a 10 M-corpus index — recall
         # decays silently at scale; similarity.default_nprobe, r8 sweep)
-        nprobe = max(1, _iconf(
-            "spark.gqlite.knn.nprobe",
+        nprobe = max(1, conf.get(
+            spark, "knn.nprobe",
             S.default_nprobe(int(params.get("nlist") or 0))))
         probe = S.probe_lists(knn["geometry"], params["centroids"],
                               nprobe, "l2")
@@ -1345,7 +1336,7 @@ class GQLite:
         # would grow the expression tree unboundedly, so switch to a
         # broadcast anti-join on a DataFrame of local keys and tell the
         # user a compaction would fold the overlay back into the index
-        overlay_cap = _iconf("spark.gqlite.knn.overlay_isin_max", 1000)
+        overlay_cap = conf.get(spark, "knn.overlay_isin_max")
         if len(local_keys) > overlay_cap:
             log.warning(
                 "group %r carries %d local-overlay rows over an attached "
@@ -1384,8 +1375,8 @@ class GQLite:
                 df.filter(F.col(attr).isNotNull()).join(cand_ids, "id"),
                 knn)
         k = int(knn["limit"])
-        c = max(1, _iconf("spark.gqlite.knn.oversample", 4))
-        retries = max(0, _iconf("spark.gqlite.knn.oversample_retries", 2))
+        c = max(1, conf.get(spark, "knn.oversample"))
+        retries = max(0, conf.get(spark, "knn.oversample_retries"))
         extra_ids = None
         if pq:
             q = [float(x) for x in knn["geometry"]]
@@ -1395,7 +1386,7 @@ class GQLite:
             def top_ids(width):
                 return (adc.orderBy(F.col("_adc").asc(), F.col("id").asc())
                         .limit(width).select("id"))
-            width = _iconf("spark.gqlite.knn.pq_candidates", 0)
+            width = conf.get(spark, "knn.pq_candidates")
             if width <= 0:
                 width = max(1000, grp.row_count() // 1000, c * k)
             if local_keys:

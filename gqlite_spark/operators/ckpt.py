@@ -13,7 +13,9 @@ Two strategies, selected per-session:
   long multi-hour jobs on lossy clusters, at the cost of a filesystem
   round-trip per materialization.
 
-Enable the reliable path per-session (VERDICT r4 #8)::
+Enable the reliable path per-session (VERDICT r4 #8) with the
+``checkpoint.reliable`` key of :mod:`gqlite_spark.conf` (the one list of
+keys and defaults)::
 
     spark.sparkContext.setCheckpointDir("hdfs:///tmp/ckpt")
     spark.conf.set("spark.gqlite.checkpoint.reliable", "true")
@@ -26,14 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-RELIABLE_KEY = "spark.gqlite.checkpoint.reliable"
-
-
-def reliable_enabled(spark) -> bool:
-    try:
-        return spark.conf.get(RELIABLE_KEY, "false").lower() == "true"
-    except Exception:
-        return False
+from .. import conf
 
 
 def materialize(df: DataFrame, eager: bool = True,
@@ -47,11 +42,12 @@ def materialize(df: DataFrame, eager: bool = True,
     spark = df.sparkSession
     if coalesce:
         df = df.coalesce(spark.sparkContext.defaultParallelism)
-    if reliable_enabled(spark):
+    if conf.get(spark, "checkpoint.reliable"):
         if spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
             raise RuntimeError(
-                f"{RELIABLE_KEY}=true but no checkpoint dir is set; call "
-                "spark.sparkContext.setCheckpointDir(...) first")
+                f"{conf.key('checkpoint.reliable')}=true but no checkpoint "
+                "dir is set; call spark.sparkContext.setCheckpointDir(...) "
+                "first")
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
 
@@ -73,9 +69,6 @@ def materialize_probed(df: DataFrame, *aggs, coalesce: bool = True):
     checkpoint files are written — strictly worse than the extra probe.
 
     Returns ``(materialized_df, probe_row)``."""
-    spark = df.sparkSession
-    if reliable_enabled(spark):
-        out = materialize(df, eager=True, coalesce=coalesce)
-    else:
-        out = materialize(df, eager=False, coalesce=coalesce)
+    eager = conf.get(df.sparkSession, "checkpoint.reliable")
+    out = materialize(df, eager=eager, coalesce=coalesce)
     return out, out.agg(*aggs).collect()[0]

@@ -596,6 +596,7 @@ def near_dup_clusters(df: DataFrame, id_col: str = "doc_id",
     purge).  Scale shape: the pair graph is sparse (near-dup pairs, not
     the corpus), so the CC iterations run on a graph orders of magnitude
     smaller than the input — the LSH stage stays the cost driver."""
+    from .. import conf
     from .ckpt import materialize_probed
     from .graph_algos import connected_components
     pairs = minhash_lsh_pairs(df, id_col=id_col, text_col=text_col,
@@ -606,14 +607,14 @@ def near_dup_clusters(df: DataFrame, id_col: str = "doc_id",
     # branch) when it populates its edge cache — measured 2× the LSH wall
     # per invocation at sf0.1.  The pair graph is sparse by construction
     # (near-dup pairs, not the corpus), so the checkpoint is tiny at any
-    # corpus scale.  The edge count rides the materialization job for
-    # free (r15) and feeds the CC scope's size-aware AQE decision — the
-    # checkpointed list otherwise reports unknown (huge) plan stats.
-    edges, probe = materialize_probed(
-        pairs.select(F.col("doc_a").alias("src"),
-                     F.col("doc_b").alias("dst")),
-        F.count(F.lit(1)), coalesce=True)
-    comp = connected_components(edges, edge_count_hint=int(probe[0]))
+    # corpus scale.  The edge list's measured bytes ride the
+    # materialization job for free and feed the CC scope's size-aware
+    # AQE decision — the checkpointed list otherwise reports unknown
+    # (huge) plan stats.
+    edges = pairs.select(F.col("doc_a").alias("src"),
+                         F.col("doc_b").alias("dst"))
+    edges, (nbytes,) = materialize_probed(edges, conf.row_bytes(edges))
+    comp = connected_components(edges, edge_bytes_hint=int(nbytes or 0))
     return comp.select(F.col("id").alias(id_col),
                        F.col("component").alias("cluster_rep"),
                        (F.col("id") == F.col("component")).alias("keep"))

@@ -36,27 +36,14 @@ from typing import Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import conf
+
 _CHECKPOINT_EVERY = 5
 
 
-def _parse_bytes_conf(val, default: int) -> int:
-    """Spark byte-conf strings: bare numbers are bytes; k/m/g/t suffixes
-    (optionally with a trailing 'b') scale accordingly."""
-    try:
-        s = str(val).strip().lower()
-        if s.endswith("b"):
-            s = s[:-1]
-        mult = 1
-        if s and s[-1] in "kmgt":
-            mult = 1024 ** (1 + "kmgt".index(s[-1]))
-            s = s[:-1]
-        return int(float(s)) * mult
-    except (TypeError, ValueError):
-        return default
-
-
-class _iterative_shuffle_scope:
-    """Scoped shuffle-conf override for iterative loops.
+def _iterative_shuffle_scope(df: DataFrame, state_bytes: "int | None" = None):
+    """Scoped shuffle-conf override for iterative loops (a
+    :func:`conf.scoped` block).
 
     Superstep state is vertex-count-sized, not scan-sized; on a stock
     session (200 shuffle partitions) every superstep pays 200-task
@@ -67,66 +54,36 @@ class _iterative_shuffle_scope:
     over small frontier/label state collapse to a handful of tasks instead
     of full-width near-empty ones (r14 A/B: keep_best −11% warm; applied
     scoped because the same setting serializes the one big exchange of
-    window-aggregation queries when set session-wide).  Previous values
-    are restored on exit (runtime conf only affects queries compiled
-    inside the scope)."""
+    window-aggregation queries when set session-wide).
 
-    _CONFS = {
-        "spark.sql.shuffle.partitions": None,  # filled per-session below
+    AQE is also off for MEASURED single-advisory-partition state (r15):
+    AQE's value is runtime coalescing and skew-splitting of exchanges,
+    but when the whole iterative state fits inside one advisory
+    partition there is nothing to coalesce or split — every superstep
+    still pays AQE's per-exchange query-stage barrier + re-optimization
+    (measured: the keep_best CC leg on its 256-edge checkpointed pair
+    graph drops 2.34 → 1.34 s warm with AQE off in-scope, labels
+    parity-identical).  The gate fires ONLY on caller-measured
+    ``state_bytes`` (e.g. near_dup_clusters' :func:`conf.row_bytes`
+    probe on its pair-list materialization) no larger than the session's
+    advisory partition size (AQE off won at every measured size up to
+    97 % of it: PLANS.md 'CC AQE gate keyed on measured bytes').  A
+    Catalyst-plan-stats auto-gate was probed
+    and REJECTED — join-derived estimates mislabel real workloads in
+    both directions, and an A/B over the eight scoped graph entries
+    showed AQE ON faster on every plan-derived input (static plans lose
+    the runtime broadcast conversion in the frontier joins).  No hint →
+    AQE stays ON (hub skew is the classic graph case)."""
+    spark = df.sparkSession
+    targets = {
+        "spark.sql.shuffle.partitions":
+            str(spark.sparkContext.defaultParallelism),
         "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
     }
-
-    def __init__(self, df: DataFrame, approx_rows: "int | None" = None):
-        self.spark = df.sparkSession
-        self.targets = dict(self._CONFS)
-        self.targets["spark.sql.shuffle.partitions"] = str(
-            self.spark.sparkContext.defaultParallelism)
-        # AQE off for MEASURED single-advisory-partition state (r15):
-        # AQE's value is runtime coalescing and skew-splitting of
-        # exchanges, but when the whole iterative state fits inside one
-        # advisory partition there is nothing to coalesce or split —
-        # every superstep still pays AQE's per-exchange query-stage
-        # barrier + re-optimization (measured: the keep_best CC leg on
-        # its 256-edge checkpointed pair graph drops 2.34 → 1.34 s warm
-        # with AQE off in-scope, labels parity-identical; reproducible
-        # across sessions).  The gate fires ONLY on an explicit caller-
-        # probed row count (e.g. near_dup_clusters' free count from its
-        # pair-list materialization): a Catalyst-plan-stats auto-gate
-        # was probed and REJECTED — join-derived estimates mislabel real
-        # workloads in both directions, and an A/B over the eight scoped
-        # graph entries showed AQE ON faster on every plan-derived input
-        # (static plans lose the runtime broadcast conversion in the
-        # frontier joins).  Threshold = the session's advisory partition
-        # size (cluster conf) at a conservative 64 B/row — cluster-
-        # derived, not a local constant; no hint → AQE stays ON (hub
-        # skew is the classic graph case).
-        if approx_rows is not None:
-            advisory = _parse_bytes_conf(self.spark.conf.get(
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"),
-                64 * 1024 * 1024)
-            if approx_rows * 64 <= advisory:
-                self.targets["spark.sql.adaptive.enabled"] = "false"
-
-    def __enter__(self):
-        self.prev = {}
-        for key, val in self.targets.items():
-            try:
-                # effective value (falls back to the conf default when
-                # unset) — a None sentinel would silently skip restoration
-                self.prev[key] = self.spark.conf.get(key)
-                self.spark.conf.set(key, val)
-            except Exception:
-                self.prev[key] = None
-        return self
-
-    def __exit__(self, *exc):
-        for key, val in self.prev.items():
-            if val is not None:
-                try:
-                    self.spark.conf.set(key, val)
-                except Exception:
-                    pass
-        return False
+    if state_bytes is not None and \
+            state_bytes <= conf.byte_conf(spark, conf.ADVISORY_PARTITION):
+        targets["spark.sql.adaptive.enabled"] = "false"
+    return conf.scoped(spark, targets)
 
 
 def _ckpt(df: DataFrame) -> DataFrame:
@@ -171,7 +128,7 @@ def _supersteps(state: DataFrame, step, until: str, bound: int, *,
     An ``"empty"`` or ``"fixpoint"`` loop that uses up ``bound``
     supersteps without converging emits ``warn`` as a RuntimeWarning;
     ``warn=None`` only where the bound IS the answer (k_hop's ``hops``)."""
-    from .ckpt import materialize, materialize_probed, reliable_enabled
+    from .ckpt import materialize, materialize_probed
     if until == "count":
         for i in range(bound):
             state = step(state, i)
@@ -189,7 +146,8 @@ def _supersteps(state: DataFrame, step, until: str, bound: int, *,
     else:
         digest = (F.sum(F.xxhash64(*state.columns).cast("decimal(38,0)"))
                   if probe is None else probe)
-        cross = seed or batch == 1 or reliable_enabled(state.sparkSession)
+        cross = (seed or batch == 1
+                 or conf.get(state.sparkSession, "checkpoint.reliable"))
         prev, i = None, 0
         if seed:
             state, p = materialize_probed(state, digest)
@@ -447,19 +405,20 @@ def pagerank(edges: DataFrame, iterations: int = 10,
 
 
 def connected_components(edges: DataFrame, max_iter: int = 32,
-                         edge_count_hint: "int | None" = None) -> DataFrame:
+                         edge_bytes_hint: "int | None" = None) -> DataFrame:
     """Undirected connected components via min-label propagation
     (distributed HashMin; the large-star/small-star variant is the scale
     path for power-law graphs).  Returns (id, component) with component =
     min vertex id in the component.  Needs about diameter supersteps;
     warns (``RuntimeWarning``) if ``max_iter`` runs out first.
 
-    ``edge_count_hint``: a caller-measured edge count (e.g. the free row
-    count from a ``materialize_probed`` checkpoint of the edge list) lets
-    the shuffle scope size its AQE decision from real data instead of
-    Catalyst's estimate — checkpointed inputs otherwise report unknown
-    (huge) stats."""
-    with _iterative_shuffle_scope(edges, approx_rows=edge_count_hint):
+    ``edge_bytes_hint``: the caller-measured size of the edge list in
+    bytes (e.g. a :func:`conf.row_bytes` probe riding the
+    ``materialize_probed`` checkpoint of the edge list) lets the shuffle
+    scope size its AQE decision from real data instead of Catalyst's
+    estimate — checkpointed inputs otherwise report unknown (huge)
+    stats."""
+    with _iterative_shuffle_scope(edges, state_bytes=edge_bytes_hint):
         return _cc_impl(edges, max_iter)
 
 

@@ -552,20 +552,19 @@ def _guarded_broadcast_ids(ids: DataFrame) -> DataFrame:
     bypasses ``autoBroadcastJoinThreshold`` straight into a driver OOM or
     the 8 GB broadcast cap.
 
-    The id set is materialized with its row count probed in the SAME job
-    (``materialize_probed``), so the guard costs one state-sized
-    aggregate — the subtree is still evaluated exactly once — and the
-    hint is applied only when the estimated framed size (32 bytes/id,
-    conservative for long/string keys) fits the session's broadcast
-    threshold.  An oversized set falls back to the unhinted shuffle
-    anti-join, which is the correct plan at that size."""
+    The id set is materialized with its size probed in the SAME job
+    (``materialize_probed`` with a :func:`conf.row_bytes` sum), so the
+    guard costs one state-sized aggregate — the
+    subtree is still evaluated exactly once — and the hint is applied
+    only when the measured bytes fit the session's broadcast threshold
+    (a 200-byte string id weighs 216 B, a long id 16 B).  An oversized
+    set falls back to the unhinted shuffle anti-join, which is the
+    correct plan at that size."""
+    from .. import conf
     from .ckpt import materialize_probed
-    from .graph_algos import _parse_bytes_conf
-    # Spark returns a set value verbatim ('1m'), so parse the suffixes
-    thr = _parse_bytes_conf(ids.sparkSession.conf.get(
-        "spark.sql.autoBroadcastJoinThreshold", "10m"), 10 * 1024 * 1024)
-    out, probe = materialize_probed(ids, F.count(F.lit(1)))
-    if thr > 0 and int(probe[0]) * 32 <= thr:
+    out, (nbytes,) = materialize_probed(ids, conf.row_bytes(ids))
+    thr = conf.byte_conf(ids.sparkSession, conf.BROADCAST_THRESHOLD)
+    if thr > 0 and (nbytes or 0) <= thr:
         return F.broadcast(out)
     return out
 

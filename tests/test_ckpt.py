@@ -8,7 +8,10 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from gqlite_spark.operators.ckpt import RELIABLE_KEY, materialize
+from gqlite_spark import conf
+from gqlite_spark.operators.ckpt import materialize
+
+RELIABLE_KEY = conf.key("checkpoint.reliable")
 
 
 @pytest.fixture
@@ -171,22 +174,49 @@ def test_iterative_scope_aqe_gate_restores_conf(spark):
     from gqlite_spark.operators.graph_algos import _iterative_shuffle_scope
     tiny = spark.createDataFrame([(1, 2)], "src long, dst long")
     before = spark.conf.get("spark.sql.adaptive.enabled")
-    with _iterative_shuffle_scope(tiny, approx_rows=1):
+    with _iterative_shuffle_scope(tiny, state_bytes=24):
         assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
     assert spark.conf.get("spark.sql.adaptive.enabled") == before
     # a huge claimed state keeps AQE on
-    with _iterative_shuffle_scope(tiny, approx_rows=10**12):
+    with _iterative_shuffle_scope(tiny, state_bytes=10**15):
         assert spark.conf.get("spark.sql.adaptive.enabled") == before
     assert spark.conf.get("spark.sql.adaptive.enabled") == before
 
 
-def test_parse_bytes_conf_forms():
-    from gqlite_spark.operators.graph_algos import _parse_bytes_conf
-    assert _parse_bytes_conf("67108864", 0) == 64 * 1024 * 1024
-    assert _parse_bytes_conf("64m", 0) == 64 * 1024 * 1024
-    assert _parse_bytes_conf("64MB", 0) == 64 * 1024 * 1024
-    assert _parse_bytes_conf("1g", 0) == 1024 ** 3
-    assert _parse_bytes_conf("bogus", 7) == 7
+def test_conf_forms(spark, reliable):
+    """Byte confs read as Spark parses them (every suffix form Spark
+    accepts at ``conf.set``, and -1); the engine's booleans parse like
+    Spark's own — trimmed, case-insensitive — and a malformed value is
+    an error naming the key, not a silent default.  A scoped override
+    restores a set key and unsets a key that was unset."""
+    import glob
+    import os
+
+    from gqlite_spark.errors import GQLiteError
+    key = conf.BROADCAST_THRESHOLD
+    old = spark.conf.get(key)
+    nprobe = conf.key("knn.nprobe")
+    with conf.scoped(spark, {key: "1k", nprobe: " 3"}):
+        assert conf.get(spark, "knn.nprobe") == 3
+        for raw, want in [("67108864", 64 << 20), ("64m", 64 << 20),
+                          ("64MB", 64 << 20), ("1g", 1 << 30),
+                          ("1p", 1 << 50), ("-1", -1)]:
+            spark.conf.set(key, raw)
+            assert conf.byte_conf(spark, key) == want, raw
+    assert spark.conf.get(key) == old
+    assert spark.conf.get(nprobe, None) is None
+    spark.conf.set(RELIABLE_KEY, " True")
+    assert materialize(spark.range(3)).count() == 3
+    assert glob.glob(os.path.join(reliable, "**", "rdd-*", "part-*"),
+                     recursive=True)
+    spark.conf.set(RELIABLE_KEY, "yes")
+    with pytest.raises(GQLiteError, match=RELIABLE_KEY):
+        materialize(spark.range(3))
+
+
+def _broadcast_hinted(out) -> bool:
+    plan = out._jdf.queryExecution().analyzed().toString()
+    return "broadcast" in plan.lower()
 
 
 def test_guarded_broadcast_reads_suffixed_threshold(spark):
@@ -196,17 +226,33 @@ def test_guarded_broadcast_reads_suffixed_threshold(spark):
     from gqlite_spark.operators.sampling import _guarded_broadcast_ids
 
     def hinted(n):
-        out = _guarded_broadcast_ids(spark.range(n).toDF("id"))
-        plan = out._jdf.queryExecution().analyzed().toString()
-        return "broadcast" in plan.lower()
+        return _broadcast_hinted(
+            _guarded_broadcast_ids(spark.range(n).toDF("id")))
 
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1k")
+    old = spark.conf.get(conf.BROADCAST_THRESHOLD)
+    spark.conf.set(conf.BROADCAST_THRESHOLD, "1k")
     try:
-        assert not hinted(40)       # 40 ids x 32 B > 1 KB
-        assert hinted(20)           # 640 B fits
+        assert hinted(64)           # 64 long ids x 16 B = 1 KB fits
+        assert not hinted(65)       # 1,040 B > 1 KB
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        spark.conf.set(conf.BROADCAST_THRESHOLD, old)
+
+
+def test_guarded_broadcast_measures_string_ids(spark):
+    """The guard weighs the ids it holds: 100 ids of 200 bytes are
+    ~21 KB, so a 4 KB threshold refuses the broadcast (a fixed guess of
+    32 B per id sized them at 3.2 KB and broadcast them)."""
+    from gqlite_spark.operators.sampling import _guarded_broadcast_ids
+    ids = spark.createDataFrame([(f"{i:03d}" + "x" * 197,)
+                                 for i in range(100)], "id string")
+    old = spark.conf.get(conf.BROADCAST_THRESHOLD)
+    spark.conf.set(conf.BROADCAST_THRESHOLD, "4k")
+    try:
+        assert not _broadcast_hinted(_guarded_broadcast_ids(ids))
+        spark.conf.set(conf.BROADCAST_THRESHOLD, "32k")
+        assert _broadcast_hinted(_guarded_broadcast_ids(ids))
+    finally:
+        spark.conf.set(conf.BROADCAST_THRESHOLD, old)
 
 
 def _spark_jobs(spark, fn) -> int:
@@ -253,10 +299,11 @@ def test_graph_job_counts_pinned(spark):
         "random_walk": (lambda: G.random_walk(
             g, spark.range(2), steps=6).collect(), 2),
     }
-    # near_dup_clusters' measured edge count: the hint turns AQE off
-    # inside the loop, so this count holds on an AQE session
+    # near_dup_clusters' measured edge bytes (24 B per long-id edge):
+    # the hint turns AQE off inside the loop, so this count holds on an
+    # AQE session
     hinted = _spark_jobs(spark, lambda: G.connected_components(
-        g, edge_count_hint=5).collect())
+        g, edge_bytes_hint=len(TINY) * 24).collect())
     # AQE off for the rest: every job is then one action — the driver's
     # checkpoints, probes and collects — not one per adaptive query stage
     prev = spark.conf.get("spark.sql.adaptive.enabled")

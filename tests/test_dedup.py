@@ -1,7 +1,7 @@
 """Realistic-sparsity dedup boundary tests (VERDICT r13 next #6).
 
-The Zipf + near-dup-mutant-tail corpus shape lived only in
-``tools/curation_probe.py`` (1M-doc probes, PLANS.md); this lifts a
+The Zipf + near-dup-mutant-tail corpus shape lived only in the 1M-doc
+probes (PLANS.md 'Keep-best curation throughput'); this lifts a
 small 10k-doc version into CI so the 0.7-Jaccard boundary — mutants
 straddling the cut, the exact-verify step keeping/rejecting them, and
 the closure respecting the verified pairs — is exercised on every test
@@ -15,7 +15,8 @@ from pyspark.sql import functions as F
 
 def synth_docs_sparse(spark, n, vocab_size=50_000, doc_len=40,
                       dup_frac=0.2):
-    """10k-scale copy of tools/curation_probe.py::synth_docs_sparse:
+    """10k-scale copy of the 1M-doc probes' sparse corpus (PLANS.md
+    'Keep-best curation throughput'):
     heavy-tailed (Zipf via inverse CDF: rank = floor(V^u)) vocabulary,
     last ``dup_frac`` of docs copy a uniformly chosen base doc and
     mutate ~3 of its 40 words (per-position hash coin, rate 1/13) —

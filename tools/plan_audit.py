@@ -38,10 +38,10 @@ def main() -> None:
                "dedup_exact", "sim_knn_join", "dedup_url",
                "sample_shuffle", "event_funnel", "asof_attribution",
                "multimodal_av_meta",
-               # r11 lifecycle entries: the fold-scan plan should show
-               # SelectedBucketsCount pruning; the ingest scan a plain
+               # r11 lifecycle entry: the ingest scan should show a plain
                # bucketed aggregate with no Exchange below it
-               "layout_fold_scan", "bucketed_ingest_scan",
+               # (layout_fold_scan returns a checkpoint of its answer)
+               "bucketed_ingest_scan",
                # r12 promotions: keep-best is the LSH pair join +
                # closure + an argmax window over the pair-graph-sized
                # membership (no cartesian anywhere); quantiles reads
