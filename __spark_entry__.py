@@ -951,12 +951,12 @@ def q_knn_join_ivf(spark, sf_dir):
     probing its nprobe=4 nearest lists, equi-join on list_id, exact
     re-rank.  No broadcast of either side, no cross join: the 100 TB
     shape for large-queries × large-corpus semantic search, vs
-    sim_knn_join's broadcast-the-queries plan.  Pinned nlist=16/nprobe=4
-    (expression path, ≤ IVF_ASSIGN_EXPR_MAX_NLIST) so the DuckDB oracle
-    replays assignment, per-query probe lists, the joined candidate set
-    and the final rank bit-for-bit.  Reference parity: the reference
-    loops single-query HNSW searches (HNSW.cpp:167-215); this is the
-    set-oriented equivalent."""
+    sim_knn_join's broadcast-the-queries plan.  Pinned nlist=16/nprobe=4;
+    the nearest-centroid kernel ranks by the same in-order fold as the
+    DuckDB oracle, which replays assignment, per-query probe lists, the
+    joined candidate set and the final rank bit-for-bit.  Reference
+    parity: the reference loops single-query HNSW searches
+    (HNSW.cpp:167-215); this is the set-oriented equivalent."""
     from gqlite_spark.operators.similarity import ivf_knn_join
     emb = _load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 11 == 3).select(
@@ -2597,7 +2597,7 @@ def _knn_join_ivf_sql(nlist: int = 16, nprobe: int = 4, k: int = 3,
     probe lists by the same in-order fold, candidates = corpus rows
     whose list is probed by that query, exact-cosine top-k per query.
     Replays gqlite_spark.operators.similarity.ivf_knn_join exactly at
-    nlist ≤ IVF_ASSIGN_EXPR_MAX_NLIST."""
+    any nlist."""
     cos = ("list_inner_product({V}, {Q}) /"
            " (sqrt(list_inner_product({V}, {V})) *"
            " sqrt(list_inner_product({Q}, {Q})))")

@@ -37,60 +37,25 @@ def _point_lookup_raw(spark, sf_dir):
 
 DIAGNOSTIC = {"point_lookup_raw": _point_lookup_raw}
 
-# queries() entries benched for visibility but EXCLUDED from the totals
-# (knn_near_limit_routed: the materialized-index ANN path — its cold
-# time is dominated by the one-time index build, so it would distort
-# totals; tracked here so routed-vs-exact stays visible per round.
-# r8 adds the distributed IVF join and semantic decontamination the
-# same way, keeping the cross-round total set frozen)
+# queries() entries benched for visibility but EXCLUDED from the
+# totals, so the totals' query set stays frozen and comparable across
+# rounds.  Most are build-dominated by construction: each invocation
+# rebuilds its index, layout, rollup, streaming checkpoint or LSH
+# closure, so its cold time would swamp the totals.
 DIAGNOSTIC_QUERIES: list[str] = ["knn_near_limit_routed",
                                  "sim_knn_join_ivf",
                                  "decontaminate_semantic",
                                  "sim_ann_ivfpq_indexed",
                                  "sample_cluster",
-                                 # late-r8: the two layout entries are
-                                 # write-dominated by construction (they
-                                 # REBUILD their layout per invocation);
-                                 # the chained curation plan is a real
-                                 # read workload but joins as a
-                                 # diagnostic to keep the frozen total
-                                 # set comparable across rounds
                                  "bucketed_join_revenue",
                                  "zorder_scan_revenue",
                                  "curation_pipeline",
-                                 # r9: the IVFPQ-routed $near — build-
-                                 # dominated per invocation (the entry
-                                 # rebuilds its index so the lifecycle
-                                 # is what's oracled); tracked here so
-                                 # the codes-route cost stays visible
                                  "knn_near_limit_pq",
-                                 # r10 promotions: layout attach and
-                                 # the coarsen cascade rebuild their
-                                 # artifacts per invocation (write-
-                                 # dominated by construction); the CMS
-                                 # entry sketches the full events table
-                                 # per call.  Diagnostics keep the
-                                 # frozen totals comparable.
                                  "layout_attach_scan",
                                  "rollup_coarsen",
                                  "topcount_cms",
-                                 # r11 promotions: both REBUILD their
-                                 # layout + run the full ingest/fold
-                                 # lifecycle per invocation (write-
-                                 # dominated by construction) — tracked
-                                 # here, excluded from frozen totals
                                  "layout_fold_scan",
                                  "bucketed_ingest_scan",
-                                 # r12 promotions: the two streaming
-                                 # entries rebuild their layout AND run
-                                 # a checkpointed streaming query per
-                                 # invocation; the quantiles entry
-                                 # rebuilds its rollup per call; the
-                                 # keep-best entry re-runs the full
-                                 # LSH+closure build (same shape as the
-                                 # non-benched dedup_clusters).  All
-                                 # build-dominated -> diagnostics, so
-                                 # the frozen totals stay comparable.
                                  "stream_ingest_scan",
                                  "stream_clustered_scan",
                                  "rollup_quantiles_read",

@@ -219,12 +219,13 @@ def cluster_sample(df: DataFrame, centroids: "list[tuple]",
     sampling-quantizer centroids the ANN stack uses (``ivf_centroids``,
     optionally Lloyd-refined) serve as that partition for free.
 
-    Plan shape at scale: cluster assignment is the zero-shuffle scalar
-    expression / Arrow-matmul Column the IVF index build uses
-    (map-only); the per-cluster cut is ONE hash shuffle on cluster_id +
-    a bounded per-cluster top-``per_cluster`` (window over the md5
-    sample key — deterministic, engine-independent, and re-runs give
-    the same sample).  Output size is nlist × per_cluster regardless of
+    Plan shape at scale: cluster assignment is the zero-shuffle
+    nearest-centroid kernel Column the IVF index build uses (one Arrow
+    matmul per batch, map-only); the per-cluster cut is ONE hash
+    shuffle on cluster_id + a bounded per-cluster top-``per_cluster``
+    (window over the md5 sample key — deterministic,
+    engine-independent, and re-runs give the same sample).  Output
+    size is nlist × per_cluster regardless of
     corpus size, so downstream never sees the skew.  Rank ties break by
     id: bit-exact SQL-oracle replayable.  A row without a vector is in
     no cluster and never sampled."""

@@ -27,9 +27,10 @@ quantizer (``_sample``), one Lloyd loop refines them all in one
 aggregation per iteration (``_lloyd``), and one per-row columns step
 (``_index_columns``, also used by ``Group.compact_into_index``) computes
 the rows ``_write_index`` persists beside the params sidecar.  All of
-them select nearest centroids with one kernel (``_centroid_structs``
-below the expression caps, ``_nearest_udf`` above them), and one
-``topk_indexed`` searches every persisted kind.
+them select nearest centroids with one kernel, ``_nearest_udf``: an
+Arrow-batched matmul ranks every row and the in-order fold settles the
+near-ties, so every nlist and codebook size gets the fold's exact
+answer.  One ``topk_indexed`` searches every persisted kind.
 """
 
 from __future__ import annotations
@@ -185,99 +186,97 @@ def knn_join(df: DataFrame, queries: DataFrame, k: int = 5,
 # Nearest-centroid kernel: IVF assignment, per-row probe lists, PQ codes
 # ---------------------------------------------------------------------------
 
-# expression-based selection inlines nlist × dim literals and evaluates
-# nlist folds per row — bit-exact and oracle-replayable, but both the
-# analysis cost and the per-row work grow with nlist.  Above this, the
-# Arrow-batched matmul path wins by orders of magnitude (measured at
-# 1 M × 64d, nlist=1000: expression build >10 min vs ~seconds BLAS).
-IVF_ASSIGN_EXPR_MAX_NLIST = 128
-
-# m·ksub folds above which the PQ encode switches from the literal
-# expression (SQL-oracle bit-exact) to the same Arrow-batched numpy
-# fallback: the expression's analysis + per-row cost grows with m·ksub
-# (a m=32/ksub=64 codebook is 2048 distance folds per row, measured
-# 761.6 s/1 M build at 256d), one matmul per sub-space stays flat.
-PQ_ENCODE_EXPR_MAX_FOLDS = 512
-
-
 def _check_metric(metric: str) -> None:
     if metric not in ("ip", "l2"):
         raise ValueError(f"ivf metric must be 'ip' or 'l2', got {metric!r}")
 
 
-def _centroid_structs(vsql: str, centroids: list[tuple], metric: str) -> str:
-    """SQL text of the one nearest-centroid kernel: an array of
-    ``named_struct('d', score, 'c', cid)`` per ``(cid, vector)``
-    centroid, where score is −inner product ('ip') or squared L2
-    ('l2') of the vector SQL ``vsql`` to that centroid.  Struct order
-    is (score, cid), so ``array_min(...).c`` is the nearest centroid
-    with ties → smallest cid, and ``array_sort`` ranks them all.
-
-    Each score is the in-order fold of :func:`dot_sql` /
-    :func:`sq_l2_sql` — the oracle's in-order list sum — and appears
-    ONCE in the tree (HOFs get no codegen subexpression elimination, so
-    an ``array_position(scores, array_min(scores))`` form would
-    evaluate every fold twice).  The whole kernel is one ``F.expr``
-    parse, not nlist × dim py4j ``F.lit`` round trips (measured ~2 s of
-    driver-side plan construction per query at nlist=16×64d)."""
-    _check_metric(metric)
-    structs = []
-    for cid, cv in centroids:
-        score = ("-" + dot_sql(vsql, vec_sql(cv)) if metric == "ip"
-                 else sq_l2_sql(vsql, vec_sql(cv)))
-        structs.append(f"named_struct('d', {score}, 'c', {int(cid)}L)")
-    return "array(" + ", ".join(structs) + ")"
-
-
 def _nearest_udf(vec_col: str, books: "list[list[tuple]]", metric: str,
                  n: int, rtype: str):
-    """The kernel's vectorized fallback above the expression caps: one
-    Arrow-batched pandas UDF that splits each vector into
-    ``len(books)`` equal sub-spaces and scores sub-space j against the
-    ``(cid, vector)`` centroids of ``books[j]`` with one
-    (batch × dsub) @ (dsub × K) matmul, then keeps the ``n`` best cids
-    per sub-space (stable sort).  ``rtype`` shapes the result: 'long'
-    (the IVF list), 'array<long>' (a probe list) or 'array<int>' (PQ
-    codes, one per sub-space).  The first index wins FP ties and
-    centroids are cid-sorted, so ties break like the expression; but
-    an exact tie of the in-order fold may not be one in the expanded
-    BLAS form (−2·v·c + ‖c‖²), so borderline rows can differ — which
-    is why oracle-replayed paths stay under the caps.  A null vector
-    gets a null result (null codes for 'array<int>'), as in the
-    expression."""
+    """The one nearest-centroid kernel, an Arrow-batched pandas UDF:
+    split each vector into ``len(books)`` equal sub-spaces and keep,
+    per sub-space j, the ``n`` cids of the ``(cid, vector)`` centroids
+    ``books[j]`` with the smallest score, nearest first — −inner product
+    ('ip') or squared L2 ('l2'), ties → smallest cid.  ``rtype`` shapes
+    the result: 'long' (the IVF list), 'array<long>' (a probe list) or
+    'array<int>' (PQ codes, one per sub-space).  A null vector gets a
+    null result (null codes for 'array<int>').
+
+    The ranking is that of the in-order fold over dims — the
+    :func:`dot_sql` / :func:`sq_l2_sql` scores that :func:`probe_lists`
+    and the SQL oracles compute — at the cost of one
+    (batch × dsub) @ (dsub × K) matmul per sub-space: the BLAS scores
+    (−v·c, or ‖c‖² − 2·v·c) rank every row, and a row is rescored by
+    the fold (then stably sorted, NaN last as Spark orders it) only
+    when its n+1 best BLAS scores are not all more than 2δ apart, or a
+    score is not finite.  δ bounds the forward error of both forms,
+    ``4·(dsub+4)·2⁻⁵²`` times ``(‖v‖+max‖c‖)²`` ('l2') or
+    ``‖v‖·max‖c‖`` ('ip'), so wider gaps rank alike under either form
+    (the exactness sweep: PLANS.md 'One nearest-centroid kernel')."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     _check_metric(metric)
+    books = [sorted(b, key=lambda c: int(c[0])) for b in books]
     C = np.array([[cv for _, cv in b] for b in books], dtype=np.float64)
     cids = np.array([[int(cid) for cid, _ in b] for b in books],
                     dtype=np.int64)
-    m, _, dsub = C.shape                           # m × K × dsub
-    Ct = C.transpose(0, 2, 1)
-    c_norms = (C * C).sum(axis=2)[:, None, :]     # m × 1 × K
-    sub = np.arange(m)[:, None, None]
+    m, k, dsub = C.shape                           # m × K × dsub
     ip = metric == "ip"
+    # scores −v·c or −2·v·c (+ ‖c‖²): scaling by −1 or −2 is exact
+    W = C.transpose(0, 2, 1) * (-1.0 if ip else -2.0)
+    c_sq = (C * C).sum(axis=2)[:, None, :]        # m × 1 × K
+    c_max = np.sqrt(c_sq.max(axis=2))              # m × 1
+    sub = np.arange(m)[:, None, None]
+    eps = 4.0 * (dsub + 4) * 2.0 ** -52
+    top = min(n + 1, k)
+
+    def fold(x, c):                    # R × dsub, K × dsub -> R × K
+        acc = np.zeros((len(x), len(c)))
+        for i in range(dsub):
+            xi, ci = x[:, i, None], c[None, :, i]
+            acc = acc + (xi * ci if ip else (xi - ci) * (xi - ci))
+        return -acc if ip else acc
 
     def _nearest(v):
         vs = v.tolist()
-        null = [x is None for x in vs]
-        if any(null):                  # scored as zeros, answered null
+        null = np.array([x is None for x in vs], dtype=bool)
+        if null.any():                 # scored as zeros, answered null
             vs = [np.zeros(m * dsub) if z else x for z, x in zip(null, vs)]
-        M = np.array(vs, dtype=np.float64)
-        dots = M.reshape(len(M), m, dsub).transpose(1, 0, 2) @ Ct
-        score = -dots if ip else -2.0 * dots + c_norms
-        idx = (score.argmin(axis=2)[:, :, None] if n == 1
-               else np.argsort(score, axis=2, kind="stable")[:, :, :n])
+        V = (np.array(vs, dtype=np.float64).reshape(len(vs), m, dsub)
+             .transpose(1, 0, 2))                 # m × batch × dsub
+        with np.errstate(all="ignore"):
+            score = V @ W                         # m × batch × K
+            if not ip:
+                score += c_sq
+            v_norm = np.sqrt(np.einsum("mbd,mbd->mb", V, V))
+            delta = eps * (v_norm * c_max if ip else (v_norm + c_max) ** 2)
+            near = ~np.isfinite(score).all(axis=2)
+            idx, vals = [], []
+            for _ in range(top):            # the top best scores, in order
+                i = score.argmin(axis=2)[:, :, None]
+                idx.append(i)
+                vals.append(np.take_along_axis(score, i, axis=2))
+                np.put_along_axis(score, i, np.inf, axis=2)
+            idx = np.concatenate(idx[:n], axis=2)
+            gaps = np.diff(np.concatenate(vals, axis=2), axis=2)
+            near |= (gaps <= 2.0 * delta[:, :, None]).any(axis=2)
+            near &= ~null
+            for j in range(m):
+                rows = np.flatnonzero(near[j])
+                if rows.size:
+                    idx[j, rows] = np.argsort(fold(V[j, rows], C[j]),
+                                              axis=1, kind="stable")[:, :n]
         best = cids[sub, idx]                     # m × batch × n
         if rtype == "long":
             out = best[0, :, 0]
         else:
             rows = best[0] if rtype == "array<long>" else best[:, :, 0].T
             out = [r.tolist() for r in rows]
-        if any(null):
-            gap = [None] * m if rtype == "array<int>" else None
-            out = [gap if z else x for z, x in zip(null, out)]
+        if null.any():
+            none = [None] * m if rtype == "array<int>" else None
+            out = [none if z else x for z, x in zip(null, out)]
         return pd.Series(out)
 
     # real class objects, not strings: this module's `from __future__
@@ -290,66 +289,37 @@ def _nearest_udf(vec_col: str, books: "list[list[tuple]]", metric: str,
 def _ivf_assign_col(centroids: list[tuple], vec_col: str, metric: str):
     """IVF list-id Column: the cid of the nearest centroid by
     ``metric`` ('ip' = max inner product, 'l2' = min squared L2; ties →
-    smallest cid), zero shuffle; null for a null vector.  Bit-exact
-    literal expression up to ``IVF_ASSIGN_EXPR_MAX_NLIST`` centroids
-    (the SQL-oracle form), the numpy fallback beyond."""
-    if len(centroids) > IVF_ASSIGN_EXPR_MAX_NLIST:
-        return _nearest_udf(vec_col, [centroids], metric, 1, "long")
-    vsql = f"cast({vec_col} as array<double>)"
-    structs = _centroid_structs(vsql, centroids, metric)
-    return F.expr(f"if({vsql} is null, null, array_min({structs}).c)")
+    smallest cid), zero shuffle; null for a null vector."""
+    return _nearest_udf(vec_col, [centroids], metric, 1, "long")
 
 
 def _ivf_probe_col(centroids: list[tuple], vec_col: str, nprobe: int,
                    metric: str):
     """Per-ROW probe lists: an ``array<long>`` Column of the ``nprobe``
-    list ids nearest each row's vector — the distributed twin of the
-    driver-side :func:`probe_lists`, for joins where the QUERY side is
-    itself a large DataFrame.  Bit-exact literal expression (the sorted
-    kernel's first ``nprobe`` cids) up to ``IVF_ASSIGN_EXPR_MAX_NLIST``
-    centroids, the numpy fallback beyond; null for a null vector on
-    both sides."""
+    list ids nearest each row's vector, nearest first — the distributed
+    twin of the driver-side :func:`probe_lists`, for joins where the
+    QUERY side is itself a large DataFrame; null for a null vector
+    (every list when ``nprobe`` covers them all)."""
     _check_metric(metric)
     nprobe = min(int(nprobe), len(centroids))
     if nprobe == len(centroids):
         # probe-everything (the exact-oracle configuration, e.g.
         # decontaminate_semantic's nprobe=nlist): the probe SET is all
-        # lists regardless of per-row scores, so skip the nlist distance
-        # folds per query row outright — the downstream explode+join sees
-        # the identical (q, list_id) set.
+        # lists regardless of per-row scores, so skip the kernel
+        # outright — the downstream explode+join sees the identical
+        # (q, list_id) set.
         return F.array(*[F.lit(int(cid)).cast("long")
                          for cid, _ in centroids])
-    if len(centroids) > IVF_ASSIGN_EXPR_MAX_NLIST:
-        return _nearest_udf(vec_col, [centroids], metric, nprobe,
-                            "array<long>")
-    vsql = f"cast({vec_col} as array<double>)"
-    structs = _centroid_structs(vsql, centroids, metric)
-    return F.expr(f"if({vsql} is null, null, transform(slice("
-                  f"array_sort({structs}), 1, {nprobe}), s -> s.c))")
-
-
-def _pq_code_sqls(vsql: str, books: list[list[list[float]]]) -> "list[str]":
-    """Per-subspace PQ code SQL: the kernel over slice j of ``vsql``
-    against codebook j by squared L2, code = the nearest codeword's rank
-    (ties → smallest code, the oracle's rn=1 over (d2 ASC, code ASC)).
-    A null vector keeps null codes."""
-    dsub = len(books[0][0])
-    return [f"if({vsql} is null, null, cast(array_min("
-            + _centroid_structs(f"slice({vsql}, {j * dsub + 1}, {dsub})",
-                                list(enumerate(book)), "l2")
-            + ").c as int))"
-            for j, book in enumerate(books)]
+    return _nearest_udf(vec_col, [centroids], metric, nprobe, "array<long>")
 
 
 def _pq_codes_col(books: list[list[list[float]]], vec_col: str):
-    """PQ codes ``array<int>`` Column for any codebook size: literal
-    expression up to ``PQ_ENCODE_EXPR_MAX_FOLDS`` m·ksub folds, the
-    numpy fallback beyond."""
-    if len(books) * len(books[0]) > PQ_ENCODE_EXPR_MAX_FOLDS:
-        return _nearest_udf(vec_col, [list(enumerate(b)) for b in books],
-                            "l2", 1, "array<int>")
-    codes = _pq_code_sqls(f"cast({vec_col} as array<double>)", books)
-    return F.expr("array(" + ", ".join(codes) + ")")
+    """PQ codes ``array<int>`` Column: per sub-space j, the rank of the
+    codeword of ``books[j]`` nearest slice j of the vector by squared L2
+    (ties → smallest code, the oracle's rn=1 over (d2 ASC, code ASC));
+    null codes for a null vector."""
+    return _nearest_udf(vec_col, [list(enumerate(b)) for b in books],
+                        "l2", 1, "array<int>")
 
 
 def probe_lists(query_vec: list[float], centroids: list[tuple],
@@ -395,7 +365,7 @@ def ivf_knn_join(corpus: DataFrame, queries: DataFrame, k: int = 5,
     (returns (q_id, id, rank, dist2)).  Assignment always uses the same
     metric as the rank.  Deterministic given ``centroids`` (default: the
     :func:`ivf_centroids` sampling quantizer over the corpus), so a SQL
-    oracle can replay the whole join at nlist ≤ 128.
+    oracle can replay the whole join at any nlist.
 
     Reference parity: the reference answers many-query search by looping
     single-query HNSW searches on one node (HNSW.cpp:167-215); this is
@@ -558,7 +528,8 @@ def random_projection_buckets(df: DataFrame, dim: int, n_planes: int = 8,
              .select("id", F.transform(
                  "v", lambda x: x / F.col("_nrm")).alias("v")))
     # bucket expression as ONE SQL string per table (not n_planes × dim
-    # py4j F.lit round trips — the _centroid_structs lesson); identical
+    # py4j F.lit round trips, ~2 s of plan construction at 16 × 64d
+    # literals); identical
     # folds, offsets, comparisons, and bit weights as the Column form
     out = None
     for t in range(n_tables):
@@ -693,7 +664,7 @@ def ivf_topk(df: DataFrame, query_vec: list[float], centroids: list[tuple],
              nprobe: int = 4, k: int = 10, id_col: str = "vec_id",
              vec_col: str = "embedding") -> DataFrame:
     """IVF ANN top-k: filter the corpus to the query's nprobe nearest
-    inverted lists (scalar list-id expression — no join), exact cosine
+    inverted lists (the kernel's list-id Column — no join), exact cosine
     re-rank on the ~nprobe/nlist surviving fraction.
 
     The FAISS-style IVF shape re-expressed relationally; complements the
@@ -821,10 +792,9 @@ def pq_refine(df: DataFrame, books: list[list[list[float]]],
 def pq_encode(df: DataFrame, books: list[list[list[float]]],
               id_col: str = "vec_id", vec_col: str = "embedding"
               ) -> DataFrame:
-    """(id, codes array<int>) PQ compression, zero shuffle: a pure
-    scalar expression over the scan (codebook literals inlined) for
-    small codebooks, one Arrow-batched matmul per sub-space above
-    ``PQ_ENCODE_EXPR_MAX_FOLDS`` (:func:`_pq_codes_col`).  m bytes-ish
+    """(id, codes array<int>) PQ compression, zero shuffle: one
+    Arrow-batched matmul per sub-space over the scan, near-ties settled
+    by the in-order fold (:func:`_pq_codes_col`).  m bytes-ish
     per vector instead of dim floats: the representation that makes
     billion-vector ANN memory-resident.  Encode once and persist the
     codes table; scans of the code table replace scans of the vectors."""
@@ -838,9 +808,9 @@ def pq_topk(df: DataFrame, query_vec: list[float],
             vec_col: str = "embedding") -> DataFrame:
     """PQ ANN top-k by asymmetric distance (ADC): the query's per-
     subspace distance table to every codebook entry is computed driver-
-    side (m × ksub doubles) and inlined, so the scan ranks each vector
-    by ``Σ_j adc_j[code_j]`` — table lookups + m-term add, no
-    vector math on the corpus — then the ``candidates`` best are
+    side (m × ksub doubles) and inlined, so the scan encodes each vector
+    (:func:`_pq_codes_col`) and ranks it by ``Σ_j adc_j[code_j]`` —
+    table lookups + m-term add — then the ``candidates`` best are
     re-ranked by exact cosine.  Third bucketed-ANN strategy beside LSH
     (ann_topk) and IVF (ivf_topk); reference index parity HNSW.cpp.
 
@@ -849,31 +819,28 @@ def pq_topk(df: DataFrame, query_vec: list[float],
     order, so candidate sets replay exactly cross-engine.  A row with a
     null vector (null codes) ranks after every candidate."""
     q = [float(x) for x in query_vec]
-    codes = _pq_code_sqls(f"cast({vec_col} as array<double>)", books)
     cand = (df.select(F.col(id_col), F.col(vec_col),
-                      _adc_expr(q, books, codes).alias("_adc"))
+                      _pq_codes_col(books, vec_col).alias("codes"))
+            .withColumn("_adc", _adc_expr(q, books))
             .orderBy(F.col("_adc").asc_nulls_last(), F.col(id_col).asc())
             .limit(candidates))
     return cosine_topk(cand, q, k, id_col, vec_col)
 
 
-def _adc_expr(query_vec: list[float], books: list[list[list[float]]],
-              codes: "list[str] | None" = None):
-    """ADC score ``Σ_j adc_j[code_j]``: the query's per-subspace
-    squared-L2 table to every codeword (m × ksub doubles, driver-side)
-    inlined as array literals — per row m element_at lookups + adds, no
-    vector math.  ``codes`` are the per-subspace code SQL texts;
-    default: the persisted ``codes`` column."""
+def _adc_expr(query_vec: list[float], books: list[list[list[float]]]):
+    """ADC score ``Σ_j adc_j[code_j]`` of the ``codes`` column: the
+    query's per-subspace squared-L2 table to every codeword (m × ksub
+    doubles, driver-side) inlined as array literals — per row m
+    element_at lookups + adds, no vector math."""
     q = [float(x) for x in query_vec]
     dsub = len(books[0][0])
-    if codes is None:
-        codes = [f"element_at(codes, {j + 1})" for j in range(len(books))]
     terms = []
-    for j, (book, code) in enumerate(zip(books, codes)):
+    for j, book in enumerate(books):
         qsub = q[j * dsub:(j + 1) * dsub]
         adc = [sum((a - b) * (a - b) for a, b in zip(qsub, cent))
                for cent in book]
-        terms.append(f"element_at({vec_sql(adc)}, {code} + 1)")
+        terms.append(f"element_at({vec_sql(adc)}, "
+                     f"element_at(codes, {j + 1}) + 1)")
     return F.expr(" + ".join(terms))
 
 
@@ -943,9 +910,9 @@ def save_ivfpq_index(df: DataFrame, path: str, nlist: int = 16,
     saturated corpus.
 
     Build is SINGLE-PASS: coarse assignment and PQ encoding are both
-    scalar expressions (or one Arrow matmul above
-    ``IVF_ASSIGN_EXPR_MAX_NLIST``) carried through one select — no
-    corpus self-join, one write exchange only.  Each of the
+    the one nearest-centroid kernel (one Arrow matmul per sub-space)
+    carried through one select — no corpus self-join, one write
+    exchange only.  Each of the
     ``refine_iters`` Lloyd iterations refines BOTH quantizers in one
     aggregation (:func:`_lloyd`); leave 0 when an
     external SQL oracle must rebuild the index bit-for-bit (refined

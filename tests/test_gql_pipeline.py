@@ -407,23 +407,22 @@ def test_gql_vindex_over_no_vectors_is_an_engine_error(db, spark,
                        id_col="id")
 
 
-@pytest.mark.parametrize("udf_side", [False, True])
+@pytest.mark.parametrize("one_row_batches", [False, True])
 def test_null_vectors_are_skipped_by_the_quantizers(db, spark, tmp_path,
-                                                    monkeypatch, udf_side):
+                                                    one_row_batches):
     """A group whose lowest-id vertex has no vector answers {similar}
     ivf/pq and {sample clusters:} exactly as the same group without
     that vertex, and the three index builds write the same rows and
     sidecar; a null vector gets a null list id / null codes from the
-    kernel.  ``udf_side`` drops the expression caps to 0 so every
-    assignment and encode runs the numpy fallback."""
+    kernel.  ``one_row_batches`` caps the kernel's Arrow batches at one
+    row, so the null vector also arrives in a batch holding nothing
+    else."""
+    import contextlib
     import json
     import math
 
-    from gqlite_spark import fsio
+    from gqlite_spark import conf, fsio
     from gqlite_spark.operators import similarity as S
-    if udf_side:
-        monkeypatch.setattr(S, "IVF_ASSIGN_EXPR_MAX_NLIST", 0)
-        monkeypatch.setattr(S, "PQ_ENCODE_EXPR_MAX_FOLDS", 0)
     rows = [(i, [math.cos(i / 3), math.sin(i / 3), math.cos(i / 7),
                  float(i % 4)]) for i in range(1, 41)]
     frames = {}
@@ -460,14 +459,18 @@ def test_null_vectors_are_skipped_by_the_quantizers(db, spark, tmp_path,
                 spark, S.index_params_path(p, kind))))
         return out
 
+    batches = (conf.scoped(spark, {
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "1"})
+        if one_row_batches else contextlib.nullcontext())
     try:
-        assert answers("withnull") == answers("clean")
-        null = frames["withnull"].filter("id = 0")
-        cents = S.ivf_centroids(frames["clean"], 4, "id")
-        books = S.pq_codebooks(frames["clean"], 2, 4, "id")
-        assert null.select(S._ivf_assign_col(cents, "embedding", "l2"),
-                           S._pq_codes_col(books, "embedding")
-                           ).first()[:] == (None, [None, None])
+        with batches:
+            assert answers("withnull") == answers("clean")
+            null = frames["withnull"].filter("id = 0")
+            cents = S.ivf_centroids(frames["clean"], 4, "id")
+            books = S.pq_codebooks(frames["clean"], 2, 4, "id")
+            assert null.select(S._ivf_assign_col(cents, "embedding", "l2"),
+                               S._pq_codes_col(books, "embedding")
+                               ).first()[:] == (None, [None, None])
     finally:
         for df in frames.values():
             df.unpersist()
@@ -497,8 +500,7 @@ def test_null_vectors_are_left_out_of_cosine_topk(db, spark):
 @pytest.mark.parametrize("metric", ["ip", "l2"])
 def test_null_query_vector_pairs_with_nothing(spark, metric):
     """A null query vector returns no rows from knn_join and from
-    ivf_knn_join on both sides of IVF_ASSIGN_EXPR_MAX_NLIST (the
-    expression probe lists and the numpy ones)."""
+    ivf_knn_join, at nlist 3 and 130."""
     from gqlite_spark.operators import similarity as S
     # rows in the lowest-cid lists: the lists a null query used to probe
     corpus = spark.createDataFrame(
@@ -509,7 +511,7 @@ def test_null_query_vector_pairs_with_nothing(spark, metric):
     joins = {"ivf_%d" % n: S.ivf_knn_join(
         corpus, queries, k=2, nprobe=2, metric=metric,
         centroids=[(c, [c / 10.0, 1.0]) for c in range(n)])
-        for n in (3, S.IVF_ASSIGN_EXPR_MAX_NLIST + 1)}
+        for n in (3, 130)}
     if metric == "ip":
         joins["brute"] = S.knn_join(corpus, queries, k=2)
     for name, out in joins.items():

@@ -660,30 +660,55 @@ def test_ivf_assignment_is_true_argmax(spark):
         assert got[i] == best, i
 
 
+def _half_lattice(n_rows, dim):
+    """Tie-heavy vectors: a half-integer lattice in [-2, 2], so many rows
+    sit exactly equidistant from (or equally aligned with) two or more
+    lattice centroids — the rows a BLAS-only ranking can split
+    differently from the in-order fold."""
+    return [(i, [((i * 7 + j * 5 + i // 9) % 9 - 4) / 2.0
+                 for j in range(dim)]) for i in range(n_rows)]
+
+
 def test_ivf_assign_vectorized_matches_expression(spark):
-    """Above IVF_ASSIGN_EXPR_MAX_NLIST the assignment switches to the
-    Arrow-batched numpy matmul; on non-borderline data it must agree
-    exactly with the expression path (same argmin/argmax, same smallest-
-    cid tie-break by construction)."""
-    import math
-    from gqlite_spark.operators.similarity import (_nearest_udf,
-                                                   ivf_assign,
-                                                   ivf_centroids)
-    vecs = [(i, [math.cos(i / 9), math.sin(i / 9), float(i % 7)])
-            for i in range(300)]
+    """The kernel's list ids are the in-order fold's nearest centroid —
+    the expression ``dot_sql`` / ``sq_l2_sql`` compute and the driver's
+    ``probe_lists`` replays — on tie-heavy data, ties → smallest cid,
+    at nlist 12 and 200."""
+    from gqlite_spark.operators.similarity import (ivf_assign,
+                                                   ivf_centroids,
+                                                   probe_lists)
+    vecs = _half_lattice(300, 3)
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    for metric in ("ip", "l2"):
-        cents = ivf_centroids(df, nlist=12)
-        expr = {r["id"]: r["list_id"]
-                for r in ivf_assign(df, cents, metric=metric).collect()}
-        vect = {r["vec_id"]: r["list_id"] for r in df.select(
-            "vec_id", _nearest_udf("embedding", [cents], metric, 1, "long")
-            .alias("list_id")).collect()}
-        assert expr == vect, metric
-    # the auto-switch engages past the expression cap
-    big_cents = [(i, [float(i), 0.0, 0.0]) for i in range(200)]
-    plan = ivf_assign(df, big_cents)._jdf.queryExecution().toString()
-    assert "pythonUDF" in plan or "ArrowEvalPython" in plan
+    lattice = [(c, [((c * 3 + j * 7) % 9 - 4) / 2.0 for j in range(3)])
+               for c in range(200)]
+    for cents in (ivf_centroids(df, nlist=12), lattice):
+        for metric in ("ip", "l2"):
+            got = {r["id"]: r["list_id"]
+                   for r in ivf_assign(df, cents, metric=metric).collect()}
+            for i, v in vecs:
+                assert got[i] == probe_lists(v, cents, 1, metric)[0], \
+                    (len(cents), metric, i)
+
+
+@pytest.mark.parametrize("metric", ["ip", "l2"])
+def test_ivf_assign_settles_midpoint_ties_like_probe_lists(spark, metric):
+    """At nlist 130, rows at the midpoint of two 0.1-grid centroids (4-d)
+    get the list ``probe_lists`` names.  A matmul ranking alone can
+    split such near-ties differently from the in-order fold, and an
+    nprobe-1 self-query would then miss its own list."""
+    from gqlite_spark.operators.similarity import ivf_assign, probe_lists
+    cents = [(c, [((c * 7 + j * 11) % 21 - 10) / 10.0 for j in range(4)])
+             for c in range(130)]
+    vecs = []
+    for i in range(2000):
+        a, b = cents[i % 130][1], cents[(i * 17 + 5) % 130][1]
+        vecs.append((i, [(x + y) / 2.0 for x, y in zip(a, b)]))
+    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    got = {r["id"]: r["list_id"]
+           for r in ivf_assign(df, cents, metric=metric).collect()}
+    wrong = [i for i, v in vecs
+             if got[i] != probe_lists(v, cents, 1, metric)[0]]
+    assert wrong == []
 
 
 def test_ivf_topk_finds_near_neighbor(spark):
@@ -819,35 +844,39 @@ def test_ivfpq_works_on_parquet_corpus(spark, tmp_path):
 
 
 def test_pq_encode_pandas_matches_expression(spark):
-    """The Arrow/BLAS PQ encode agrees with the literal-expression path
-    code-for-code on a non-degenerate fixture (same first-min
-    tie-break), and the auto-switch engages past the fold cap."""
-    import math
-    from gqlite_spark.operators.similarity import (_nearest_udf,
-                                                   _pq_codes_col,
-                                                   pq_codebooks,
-                                                   pq_encode)
-    vecs = [(i, [math.cos(i / 9), math.sin(i / 9), math.cos(i / 4),
-                 math.sin(i / 4), math.cos(i / 7), math.sin(i / 7),
-                 float(i % 5), float(i % 3)]) for i in range(300)]
+    """PQ codes are, per sub-space, the codeword nearest by the in-order
+    squared-L2 fold (ties → smallest code), checked code-for-code
+    against a loop fold on tie-heavy data at m·ksub 32 and 640; a null
+    vector keeps null codes."""
+    from gqlite_spark.operators.similarity import (_pq_codes_col,
+                                                   pq_codebooks, pq_encode)
+    vecs = _half_lattice(300, 8)
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    books = pq_codebooks(df, m=4, ksub=8)
-    expr = {r["vec_id"]: list(r["c"]) for r in df.select(
-        "vec_id", _pq_codes_col(books, "embedding").alias("c")).collect()}
-    vect = {r["vec_id"]: list(r["c"]) for r in df.select(
-        "vec_id", _nearest_udf("embedding",
-                               [list(enumerate(b)) for b in books],
-                               "l2", 1, "array<int>").alias("c"))
-        .collect()}
-    assert expr == vect
-    # a null vector keeps null codes on the expression path
+
+    def fold_codes(v, books):
+        dsub = len(books[0][0])
+        codes = []
+        for j, book in enumerate(books):
+            x = v[j * dsub:(j + 1) * dsub]
+            d2 = []
+            for cent in book:
+                acc = 0.0
+                for a, b in zip(x, cent):
+                    acc = acc + (a - b) * (a - b)
+                d2.append(acc)
+            codes.append(int(np.argsort(d2, kind="stable")[0]))
+        return codes
+
+    lattice = [[[((c * 5 + j * 3 + i) % 9 - 4) / 2.0 for i in range(2)]
+                for c in range(160)] for j in range(4)]
+    for books in (pq_codebooks(df, m=4, ksub=8), lattice):
+        got = {r["id"]: list(r["codes"])
+               for r in pq_encode(df, books).collect()}
+        for i, v in vecs:
+            assert got[i] == fold_codes(v, books), (len(books[0]), i)
     nulls = spark.createDataFrame([(999, None)], df.schema)
     assert nulls.select(_pq_codes_col(pq_codebooks(df, m=2, ksub=4),
                                       "embedding")).first()[0] == [None, None]
-    # a ksub=256 codebook (4*256 folds > 512 cap) switches to Arrow
-    big = [[[float(j + c)] * 2 for c in range(256)] for j in range(4)]
-    plan = pq_encode(df, big)._jdf.queryExecution().toString()
-    assert "pythonUDF" in plan or "ArrowEvalPython" in plan
 
 
 def test_pq_refine_improves_quantization(spark):
@@ -1798,32 +1827,22 @@ def test_build_ivf_index_refined(spark, tmp_path):
 
 def test_ivf_probe_col_matches_driver_probe(spark):
     """The per-row probe-list Column agrees with the driver-side
-    probe_lists for every row, on both the literal-expression path and
-    the Arrow-batched path.  Non-borderline data, as in the assignment
-    twin test: an EXACT tie in the true metric can resolve differently
-    under the BLAS path's expanded-form distances (same caveat as
-    _nearest_udf)."""
+    probe_lists for every row — same lists, same order, ties → smallest
+    cid — on tie-heavy data at nlist 10 and 140."""
     from gqlite_spark.operators.similarity import (
-        _ivf_probe_col, _nearest_udf, ivf_centroids, probe_lists)
-    # hash-derived components: lattices (cos/sin or modular) put pairs
-    # of centroids EXACTLY equidistant from rows between them, which is
-    # precisely the borderline-tie case the two formulas may split on
-    import hashlib
-    vecs = [(i, [int(hashlib.md5(f"{i}:{j}".encode()).hexdigest()[:8],
-                     16) / 2 ** 32 for j in range(3)])
-            for i in range(120)]
+        _ivf_probe_col, ivf_centroids, probe_lists)
+    vecs = _half_lattice(120, 3)
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    cents = ivf_centroids(df, nlist=10)
-    for metric in ("ip", "l2"):
-        got = {r["vec_id"]: list(r["p"]) for r in df.select(
-            "vec_id", _ivf_probe_col(cents, "embedding", 3, metric)
-            .alias("p")).collect()}
-        vect = {r["vec_id"]: list(r["p"]) for r in df.select(
-            "vec_id", _nearest_udf("embedding", [cents], metric, 3,
-                                   "array<long>").alias("p")).collect()}
-        for i, v in vecs:
-            assert got[i] == probe_lists(v, cents, 3, metric), (metric, i)
-            assert vect[i] == got[i], (metric, i)
+    lattice = [(c, [((c * 3 + j * 7) % 9 - 4) / 2.0 for j in range(3)])
+               for c in range(140)]
+    for cents in (ivf_centroids(df, nlist=10), lattice):
+        for metric in ("ip", "l2"):
+            got = {r["vec_id"]: list(r["p"]) for r in df.select(
+                "vec_id", _ivf_probe_col(cents, "embedding", 3, metric)
+                .alias("p")).collect()}
+            for i, v in vecs:
+                assert got[i] == probe_lists(v, cents, 3, metric), \
+                    (len(cents), metric, i)
 
 
 def test_ivf_knn_join_matches_bruteforce_when_probing_all(spark):
