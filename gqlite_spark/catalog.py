@@ -165,10 +165,9 @@ class GroupMeta:
 class VectorIndex:
     """One attached persisted l2 vector index (Group.attach_index).
 
-    ``kind`` is ``'ivf'`` (full-vector inverted lists, ``_vec`` column;
-    id-only when built without ``include_vectors``) or ``'ivfpq'``
-    (codes-only lists, ``codes`` column); ``params`` is that kind's
-    sidecar at ``path``.  The index DataFrame loads on first probe and
+    ``kind`` is ``'ivf'`` (full-vector inverted lists, ``_vec`` column)
+    or ``'ivfpq'`` (codes-only lists, ``codes`` column); ``params`` is
+    that kind's sidecar at ``path``.  The index DataFrame loads on first probe and
     is then reused until the record is replaced or dropped — the
     handle cache of the routed ``$near`` path."""
     kind: str
@@ -675,8 +674,9 @@ class Group:
         path probes the index instead of scanning everything
         (executor._apply_knn_routed): a MATERIALIZED full-vector index
         (``include_vectors=True``) or an IVFPQ index reads only the
-        probed lists.  Refuses a non-``l2`` index, one built for
-        another column, one whose centroids are not ``dim``-dimensional
+        probed lists.  Refuses a non-``l2`` index, an id-only IVF index
+        (built without ``include_vectors``), one built for another
+        column, one whose centroids are not ``dim``-dimensional
         (when ``dim`` is given), and one carrying a torn-compaction
         marker (see ``_overwrite_index_lists``) — rebuild that instead.
         A refused attach leaves the previous record in place.  Local
@@ -707,6 +707,11 @@ class Group:
             raise GQLiteError(
                 f"vindex attach: index at '{path}' has metric="
                 f"{params.get('metric')!r}; $near routing needs 'l2'")
+        if kind == "ivf" and not params.get("include_vectors"):
+            raise GQLiteError(
+                f"vindex attach: index at '{path}' is id-only; $near "
+                "routing needs a MATERIALIZED index "
+                "(save_ivf_index(include_vectors=True), or {vindex})")
         # the sidecar must describe THIS column: an index built for a
         # different column would silently serve wrong $near neighbors
         side_col = params.get("vec_col")
@@ -833,9 +838,6 @@ class Group:
         if self.meta.is_edge:
             raise GQLiteError("vindex compaction applies to vertex groups")
         pq = rec.kind == "ivfpq"
-        if not pq and not rec.params.get("include_vectors"):
-            raise GQLiteError("vindex compaction requires a MATERIALIZED "
-                              "index (include_vectors=True)")
         if not self.rows:
             return {"lists_rewritten": 0, "rows_added": 0}
         index = rec.frame(self.spark)

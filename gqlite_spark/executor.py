@@ -1081,9 +1081,15 @@ class GQLite:
         self.current_graph = gname
         return g
 
-    def _mutable_graph(self, group: str) -> tuple[Graph, Group]:
-        """Find the graph owning ``group`` (GQL upserts name only the group;
-        session state supplies the graph, VirtualEngine session parity)."""
+    def _mutable_graph(self, group: str,
+                       graph: Optional[str]) -> tuple[Graph, Group]:
+        """The graph a mutation writes to and its ``group``: the ``in:``
+        graph when the statement names one, else the graph owning
+        ``group`` — the current graph first (VirtualEngine session
+        parity)."""
+        if graph is not None:
+            g = self._graph(graph)
+            return g, g.group(group)
         if self.current_graph and self.catalog.has_graph(self.current_graph):
             g = self.catalog.graph(self.current_graph)
             if group in g.groups:
@@ -1104,7 +1110,7 @@ class GQLite:
         return StatementResult(status="CREATE SUCCESS")
 
     def _upsert_vertex(self, stmt: UpsetVertexStmt) -> StatementResult:
-        _, grp = self._mutable_graph(stmt.group)
+        _, grp = self._mutable_graph(stmt.group, stmt.graph)
         if grp.meta.is_edge:
             raise GQLiteError(f"group {stmt.group} is an edge group")
         for key, props in stmt.vertices:
@@ -1112,7 +1118,7 @@ class GQLite:
         return StatementResult(status="UPSET SUCCESS")
 
     def _upsert_edge(self, stmt: UpsetEdgeStmt) -> StatementResult:
-        _, grp = self._mutable_graph(stmt.group)
+        _, grp = self._mutable_graph(stmt.group, stmt.graph)
         if not grp.meta.is_edge:
             raise GQLiteError(f"group {stmt.group} is not an edge group")
         for src, direction, dst, props in stmt.edges:
@@ -1125,7 +1131,7 @@ class GQLite:
         Bulk-registered groups are updated as a pure DataFrame transform
         (withColumn(when(cond, new))) — no driver-side key collect, so a
         100 TB group updates without materializing matched keys."""
-        _, grp = self._mutable_graph(stmt.group)
+        _, grp = self._mutable_graph(stmt.group, stmt.graph)
         grp.update_where(self._where_cond(grp, stmt.where), stmt.props)
         return StatementResult(status="UPSET SUCCESS")
 
@@ -1139,7 +1145,7 @@ class GQLite:
         return PredicateCompiler(grp.meta).compile(where)
 
     def _remove_vertex(self, stmt: RemoveVertexStmt) -> StatementResult:
-        g, grp = self._mutable_graph(stmt.group)
+        g, grp = self._mutable_graph(stmt.group, stmt.graph)
         cond = self._where_cond(grp, stmt.where)
         # capture the matched-key frame BEFORE mutation (immutable plan);
         # the cascade consumes it as an anti-join side, never a key list
@@ -1180,7 +1186,7 @@ class GQLite:
         return StatementResult(status="REMOVE SUCCESS")
 
     def _remove_edge(self, stmt: RemoveEdgeStmt) -> StatementResult:
-        _, grp = self._mutable_graph(stmt.group)
+        _, grp = self._mutable_graph(stmt.group, stmt.graph)
         grp.delete_where(self._where_cond(grp, stmt.pattern))
         return StatementResult(status="REMOVE SUCCESS")
 
@@ -1255,9 +1261,6 @@ class GQLite:
           ∪ the overlay vectors, so only ~nprobe/nlist of the vector
           data is READ; the k winners broadcast-join back to the group
           for the full rows.  No count job.
-        * **id-only IVF**: semi-join the pruned (id, list_id)
-          assignment against the (predicate-filtered) corpus, then
-          exact top-k.  Bounds top-k input, not the scan.
         * **materialized IVF with plain predicates, or IVFPQ**: a
           bounded refill loop.  Rank the candidates — by exact distance
           on ``_vec``, or by ADC on ``codes`` (driver-side m×ksub
@@ -1352,28 +1355,15 @@ class GQLite:
             pruned = pruned.filter(~F.col("id").isin(local_keys))
 
         pq = rec.kind == "ivfpq"
-        materialized = pq or bool(params.get("include_vectors"))
         log.debug(
             "$near+limit on %r routed to ANN (%s index, nlist=%s "
             "nprobe=%d, %s%s); add 'exact: true' to the $near spec to "
             "force the exact plan", attr, rec.kind, params.get("nlist"),
             nprobe,
-            "id semi-join" if not materialized
-            else "partition-pruned read" if pure_knn and not pq
+            "partition-pruned read" if pure_knn and not pq
             else "partition-pruned refill",
             f", +{len(local_keys)} local overlay rows" if local_keys
             else "")
-        if not materialized:
-            # df rows for shadowed ids already carry the NEW vector, so
-            # including the overlay ids is sufficient — distances come
-            # from df
-            cand_ids = pruned.select("id")
-            if local_keys:
-                cand_ids = cand_ids.unionByName(
-                    grp._local_df().select("id")).distinct()
-            return apply_knn(
-                df.filter(F.col(attr).isNotNull()).join(cand_ids, "id"),
-                knn)
         k = int(knn["limit"])
         c = max(1, conf.get(spark, "knn.oversample"))
         retries = max(0, conf.get(spark, "knn.oversample_retries"))
@@ -1526,18 +1516,22 @@ class GQLite:
         for i, node in enumerate(pattern.nodes):
             if node.key is not None or node.wildcard or not node.conds:
                 continue
-            frames = []
-            for gname in group_names:
-                vgrp = graph.group(gname)
-                vdf = vgrp.to_df()
-                if vdf is None:
-                    continue
-                comp = PredicateCompiler(vgrp.meta)
-                cond = comp.compile(
-                    gql_parser.Parser("")._build_pred_conj(node.conds))
-                frames.append(vdf.filter(cond).select("id"))
-            out[i] = frames
+            frames = [self._matching_ids(graph, g, node.conds)
+                      for g in group_names]
+            out[i] = [f for f in frames if f is not None]
         return out
+
+    @staticmethod
+    def _matching_ids(graph: Graph, group_name: str,
+                      cond: Pred) -> Optional[DataFrame]:
+        """The one-column ``id`` frame of ``group_name``'s vertices that
+        satisfy ``cond``; None when the group holds no rows."""
+        vgrp = graph.group(group_name)
+        vdf = vgrp.to_df()
+        if vdf is None:
+            return None
+        return vdf.filter(
+            PredicateCompiler(vgrp.meta).compile(cond)).select("id")
 
     def _apply_endpoint_conds(self, graph: Graph, grp: Group,
                               pattern: WalkPattern, out: DataFrame) -> DataFrame:
@@ -1561,16 +1555,11 @@ class GQLite:
                  group_name: Optional[str]) -> DataFrame:
             if not node.conds or group_name is None:
                 return out_df
-            vgrp = graph.group(group_name)
-            vdf = vgrp.to_df()
-            if vdf is None:
+            ids = self._matching_ids(graph, group_name, node.conds)
+            if ids is None:
                 return out_df.filter(F.lit(False))
-            comp = PredicateCompiler(vgrp.meta)
-            cond = comp.compile(
-                gql_parser.Parser("")._build_pred_conj(node.conds))
-            keys = vdf.filter(cond).select(
-                F.col("id").alias(edge_col))
-            return out_df.join(keys, edge_col, "left_semi")
+            return out_df.join(ids.select(F.col("id").alias(edge_col)),
+                               edge_col, "left_semi")
 
         out = semi(out, a, "src", grp.meta.src_group)
         out = semi(out, b, "dst", grp.meta.dst_group)

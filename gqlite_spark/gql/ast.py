@@ -107,7 +107,7 @@ class PatternNode:
     property-condition object."""
     key: Any = None           # literal key or None
     wildcard: bool = False
-    conds: Optional[dict] = None  # raw property conditions
+    conds: Optional[Pred] = None  # the property-condition object, parsed
 
 
 @dataclass
@@ -139,19 +139,22 @@ class CreateStmt:
 class UpsetVertexStmt:
     group: str
     vertices: list[tuple]  # (key, props|None)
+    graph: Optional[str] = None
 
 
 @dataclass
 class UpsetEdgeStmt:
     group: str
     edges: list[tuple]  # (src_key, direction, dst_key, props|None)
+    graph: Optional[str] = None
 
 
 @dataclass
 class UpsetPropertyStmt:
     group: str
     props: dict
-    where: Any  # Pred tree or WalkPattern
+    where: Any = None  # Pred tree or WalkPattern
+    graph: Optional[str] = None
 
 
 @dataclass
@@ -168,7 +171,7 @@ class InferStmt:
     triples}) — declared by the reference with zero implementing LoC."""
     hidden: str            # hidden-variable group name
     events: list           # [{event_name: observed_symbol}, ...] in order
-    edges: list            # raw [src, {'->': weight}, dst] triples
+    edges: list = field(default_factory=list)  # raw [src, {'->': w}, dst]
 
 
 @dataclass
@@ -203,7 +206,7 @@ class SimilarStmt:
     given) — no broadcast of either side.  ``qon``/``nlist``/``nprobe``
     apply to the join form only."""
     group: str
-    to: Optional[list]
+    to: Optional[list] = None
     graph: Optional[str] = None
     top: int = 10
     on: str = "embedding"
@@ -508,12 +511,14 @@ class VIndexStmt:
 class RemoveVertexStmt:
     group: str
     where: Any
+    graph: Optional[str] = None
 
 
 @dataclass
 class RemoveEdgeStmt:
     group: str
     pattern: WalkPattern
+    graph: Optional[str] = None
 
 
 @dataclass

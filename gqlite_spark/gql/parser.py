@@ -12,6 +12,7 @@ execute split.
 
 from __future__ import annotations
 
+import dataclasses
 from typing import Any
 
 from ..errors import GQLParseError
@@ -107,7 +108,7 @@ class Parser:
                 return UseGraphStmt(self.expect(L.STRING).value)
             raise GQLParseError(f"unknown command {word!r} at offset {t.pos}")
         obj = self.parse_object()
-        return self._build_statement(obj)
+        return _build_statement(obj)
 
     # --------------------------------------------------------------- values
     def parse_value(self) -> Any:
@@ -274,781 +275,490 @@ class Parser:
             return ("neg", self._parse_factor())
         raise GQLParseError(f"bad lambda factor at offset {t.pos}")
 
-    # --------------------------------------------------- statement building
-    def _build_statement(self, obj: dict) -> Any:
-        if "create" in obj:
-            return CreateStmt(obj["create"], self._build_groups(obj.get("group", [])))
-        if "upset" in obj:
-            group = obj["upset"]
-            if "vertex" in obj:
-                return UpsetVertexStmt(group, self._build_vertices(obj["vertex"]))
-            if "edge" in obj:
-                return UpsetEdgeStmt(group, self._build_edges(obj["edge"]))
-            if "property" in obj:
-                return UpsetPropertyStmt(group, obj["property"],
-                                         self._build_where(obj.get("where")))
-            raise GQLParseError("upset requires vertex/edge/property")
-        if "query" in obj and "event" in obj:
-            # inference form (README.md:252-268): where holds weighted
-            # edge triples, not a walk pattern — keep them raw
-            events = obj["event"]
-            if not isinstance(events, list):
-                events = [events]
-            where = obj.get("where") or []
-            if not isinstance(where, list):
-                raise GQLParseError("infer: where must be an edge list")
-            return InferStmt(obj["query"], events, where)
-        if "query" in obj:
-            return QueryStmt(obj["query"], obj.get("in"),
-                             self._build_where(obj.get("where")),
-                             obj.get("from"))
-        if "remove" in obj:
-            group = obj["remove"]
-            if "vertex" in obj:
-                return RemoveVertexStmt(group, self._build_where(obj["vertex"]))
-            if "edge" in obj:
-                where = self._build_where(obj["edge"])
-                if not isinstance(where, WalkPattern):
-                    raise GQLParseError("remove edge requires a pattern")
-                return RemoveEdgeStmt(group, where)
-            raise GQLParseError("remove requires vertex/edge")
-        if "drop" in obj:
-            return DropStmt(obj["drop"])
-        if "dump" in obj:
-            return DumpStmt(obj["dump"])
-        if "dedup" in obj:
-            thr = obj.get("threshold", 0.8)
-            if not isinstance(thr, (int, float)) or isinstance(thr, bool):
-                raise GQLParseError("dedup: threshold must be a number")
-            best_by = obj.get("best_by")
-            if best_by is not None:
-                if not isinstance(best_by, str) or not best_by:
-                    raise GQLParseError(
-                        "dedup: best_by must be a property name")
-                if str(obj.get("method", "exact")) != "clusters":
-                    raise GQLParseError(
-                        "dedup: best_by requires method: 'clusters' "
-                        "(survivor selection happens per cluster)")
-            return DedupStmt(obj["dedup"], obj.get("in"),
-                             str(obj.get("method", "exact")),
-                             obj.get("on"), float(thr), best_by)
-        if "curate" in obj:
-            bench = obj.get("benchmark")
-            if not isinstance(bench, str) or not bench:
-                raise GQLParseError(
-                    "curate: benchmark must be a group name")
-            qmin = obj.get("quality_min", 0.5)
-            if (not isinstance(qmin, (int, float))
-                    or isinstance(qmin, bool)
-                    or not 0.0 <= float(qmin) <= 1.0):
-                raise GQLParseError(
-                    "curate: quality_min must be a number in [0, 1]")
-            ngram = obj.get("ngram", 8)
-            if (not isinstance(ngram, int) or isinstance(ngram, bool)
-                    or ngram < 1):
-                raise GQLParseError(
-                    "curate: ngram must be a positive integer")
-            method = str(obj.get("method", "exact"))
-            if method not in ("exact", "clusters"):
-                raise GQLParseError(
-                    "curate: method must be 'exact' or 'clusters'")
-            best_by = obj.get("best_by")
-            if best_by is not None and (not isinstance(best_by, str)
-                                        or not best_by):
-                raise GQLParseError(
-                    "curate: best_by must be a property name")
-            thr = obj.get("threshold", 0.7)
-            if not isinstance(thr, (int, float)) or isinstance(thr, bool):
-                raise GQLParseError("curate: threshold must be a number")
-            if "threshold" in obj and method != "clusters":
-                raise GQLParseError(
-                    "curate: threshold applies to method: 'clusters' "
-                    "(the near-dup Jaccard cut) only")
-            extra = sorted(set(obj) - {"curate", "benchmark", "in",
-                                       "on", "quality_min", "ngram",
-                                       "method", "best_by",
-                                       "threshold"})
-            if extra:
-                raise GQLParseError(
-                    f"curate: unknown key(s) {', '.join(extra)}")
-            return CurateStmt(obj["curate"], bench, obj.get("in"),
-                              str(obj.get("on", "text")), float(qmin),
-                              ngram, method, best_by, float(thr))
-        if "similar" in obj:
-            vec = obj.get("to")
-            qgrp = obj.get("queries")
-            if qgrp is not None:
-                if not isinstance(qgrp, str) or not qgrp:
-                    raise GQLParseError("similar: queries must be a "
-                                        "group name")
-                if vec is not None:
-                    raise GQLParseError("similar: to and queries are "
-                                        "mutually exclusive")
-            elif (not isinstance(vec, list) or not vec
-                    or not all(isinstance(x, (int, float))
-                               and not isinstance(x, bool) for x in vec)):
-                raise GQLParseError("similar: to must be a numeric vector")
-            top = obj.get("top", 10)
-            if not isinstance(top, int) or isinstance(top, bool) or top < 1:
-                raise GQLParseError("similar: top must be a positive integer")
-            idx = obj.get("index")
-            if idx is not None and (not isinstance(idx, str) or not idx):
-                raise GQLParseError("similar: index must be a path string")
-            nlist, nprobe = obj.get("nlist"), obj.get("nprobe")
-            for nm, v in (("nlist", nlist), ("nprobe", nprobe)):
-                if v is None:
-                    continue
-                if qgrp is None:
-                    raise GQLParseError(f"similar: {nm} applies to the "
-                                        "join form (queries:) only")
-                if not isinstance(v, int) or isinstance(v, bool) or v < 1:
-                    raise GQLParseError(f"similar: {nm} must be a "
-                                        "positive integer")
-            qon = obj.get("qon")
-            if qon is not None and qgrp is None:
-                raise GQLParseError("similar: qon applies to the join "
-                                    "form (queries:) only")
-            return SimilarStmt(obj["similar"],
-                               None if vec is None
-                               else [float(x) for x in vec],
-                               obj.get("in"), top,
-                               str(obj.get("on", "embedding")),
-                               str(obj.get("method", "brute")), idx,
-                               qgrp, None if qon is None else str(qon),
-                               nlist, nprobe)
-        if "chunk" in obj:
-            size = obj.get("size", 64)
-            overlap = obj.get("overlap", 8)
-            for nm, v in (("size", size), ("overlap", overlap)):
-                if not isinstance(v, int) or isinstance(v, bool) or v < 0:
-                    raise GQLParseError(
-                        f"chunk: {nm} must be a non-negative integer")
-            if size < 1:
-                raise GQLParseError("chunk: size must be >= 1")
-            if overlap >= size:
-                raise GQLParseError("chunk: overlap must be < size")
-            return ChunkStmt(obj["chunk"], obj.get("in"),
-                             str(obj.get("on", "text")), size, overlap)
-        if "funnel" in obj:
-            steps = obj.get("steps")
-            if (not isinstance(steps, list) or not steps
-                    or not all(isinstance(s, str) for s in steps)):
-                raise GQLParseError(
-                    "funnel: steps must be a non-empty string list")
-            within = obj.get("within")
-            if within is not None and (not isinstance(within, int)
-                                       or isinstance(within, bool)
-                                       or within < 0):
-                raise GQLParseError(
-                    "funnel: within must be a non-negative integer")
-            return FunnelStmt(obj["funnel"], steps, obj.get("in"),
-                              str(obj.get("by", "user_id")),
-                              str(obj.get("on", "event_type")),
-                              str(obj.get("ts", "ts")), within)
-        if "cohort" in obj:
-            bucket = obj.get("bucket", 86400)
-            if not isinstance(bucket, int) or isinstance(bucket, bool) \
-                    or bucket < 1:
-                raise GQLParseError(
-                    "cohort: bucket must be a positive integer (seconds)")
-            return CohortStmt(obj["cohort"], obj.get("in"),
-                              str(obj.get("by", "user_id")),
-                              str(obj.get("ts", "ts")), bucket)
-        if "sample" in obj:
-            rate, rates = obj.get("rate"), obj.get("rates")
-            clusters = obj.get("clusters")
-            if clusters is not None:
-                if rate is not None or rates is not None:
-                    raise GQLParseError(
-                        "sample: clusters is exclusive with rate / rates")
-                per = obj.get("per", 1)
-                for nm, v in (("clusters", clusters), ("per", per)):
-                    if not isinstance(v, int) or isinstance(v, bool) \
-                            or v < 1:
-                        raise GQLParseError(
-                            f"sample: {nm} must be a positive integer")
-                return SampleStmt(obj["sample"], obj.get("in"),
-                                  salt=str(obj.get("salt", "")),
-                                  clusters=int(clusters), per=int(per),
-                                  on=str(obj.get("on", "embedding")))
-            if (rate is None) == (rates is None):
-                raise GQLParseError(
-                    "sample: exactly one of rate / rates is required")
-            if rate is not None:
-                if not isinstance(rate, (int, float)) \
-                        or isinstance(rate, bool) or not 0 <= rate <= 1:
-                    raise GQLParseError("sample: rate must be in [0, 1]")
-            else:
-                if not isinstance(rates, dict) or not rates \
-                        or "by" not in obj:
-                    raise GQLParseError(
-                        "sample: rates requires a dict and a by: property")
-                for v in rates.values():
-                    if not isinstance(v, (int, float)) \
-                            or isinstance(v, bool) or not 0 <= v <= 1:
-                        raise GQLParseError(
-                            "sample: every rates value must be in [0, 1]")
-            dflt = obj.get("default", 0.0)
-            if not isinstance(dflt, (int, float)) or isinstance(dflt, bool) \
-                    or not 0 <= dflt <= 1:
-                raise GQLParseError("sample: default must be in [0, 1]")
-            return SampleStmt(obj["sample"], obj.get("in"),
-                              None if rate is None else float(rate),
-                              obj.get("by"),
-                              None if rates is None else
-                              {str(k): float(v) for k, v in rates.items()},
-                              float(dflt), str(obj.get("salt", "")))
-        if "vindex" in obj:
-            path = obj.get("path")
-            if not isinstance(path, str) or not path:
-                raise GQLParseError("vindex: a path: string is required")
-            nlist = obj.get("nlist")
-            if nlist is not None and (not isinstance(nlist, int)
-                                      or isinstance(nlist, bool)
-                                      or nlist < 1):
-                raise GQLParseError("vindex: nlist must be a positive "
-                                    "integer")
-            refine = obj.get("refine", 0)
-            if not isinstance(refine, int) or isinstance(refine, bool) \
-                    or refine < 0:
-                raise GQLParseError("vindex: refine must be a non-negative "
-                                    "integer")
-            compact = obj.get("compact", False)
-            if not isinstance(compact, bool):
-                if not (isinstance(compact, str) and compact.lower()
-                        in ("true", "false", "0", "1", "no", "yes")):
-                    raise GQLParseError(
-                        "vindex: compact must be true or false")
-                compact = self._flag(compact)
-            if compact and (nlist is not None or refine):
-                raise GQLParseError("vindex: compact folds the overlay "
-                                    "into the existing index — nlist/"
-                                    "refine do not apply")
-            pq = obj.get("pq", False)
-            if not isinstance(pq, bool):
-                pq = self._flag(str(pq))
-            if compact and ("m" in obj or "ksub" in obj):
-                raise GQLParseError(
-                    "vindex: compact folds the overlay into the "
-                    "existing index — m/ksub come from its sidecar")
-            m = obj.get("m", 8)
-            ksub = obj.get("ksub", 64)
-            for k, v in (("m", m), ("ksub", ksub)):
-                if not isinstance(v, int) or isinstance(v, bool) or v < 1:
-                    raise GQLParseError(
-                        f"vindex: {k} must be a positive integer")
-            if not pq and ("m" in obj or "ksub" in obj):
-                raise GQLParseError(
-                    "vindex: m/ksub size the product quantizer — add "
-                    "pq: true (the full-vector index has no codes)")
-            attach = obj.get("attach", False)
-            if not isinstance(attach, bool):
-                attach = self._flag(str(attach))
-            if attach and (compact or nlist is not None or refine
-                           or "m" in obj or "ksub" in obj or "pq" in obj):
-                raise GQLParseError(
-                    "vindex: attach re-wires an EXISTING index at path "
-                    "— the kind and parameters come from its sidecar "
-                    "(drop nlist/refine/pq/m/ksub/compact)")
-            return VIndexStmt(obj["vindex"], path, obj.get("in"),
-                              str(obj.get("on", "embedding")), nlist,
-                              refine, compact, pq, m, ksub, attach)
-        if "layout" in obj:
-            path = obj.get("path")
-            if not isinstance(path, str) or not path:
-                raise GQLParseError("layout: a path: string is required")
-            by = obj.get("by")
-            bucket_by = obj.get("bucket_by")
-            attach = obj.get("attach", False)
-            if not isinstance(attach, bool):
-                attach = self._flag(str(attach))
-            compact = obj.get("compact", False)
-            if not isinstance(compact, bool):
-                compact = self._flag(str(compact))
-            if compact and (by is not None or bucket_by is not None
-                            or attach or "files" in obj
-                            or "buckets" in obj):
-                raise GQLParseError(
-                    "layout: compact folds the overlay into the "
-                    "ALREADY-attached layout — drop "
-                    "by/bucket_by/files/buckets/attach")
-            if by is not None and bucket_by is not None:
-                raise GQLParseError(
-                    "layout: give at most one of by: (sort/z-order "
-                    "columns) and bucket_by: (hash-bucket key)")
-            if by is None and bucket_by is None and not attach \
-                    and not compact:
-                raise GQLParseError(
-                    "layout: exactly one of by: (sort/z-order columns) "
-                    "or bucket_by: (hash-bucket key) is required "
-                    "(or attach: true / compact: true for an existing "
-                    "layout)")
-            if by is not None:
-                if isinstance(by, str):
-                    by = [by]
-                if (not isinstance(by, list) or not by
-                        or not all(isinstance(c, str) and c for c in by)):
-                    raise GQLParseError(
-                        "layout: by must be a property name or a "
-                        "non-empty list of property names")
-            if bucket_by is not None and (
-                    not isinstance(bucket_by, str) or not bucket_by):
-                raise GQLParseError(
-                    "layout: bucket_by must be a property name")
-            files = obj.get("files", 16)
-            buckets = obj.get("buckets", 16)
-            for k, v in (("files", files), ("buckets", buckets)):
-                if not isinstance(v, int) or isinstance(v, bool) or v < 1:
-                    raise GQLParseError(
-                        f"layout: {k} must be a positive integer")
-            return LayoutStmt(obj["layout"], path, obj.get("in"),
-                              by, files, bucket_by, buckets, attach,
-                              compact)
-        if "topcount" in obj:
-            path = obj["topcount"]
-            if not isinstance(path, str) or not path:
-                raise GQLParseError(
-                    "topcount: the value must be the rollup path "
-                    "({topcount: '<path>', on: 'col', keys: [...]})")
-            on = obj.get("on")
-            if not isinstance(on, str) or not on:
-                raise GQLParseError(
-                    "topcount: on: (the cms metric's property name) "
-                    "is required")
-            keys = obj.get("keys")
-            if (not isinstance(keys, list) or not keys
-                    or not all(isinstance(k, (str, int, float))
-                               and not isinstance(k, bool)
-                               for k in keys)):
-                raise GQLParseError(
-                    "topcount: keys must be a non-empty list of "
-                    "literal keys to estimate")
-            extra = sorted(set(obj) - {"topcount", "on", "keys"})
-            if extra:
-                raise GQLParseError(
-                    f"topcount: unknown key(s) {', '.join(extra)}")
-            return TopcountStmt(path, on, list(keys))
-        if "quantiles" in obj:
-            path = obj["quantiles"]
-            if not isinstance(path, str) or not path:
-                raise GQLParseError(
-                    "quantiles: the value must be the rollup path "
-                    "({quantiles: '<path>', on: 'col', qs: [...]})")
-            on = obj.get("on")
-            if not isinstance(on, str) or not on:
-                raise GQLParseError(
-                    "quantiles: on: (the hist metric's property name) "
-                    "is required")
-            qs = obj.get("qs")
 
-            def _frac(x):
-                return (isinstance(x, (int, float))
-                        and not isinstance(x, bool) and 0 <= x <= 1)
-            if (not isinstance(qs, list) or not qs
-                    or not all(_frac(x) for x in qs)):
-                raise GQLParseError(
-                    "quantiles: qs must be a non-empty list of "
-                    "numbers in [0, 1]")
-            extra = sorted(set(obj) - {"quantiles", "on", "qs"})
-            if extra:
-                raise GQLParseError(
-                    f"quantiles: unknown key(s) {', '.join(extra)}")
-            return QuantilesStmt(path, on, [float(x) for x in qs])
-        if "rollup" in obj:
-            read = obj.get("read", False)
-            if not isinstance(read, bool):
-                read = self._flag(str(read))
-            if read:
-                path = obj["rollup"]
-                if not isinstance(path, str) or not path:
-                    raise GQLParseError(
-                        "rollup read: the statement value must be the "
-                        "rollup path ({rollup: '<path>', read: true})")
-                avg = obj.get("avg")
-                if avg is not None:
-                    if isinstance(avg, str):
-                        avg = [avg]
-                    if (not isinstance(avg, list) or not avg
-                            or not all(isinstance(c, str) and c
-                                       for c in avg)):
-                        raise GQLParseError(
-                            "rollup read: avg must be a property name "
-                            "or a non-empty list of property names")
-                extra = sorted(set(obj) - {"rollup", "read", "avg"})
-                if extra:
-                    raise GQLParseError(
-                        f"rollup read: unknown key(s) "
-                        f"{', '.join(extra)} (buckets and metrics come "
-                        "from the rollup's own spec sidecar)")
-                return ReadRollupStmt(path, avg)
-            path = obj.get("path")
-            if not isinstance(path, str) or not path:
-                raise GQLParseError("rollup: a path: string is required")
-            append = obj.get("append", False)
-            if not isinstance(append, bool):
-                append = self._flag(str(append))
-            if append:
-                extra = sorted(set(obj)
-                               & {"ts", "every", "by", "metrics",
-                                  "hist", "cms"})
-                if extra:
-                    raise GQLParseError(
-                        f"rollup append: {', '.join(extra)} come from the "
-                        "rollup's own spec sidecar — drop them")
-                return RollupStmt(obj["rollup"], path, obj.get("in"),
-                                  append=True)
-            every = obj.get("every", 3600)
-            if not isinstance(every, int) or isinstance(every, bool) \
-                    or every < 1:
-                raise GQLParseError(
-                    "rollup: every must be a positive integer (seconds)")
-            by = obj.get("by")
-            if by is not None:
-                if isinstance(by, str):
-                    by = [by]
-                if (not isinstance(by, list) or not by
-                        or not all(isinstance(c, str) and c for c in by)):
-                    raise GQLParseError(
-                        "rollup: by must be a property name or a "
-                        "non-empty list of property names")
-            metrics = obj.get("metrics")
-            if metrics is not None:
-                if (not isinstance(metrics, dict)
-                        or not all(isinstance(k, str) and isinstance(v, list)
-                                   and all(isinstance(f, str) for f in v)
-                                   for k, v in metrics.items())):
-                    raise GQLParseError(
-                        "rollup: metrics must map property names to "
-                        "lists of aggregate names (sum/min/max/kmv)")
-            ts = obj.get("ts", "ts")
-            if not isinstance(ts, str) or not ts:
-                raise GQLParseError("rollup: ts must be a property name")
-            hist = obj.get("hist")
-            if hist is not None:
-                def _num(x):
-                    return (isinstance(x, (int, float))
-                            and not isinstance(x, bool))
-                def _bins(x):
-                    # bool is an int subclass: hist: {v: [0, 10, true]}
-                    # must not silently become a 1-bin histogram
-                    return (isinstance(x, int)
-                            and not isinstance(x, bool) and x >= 1)
-                if (not isinstance(hist, dict)
-                        or not all(isinstance(c, str) and isinstance(v, list)
-                                   and len(v) == 3 and _num(v[0])
-                                   and _num(v[1]) and _bins(v[2])
-                                   and v[0] < v[1]
-                                   for c, v in hist.items())):
-                    raise GQLParseError(
-                        "rollup: hist must map property names to "
-                        "[lo, hi, bins] (numeric lo < hi, bins a "
-                        "positive integer)")
-            cms = obj.get("cms")
-            if cms is not None:
-                def _posint(x):
-                    return (isinstance(x, int)
-                            and not isinstance(x, bool) and x >= 1)
-                if (not isinstance(cms, dict)
-                        or not all(isinstance(c, str) and isinstance(v, list)
-                                   and len(v) == 2 and _posint(v[0])
-                                   and _posint(v[1])
-                                   for c, v in cms.items())):
-                    raise GQLParseError(
-                        "rollup: cms must map property names to "
-                        "[d, w] (positive integers — count-min rows "
-                        "and width)")
-            return RollupStmt(obj["rollup"], path, obj.get("in"),
-                              ts, every, by, metrics, False, hist, cms)
-        if "shards" in obj:
-            path = obj.get("path")
-            if not isinstance(path, str) or not path:
-                raise GQLParseError("shards: a path: string is required")
-            nsh = obj.get("n", 32)
-            if not isinstance(nsh, int) or isinstance(nsh, bool) or nsh < 1:
-                raise GQLParseError("shards: n must be a positive integer")
-            return ShardsStmt(obj["shards"], path, obj.get("in"),
-                              nsh, str(obj.get("salt", "")))
-        if "split" in obj:
-            weights = obj.get("weights")
-            if weights is not None:
-                if (not isinstance(weights, dict) or not weights
-                        or not all(isinstance(v, (int, float))
-                                   and not isinstance(v, bool)
-                                   and 0 <= v <= 1
-                                   for v in weights.values())):
-                    raise GQLParseError(
-                        "split: weights must be a dict of fractions "
-                        "in [0, 1]")
-                if abs(sum(weights.values()) - 1.0) > 1e-9:
-                    raise GQLParseError("split: weights must sum to 1")
-            by = obj.get("by")
-            if by is not None and (not isinstance(by, str) or not by):
-                raise GQLParseError("split: by must be a property name")
-            extra = sorted(set(obj) - {"split", "in", "weights", "by",
-                                       "salt"})
-            if extra:
-                raise GQLParseError(
-                    f"split: unknown key(s) {', '.join(extra)}")
-            return SplitStmt(obj["split"], obj.get("in"),
-                             None if weights is None else
-                             {str(k): float(v)
-                              for k, v in weights.items()},
-                             by, str(obj.get("salt", "")))
-        if "budget" in obj:
-            tokens = obj.get("tokens")
-            if not isinstance(tokens, int) or isinstance(tokens, bool) \
-                    or tokens < 0:
-                raise GQLParseError(
-                    "budget: tokens must be a non-negative integer")
-            for nm in ("by", "on"):
-                v = obj.get(nm)
-                if v is not None and (not isinstance(v, str) or not v):
-                    raise GQLParseError(
-                        f"budget: {nm} must be a property name")
-            extra = sorted(set(obj) - {"budget", "in", "tokens", "by",
-                                       "on"})
-            if extra:
-                raise GQLParseError(
-                    f"budget: unknown key(s) {', '.join(extra)}")
-            return BudgetStmt(obj["budget"], int(tokens), obj.get("in"),
-                              str(obj.get("by", "quality")),
-                              str(obj.get("on", "n_tokens")))
-        if "retrieve" in obj:
-            terms = obj.get("terms")
-            if (not isinstance(terms, list) or not terms
-                    or not all(isinstance(t, str) and t for t in terms)):
-                raise GQLParseError(
-                    "retrieve: terms must be a non-empty string list")
-            top = obj.get("top", 20)
-            if not isinstance(top, int) or isinstance(top, bool) \
-                    or top < 1:
-                raise GQLParseError(
-                    "retrieve: top must be a positive integer")
-            k1 = obj.get("k1", 1.2)
-            if (not isinstance(k1, (int, float)) or isinstance(k1, bool)
-                    or k1 <= 0):
-                raise GQLParseError(
-                    "retrieve: k1 must be a positive number")
-            bb = obj.get("b", 0.75)
-            if (not isinstance(bb, (int, float)) or isinstance(bb, bool)
-                    or not 0 <= bb <= 1):
-                raise GQLParseError("retrieve: b must be in [0, 1]")
-            near, vectors = obj.get("near"), obj.get("vectors")
-            if (near is None) != (vectors is None):
-                raise GQLParseError(
-                    "retrieve: near and vectors come together "
-                    "(hybrid needs both the query vector and the "
-                    "embedding group)")
-            if near is not None:
-                if (not isinstance(near, list) or not near
-                        or not all(isinstance(x, (int, float))
-                                   and not isinstance(x, bool)
-                                   for x in near)):
-                    raise GQLParseError(
-                        "retrieve: near must be a numeric vector")
-                if not isinstance(vectors, str) or not vectors:
-                    raise GQLParseError(
-                        "retrieve: vectors must be a group name")
-            fuse = obj.get("fuse", 60)
-            if not isinstance(fuse, int) or isinstance(fuse, bool) \
-                    or fuse < 1:
-                raise GQLParseError(
-                    "retrieve: fuse must be a positive integer")
-            if "fuse" in obj and near is None:
-                raise GQLParseError(
-                    "retrieve: fuse applies to the hybrid form "
-                    "(near/vectors) only")
-            extra = sorted(set(obj) - {"retrieve", "in", "terms", "top",
-                                       "on", "k1", "b", "near",
-                                       "vectors", "von", "fuse"})
-            if extra:
-                raise GQLParseError(
-                    f"retrieve: unknown key(s) {', '.join(extra)}")
-            return RetrieveStmt(obj["retrieve"], [str(t) for t in terms],
-                                obj.get("in"), int(top),
-                                str(obj.get("on", "text")), float(k1),
-                                float(bb),
-                                None if near is None else
-                                [float(x) for x in near],
-                                vectors, str(obj.get("von", "embedding")),
-                                int(fuse))
-        raise GQLParseError(f"unrecognized statement keys: {sorted(obj)}")
+# ------------------------------------------------------------ where clauses
+def _where(raw: Any) -> Any:
+    if raw is None:
+        return None
+    if isinstance(raw, list):
+        return _pattern(raw)
+    if isinstance(raw, dict):
+        return _pred_conj(raw)
+    # bare key → id equality (walk position, ScanPlan.cpp:575-592)
+    return Pred("id", "eq", raw)
 
-    def _build_groups(self, raw: list) -> list[GroupDef]:
-        groups: list[GroupDef] = []
-        for el in raw:
-            if isinstance(el, str):
-                groups.append(GroupDef(el))
-            elif isinstance(el, dict):
-                gd = GroupDef("")
-                for k, v in el.items():
-                    if k == "index":
-                        gd.index = v if isinstance(v, list) else [v]
-                    else:
+
+def _pred_conj(obj: dict) -> Pred:
+    preds = [_pred(k, v) for k, v in obj.items()]
+    if len(preds) == 1:
+        return preds[0]
+    return Pred(None, "and", children=preds)
+
+
+def _pred(key: str, val: Any) -> Pred:
+    if key == "$and":
+        return Pred(None, "and", children=[_where(v) for v in val])
+    if key == "$or":
+        return Pred(None, "or", children=[_where(v) for v in val])
+    if key in ("--", "->", "<-"):
+        # k-hop neighbor spec (README.md:244-246)
+        return Pred(None, "khop", {"direction": key, "hops": val})
+    if val is STAR or isinstance(val, Wildcard):
+        return Pred(key, "exists")
+    if isinstance(val, dict):
+        return _op_pred(key, val)
+    if isinstance(val, list):
+        return Pred(key, "in", val)
+    return Pred(key, "eq", val)
+
+
+def _op_pred(attr: str, spec: dict) -> Pred:
+    ops = {k.lstrip("$"): v for k, v in spec.items()}
+    if "near" in ops:
+        extra = sorted(set(ops) - {"near", "limit", "exact"})
+        if extra:
+            raise GQLParseError(
+                f"unknown operator ${extra[0]} beside $near on {attr}")
+        geom, radius, radius_op = ops["near"], None, "lte"
+        if isinstance(geom, dict):
+            near = geom
+            geom = near.get("$geometry") or near.get("geometry")
+            op = next((o for o in ("lte", "lt")
+                       if f"${o}" in near or o in near), None)
+            if op:
+                radius, radius_op = near.get(f"${op}", near.get(op)), op
+        exact = ("exact" in ops
+                 and _value(f"$near on {attr}", "exact", ops["exact"], "flag"))
+        return Pred(attr, "near", {"geometry": geom, "radius": radius,
+                                   "radius_op": radius_op,
+                                   "limit": ops.get("limit"),
+                                   "exact": exact})
+    children = []
+    for op, v in ops.items():
+        if op in ("lt", "gt", "lte", "gte", "eq"):
+            children.append(Pred(attr, op, v))
+        elif op != "limit":
+            raise GQLParseError(f"unknown operator ${op} on {attr}")
+    if len(children) == 1:
+        return children[0]
+    return Pred(None, "and", children=children)
+
+
+def _pattern(raw: list) -> WalkPattern:
+    nodes: list[PatternNode] = []
+    conns: list[EdgeConn] = []
+    expect_node = True
+    for el in raw:
+        if isinstance(el, _ArrowElem):
+            conn = EdgeConn(el.direction)
+            if isinstance(el.value, CallExpr):
+                conn.agg = el.value
+            elif isinstance(el.value, str):
+                conn.edge_group = el.value
+            elif isinstance(el.value, dict):
+                conn.props = el.value
+            conns.append(conn)
+            expect_node = True
+            continue
+        if isinstance(el, dict) and len(el) == 1 and next(iter(el)) in ("--", "->", "<-"):
+            d, v = next(iter(el.items()))
+            conn = EdgeConn(d)
+            if isinstance(v, str):
+                conn.edge_group = v
+            elif isinstance(v, dict):
+                conn.props = v
+            conns.append(conn)
+            expect_node = True
+            continue
+        if not expect_node:
+            raise GQLParseError(f"expected connection in pattern, got {el!r}")
+        if el is STAR or isinstance(el, Wildcard):
+            nodes.append(PatternNode(wildcard=True))
+        elif isinstance(el, dict):
+            nodes.append(PatternNode(conds=_pred_conj(el) if el else None))
+        else:
+            nodes.append(PatternNode(key=el))
+        expect_node = False
+    if len(nodes) != len(conns) + 1:
+        raise GQLParseError(
+            f"malformed pattern: {len(nodes)} nodes / {len(conns)} connections")
+    return WalkPattern(nodes, conns)
+
+
+# ------------------------------------------------ create / upset values
+def _groups(raw: list) -> list[GroupDef]:
+    groups: list[GroupDef] = []
+    for el in raw:
+        if isinstance(el, str):
+            groups.append(GroupDef(el))
+        elif isinstance(el, dict):
+            gd = GroupDef("")
+            for k, v in el.items():
+                if k == "index":
+                    gd.index = v if isinstance(v, list) else [v]
+                else:
+                    gd.name = k
+                    gd.props = v if isinstance(v, list) else [v]
+            groups.append(gd)
+        elif isinstance(el, list):
+            # edge group: [from, name|{name:props}, to]
+            if len(el) < 3:
+                raise GQLParseError(f"bad edge group def: {el!r}")
+            src, mid, dst = el[0], el[1:-1], el[-1]
+            gd = GroupDef("", is_edge=True, src_group=src, dst_group=dst)
+            for m in mid:
+                if isinstance(m, str):
+                    gd.name = m
+                elif isinstance(m, dict):
+                    for k, v in m.items():
                         gd.name = k
                         gd.props = v if isinstance(v, list) else [v]
-                groups.append(gd)
-            elif isinstance(el, list):
-                # edge group: [from, name|{name:props}, to]
-                if len(el) < 3:
-                    raise GQLParseError(f"bad edge group def: {el!r}")
-                src, mid, dst = el[0], el[1:-1], el[-1]
-                gd = GroupDef("", is_edge=True, src_group=src, dst_group=dst)
-                for m in mid:
-                    if isinstance(m, str):
-                        gd.name = m
-                    elif isinstance(m, dict):
-                        for k, v in m.items():
-                            gd.name = k
-                            gd.props = v if isinstance(v, list) else [v]
-                groups.append(gd)
-            else:
-                raise GQLParseError(f"bad group def: {el!r}")
-        return groups
+            groups.append(gd)
+        else:
+            raise GQLParseError(f"bad group def: {el!r}")
+    return groups
 
-    def _build_vertices(self, raw: Any) -> list[tuple]:
-        if not isinstance(raw, list):
-            raw = [raw]
-        # flat single-vertex form (dump output): vertex: [key, {props}]
-        if (len(raw) == 2 and not isinstance(raw[0], (list, dict))
-                and isinstance(raw[1], dict)):
-            return [(raw[0], raw[1])]
-        out = []
-        for el in raw:
-            if isinstance(el, list):
-                key = el[0]
-                props = el[1] if len(el) > 1 else None
-                out.append((key, props))
-            elif isinstance(el, dict):
-                raise GQLParseError(f"bad vertex declaration: {el!r}")
-            else:
-                out.append((el, None))
-        return out
 
-    def _build_edges(self, raw: Any) -> list[tuple]:
-        if not isinstance(raw, list):
-            raise GQLParseError("edge value must be an array")
-        decls = raw if raw and isinstance(raw[0], list) else [raw]
-        out = []
-        for d in decls:
-            if len(d) != 3 or not isinstance(d[1], _ArrowElem):
-                raise GQLParseError(f"bad edge declaration: {d!r}")
-            arrow = d[1]
-            props = arrow.value if isinstance(arrow.value, dict) else None
-            out.append((d[0], arrow.direction, d[2], props))
-        return out
+def _vertices(raw: Any) -> list[tuple]:
+    if not isinstance(raw, list):
+        raw = [raw]
+    # flat single-vertex form (dump output): vertex: [key, {props}]
+    if (len(raw) == 2 and not isinstance(raw[0], (list, dict))
+            and isinstance(raw[1], dict)):
+        return [(raw[0], raw[1])]
+    out = []
+    for el in raw:
+        if isinstance(el, list):
+            out.append((el[0], el[1] if len(el) > 1 else None))
+        elif isinstance(el, dict):
+            raise GQLParseError(f"bad vertex declaration: {el!r}")
+        else:
+            out.append((el, None))
+    return out
 
-    # ------------------------------------------------------------- where
-    def _build_where(self, raw: Any) -> Any:
-        if raw is None:
-            return None
-        if isinstance(raw, list):
-            return self._build_pattern(raw)
-        if isinstance(raw, dict):
-            return self._build_pred_conj(raw)
-        # bare key → id equality (walk position, ScanPlan.cpp:575-592)
-        return Pred("id", "eq", raw)
 
-    def _build_pred_conj(self, obj: dict) -> Pred:
-        preds = [self._build_pred(k, v) for k, v in obj.items()]
-        if len(preds) == 1:
-            return preds[0]
-        return Pred(None, "and", children=preds)
+def _edges(raw: Any) -> list[tuple]:
+    if not isinstance(raw, list):
+        raise GQLParseError("edge value must be an array")
+    decls = raw if raw and isinstance(raw[0], list) else [raw]
+    out = []
+    for d in decls:
+        if len(d) != 3 or not isinstance(d[1], _ArrowElem):
+            raise GQLParseError(f"bad edge declaration: {d!r}")
+        arrow = d[1]
+        props = arrow.value if isinstance(arrow.value, dict) else None
+        out.append((d[0], arrow.direction, d[2], props))
+    return out
 
-    def _build_pred(self, key: str, val: Any) -> Pred:
-        if key == "$and":
-            return Pred(None, "and",
-                        children=[self._build_where(v) for v in val])
-        if key == "$or":
-            return Pred(None, "or",
-                        children=[self._build_where(v) for v in val])
-        if key in ("--", "->", "<-"):
-            # k-hop neighbor spec (README.md:244-246)
-            return Pred(None, "khop", {"direction": key, "hops": val})
-        if val is STAR or isinstance(val, Wildcard):
-            return Pred(key, "exists")
-        if isinstance(val, dict):
-            return self._build_op_pred(key, val)
-        if isinstance(val, list):
-            return Pred(key, "in", val)
-        return Pred(key, "eq", val)
 
-    @staticmethod
-    def _flag(v: Any) -> bool:
-        """Boolean-ish GQL value: bare identifiers tokenize as strings, so
-        ``exact: false`` arrives as the (truthy) string 'false'."""
-        if isinstance(v, str):
-            return v.lower() not in ("false", "0", "no", "")
-        return bool(v)
+# ------------------------------------------------------- statement keys
+#
+# A statement's keys are its head key (filling its dataclass's first
+# field), ``in`` (its ``graph`` field) and the names of its other fields,
+# spelled as _KEY says where GQL names a field differently.  Any other
+# key is an error, and an absent key takes the dataclass default.
 
-    def _build_op_pred(self, attr: str, spec: dict) -> Pred:
-        ops = {k.lstrip("$"): v for k, v in spec.items()}
-        if "near" in ops:
-            near = ops["near"]
-            if isinstance(near, dict):
-                geom = near.get("$geometry") or near.get("geometry")
-                radius_op = next((o for o in ("lte", "lt")
-                                  if f"${o}" in near or o in near), None)
-                radius = near.get(f"${radius_op}", near.get(radius_op)) if radius_op else None
-                return Pred(attr, "near", {"geometry": geom, "radius": radius,
-                                           "radius_op": radius_op or "lte",
-                                           "limit": ops.get("limit"),
-                                           "exact": self._flag(ops.get("exact"))})
-            return Pred(attr, "near", {"geometry": near, "radius": None,
-                                       "radius_op": "lte",
-                                       "limit": ops.get("limit"),
-                                       "exact": self._flag(ops.get("exact"))})
-        children = []
-        for op, v in ops.items():
-            if op in ("lt", "gt", "lte", "gte", "eq"):
-                children.append(Pred(attr, op, v))
-            elif op == "limit":
-                continue
-            else:
-                raise GQLParseError(f"unknown operator ${op} on {attr}")
-        if len(children) == 1:
-            return children[0]
-        return Pred(None, "and", children=children)
+def _int(v: Any) -> bool:
+    return isinstance(v, int) and not isinstance(v, bool)
 
-    def _build_pattern(self, raw: list) -> WalkPattern:
-        nodes: list[PatternNode] = []
-        conns: list[EdgeConn] = []
-        expect_node = True
-        for el in raw:
-            if isinstance(el, _ArrowElem):
-                conn = EdgeConn(el.direction)
-                if isinstance(el.value, CallExpr):
-                    conn.agg = el.value
-                elif isinstance(el.value, str):
-                    conn.edge_group = el.value
-                elif isinstance(el.value, dict):
-                    conn.props = el.value
-                conns.append(conn)
-                expect_node = True
-                continue
-            if isinstance(el, dict) and len(el) == 1 and next(iter(el)) in ("--", "->", "<-"):
-                d, v = next(iter(el.items()))
-                conn = EdgeConn(d)
-                if isinstance(v, str):
-                    conn.edge_group = v
-                elif isinstance(v, dict):
-                    conn.props = v
-                conns.append(conn)
-                expect_node = True
-                continue
-            if not expect_node:
-                raise GQLParseError(f"expected connection in pattern, got {el!r}")
-            if el is STAR or isinstance(el, Wildcard):
-                nodes.append(PatternNode(wildcard=True))
-            elif isinstance(el, dict):
-                nodes.append(PatternNode(conds=el))
-            else:
-                nodes.append(PatternNode(key=el))
-            expect_node = False
-        if len(nodes) != len(conns) + 1:
+
+def _num(v: Any) -> bool:
+    return isinstance(v, (int, float)) and not isinstance(v, bool)
+
+
+def _frac(v: Any) -> bool:
+    return _num(v) and 0 <= v <= 1
+
+
+def _word(v: Any) -> bool:
+    return isinstance(v, str) and v != ""
+
+
+def _all(ok):
+    return lambda v: isinstance(v, list) and bool(v) and all(map(ok, v))
+
+
+def _map(ok):
+    return lambda v: (isinstance(v, dict) and bool(v)
+                      and all(map(ok, v.values())))
+
+
+def _floats(v: list) -> list:
+    return [float(x) for x in v]
+
+
+# shape -> (what a good value is, its check, its conversion)
+_SHAPES = {
+    "positive": ("a positive integer", lambda v: _int(v) and v >= 1, None),
+    "count": ("a non-negative integer", lambda v: _int(v) and v >= 0, None),
+    "number": ("a number", _num, float),
+    "positive number": ("a positive number", lambda v: _num(v) and v > 0,
+                        float),
+    "fraction": ("a number in [0, 1]", _frac, float),
+    "name": ("a property name", _word, None),
+    "group": ("a group name", _word, None),
+    "graph": ("a graph name", _word, None),
+    "path": ("a path string", _word, None),
+    "rollup": ("the rollup path", _word, None),
+    "text": ("a string", lambda v: isinstance(v, str), None),
+    "flag": ("true or false",
+             lambda v: isinstance(v, str) and v.lower() in ("true", "false"),
+             lambda v: v.lower() == "true"),
+    "vector": ("a non-empty numeric vector", _all(_num), _floats),
+    "words": ("a non-empty list of strings", _all(_word), None),
+    "names": ("a property name or a non-empty list of property names",
+              lambda v: _word(v) or _all(_word)(v),
+              lambda v: [v] if isinstance(v, str) else v),
+    "keys": ("a non-empty list of literal keys",
+             _all(lambda k: _num(k) or isinstance(k, str)), None),
+    "fractions": ("a non-empty list of numbers in [0, 1]", _all(_frac),
+                  _floats),
+    "fraction map": ("a map of fractions in [0, 1]", _map(_frac),
+                     lambda v: {k: float(x) for k, x in v.items()}),
+    "metrics": ("a map of property names to lists of aggregate names "
+                "(sum/min/max/kmv/hist/cms)",
+                _map(_all(lambda f: isinstance(f, str))), None),
+    "hist": ("a map of property names to [lo, hi, bins] (numeric lo < hi, "
+             "bins a positive integer)",
+             _map(lambda x: isinstance(x, list) and len(x) == 3
+                  and _num(x[0]) and _num(x[1]) and x[0] < x[1]
+                  and _int(x[2]) and x[2] >= 1), None),
+    "cms": ("a map of property names to [d, w] (positive integers — "
+            "count-min rows and width)",
+            _map(lambda x: isinstance(x, list) and len(x) == 2
+                 and all(_int(y) and y >= 1 for y in x)), None),
+    "object": ("an object", lambda v: isinstance(v, dict), None),
+    "list": ("an edge list", lambda v: isinstance(v, list), None),
+    "pattern": ("a walk pattern", lambda v: isinstance(v, list), _pattern),
+    "any": ("a value", lambda v: True, None),
+    # the builders raise their own errors
+    "where": ("a where clause", lambda v: True, _where),
+    "groups": ("a group list", lambda v: True, _groups),
+    "vertices": ("a vertex list", lambda v: True, _vertices),
+    "edges": ("an edge list", lambda v: True, _edges),
+    "events": ("an event list", lambda v: True,
+               lambda v: v if isinstance(v, list) else [v]),
+}
+
+# field -> key, where the two differ; a (statement, field) entry wins
+_KEY = {
+    "graph": "in", "groups": "group", "vertices": "vertex", "edges": "edge",
+    "props": "property", "from_key": "from", "events": "event",
+    (RemoveVertexStmt, "where"): "vertex", (RemoveEdgeStmt, "pattern"): "edge",
+    (InferStmt, "edges"): "where",
+}
+
+# key -> shape; a (statement, key) entry wins
+_SHAPE = {
+    **dict.fromkeys(("create", "drop", "dump", "in"), "graph"),
+    **dict.fromkeys(("upset", "remove", "dedup", "curate", "similar",
+                     "chunk", "funnel", "cohort", "sample", "vindex",
+                     "layout", "rollup", "shards", "split", "budget",
+                     "retrieve", "benchmark", "queries", "vectors"),
+                    "group"),
+    **dict.fromkeys(("on", "by", "ts", "best_by", "bucket_by", "qon",
+                     "von"), "name"),
+    **dict.fromkeys(("path", "index"), "path"),
+    **dict.fromkeys(("topcount", "quantiles"), "rollup"),
+    **dict.fromkeys(("method", "salt"), "text"),
+    **dict.fromkeys(("top", "ngram", "nlist", "nprobe", "size", "bucket",
+                     "clusters", "per", "m", "ksub", "files", "buckets",
+                     "every", "n", "fuse"), "positive"),
+    **dict.fromkeys(("overlap", "within", "refine", "tokens"), "count"),
+    **dict.fromkeys(("quality_min", "rate", "default", "b"), "fraction"),
+    **dict.fromkeys(("compact", "pq", "attach", "append", "read"), "flag"),
+    **dict.fromkeys(("to", "near"), "vector"),
+    **dict.fromkeys(("steps", "terms"), "words"),
+    **dict.fromkeys(("rates", "weights"), "fraction map"),
+    "threshold": "number", "k1": "positive number", "avg": "names",
+    "keys": "keys", "qs": "fractions", "metrics": "metrics", "hist": "hist",
+    "cms": "cms", "query": "any", "from": "any", "where": "where",
+    "group": "groups", "vertex": "vertices", "edge": "edges",
+    "property": "object", "event": "events",
+    (LayoutStmt, "by"): "names", (RollupStmt, "by"): "names",
+    (ReadRollupStmt, "rollup"): "rollup", (InferStmt, "where"): "list",
+    (RemoveVertexStmt, "vertex"): "where", (RemoveEdgeStmt, "edge"): "pattern",
+}
+
+
+def _value(stmt: str, key: str, v: Any, shape: str) -> Any:
+    what, ok, conv = _SHAPES[shape]
+    if not ok(v):
+        raise GQLParseError(f"{stmt}: {key} must be {what}")
+    return conv(v) if conv else v
+
+
+def _read(stmt: str, head: str, obj: dict, cls: type) -> Any:
+    """Build ``cls`` from the statement object: every key checked, every
+    absent key left to the dataclass default."""
+    fields = dataclasses.fields(cls)
+    keys = [head] + [_KEY.get((cls, f.name)) or _KEY.get(f.name, f.name)
+                     for f in fields[1:]]
+    extra = sorted(set(obj) - set(keys))
+    if extra:
+        raise GQLParseError(f"{stmt}: unknown key(s) {', '.join(extra)}")
+    kw = {}
+    for f, key in zip(fields, keys):
+        shape = _SHAPE.get((cls, key)) or _SHAPE[key]
+        if key in obj:
+            kw[f.name] = _value(stmt, key, obj[key], shape)
+        elif f.default is f.default_factory is dataclasses.MISSING:
             raise GQLParseError(
-                f"malformed pattern: {len(nodes)} nodes / {len(conns)} connections")
-        return WalkPattern(nodes, conns)
+                f"{stmt}: {key}: {_SHAPES[shape][0]} is required")
+    return cls(**kw)
+
+
+# ------------------------------------------------- multi-key statement rules
+# Each returns the error for a statement whose keys are each well formed
+# but do not go together, or None.
+
+def _dedup_rules(s: DedupStmt, keys: set):
+    if s.best_by is not None and s.method != "clusters":
+        return ("best_by requires method: 'clusters' (survivor selection "
+                "happens per cluster)")
+
+
+def _curate_rules(s: CurateStmt, keys: set):
+    if s.method not in ("exact", "clusters"):
+        return "method must be 'exact' or 'clusters'"
+    if "threshold" in keys and s.method != "clusters":
+        return ("threshold applies to method: 'clusters' (the near-dup "
+                "Jaccard cut) only")
+
+
+def _similar_rules(s: SimilarStmt, keys: set):
+    if s.queries is not None:
+        if s.to is not None:
+            return "to and queries are mutually exclusive"
+    elif s.to is None:
+        return "to: a non-empty numeric vector (or queries:) is required"
+    elif keys & {"nlist", "nprobe", "qon"}:
+        join_only = ", ".join(sorted(keys & {"nlist", "nprobe", "qon"}))
+        return f"{join_only} applies to the join form (queries:) only"
+
+
+def _chunk_rules(s: ChunkStmt, keys: set):
+    if s.overlap >= s.size:
+        return "overlap must be < size"
+
+
+_SAMPLE_ONLY = {"clusters": {"per", "on"}, "rates": {"by", "default"},
+                "rate": set()}
+
+
+def _sample_rules(s: SampleStmt, keys: set):
+    form = [k for k in _SAMPLE_ONLY if k in keys]
+    if len(form) != 1:
+        return ("exactly one of clusters / rate / rates is required (they "
+                "are mutually exclusive)")
+    stray = keys & set().union(*(v for k, v in _SAMPLE_ONLY.items()
+                                 if k != form[0]))
+    if stray:
+        return f"{', '.join(sorted(stray))} do not apply to {form[0]}:"
+    if form == ["rates"] and s.by is None:
+        return "rates requires a by: property"
+
+
+def _vindex_rules(s: VIndexStmt, keys: set):
+    pq_keys = keys & {"m", "ksub"}
+    if s.compact and ("nlist" in keys or s.refine):
+        return ("compact folds the overlay into the existing index — "
+                "nlist/refine do not apply")
+    if s.compact and pq_keys:
+        return ("compact folds the overlay into the existing index — "
+                "m/ksub come from its sidecar")
+    if pq_keys and not s.pq:
+        return ("m/ksub size the product quantizer — add pq: true (the "
+                "full-vector index has no codes)")
+    if s.attach and (s.compact or keys & {"nlist", "refine", "pq", "m",
+                                          "ksub"}):
+        return ("attach re-wires an EXISTING index at path — the kind and "
+                "parameters come from its sidecar (drop nlist/refine/pq/"
+                "m/ksub/compact)")
+
+
+def _layout_rules(s: LayoutStmt, keys: set):
+    if s.compact and (s.by is not None or s.bucket_by is not None
+                      or s.attach or keys & {"files", "buckets"}):
+        return ("compact folds the overlay into the ALREADY-attached "
+                "layout — drop by/bucket_by/files/buckets/attach")
+    if s.by is not None and s.bucket_by is not None:
+        return ("give at most one of by: (sort/z-order columns) and "
+                "bucket_by: (hash-bucket key)")
+    if s.by is None and s.bucket_by is None and not (s.attach or s.compact):
+        return ("exactly one of by: (sort/z-order columns) or bucket_by: "
+                "(hash-bucket key) is required (or attach: true / "
+                "compact: true for an existing layout)")
+
+
+def _rollup_rules(s: RollupStmt, keys: set):
+    spec = sorted(keys & {"ts", "every", "by", "metrics", "hist", "cms"})
+    if s.append and spec:
+        return (f"append: true takes {', '.join(spec)} from the rollup's "
+                "own spec sidecar — drop them")
+
+
+def _split_rules(s: SplitStmt, keys: set):
+    if s.weights is not None and abs(sum(s.weights.values()) - 1.0) > 1e-9:
+        return "weights must sum to 1"
+
+
+def _retrieve_rules(s: RetrieveStmt, keys: set):
+    if (s.near is None) != (s.vectors is None):
+        return ("near and vectors come together (hybrid needs both the "
+                "query vector and the embedding group)")
+    if s.near is None and keys & {"fuse", "von"}:
+        hybrid_only = ", ".join(sorted(keys & {"fuse", "von"}))
+        return f"{hybrid_only} applies to the hybrid form (near/vectors) only"
+
+
+_RULES = {
+    DedupStmt: _dedup_rules, CurateStmt: _curate_rules,
+    SimilarStmt: _similar_rules, ChunkStmt: _chunk_rules,
+    SampleStmt: _sample_rules, VIndexStmt: _vindex_rules,
+    LayoutStmt: _layout_rules, RollupStmt: _rollup_rules,
+    SplitStmt: _split_rules, RetrieveStmt: _retrieve_rules,
+}
+
+# head key -> statement; {upset}/{remove} pick the form by its key
+_STATEMENTS = {
+    "create": CreateStmt,
+    "upset": {"vertex": UpsetVertexStmt, "edge": UpsetEdgeStmt,
+              "property": UpsetPropertyStmt},
+    "query": QueryStmt,
+    "remove": {"vertex": RemoveVertexStmt, "edge": RemoveEdgeStmt},
+    "drop": DropStmt, "dump": DumpStmt, "dedup": DedupStmt,
+    "curate": CurateStmt, "similar": SimilarStmt, "chunk": ChunkStmt,
+    "funnel": FunnelStmt, "cohort": CohortStmt, "sample": SampleStmt,
+    "vindex": VIndexStmt, "layout": LayoutStmt, "topcount": TopcountStmt,
+    "quantiles": QuantilesStmt, "rollup": RollupStmt, "shards": ShardsStmt,
+    "split": SplitStmt, "budget": BudgetStmt, "retrieve": RetrieveStmt,
+}
+
+
+def _build_statement(obj: dict) -> Any:
+    head = next((k for k in _STATEMENTS if k in obj), None)
+    if head is None:
+        raise GQLParseError(f"unrecognized statement keys: {sorted(obj)}")
+    stmt, cls = head, _STATEMENTS[head]
+    if isinstance(cls, dict):
+        form = next((k for k in cls if k in obj), None)
+        if form is None:
+            raise GQLParseError(f"{head} requires {'/'.join(cls)}")
+        cls = cls[form]
+    elif head == "query" and "event" in obj:
+        # inference form (README.md:252-268): where holds weighted
+        # edge triples, not a walk pattern — kept raw
+        stmt, cls = "infer", InferStmt
+    elif head == "rollup" and "read" in obj:
+        obj = dict(obj)
+        if _value(head, "read", obj.pop("read"), "flag"):
+            stmt, cls = "rollup read", ReadRollupStmt
+    s = _read(stmt, head, obj, cls)
+    err = _RULES[cls](s, set(obj)) if cls in _RULES else None
+    if err:
+        raise GQLParseError(f"{stmt}: {err}")
+    return s
 
 
 def parse(text: str) -> list[Any]:

@@ -147,6 +147,39 @@ def test_remove_edge_pattern(edb):
     assert rows == ["['pic', --, 300]"]
 
 
+def test_mutations_write_to_their_in_graph(db):
+    """``in:`` on upset/remove names the graph written to: with mi1
+    current and a group 'x' in both graphs, every mutation in mi2 changes
+    mi2 only; without ``in:`` the current graph's group is written."""
+    def rows(graph, group):
+        df = db.catalog.graph(graph).group(group).to_df()
+        return sorted(tuple(r) for r in df.select(*df.columns[:2]).collect())
+
+    def n_edges(graph):
+        df = db.catalog.graph(graph).group("e").to_df()
+        return 0 if df is None else df.count()
+
+    for r in db.exec(
+            "{create: 'mi2', group: ['x', ['x', 'e', 'x']]};"
+            "{create: 'mi1', group: ['x', ['x', 'e', 'x']]};"
+            "{upset: 'x', vertex: [[1, {a: 1}], [2, {a: 2}]]};"
+            "{upset: 'x', in: 'mi2', vertex: [[1, {a: 5}], [2, {a: 6}]]};"
+            "{upset: 'x', in: 'mi2', property: {a: 9}, where: {id: 2}};"
+            "{upset: 'e', in: 'mi2', edge: [[1, ->, 2], [2, ->, 1]]};"
+            "{remove: 'e', in: 'mi2', edge: [2, ->, 1]};"):
+        assert r.error is None, r.error
+    assert rows("mi1", "x") == [(1, 1), (2, 2)]
+    assert rows("mi2", "x") == [(1, 5), (2, 9)]
+    assert (n_edges("mi1"), n_edges("mi2")) == (0, 1)
+    assert db.exec("{remove: 'x', in: 'mi2', vertex: {id: 1}};")[0].error \
+        is None
+    assert rows("mi2", "x") == [(2, 9)]
+    assert n_edges("mi2") == 0             # the cascade ran in mi2
+    assert rows("mi1", "x") == [(1, 1), (2, 2)]
+    r = db.exec("{upset: 'x', in: 'nope', vertex: [[3]]};")[0]
+    assert r.error == "graph is not exist: nope"
+
+
 def test_edge_props_and_directed(edb):
     edb.exec("{upset: 'rel_tag', edge: [['pic', ->: {w: 5}, 100]]};")
     rows = _rows(edb, "{query: 'rel_tag', in: 'files', where: ['pic', ->, 100]};")
@@ -586,41 +619,24 @@ def test_knn_routed_predicates_oversample_exact_fallback(spark, tmp_path):
 
 
 def test_knn_routed_idonly_ivf_index(spark, tmp_path):
-    """An id-only (non-materialized) l2 index still routes via the
-    (id, list_id) semi-join — bounds top-k input, never reads vectors
-    from the index (VERDICT r6 next #5; reference lazy index reload
-    HNSW.cpp:358-374)."""
+    """An id-only (non-materialized) IVF index is refused at attach, by
+    the library call and by {vindex attach:}: it cannot prune the read,
+    and its semi-join route gave short answers under a predicate.  The
+    previous attach stays in place."""
+    from gqlite_spark.errors import GQLiteError
     from gqlite_spark.operators.similarity import save_ivf_index
     db, grp = _line_fixture_group(spark, "knnrt_i")
+    full = str(tmp_path / "ivf_full")
+    grp.build_ivf_index("vec", full, nlist=8)
     idx = str(tmp_path / "ivf_l2")
     save_ivf_index(grp.to_df(), idx, nlist=8, id_col="id",
                    vec_col="vec", metric="l2")
-    grp.attach_index("vec", idx)
-    spark.conf.set("spark.gqlite.knn.ann_threshold", "50")
-    try:
-        gql = ("{query: 'pts', in: 'knnrt_i', where:"
-               " {vec: {limit: 3, $near: [0, 0]}}};")
-        routed = db.query_df(gql)
-        plan = routed._jdf.queryExecution().toString()
-        assert "list_id" in plan              # index scan in the plan
-        assert "_vec" not in plan             # no vectors in this index
-        assert [r["id"] for r in routed.collect()] == [0, 1, 2]
-        # LOCAL overlay on the semi-join path: the upserted row's id
-        # joins the candidate set and its df-side (current) vector wins
-        grp.upsert_vertex(1000, {"vec": [-0.25, 0.0]})
-        assert grp._vindex                    # index stays attached
-        routed2 = db.query_df(gql)
-        assert "list_id" in routed2._jdf.queryExecution().toString()
-        assert [r["id"] for r in routed2.collect()] == [0, 1000, 1]
-        # BULK mutation (update_where) detaches; exact path takes over
-        from pyspark.sql import functions as SF
-        grp.update_where(SF.col("id") == 5, {"vec": [5.5, 0.0]})
-        assert not grp._vindex
-        routed3 = db.query_df(gql)
-        assert "list_id" not in routed3._jdf.queryExecution().toString()
-        assert [r["id"] for r in routed3.collect()] == [0, 1000, 1]
-    finally:
-        spark.conf.set("spark.gqlite.knn.ann_threshold", "100000")
+    with pytest.raises(GQLiteError, match="id-only"):
+        grp.attach_index("vec", idx)
+    r = db.exec("{vindex: 'pts', in: 'knnrt_i', on: 'vec', path: '" +
+                idx + "', attach: true};")[0]
+    assert r.error and "MATERIALIZED" in r.error
+    assert grp._vindex["vec"].path == full
 
 
 def test_knn_routed_oversample_keeps_pruned_read(spark, tmp_path):

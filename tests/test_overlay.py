@@ -246,25 +246,6 @@ def test_oversample_route_job_counts(spark, tmp_path):
     assert got == (2, 2, [0, 2, 4]), got
 
 
-def test_idonly_route_job_counts(spark, tmp_path):
-    """An id-only IVF index routes by semi-join: planning runs no job."""
-    from gqlite_spark.operators.similarity import save_ivf_index
-    db, grp = _line_group(spark, "ov_jobs_id")
-    idx = str(tmp_path / "ivf_ids")
-    save_ivf_index(grp.to_df(), idx, nlist=8, id_col="id",
-                   vec_col="vec", metric="l2")
-    db.exec(f"{{vindex: 'g', in: 'ov_jobs_id', on: 'vec', path: '{idx}',"
-            " attach: true};")
-    reset = _routed_conf(spark)
-    try:
-        got = _route_jobs(spark, db, (
-            "{query: 'g', in: 'ov_jobs_id',"
-            " where: {vec: {limit: 3, $near: [0, 0]}}};"))
-    finally:
-        reset()
-    assert got == (0, 2, [0, 1, 2]), got
-
-
 def test_ivfpq_route_job_counts(spark, tmp_path):
     """IVFPQ with every list probed: the first 4 candidates hold k rows
     for the plain $near; ``id >= 3`` leaves one survivor among them, so

@@ -1,9 +1,11 @@
-"""Property-based parser tests (hypothesis): arbitrary values survive the
-upsert→parse round-trip, and arbitrary input never crashes the lexer/parser
-with anything but GQLParseError."""
+"""Parser tests that need no Spark.  Property-based (hypothesis):
+arbitrary values survive the upsert→parse round-trip, and arbitrary input
+never crashes the lexer/parser with anything but GQLParseError.  Statement
+keys: a misspelled key or a malformed flag is an error."""
 
 import string
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -296,3 +298,104 @@ def test_split_retrieve_budget_parse(group, w1, terms, top, fuse, tokens):
             assert False, f"{bad} must be rejected"
         except GQLParseError:
             pass
+
+
+# ---------------------------------------------------------------------------
+# Statement keys: each statement's dataclass is its key list, so a
+# misspelled key is an error, never a silent default
+# ---------------------------------------------------------------------------
+
+
+# (a valid statement, a misspelling of one of its keys)
+_FORMS = [
+    ("{create: 'g', group: ['a']};", "grup"),
+    ("{upset: 'x', vertex: [[1, {a: 5}]]};", "inn"),
+    ("{upset: 'e', edge: [[1, ->, 2]]};", "inn"),
+    ("{upset: 'x', property: {a: 9}, where: {id: 2}};", "wher"),
+    ("{query: 'x', in: 'g', where: {a: 1}};", "wehre"),
+    ("{query: 'h', event: [{e: 'a'}], where: []};", "evnt"),
+    ("{remove: 'x', vertex: {id: 1}};", "inn"),
+    ("{remove: 'e', edge: [1, ->, *]};", "inn"),
+    ("{drop: 'g'};", "force"),
+    ("{dump: 'g'};", "path"),
+    ("{dedup: 'd', method: 'minhash'};", "treshold"),
+    ("{curate: 'd', benchmark: 'b'};", "quality"),
+    ("{similar: 'v', to: [1.0, 0.0]};", "topk"),
+    ("{similar: 'v', queries: 'q', method: 'ivf'};", "nprob"),
+    ("{chunk: 'd'};", "sizee"),
+    ("{funnel: 'e', steps: ['a', 'b']};", "whithin"),
+    ("{cohort: 'e'};", "buckets"),
+    ("{sample: 'd', rate: 0.5};", "slat"),
+    ("{vindex: 'v', path: '/i'};", "nlsit"),
+    ("{layout: 'd', path: '/l', by: 'a'};", "file"),
+    ("{topcount: '/r', on: 'u', keys: [1]};", "key"),
+    ("{quantiles: '/r', on: 'u', qs: [0.5]};", "q"),
+    ("{rollup: 'e', path: '/r'};", "evry"),
+    ("{rollup: '/r', read: true};", "avgs"),
+    ("{shards: 'd', path: '/s'};", "shards_n"),
+    ("{split: 'd'};", "weight"),
+    ("{budget: 'd', tokens: 10};", "tokns"),
+    ("{retrieve: 'd', terms: ['a']};", "topk"),
+]
+
+
+@pytest.mark.parametrize("gql,typo", _FORMS,
+                         ids=[f"{g[1:g.index(':')]}-{t}" for g, t in _FORMS])
+def test_misspelled_key_is_an_error(gql, typo):
+    """Every statement form parses as given, and the same statement with
+    one misspelled key raises instead of running at the default."""
+    parse_one(gql)
+    bad = gql[:gql.rindex("}")] + f", {typo}: 1}};"
+    with pytest.raises(GQLParseError, match=f"unknown key.*{typo}"):
+        parse_one(bad)
+
+
+_FLAGS = [
+    "{vindex: 'v', path: '/i', pq: %s};",
+    "{vindex: 'v', path: '/i', attach: %s};",
+    "{vindex: 'v', path: '/i', compact: %s};",
+    "{layout: 'd', path: '/l', attach: %s};",
+    "{layout: 'd', path: '/l', compact: %s};",
+    "{rollup: 'e', path: '/r', append: %s};",
+    "{rollup: '/r', read: %s};",
+    "{query: 'v', where: {e: {limit: 1, exact: %s, $near: [1.0]}}};",
+]
+
+
+@pytest.mark.parametrize("gql", _FLAGS)
+def test_flags_are_true_or_false(gql):
+    """A flag is ``true``/``false`` in any case, as conf booleans are;
+    anything else raises, naming the key."""
+    key = gql.split(": %s")[0].rsplit(" ", 1)[1]
+    for ok in ("true", "True", "'TRUE'"):
+        parse_one(gql % ok)
+    for bad in ("maybe", "yes", "1", "'no'"):
+        with pytest.raises(GQLParseError, match=f"{key} must be true or "):
+            parse_one(gql % bad)
+    s = parse_one(gql % "true")
+    got = (s.where.value["exact"] if key == "exact"
+           else type(s).__name__ == "ReadRollupStmt" if key == "read"
+           else getattr(s, key))
+    assert got is True
+    if "vindex" in gql:
+        assert getattr(parse_one(gql % "FALSE"), key) is False
+
+
+def test_keys_are_checked_in_place():
+    """Values are checked where they are read: the mutations carry their
+    ``in:`` graph, $near takes only limit/exact beside it, and a key's
+    malformed value names the key."""
+    assert parse_one("{upset: 'x', in: 'g2', vertex: [[1]]};").graph == "g2"
+    assert parse_one("{remove: 'x', in: 'g2', vertex: {id: 1}};").graph \
+        == "g2"
+    assert parse_one("{upset: 'x', vertex: [[1]]};").graph is None
+    with pytest.raises(GQLParseError, match="unknown key.*wher"):
+        parse_one("{upset: 'x', property: {a: 9}, wher: {id: 2}};")
+    with pytest.raises(GQLParseError, match=r"\$limt beside \$near"):
+        parse_one("{query: 'v', where: {e: {limt: 3, $near: [1.0]}}};")
+    with pytest.raises(GQLParseError, match="chunk: size must be a pos"):
+        parse_one("{chunk: 'd', size: 'big'};")
+    with pytest.raises(GQLParseError, match="budget: tokens: .* required"):
+        parse_one("{budget: 'd'};")
+    with pytest.raises(GQLParseError, match="per do not apply to rate:"):
+        parse_one("{sample: 'd', rate: 0.5, per: 2};")
