@@ -368,23 +368,6 @@ class Group:
         self.rows[ekey] = self._merge_props(props)
         self._invalidate(local_only=True)
 
-    def delete_keys(self, keys: list) -> None:
-        """Delete explicit keys.  The bulk side uses an ``isin`` filter —
-        appropriate ONLY for small, driver-known key lists (OLTP-style GQL
-        statements).  Predicate-driven bulk deletion must go through
-        :meth:`delete_where` (lazy filter, no literal lists)."""
-        for k in keys:
-            self.rows.pop(k, None)
-        if self.bulk_df is not None and keys:
-            idc = "id" if not self.meta.is_edge else None
-            if idc:
-                self.bulk_df = self.bulk_df.filter(~F.col(idc).isin(keys))
-            else:
-                self.bulk_df = self.bulk_df.filter(
-                    ~F.struct("src", "direction", "dst").isin(
-                        [F.struct(F.lit(a), F.lit(b), F.lit(c)) for a, b, c in keys]))
-        self._invalidate()
-
     def anti_join_endpoints(self, removed_ids: DataFrame,
                             on_src: bool = True, on_dst: bool = True) -> None:
         """Cascade helper for edge groups: drop bulk edges whose src/dst

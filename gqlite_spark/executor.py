@@ -6,17 +6,28 @@ UpsetStmt→upsert, CreateStmt/DropStmt/DumpStmt→utility, QueryStmt→scan pla
 RemoveStmt→delete(+cascade) — but with a clean parse→plan→execute split
 instead of the reference's execute-inside-parser coupling (gql.y:152-156),
 and DataFrames instead of a row callback.
+
+Every statement runs through one runner: ``_dispatch`` looks its handler
+up in ``_HANDLERS``.  The pipeline statements' handlers run behind one
+group-frame step (``GQLite._on_frame``), which resolves the groups the
+statement names, answers the empty result for a group with no rows, and
+checks every property the statement reads.  Frame results come from
+``_frame_result``.
 """
 
 from __future__ import annotations
 
 import base64
+import contextlib
+import dataclasses
+import functools
+import io
 import logging
-from dataclasses import dataclass, field
 from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import beautify, conf
 from .catalog import (K_BINARY, K_DATETIME, K_VECTOR, Catalog, Graph, Group)
@@ -24,20 +35,16 @@ from .errors import (GQLiteError, GQLParseError, GraphNotExistError,
                      GroupNotExistError)
 from .gql import parser as gql_parser
 from .gql.ast import (AstStmt, BudgetStmt, CallExpr, ChunkStmt, CohortStmt,
-                      CreateStmt,
-                      CurateStmt, DedupStmt,
-                      DropStmt, DumpStmt, FunnelStmt,
-                      ImportStmt, InferStmt, LayoutStmt, MemberRef, Pred,
-                      ProfileStmt,
-                      QuantilesStmt, QueryStmt, ReadRollupStmt,
+                      CreateStmt, CurateStmt, DedupStmt, DropStmt, DumpStmt,
+                      FunnelStmt, ImportStmt, InferStmt, LayoutStmt,
+                      MemberRef, Pred, ProfileStmt, QuantilesStmt, QueryStmt,
+                      ReadRollupStmt, RemoveEdgeStmt, RemoveVertexStmt,
                       RetrieveStmt, RollupStmt, SampleStmt, ShardsStmt,
-                      SimilarStmt, SplitStmt,
-                      TopcountStmt, VIndexStmt,
-                      RemoveEdgeStmt, RemoveVertexStmt, ShowGraphStmt,
+                      ShowGraphStmt, SimilarStmt, SplitStmt, TopcountStmt,
                       UpsetEdgeStmt, UpsetPropertyStmt, UpsetVertexStmt,
-                      UseGraphStmt, WalkPattern)
-from .planner import (PredicateCompiler, apply_knn, key_literal,
-                      order_for_group, pattern_filter)
+                      UseGraphStmt, VIndexStmt, WalkPattern)
+from .planner import (PredicateCompiler, apply_knn, order_for_group,
+                      pattern_filter)
 
 
 class StatementResult:
@@ -62,6 +69,152 @@ class StatementResult:
         if self._rows is None and self._rows_fn is not None:
             self._rows = self._rows_fn()
         return self._rows if self._rows is not None else []
+
+
+def _empty() -> StatementResult:
+    """The result of a query with no rows (over a group that holds
+    none, or with no path)."""
+    return StatementResult(status="QUERY SUCCESS", rows=[], df=None)
+
+
+def _group_result(out: DataFrame, grp: Group,
+                  ordered: bool = False) -> StatementResult:
+    """A query result over ``grp``'s rows ``out``: golden-format rows
+    (beautify.py), collected on first access — in key order when
+    ``ordered``.  The sort (a full exchange at scale) runs only then;
+    frame consumers (query_df) get the unsorted, shuffle-free plan."""
+    return StatementResult(
+        status="QUERY SUCCESS", df=out,
+        rows_fn=lambda: _beautify(
+            out.orderBy(*order_for_group(grp.meta)) if ordered else out, grp))
+
+
+def _beautify(df: DataFrame, grp: Group) -> list[str]:
+    """The golden-format rows of ``grp``'s frame ``df``."""
+    m = grp.meta
+    keys = ("src", "dst", "direction") if m.is_edge else ("id",)
+    out = []
+    for r in df.collect():
+        d = r.asDict()
+        props = {k: v for k, v in d.items()
+                 if k not in keys and v is not None}
+        out.append(beautify.edge_row(d["src"], d["direction"], d["dst"],
+                                     props, m) if m.is_edge
+                   else beautify.vertex_row(d["id"], props, m))
+    return out
+
+
+def _frame_result(out: DataFrame, ordered: bool = False) -> StatementResult:
+    """A query result served as the frame ``out``: its rows are the
+    frame's rows as lists, collected on first access — sorted on every
+    column when ``ordered`` (the sort runs only then, never in ``df``)."""
+    return StatementResult(
+        status="QUERY SUCCESS", df=out,
+        rows_fn=lambda: [list(r) for r in (
+            out.orderBy(*out.columns) if ordered else out).collect()])
+
+
+def _row_result(row: list, value: Any) -> StatementResult:
+    """A query result of one row computed on the driver; ``value`` is its
+    headline number."""
+    return StatementResult(status="QUERY SUCCESS", rows=[row], value=value)
+
+
+# ---------------------------------------------------------- group frames
+# The parser's key shapes whose values name properties: one name, a list
+# of names, or a map keyed by name (gql/parser.py::_SHAPES).
+_PROP_SHAPES = ("name", "names", "metrics", "hist", "cms")
+
+# (statement, field) -> the property the statement reads through the
+# field where that is not the field's value; None: this form reads none
+_READS = {
+    (DedupStmt, "on"): lambda s: s.on or {"embedding": "embedding",
+                                          "url": "url"}.get(s.method, "text"),
+    (SimilarStmt, "qon"): lambda s: s.qon or s.on,
+    (SampleStmt, "on"): lambda s: s.on if s.clusters is not None else None,
+    (SplitStmt, "by"): lambda s: s.by or "id",
+    (RollupStmt, "ts"): lambda s: None if s.append else s.ts,
+}
+
+# (statement, field) -> the kind of property the field must name:
+# "vector" (an array of numbers) or "text" (a string)
+_KINDS = {
+    (SimilarStmt, "on"): "vector", (SimilarStmt, "qon"): "vector",
+    (VIndexStmt, "on"): "vector", (SampleStmt, "on"): "vector",
+    (RetrieveStmt, "von"): "vector", (RetrieveStmt, "on"): "text",
+    (ChunkStmt, "on"): "text", (CurateStmt, "on"): "text",
+    (DedupStmt, "on"): lambda s: ("vector" if s.method == "embedding"
+                                  else "text"),
+}
+
+# field -> the group fields whose groups hold its property (default: the
+# statement's own group); a (statement, field) entry wins
+_IN = {"qon": ("queries",), "von": ("vectors",),
+       (CurateStmt, "on"): ("group", "benchmark")}
+
+# (statement, field) -> the text property a derived metric the group
+# lacks (quality / n_tokens, operators/text.py::quality_exprs) is
+# computed from; None: the field takes no derived metric in this form
+_DERIVED = ("quality", "n_tokens")
+_DERIVED_FROM = {
+    (BudgetStmt, "by"): "text", (BudgetStmt, "on"): "text",
+    (CurateStmt, "best_by"): lambda s: s.on if s.method == "exact" else None,
+}
+
+# (statement, group field) -> why that group must hold rows (an empty one
+# is an error, not the empty result)
+_NEEDS_ROWS = {(CurateStmt, "benchmark"):
+               "decontamination needs the benchmark corpus"}
+
+
+@functools.lru_cache(maxsize=None)
+def _frame_fields(cls: type) -> tuple[tuple, tuple]:
+    """(group fields, property fields) of pipeline statement ``cls``, read
+    from the parser's key shapes; its own group first."""
+    shapes = gql_parser.field_shapes(cls)
+    return (("group",) + tuple(f for f, s in shapes.items() if s == "group"),
+            tuple(f for f, s in shapes.items() if s in _PROP_SHAPES))
+
+
+def _of(stmt: Any, v: Any) -> Any:
+    """A table value: a constant, or a function of the statement."""
+    return v(stmt) if callable(v) else v
+
+
+def _verb(cls: type) -> str:
+    """The statement's head key, which prefixes its errors."""
+    return cls.__name__[:-len("Stmt")].lower()
+
+
+def _names(v: Any) -> list:
+    """The property names a field value holds."""
+    if v is None:
+        return []
+    return [v] if isinstance(v, str) else list(v)
+
+
+def _check_prop(stmt: Any, field: str, group: str, dtypes: dict) -> None:
+    """``field`` of ``stmt`` must name properties of ``group`` (whose
+    column types are ``dtypes``), each of the field's kind."""
+    cls = type(stmt)
+    kind = _of(stmt, _KINDS.get((cls, field)))
+    derived_from = _of(stmt, _DERIVED_FROM.get((cls, field)))
+    for prop in _names(getattr(stmt, field)):
+        dtype = dtypes.get(prop)
+        if dtype is None:
+            if prop in _DERIVED and derived_from in dtypes:
+                continue
+            raise GQLiteError(f"group '{group}' has no property '{prop}'")
+        if kind == "vector" and not (
+                isinstance(dtype, T.ArrayType)
+                and isinstance(dtype.elementType,
+                               (T.DoubleType, T.FloatType, T.IntegerType,
+                                T.LongType, T.ShortType))):
+            raise GQLiteError(f"{_verb(cls)}: property '{prop}' is "
+                              f"{dtype.simpleString()}, not a numeric vector")
+        if kind == "text" and not isinstance(dtype, T.StringType):
+            raise GQLiteError(f"{_verb(cls)}: property '{prop}' is "
+                              f"{dtype.simpleString()}, not a string")
 
 
 class GQLite:
@@ -103,95 +256,85 @@ class GQLite:
 
     # ------------------------------------------------------------ dispatch
     def _dispatch(self, stmt: Any) -> StatementResult:
-        if isinstance(stmt, CreateStmt):
-            return self._create(stmt)
-        if isinstance(stmt, UpsetVertexStmt):
-            return self._upsert_vertex(stmt)
-        if isinstance(stmt, UpsetEdgeStmt):
-            return self._upsert_edge(stmt)
-        if isinstance(stmt, UpsetPropertyStmt):
-            return self._upsert_property(stmt)
-        if isinstance(stmt, QueryStmt):
-            return self._query(stmt)
-        if isinstance(stmt, RemoveVertexStmt):
-            return self._remove_vertex(stmt)
-        if isinstance(stmt, RemoveEdgeStmt):
-            return self._remove_edge(stmt)
-        if isinstance(stmt, DropStmt):
-            self.catalog.drop_graph(stmt.graph)
-            if self.current_graph == stmt.graph:
-                self.current_graph = None
-            return StatementResult(status="DROP SUCCESS")
-        if isinstance(stmt, DumpStmt):
-            script = self.dump(stmt.graph)
-            return StatementResult(status="EXECUTE COMMAND SUCCESS",
-                                   rows=script.splitlines(), value=script)
-        if isinstance(stmt, ShowGraphStmt):
-            if stmt.graph:
-                g = self.catalog.graph(stmt.graph)
-                return StatementResult(status="EXECUTE COMMAND SUCCESS",
-                                       value=g.schema_json())
-            return StatementResult(status="EXECUTE COMMAND SUCCESS",
-                                   value=self.catalog.list_graphs())
-        if isinstance(stmt, UseGraphStmt):
-            self.catalog.graph(stmt.graph)   # raises graph-not-exist parity
-            self.current_graph = stmt.graph
-            return StatementResult(status="EXECUTE COMMAND SUCCESS")
-        if isinstance(stmt, AstStmt):
-            return StatementResult(status="EXECUTE COMMAND SUCCESS",
-                                   value=stmt.inner)
-        if isinstance(stmt, ProfileStmt):
-            res = self._dispatch(stmt.inner)
-            if res.df is not None:
-                # public explain() path (prints to stdout) — survives
-                # PySpark upgrades, unlike the _jdf/_sc private API
-                import contextlib
-                import io
-                buf = io.StringIO()
-                with contextlib.redirect_stdout(buf):
-                    res.df.explain(mode="formatted")
-                res.value = buf.getvalue()
-            return res
-        if isinstance(stmt, ImportStmt):
-            return self._import(stmt)
-        if isinstance(stmt, InferStmt):
-            return self._infer_hmm(stmt)
-        if isinstance(stmt, DedupStmt):
-            return self._dedup(stmt)
-        if isinstance(stmt, SimilarStmt):
-            return self._similar(stmt)
-        if isinstance(stmt, ChunkStmt):
-            return self._chunk(stmt)
-        if isinstance(stmt, FunnelStmt):
-            return self._funnel(stmt)
-        if isinstance(stmt, CohortStmt):
-            return self._cohort(stmt)
-        if isinstance(stmt, SampleStmt):
-            return self._sample(stmt)
-        if isinstance(stmt, SplitStmt):
-            return self._split(stmt)
-        if isinstance(stmt, BudgetStmt):
-            return self._budget(stmt)
-        if isinstance(stmt, RetrieveStmt):
-            return self._retrieve(stmt)
-        if isinstance(stmt, CurateStmt):
-            return self._curate(stmt)
-        if isinstance(stmt, VIndexStmt):
-            return self._vindex(stmt)
-        if isinstance(stmt, ShardsStmt):
-            return self._shards(stmt)
-        if isinstance(stmt, LayoutStmt):
-            return self._layout(stmt)
-        if isinstance(stmt, RollupStmt):
-            return self._rollup(stmt)
-        if isinstance(stmt, TopcountStmt):
-            return self._topcount(stmt)
-        if isinstance(stmt, QuantilesStmt):
-            return self._quantiles(stmt)
-        if isinstance(stmt, ReadRollupStmt):
-            return self._read_rollup(stmt)
-        raise GQLiteError(f"unsupported statement {type(stmt).__name__}")
+        """Run one statement through its handler in ``_HANDLERS``."""
+        handler = _HANDLERS.get(type(stmt))
+        if handler is None:
+            raise GQLiteError(f"unsupported statement {type(stmt).__name__}")
+        return handler(self, stmt)
 
+    def _on_frame(self, stmt: Any, handler) -> StatementResult:
+        """The group-frame step of a pipeline statement: resolve ``in:``
+        and each group the statement names (its own group first), answer
+        the empty result when one holds no rows, and check every property
+        the statement reads — present, and of its field's kind — from the
+        frames' schemas alone (no Spark job).  Then run
+        ``handler(self, stmt, group, df, *other groups' frames)``, with
+        each property the statement reads by default written into
+        ``stmt``."""
+        cls = type(stmt)
+        reads = {f: fn(stmt) for (c, f), fn in _READS.items() if c is cls}
+        if reads:
+            stmt = dataclasses.replace(stmt, **reads)
+        group_fields, prop_fields = _frame_fields(cls)
+        graph = self._graph(stmt.graph)
+        grp = graph.group(stmt.group)
+        frames = []
+        for gf in group_fields:
+            name = getattr(stmt, gf)
+            if name is None:
+                continue
+            df = (grp if gf == "group" else graph.group(name)).to_df()
+            if df is None:
+                if (cls, gf) in _NEEDS_ROWS:
+                    raise GQLiteError(
+                        f"{_verb(cls)}: {gf} group '{name}' "
+                        f"is empty — {_NEEDS_ROWS[cls, gf]}")
+                return _empty()
+            dtypes = {f.name: f.dataType for f in df.schema.fields}
+            for pf in prop_fields:
+                if gf in (_IN.get((cls, pf)) or _IN.get(pf, ("group",))):
+                    _check_prop(stmt, pf, name, dtypes)
+            frames.append(df)
+        return handler(self, stmt, grp, *frames)
+
+    # ---------------------------------------------------- utility statements
+    def _drop(self, stmt: DropStmt) -> StatementResult:
+        self.catalog.drop_graph(stmt.graph)
+        if self.current_graph == stmt.graph:
+            self.current_graph = None
+        return StatementResult(status="DROP SUCCESS")
+
+    def _dump(self, stmt: DumpStmt) -> StatementResult:
+        script = self.dump(stmt.graph)
+        return StatementResult(status="EXECUTE COMMAND SUCCESS",
+                               rows=script.splitlines(), value=script)
+
+    def _show(self, stmt: ShowGraphStmt) -> StatementResult:
+        value = (self.catalog.graph(stmt.graph).schema_json() if stmt.graph
+                 else self.catalog.list_graphs())
+        return StatementResult(status="EXECUTE COMMAND SUCCESS", value=value)
+
+    def _use(self, stmt: UseGraphStmt) -> StatementResult:
+        self.catalog.graph(stmt.graph)   # raises graph-not-exist parity
+        self.current_graph = stmt.graph
+        return StatementResult(status="EXECUTE COMMAND SUCCESS")
+
+    def _ast(self, stmt: AstStmt) -> StatementResult:
+        return StatementResult(status="EXECUTE COMMAND SUCCESS",
+                               value=stmt.inner)
+
+    def _profile(self, stmt: ProfileStmt) -> StatementResult:
+        res = self._dispatch(stmt.inner)
+        if res.df is not None:
+            # public explain() path (prints to stdout) — survives
+            # PySpark upgrades, unlike the _jdf/_sc private API
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                res.df.explain(mode="formatted")
+            res.value = buf.getvalue()
+        return res
+
+    # ------------------------------------------------------- rollup reads
     def _topcount(self, stmt: TopcountStmt) -> StatementResult:
         """``{topcount: '/data/ru', on: 'user', keys: [7, 8]};`` — read
         per-(bucket, dims) count-min estimates of the literal keys from
@@ -206,15 +349,9 @@ class GQLite:
         try:
             out = rollup_keycounts(self.spark, stmt.path, stmt.on,
                                    stmt.keys)
-        except ValueError as e:       # no cms metric for the column
+        except Exception as e:   # no cms metric, missing rollup / sidecar
             raise GQLiteError(f"topcount: {e}") from e
-        except Exception as e:        # missing rollup / sidecar
-            raise GQLiteError(f"topcount: {e}") from e
-        cols = out.columns
-        return StatementResult(
-            status="QUERY SUCCESS", df=out,
-            rows_fn=lambda out=out, cols=cols: [
-                list(r) for r in out.orderBy(*cols).collect()])
+        return _frame_result(out, ordered=True)
 
     def _quantiles(self, stmt: QuantilesStmt) -> StatementResult:
         """``{quantiles: '/data/ru', on: 'latency', qs: [0.5, 0.99]};``
@@ -229,15 +366,9 @@ class GQLite:
         try:
             out = rollup_quantiles(self.spark, stmt.path, stmt.on,
                                    stmt.qs)
-        except ValueError as e:       # no hist metric for the column
+        except Exception as e:   # no hist metric, missing rollup / sidecar
             raise GQLiteError(f"quantiles: {e}") from e
-        except Exception as e:        # missing rollup / sidecar
-            raise GQLiteError(f"quantiles: {e}") from e
-        cols = out.columns
-        return StatementResult(
-            status="QUERY SUCCESS", df=out,
-            rows_fn=lambda out=out, cols=cols: [
-                list(r) for r in out.orderBy(*cols).collect()])
+        return _frame_result(out, ordered=True)
 
     def _read_rollup(self, stmt: ReadRollupStmt) -> StatementResult:
         """``{rollup: '/data/ru', read: true, avg: ['value']};`` — the
@@ -256,10 +387,8 @@ class GQLite:
                               avg_of=list(stmt.avg or []))
             spec = fsio.read_json(self.spark,
                                   fsio.join(stmt.path, SPEC_FILE))
-        except ValueError as e:       # avg_of without a sum metric
-            raise GQLiteError(f"rollup read: {e}") from e
-        except Exception as e:        # missing rollup / sidecar
-            raise GQLiteError(f"rollup read: {e}") from e
+        except Exception as e:   # avg_of without a sum metric, missing
+            raise GQLiteError(f"rollup read: {e}") from e   # rollup
         # drop EXACTLY the internal sketch-state columns the spec's
         # metrics declare (ADVICE r11 #3) — a name-prefix filter would
         # silently project out a legitimate dim/metric column that
@@ -267,97 +396,51 @@ class GQLite:
         internal = {f"{fn}_{c}"
                     for c, fns in (spec.get("metrics") or {}).items()
                     for fn in fns if fn in ("kmv", "hist", "cms")}
-        out = out.select(*[c for c in out.columns
-                           if c not in internal])
-        cols = out.columns
-        return StatementResult(
-            status="QUERY SUCCESS", df=out,
-            rows_fn=lambda out=out, cols=cols: [
-                list(r) for r in out.orderBy(*cols).collect()])
+        return _frame_result(
+            out.select(*[c for c in out.columns if c not in internal]),
+            ordered=True)
 
-    def _pipeline_group_df(self, graph_name, group_name: str,
-                           on: "str | None", default_prop: str):
-        """Shared front half of the pipeline statements: resolve the
-        group, materialize its DataFrame, and validate the target
-        property.  Returns (df, prop) or (None, prop) for an empty
-        group."""
-        graph = self._graph(graph_name)
-        grp = graph.group(group_name)
-        df = grp.to_df()
-        prop = on or default_prop
-        if df is None:
-            return None, prop
-        if prop not in df.columns:
-            raise GQLiteError(
-                f"group '{group_name}' has no property '{prop}'")
-        return df, prop
-
-    def _curate(self, stmt: CurateStmt) -> StatementResult:
+    # --------------------------------------------------- pipeline handlers
+    # Each runs behind ``_on_frame``: ``grp`` is the statement's group,
+    # ``df`` its non-empty frame with every named property checked.
+    def _curate(self, stmt: CurateStmt, grp: Group, df: DataFrame,
+                bench: DataFrame) -> StatementResult:
         """``{curate: 'docs', in: 'g', benchmark: 'bench',
         quality_min: 0.5, ngram: 8};`` — the one-plan curation
         pipeline from GQL (operators/sampling.py::curate_corpus):
         dedup purge → quality gate → ``ngram``-gram benchmark
         decontamination → per-language report, three shuffles total.
         ``method: 'exact'`` purges exact duplicates (min-id canonical,
-        or argmax ``best_by:``); ``method: 'clusters'`` purges NEAR-dup
-        clusters to their keep-best survivor (``best_by:`` metric,
+        or argmax ``best_by:``, which may name a derived metric
+        n_tokens/quality); ``method: 'clusters'`` purges NEAR-dup
+        clusters to their keep-best survivor (``best_by:`` property,
         default text length) — the full quality-survivor chain the
         library API grew in r11/r12, now first-class from the engine.
         Result rows: (predicted_lang, n_docs, sum_tokens,
         sum_quality_e4).  Beyond-reference surface."""
         from .operators.sampling import curate_corpus
-        df, prop = self._pipeline_group_df(stmt.graph, stmt.group,
-                                           stmt.on, "text")
-        if df is None:
-            return StatementResult(status="QUERY SUCCESS", rows=[],
-                                   df=None)
-        bench, _ = self._pipeline_group_df(stmt.graph, stmt.benchmark,
-                                           stmt.on, "text")
-        if bench is None:
-            raise GQLiteError(
-                f"curate: benchmark group '{stmt.benchmark}' is empty "
-                "— decontamination needs the benchmark corpus")
-        best_by = stmt.best_by
-        if (best_by is not None and stmt.method == "exact"
-                and best_by not in df.columns
-                and best_by not in ("n_tokens", "quality")):
-            # the derived per-doc metrics are legal argmax targets for
-            # the exact-hash purge (they exist in the enriched scan)
-            raise GQLiteError(
-                f"curate: group '{stmt.group}' has no property "
-                f"'{best_by}' (and it is not a derived metric "
-                "n_tokens/quality)")
         kwargs = {}
         if stmt.method == "clusters":
             from .operators.dedup import (keep_best_per_cluster,
                                           near_dup_clusters)
             clusters = near_dup_clusters(df, id_col="id",
-                                         text_col=prop,
+                                         text_col=stmt.on,
                                          threshold=stmt.threshold)
-            if best_by is not None:
-                if best_by not in df.columns:
-                    raise GQLiteError(
-                        f"curate: group '{stmt.group}' has no "
-                        f"property '{best_by}'")
-                scores = df.select("id",
-                                   F.col(best_by).alias("score"))
-            else:                      # default: keep the longest copy
-                scores = df.select("id", F.length(F.col(prop))
-                                   .cast("long").alias("score"))
+            # default: keep the longest copy
+            score = (F.col(stmt.best_by) if stmt.best_by is not None
+                     else F.length(F.col(stmt.on)).cast("long"))
             kwargs["survivors"] = keep_best_per_cluster(
-                clusters, scores, id_col="id")
-        elif best_by is not None:
-            kwargs["best_by"] = best_by
-        out = curate_corpus(df, bench, quality_min=stmt.quality_min,
-                            ngram=stmt.ngram, id_col="id",
-                            text_col=prop, **kwargs)
-        cols = out.columns
-        return StatementResult(
-            status="QUERY SUCCESS", df=out,
-            rows_fn=lambda out=out, cols=cols: [
-                list(r) for r in out.orderBy(*cols).collect()])
+                clusters, df.select("id", score.alias("score")),
+                id_col="id")
+        elif stmt.best_by is not None:
+            kwargs["best_by"] = stmt.best_by
+        return _frame_result(
+            curate_corpus(df, bench, quality_min=stmt.quality_min,
+                          ngram=stmt.ngram, id_col="id", text_col=stmt.on,
+                          **kwargs), ordered=True)
 
-    def _dedup(self, stmt: DedupStmt) -> StatementResult:
+    def _dedup(self, stmt: DedupStmt, grp: Group,
+               df: DataFrame) -> StatementResult:
         """``{dedup: 'docs', in: 'g', method: 'minhash', on: 'text',
         threshold: 0.8};`` — the training-data dedup family as engine
         statements, lowering straight onto operators/dedup.py (same
@@ -365,53 +448,33 @@ class GQLite:
         plays doc_id).  Beyond-reference surface: the reference has no
         dedup statement."""
         from .operators import dedup as D
-        df, prop = self._pipeline_group_df(
-            stmt.graph, stmt.group, stmt.on,
-            "embedding" if stmt.method == "embedding"
-            else "url" if stmt.method == "url" else "text")
-        if df is None:
-            return StatementResult(status="QUERY SUCCESS", rows=[], df=None)
-        m = stmt.method
-        if m == "exact":
-            out = D.exact_duplicates(df, id_col="id", text_col=prop)
-        elif m == "url":
-            from .operators.text import url_dedup
-            out = url_dedup(df, id_col="id", url_col=prop)
-        elif m == "minhash":
-            out = D.minhash_lsh_pairs(df, id_col="id", text_col=prop,
-                                      threshold=stmt.threshold)
-        elif m == "jaccard":
-            out = D.ngram_jaccard_pairs(df, id_col="id", text_col=prop,
-                                        threshold=stmt.threshold)
-        elif m == "simhash":
-            out = D.simhash_near_pairs(df, id_col="id", text_col=prop)
-        elif m == "lines":
-            out = D.line_dedup(df, id_col="id", text_col=prop)
-        elif m == "clusters":
-            out = D.near_dup_clusters(df, id_col="id", text_col=prop,
-                                      threshold=stmt.threshold)
-            if stmt.best_by is not None:
-                # quality survivor selection: keep each cluster's MAX
-                # best_by member (tie -> min id) instead of min-id
-                if stmt.best_by not in df.columns:
-                    raise GQLiteError(
-                        f"dedup: group '{stmt.group}' has no property "
-                        f"'{stmt.best_by}'")
-                out = D.keep_best_per_cluster(
-                    out, df.select("id", F.col(stmt.best_by)
-                                   .alias("score")), id_col="id")
-        elif m == "embedding":
-            out = D.embedding_near_dups(df, id_col="id", vec_col=prop,
-                                        threshold=stmt.threshold)
-        else:
+        from .operators.text import url_dedup
+        on, t = stmt.on, {"threshold": stmt.threshold}
+        run = {
+            "exact": lambda: D.exact_duplicates(df, "id", on),
+            "url": lambda: url_dedup(df, "id", on),
+            "minhash": lambda: D.minhash_lsh_pairs(df, "id", on, **t),
+            "jaccard": lambda: D.ngram_jaccard_pairs(df, "id", on, **t),
+            "simhash": lambda: D.simhash_near_pairs(df, "id", on),
+            "lines": lambda: D.line_dedup(df, "id", on),
+            "clusters": lambda: D.near_dup_clusters(df, "id", on, **t),
+            "embedding": lambda: D.embedding_near_dups(df, "id", on, **t),
+        }.get(stmt.method)
+        if run is None:
             raise GQLiteError(
-                f"dedup: unknown method '{m}' (want exact|url|minhash|"
-                f"jaccard|simhash|lines|clusters|embedding)")
-        return StatementResult(
-            status="QUERY SUCCESS", df=out,
-            rows_fn=lambda out=out: [list(r) for r in out.collect()])
+                f"dedup: unknown method '{stmt.method}' (want exact|url|"
+                "minhash|jaccard|simhash|lines|clusters|embedding)")
+        out = run()
+        if stmt.best_by is not None:
+            # quality survivor selection (method 'clusters'): keep each
+            # cluster's MAX best_by member (tie -> min id), not min-id
+            out = D.keep_best_per_cluster(
+                out, df.select("id", F.col(stmt.best_by).alias("score")),
+                id_col="id")
+        return _frame_result(out)
 
-    def _similar(self, stmt: SimilarStmt) -> StatementResult:
+    def _similar(self, stmt: SimilarStmt, grp: Group, df: DataFrame,
+                 qdf: Optional[DataFrame] = None) -> StatementResult:
         """``{similar: 'vecs', in: 'g', to: [0.1, ...], top: 5,
         method: 'lsh'};`` — top-k vector search as an engine statement
         over a group's array property, lowering onto
@@ -419,62 +482,40 @@ class GQLite:
         TakeOrderedAndProject; lsh/ivf/pq = the bucketed ANN paths).
         Engine analogue of the reference's HNSW-backed $near."""
         from .operators import similarity as S
-        graph = self._graph(stmt.graph)
-        grp = graph.group(stmt.group)
-        df, prop = self._pipeline_group_df(stmt.graph, stmt.group,
-                                           stmt.on, "embedding")
-        if df is None:
-            return StatementResult(status="QUERY SUCCESS", rows=[], df=None)
-        q, k, m = stmt.to, stmt.top, stmt.method
-        if stmt.queries is not None:
+        q, k, m, prop = stmt.to, stmt.top, stmt.method, stmt.on
+        if qdf is not None:
             # JOIN form: every vector in the `queries` group searches
             # this group.  brute = broadcast the query side (right only
             # when it is small); ivf = the distributed list-bucketed
             # join, optionally serving the corpus from a persisted
             # materialized index — neither side broadcast, the 100 TB
             # shape for cross-dataset semantic search/dedup.
-            if m not in ("brute", "ivf"):
-                raise GQLiteError(
-                    f"similar: join form (queries:) supports method "
-                    f"brute|ivf, got '{m}'")
-            qdf, qprop = self._pipeline_group_df(
-                stmt.graph, stmt.queries, stmt.qon or stmt.on,
-                "embedding")
-            if qdf is None:
-                return StatementResult(status="QUERY SUCCESS", rows=[],
-                                       df=None)
             queries = qdf.select(F.col("id").alias("q_id"),
-                                 F.col(qprop).alias("q_vec"))
+                                 F.col(stmt.qon).alias("q_vec"))
             if m == "brute":
                 out = S.knn_join(df, queries, k=k, id_col="id",
                                  vec_col=prop)
-            elif m == "ivf":
-                if stmt.index is not None:
-                    try:
-                        out = S.ivf_knn_join_indexed(
-                            grp.spark, stmt.index, queries, k=k,
-                            nprobe=stmt.nprobe)
-                    except (FileNotFoundError, ValueError) as e:
-                        raise GQLiteError(
-                            f"similar: cannot join through index at "
-                            f"'{stmt.index}' ({e})") from e
-                else:
-                    out = S.ivf_knn_join(df, queries, k=k,
-                                         nlist=stmt.nlist,
-                                         nprobe=stmt.nprobe,
-                                         id_col="id", vec_col=prop)
-            return StatementResult(
-                status="QUERY SUCCESS", df=out,
-                rows_fn=lambda out=out: [list(r) for r in out.collect()])
+            elif stmt.index is not None:
+                try:
+                    out = S.ivf_knn_join_indexed(
+                        grp.spark, stmt.index, queries, k=k,
+                        nprobe=stmt.nprobe)
+                except (FileNotFoundError, ValueError) as e:
+                    raise GQLiteError(
+                        f"similar: cannot join through index at "
+                        f"'{stmt.index}' ({e})") from e
+            else:
+                out = S.ivf_knn_join(df, queries, k=k, nlist=stmt.nlist,
+                                     nprobe=stmt.nprobe, id_col="id",
+                                     vec_col=prop)
+            return _frame_result(out)
         if stmt.index is not None:
             # persisted-index search: load the on-disk index (lsh/ivf/pq
             # as written by save_{ann,ivf,pq}_index) instead of the
             # in-memory quantizer cache — the cross-session, build-once/
             # search-many form (reference HNSW.cpp:358-374 lazy reload)
-            out = self._similar_indexed(grp, df, prop, q, k, m, stmt.index)
-            return StatementResult(
-                status="QUERY SUCCESS", df=out,
-                rows_fn=lambda out=out: [list(r) for r in out.collect()])
+            return _frame_result(
+                self._similar_indexed(grp, df, prop, q, k, m, stmt.index))
         # quantizer state (IVF centroids / PQ codebooks) is cached on the
         # Group and invalidated by any mutation, so repeated {similar:}
         # statements skip the model-building scans (the engine analogue
@@ -505,9 +546,7 @@ class GQLite:
         else:
             raise GQLiteError(
                 f"similar: unknown method '{m}' (want brute|lsh|ivf|pq)")
-        return StatementResult(
-            status="QUERY SUCCESS", df=out,
-            rows_fn=lambda out=out: [list(r) for r in out.collect()])
+        return _frame_result(out)
 
     def _similar_indexed(self, grp, df: DataFrame, prop: str,
                          q: list, k: int, m: str, path: str) -> DataFrame:
@@ -532,64 +571,42 @@ class GQLite:
                   .withColumnRenamed(prop, params["vec_col"]))
         return S.topk_indexed(corpus, q, index, params, k=k)
 
-    def _chunk(self, stmt: ChunkStmt) -> StatementResult:
+    def _chunk(self, stmt: ChunkStmt, grp: Group,
+               df: DataFrame) -> StatementResult:
         """``{chunk: 'docs', in: 'g', size: 64, overlap: 8};`` — document
         chunking as an engine statement (operators/text.py
         chunk_documents: pure map stage, zero shuffle)."""
         from .operators.text import chunk_documents
-        df, prop = self._pipeline_group_df(stmt.graph, stmt.group,
-                                           stmt.on, "text")
-        if df is None:
-            return StatementResult(status="QUERY SUCCESS", rows=[], df=None)
-        out = chunk_documents(df, id_col="id", text_col=prop,
-                              chunk_tokens=stmt.size, overlap=stmt.overlap)
-        return StatementResult(
-            status="QUERY SUCCESS", df=out,
-            rows_fn=lambda out=out: [list(r) for r in out.collect()])
+        return _frame_result(chunk_documents(
+            df, id_col="id", text_col=stmt.on, chunk_tokens=stmt.size,
+            overlap=stmt.overlap))
 
-    def _funnel(self, stmt: FunnelStmt) -> StatementResult:
+    def _funnel(self, stmt: FunnelStmt, grp: Group,
+                df: DataFrame) -> StatementResult:
         """``{funnel: 'events', in: 'g', steps: ['view', 'click'],
         by: 'user', on: 'etype', ts: 'ts', within: 5000000};`` —
         conversion funnel as an engine statement, lowering onto
         operators/temporal.py funnel (k filtered keyed aggregates; the
         ts property follows the library's dual-encoding contract:
         timestamp-typed or long nanoseconds)."""
-        from .operators.temporal import funnel as _fn
-        df, _ = self._pipeline_group_df(stmt.graph, stmt.group, stmt.on,
-                                        "event_type")
-        if df is None:
-            return StatementResult(status="QUERY SUCCESS", rows=[], df=None)
-        for c in (stmt.by, stmt.ts):
-            if c not in df.columns:
-                raise GQLiteError(
-                    f"group '{stmt.group}' has no property '{c}'")
-        out = _fn(df, [str(s) for s in stmt.steps], user_col=stmt.by,
-                  type_col=stmt.on, ts_col=stmt.ts,
-                  within_micros=stmt.within)
-        return StatementResult(
-            status="QUERY SUCCESS", df=out,
-            rows_fn=lambda out=out: [list(r) for r in out.collect()])
+        from .operators.temporal import funnel
+        return _frame_result(funnel(
+            df, [str(s) for s in stmt.steps], user_col=stmt.by,
+            type_col=stmt.on, ts_col=stmt.ts, within_micros=stmt.within))
 
-    def _cohort(self, stmt: CohortStmt) -> StatementResult:
+    def _cohort(self, stmt: CohortStmt, grp: Group,
+                df: DataFrame) -> StatementResult:
         """``{cohort: 'events', in: 'g', by: 'user', ts: 'ts',
         bucket: 86400};`` — cohort retention as an engine statement
         (operators/temporal.py cohort_retention: two keyed aggregates
         over (user, bucket) distinct state)."""
         from .operators.temporal import cohort_retention
-        df, _ = self._pipeline_group_df(stmt.graph, stmt.group, stmt.ts,
-                                        "ts")
-        if df is None:
-            return StatementResult(status="QUERY SUCCESS", rows=[], df=None)
-        if stmt.by not in df.columns:
-            raise GQLiteError(
-                f"group '{stmt.group}' has no property '{stmt.by}'")
-        out = cohort_retention(df, user_col=stmt.by, ts_col=stmt.ts,
-                               bucket_seconds=stmt.bucket)
-        return StatementResult(
-            status="QUERY SUCCESS", df=out,
-            rows_fn=lambda out=out: [list(r) for r in out.collect()])
+        return _frame_result(cohort_retention(
+            df, user_col=stmt.by, ts_col=stmt.ts,
+            bucket_seconds=stmt.bucket))
 
-    def _sample(self, stmt: SampleStmt) -> StatementResult:
+    def _sample(self, stmt: SampleStmt, grp: Group,
+                df: DataFrame) -> StatementResult:
         """``{sample: 'docs', in: 'g', rate: 0.25};`` (hash sample) or
         ``{sample: 'docs', in: 'g', by: 'lang', rates: {en: 0.1},
         default: 0.5};`` (stratified) — deterministic md5-keyed sampling
@@ -598,17 +615,11 @@ class GQLite:
         across engines and re-runs)."""
         from .operators.sampling import (cluster_sample, hash_sample,
                                          stratified_sample)
-        graph = self._graph(stmt.graph)
-        grp = graph.group(stmt.group)
-        df = grp.to_df()
-        if df is None:
-            return StatementResult(status="QUERY SUCCESS", rows=[], df=None)
         if stmt.clusters is not None:
             # embedding-cluster-balanced: the quantizer is cached on the
             # Group (same discipline as {similar}'s IVF centroids —
             # invalidated by any mutation)
             from .operators.similarity import ivf_centroids
-            _check_vector_prop(df, stmt.group, stmt.on, "sample")
             cache_key = ("cluster", stmt.on, stmt.clusters)
             cents = grp._ann_cache.get(cache_key)
             if cents is None:
@@ -617,24 +628,17 @@ class GQLite:
                 grp._ann_cache[cache_key] = cents
             out = cluster_sample(df, cents, per_cluster=stmt.per,
                                  id_col="id", vec_col=stmt.on, metric="l2")
-            return StatementResult(
-                status="QUERY SUCCESS", df=out,
-                rows_fn=lambda out=out: [list(r) for r in out.collect()])
-        if stmt.rate is not None:
+        elif stmt.rate is not None:
             out = hash_sample(df, id_col="id", rate=stmt.rate,
                               salt=stmt.salt)
         else:
-            if stmt.by not in df.columns:
-                raise GQLiteError(
-                    f"group '{stmt.group}' has no property '{stmt.by}'")
             out = stratified_sample(df, stmt.by, stmt.rates, id_col="id",
                                     default_rate=stmt.default,
                                     salt=stmt.salt)
-        return StatementResult(
-            status="QUERY SUCCESS", df=out,
-            rows_fn=lambda out=out: [list(r) for r in out.collect()])
+        return _frame_result(out)
 
-    def _split(self, stmt: SplitStmt) -> StatementResult:
+    def _split(self, stmt: SplitStmt, grp: Group,
+               df: DataFrame) -> StatementResult:
         """``{split: 'docs', in: 'g', by: 'source', weights:
         {train: 0.8, val: 0.1, test: 0.1}, salt: 'v1'};`` —
         deterministic leakage-safe split assignment as an engine
@@ -645,25 +649,13 @@ class GQLite:
         the safe form is one property name away).  Pure map, zero
         shuffle, engine/re-run stable."""
         from .operators.sampling import split_assign
-        graph = self._graph(stmt.graph)
-        grp = graph.group(stmt.group)
-        df = grp.to_df()
-        if df is None:
-            return StatementResult(status="QUERY SUCCESS", rows=[],
-                                   df=None)
-        key = stmt.by if stmt.by is not None else "id"
-        if key not in df.columns:
-            raise GQLiteError(
-                f"group '{stmt.group}' has no property '{key}'")
         splits = (tuple(stmt.weights.items()) if stmt.weights
                   else (("train", 0.8), ("val", 0.1), ("test", 0.1)))
-        out = split_assign(df, splits=splits, key_col=key,
-                           salt=stmt.salt)
-        return StatementResult(
-            status="QUERY SUCCESS", df=out,
-            rows_fn=lambda out=out: [list(r) for r in out.collect()])
+        return _frame_result(split_assign(df, splits=splits,
+                                          key_col=stmt.by, salt=stmt.salt))
 
-    def _budget(self, stmt: BudgetStmt) -> StatementResult:
+    def _budget(self, stmt: BudgetStmt, grp: Group,
+                df: DataFrame) -> StatementResult:
         """``{budget: 'docs', in: 'g', tokens: 100000};`` — the best
         rows (by ``by:``, default quality) whose ``on:`` (default
         n_tokens) sum fits the token budget
@@ -676,77 +668,41 @@ class GQLite:
         directly on a raw document group."""
         from .operators.sampling import select_token_budget
         from .operators.text import quality_exprs
-        graph = self._graph(stmt.graph)
-        grp = graph.group(stmt.group)
-        df = grp.to_df()
-        if df is None:
-            return StatementResult(status="QUERY SUCCESS", rows=[],
-                                   df=None)
-        derivable = ("quality", "n_tokens")
         missing = [c for c in (stmt.by, stmt.on) if c not in df.columns]
         if missing:
-            underivable = [c for c in missing if c not in derivable]
-            if underivable or "text" not in df.columns:
-                raise GQLiteError(
-                    f"group '{stmt.group}' has no property "
-                    f"'{missing[0]}'")
             e = quality_exprs(F.coalesce(F.col("text"), F.lit("")))
             for c in missing:
                 df = df.withColumn(c, e[c])
-        out = select_token_budget(df, stmt.tokens, order_col=stmt.by,
-                                  token_col=stmt.on, id_col="id")
-        return StatementResult(
-            status="QUERY SUCCESS", df=out,
-            rows_fn=lambda out=out: [list(r) for r in out.collect()])
+        return _frame_result(select_token_budget(
+            df, stmt.tokens, order_col=stmt.by, token_col=stmt.on,
+            id_col="id"))
 
-    def _retrieve(self, stmt: RetrieveStmt) -> StatementResult:
+    def _retrieve(self, stmt: RetrieveStmt, grp: Group, df: DataFrame,
+                  vdf: Optional[DataFrame] = None) -> StatementResult:
         """``{retrieve: 'docs', in: 'g', terms: ['spark', 'dup'],
         top: 20};`` — BM25 top-k lexical retrieval as an engine
         statement (operators/text.bm25_topk): the sparse complement of
         ``{similar:}``'s dense vector search, same statement shape
         (group + ranking params in, ranked rows out).  Result rows:
         (rank, id, n_terms, score_e6)."""
-        from pyspark.sql import types as T
-
-        from .operators.text import bm25_topk
-        graph = self._graph(stmt.graph)
-        grp = graph.group(stmt.group)
-        df = grp.to_df()
-        if df is None:
-            return StatementResult(status="QUERY SUCCESS", rows=[],
-                                   df=None)
-        if stmt.on not in df.columns:
-            raise GQLiteError(
-                f"group '{stmt.group}' has no property '{stmt.on}'")
-        if not isinstance(df.schema[stmt.on].dataType, T.StringType):
-            raise GQLiteError(
-                f"retrieve: property '{stmt.on}' is "
-                f"{df.schema[stmt.on].dataType.simpleString()}, "
-                "not a string")
-        if stmt.near is not None:
+        if vdf is not None:
             # hybrid: dense cosine leg over the vectors group, fused
             # with the BM25 leg by reciprocal rank (similarity.
             # hybrid_topk); the two groups align on their keys
             from .operators.similarity import hybrid_topk
-            vgrp = graph.group(stmt.vectors)
-            vdf = vgrp.to_df()
-            if vdf is None:
-                return StatementResult(status="QUERY SUCCESS", rows=[],
-                                       df=None)
-            _check_vector_prop(vdf, stmt.vectors, stmt.von, "retrieve")
             out = hybrid_topk(df, vdf, stmt.near, stmt.terms,
                               k=stmt.top, k_each=max(stmt.top, 20),
                               c=stmt.fuse, doc_id_col="id",
                               text_col=stmt.on, vec_id_col="id",
                               vec_col=stmt.von, k1=stmt.k1, b=stmt.b)
         else:
+            from .operators.text import bm25_topk
             out = bm25_topk(df, stmt.terms, k=stmt.top, k1=stmt.k1,
                             b=stmt.b, id_col="id", text_col=stmt.on)
-        return StatementResult(
-            status="QUERY SUCCESS", df=out,
-            rows_fn=lambda out=out: [list(r) for r in out.collect()])
+        return _frame_result(out)
 
-    def _vindex(self, stmt: VIndexStmt) -> StatementResult:
+    def _vindex(self, stmt: VIndexStmt, grp: Group,
+                df: DataFrame) -> StatementResult:
         """``{vindex: 'vecs', in: 'g', on: 'embedding',
         path: '/idx/vecs', nlist: 64};`` — build + attach a
         MATERIALIZED l2 IVF vector index for the group's array
@@ -759,12 +715,6 @@ class GQLite:
         instead — Group.build_ivfpq_index, served by the ADC route.
         Result row: (nlist, n_vectors), nlist the fitted one (at most
         n_vectors; rows without a vector are skipped)."""
-        graph = self._graph(stmt.graph)
-        grp = graph.group(stmt.group)
-        df = grp.to_df()
-        if df is None:
-            return StatementResult(status="QUERY SUCCESS", rows=[], df=None)
-        _check_vector_prop(df, stmt.group, stmt.on, "vindex")
         if stmt.attach:
             # attach-only: re-wire an EXISTING persisted index (fresh
             # session — no rebuild; kind discovered from the sidecar,
@@ -776,9 +726,7 @@ class GQLite:
             rec = grp.attach_index(stmt.on, stmt.path,
                                    dim=row[0]["_d"] if row else None)
             nlist = int(rec.params.get("nlist") or 0)
-            return StatementResult(status="QUERY SUCCESS",
-                                   rows=[["attach_" + rec.kind, nlist]],
-                                   value=nlist)
+            return _row_result(["attach_" + rec.kind, nlist], nlist)
         if stmt.compact:
             # fold the OLTP overlay into the existing index in place —
             # rewrites only the affected list partitions.  Re-attaches
@@ -794,21 +742,18 @@ class GQLite:
                     f"vindex: index for '{stmt.on}' is attached at "
                     f"'{rec.path}', not '{stmt.path}'")
             rep = grp.compact_into_index(stmt.on)
-            return StatementResult(
-                status="QUERY SUCCESS",
-                rows=[[rep["lists_rewritten"], rep["rows_added"]]],
-                value=rep["rows_added"])
+            return _row_result(
+                [rep["lists_rewritten"], rep["rows_added"]], rep["rows_added"])
         n_vecs = df.filter(F.col(stmt.on).isNotNull()).count()
         # pq: true builds the IVFPQ form: codes-only inverted lists
         # (~dim·4/m smaller) the routed $near serves via ADC + re-rank
         nlist = grp._build_index(stmt.on, stmt.path,
                                  "ivfpq" if stmt.pq else "ivf", stmt.nlist,
                                  n_vecs, stmt.refine, stmt.m, stmt.ksub)
-        return StatementResult(
-            status="QUERY SUCCESS",
-            rows=[[nlist, n_vecs]], value=nlist)
+        return _row_result([nlist, n_vecs], nlist)
 
-    def _shards(self, stmt: ShardsStmt) -> StatementResult:
+    def _shards(self, stmt: ShardsStmt, grp: Group,
+                df: DataFrame) -> StatementResult:
         """``{shards: 'docs', in: 'g', path: '/data/ep1', n: 64,
         salt: 'ep1'};`` — deterministic epoch-shard export
         (operators/sampling.py::write_training_shards: md5 shard
@@ -818,16 +763,8 @@ class GQLite:
         report aggregates the PRE-write lineage (map-side partials),
         never re-reading the written export (VERDICT r6 wrong #2)."""
         from .operators.sampling import write_training_shards
-        graph = self._graph(stmt.graph)
-        grp = graph.group(stmt.group)
-        df = grp.to_df()
-        if df is None:
-            return StatementResult(status="QUERY SUCCESS", rows=[], df=None)
-        out = write_training_shards(df, stmt.path, n_shards=stmt.n,
-                                    id_col="id", salt=stmt.salt)
-        return StatementResult(
-            status="QUERY SUCCESS", df=out,
-            rows_fn=lambda out=out: [list(r) for r in out.collect()])
+        return _frame_result(write_training_shards(
+            df, stmt.path, n_shards=stmt.n, id_col="id", salt=stmt.salt))
 
     def _layout(self, stmt: LayoutStmt) -> StatementResult:
         """``{layout: 'docs', in: 'g', path: '/data/docs',
@@ -840,9 +777,11 @@ class GQLite:
         ``attach: true`` points the group's own query path at the copy
         (Group.attach_layout — scans skip files / point lookups prune
         buckets from then on); alone it attaches an EXISTING layout.
-        Result row: (kind, path, n_rows)."""
-        graph = self._graph(stmt.graph)
-        grp = graph.group(stmt.group)
+        Result row: (kind, path, n_rows).  The export runs behind the
+        group-frame step; attach-only and compact read no frame."""
+        if stmt.by is not None or stmt.bucket_by is not None:
+            return self._on_frame(stmt, GQLite._layout_export)
+        grp = self._graph(stmt.graph).group(stmt.group)
         if stmt.compact:
             # fold the local overlay into the attached layout copy —
             # new ids route into their hash bucket / sorted batch,
@@ -855,36 +794,26 @@ class GQLite:
                     f"attached at '{grp._layout_attach['path']}', not "
                     f"'{stmt.path}'")
             if grp._layout_attach is None:
-                try:
-                    grp.attach_layout(stmt.path)
-                except GQLiteError:
-                    raise
-                except Exception as e:
-                    raise GQLiteError(f"layout compact: {e}") from e
+                self._attach_layout(grp, stmt.path, "layout compact")
             rep = grp.compact_into_layout()
-            return StatementResult(
-                status="QUERY SUCCESS",
-                rows=[[rep["rows_folded"], rep["rows_kept"]]],
-                value=rep["rows_folded"])
-        if stmt.attach and stmt.by is None and stmt.bucket_by is None:
-            # attach-only: no export — wire an existing layout copy in
-            try:
-                kind = grp.attach_layout(stmt.path)
-            except GQLiteError:
-                raise
-            except Exception as e:
-                raise GQLiteError(f"layout attach: {e}") from e
-            return StatementResult(
-                status="QUERY SUCCESS",
-                rows=[[f"attach_{kind}", stmt.path, grp.row_count()]],
-                value=grp.row_count())
-        df = grp.to_df()
-        if df is None:
-            return StatementResult(status="QUERY SUCCESS", rows=[], df=None)
-        for c in (stmt.by or [stmt.bucket_by]):
-            if c not in df.columns:
-                raise GQLiteError(
-                    f"layout: group '{stmt.group}' has no property '{c}'")
+            return _row_result([rep["rows_folded"], rep["rows_kept"]],
+                               rep["rows_folded"])
+        # attach-only: no export — wire an existing layout copy in
+        kind = self._attach_layout(grp, stmt.path, "layout attach")
+        n = grp.row_count()
+        return _row_result([f"attach_{kind}", stmt.path, n], n)
+
+    @staticmethod
+    def _attach_layout(grp: Group, path: str, verb: str) -> str:
+        try:
+            return grp.attach_layout(path)
+        except GQLiteError:
+            raise
+        except Exception as e:
+            raise GQLiteError(f"{verb}: {e}") from e
+
+    def _layout_export(self, stmt: LayoutStmt, grp: Group,
+                       df: DataFrame) -> StatementResult:
         if stmt.by is not None:
             from .sources.clustered import save_clustered
             try:
@@ -903,10 +832,10 @@ class GQLite:
         n = self.spark.read.parquet(stmt.path).count()
         if stmt.attach:
             kind = "attach_" + grp.attach_layout(stmt.path)
-        return StatementResult(status="QUERY SUCCESS",
-                               rows=[[kind, stmt.path, n]], value=n)
+        return _row_result([kind, stmt.path, n], n)
 
-    def _rollup(self, stmt: RollupStmt) -> StatementResult:
+    def _rollup(self, stmt: RollupStmt, grp: Group,
+                df: DataFrame) -> StatementResult:
         """``{rollup: 'evts', in: 'g', path: '/data/ru', ts: 'ts',
         every: 3600, by: ['event_type'], metrics: {value: ['sum']}};``
         — build the incremental time-bucket rollup of the group
@@ -917,11 +846,6 @@ class GQLite:
         scanned once, every later batch touches only itself plus the
         bucket table.  Result row: (kind, path, n_buckets)."""
         from .operators.rollup import append_rollup, save_rollup
-        graph = self._graph(stmt.graph)
-        grp = graph.group(stmt.group)
-        df = grp.to_df()
-        if df is None:
-            return StatementResult(status="QUERY SUCCESS", rows=[], df=None)
         if stmt.append:
             try:
                 append_rollup(df, stmt.path)
@@ -929,14 +853,6 @@ class GQLite:
                 raise GQLiteError(f"rollup append: {e}") from e
             kind = "rollup_append"
         else:
-            cols = [stmt.ts] + list(stmt.by or []) \
-                + list((stmt.metrics or {}).keys()) \
-                + list((stmt.hist or {}).keys()) \
-                + list((stmt.cms or {}).keys())
-            for c in cols:
-                if c not in df.columns:
-                    raise GQLiteError(f"rollup: group '{stmt.group}' "
-                                      f"has no property '{c}'")
             try:
                 save_rollup(df, stmt.path, stmt.ts, stmt.every,
                             dims=stmt.by, metrics=stmt.metrics,
@@ -946,8 +862,7 @@ class GQLite:
                 raise GQLiteError(f"rollup: {e}") from e
             kind = "rollup"
         n = self.spark.read.parquet(stmt.path).count()
-        return StatementResult(status="QUERY SUCCESS",
-                               rows=[[kind, stmt.path, n]], value=n)
+        return _row_result([kind, stmt.path, n], n)
 
     def _infer_hmm(self, stmt: InferStmt) -> StatementResult:
         """``{query: hidden, event: [...], where: [[hidden.v1, {->: w},
@@ -1071,6 +986,7 @@ class GQLite:
         else:
             raise GQLiteError(f"import: unsupported file type {path!r}")
         return StatementResult(status="EXECUTE COMMAND SUCCESS")
+
 
     # ------------------------------------------------------------- helpers
     def _graph(self, name: Optional[str]) -> Graph:
@@ -1209,7 +1125,7 @@ class GQLite:
         grp = graph.group(group_name)
         df = grp.to_df()
         if df is None:
-            return StatementResult(status="QUERY SUCCESS", rows=[], df=None)
+            return _empty()
 
         if isinstance(stmt.where, WalkPattern):
             return self._query_pattern(graph, grp, stmt.where)
@@ -1219,23 +1135,12 @@ class GQLite:
         if cond is not None:
             df = df.filter(cond)
         if comp.knn:
-            df = self._apply_knn_routed(grp, df, comp.knn,
-                                        pure_knn=comp.n_plain == 0)
-            return StatementResult(
-                status="QUERY SUCCESS", df=df,
-                rows_fn=lambda df=df, grp=grp: self._beautify_vertices(df, grp))
+            return _group_result(self._apply_knn_routed(
+                grp, df, comp.knn, pure_knn=comp.n_plain == 0), grp)
         if projection:
             cols = (["src", "dst", "direction"] if grp.meta.is_edge else ["id"])
             df = df.select(*cols, *[p for p in projection if p in df.columns])
-        # key-ordered output is a golden-format concern only: the sort (a
-        # full exchange at scale) happens lazily inside rows_fn; DataFrame
-        # consumers (query_df) get the unsorted, shuffle-free plan
-        beaut = (self._beautify_edges if grp.meta.is_edge
-                 else self._beautify_vertices)
-        order = order_for_group(grp.meta)
-        return StatementResult(
-            status="QUERY SUCCESS", df=df,
-            rows_fn=lambda df=df, grp=grp, b=beaut, o=order: b(df.orderBy(*o), grp))
+        return _group_result(df, grp, ordered=True)
 
     def _apply_knn_routed(self, grp, df: DataFrame, knn: dict,
                           pure_knn: bool = True) -> DataFrame:
@@ -1473,9 +1378,7 @@ class GQLite:
             df = grp.to_df()
             if df is None:
                 continue
-            df = df.orderBy(*order_for_group(grp.meta))
-            rows += (self._beautify_edges(df, grp) if grp.meta.is_edge
-                     else self._beautify_vertices(df, grp))
+            rows += _beautify(df.orderBy(*order_for_group(grp.meta)), grp)
         return StatementResult(status="QUERY SUCCESS", rows=rows)
 
     def _query_pattern(self, graph: Graph, grp: Group,
@@ -1488,10 +1391,8 @@ class GQLite:
                 raise GQLiteError("edge pattern requires an edge group")
             out = df.filter(pattern_filter(pattern, grp.meta))
             out = self._apply_endpoint_conds(graph, grp, pattern, out)
-            out = out.orderBy(*order_for_group(grp.meta))
-            return StatementResult(
-                status="QUERY SUCCESS", df=out,
-                rows_fn=lambda o=out, g=grp: self._beautify_edges(o, g))
+            return _group_result(out.orderBy(*order_for_group(grp.meta)),
+                                 grp)
         # multi-hop walk: iterated self-join (reference intent, stub at
         # ScanPlan.cpp:225-226) — see operators/patterns.py.  Property-
         # condition nodes at ANY hop (gql.y:886-905 a_link_condition)
@@ -1572,31 +1473,23 @@ class GQLite:
         include/walk/AStarWalk.h — here a Pregel-style DataFrame iteration)."""
         from .operators.graph_algos import shortest_path
         conn = pattern.conns[0]
-        src = pattern.nodes[0].key
-        dst = pattern.nodes[-1].key
-        weight = None
-        if conn.agg and conn.agg.args:
-            weight = conn.agg.args[0]
+        src, dst = pattern.nodes[0].key, pattern.nodes[-1].key
+        weight = conn.agg.args[0] if conn.agg and conn.agg.args else None
         direction = conn.direction
         edges = grp.to_df()
         if direction == "<-":
             src, dst = dst, src
-
-        def _side(val, kt):
-            if kt == "integer":
-                return int(val)
-            if kt == "string":
-                return str(val)
-            return val
-        src = _side(src, grp.meta.src_key_type)
-        dst = _side(dst, grp.meta.dst_key_type)
+        # each literal key takes its endpoint side's key type
+        as_key = {"integer": int, "string": str}
+        src = as_key.get(grp.meta.src_key_type, lambda v: v)(src)
+        dst = as_key.get(grp.meta.dst_key_type, lambda v: v)(dst)
         undirected = direction == "--" or (
             edges is not None and "direction" in edges.columns and
             edges.filter(F.col("direction") == "--").limit(1).count() > 0)
         res = shortest_path(edges, src, dst, weight_col=weight,
                             undirected=undirected)
         if res is None:
-            return StatementResult(status="QUERY SUCCESS", rows=[])
+            return _empty()
         cost, path = res
         cost_s = beautify._fmt_double(cost) if weight else str(int(cost))
         return StatementResult(status="QUERY SUCCESS",
@@ -1613,46 +1506,22 @@ class GQLite:
         edge_dfs = [g.to_df() for g in graph.groups.values()
                     if g.meta.is_edge and g.to_df() is not None]
         if not edge_dfs:
-            return StatementResult(status="QUERY SUCCESS", rows=[])
+            return _empty()
         # groups may have heterogeneous key types (string tag ↔ int file id);
         # normalize endpoints to string for the traversal union
-        import functools as _ft
         norm = [d.select(F.col("src").cast("string").alias("src"),
                          F.col("dst").cast("string").alias("dst"),
                          "direction") for d in edge_dfs]
-        edges = _ft.reduce(lambda a, b: a.unionByName(b), norm)
+        edges = functools.reduce(lambda a, b: a.unionByName(b), norm)
         # the start key may live in ANY group (it's a graph-wide walk
         # origin) — normalized to string like the traversal edges
         reached = k_hop(edges, str(start), int(spec["hops"]),
                         direction=spec.get("direction", "--"))
         df = grp.to_df()
-        out = (df.join(reached.withColumnRenamed("id", "_rid"),
-                       df["id"].cast("string") == F.col("_rid"), "left_semi")
-               .orderBy(*order_for_group(grp.meta)))
-        return StatementResult(
-            status="QUERY SUCCESS", df=out,
-            rows_fn=lambda o=out, g=grp: self._beautify_vertices(o, g))
-
-    # ----------------------------------------------------------- beautify
-    def _beautify_vertices(self, df: DataFrame, grp: Group) -> list[str]:
-        prop_cols = [c for c in df.columns if c != "id"]
-        out = []
-        for r in df.collect():
-            d = r.asDict()
-            props = {k: d[k] for k in prop_cols if d.get(k) is not None}
-            out.append(beautify.vertex_row(d["id"], props, grp.meta))
-        return out
-
-    def _beautify_edges(self, df: DataFrame, grp: Group) -> list[str]:
-        prop_cols = [c for c in df.columns
-                     if c not in ("src", "dst", "direction")]
-        out = []
-        for r in df.collect():
-            d = r.asDict()
-            props = {k: d[k] for k in prop_cols if d.get(k) is not None}
-            out.append(beautify.edge_row(d["src"], d["direction"], d["dst"],
-                                         props, grp.meta))
-        return out
+        return _group_result(
+            df.join(reached.withColumnRenamed("id", "_rid"),
+                    df["id"].cast("string") == F.col("_rid"), "left_semi")
+            .orderBy(*order_for_group(grp.meta)), grp)
 
     # ---------------------------------------------------------------- dump
     def dump(self, graph_name: str) -> str:
@@ -1672,59 +1541,66 @@ class GQLite:
                        if m.indexes else "")
                 parts.append(f"{{{name}: [{dp}]{idx}}}")
         lines = [f"{{create: '{graph_name}', group: [" + ",".join(parts) + "]};"]
-        for name in sorted(g.groups):
-            grp = g.groups[name]
-            if grp.meta.is_edge:
-                continue
-            df = grp.to_df()
-            if df is None:
-                continue
-            for r in df.orderBy("id").collect():
-                d = r.asDict()
-                props = {k: v for k, v in d.items() if k != "id" and v is not None}
-                key = d["id"] if grp.meta.key_type == "integer" else f"'{d['id']}'"
-                if props:
-                    pj = _dump_props(props, grp.meta)
-                    lines.append(f"{{upset: '{name}', vertex: [{key}, {pj}]}};")
-                else:
-                    lines.append(f"{{upset: '{name}', vertex: [{key}]}};")
-        for name in sorted(g.groups):
-            grp = g.groups[name]
-            if not grp.meta.is_edge:
-                continue
-            df = grp.to_df()
-            if df is None:
-                continue
-            for r in df.orderBy("src", "dst").collect():
-                d = r.asDict()
-                props = {k: v for k, v in d.items()
-                         if k not in ("src", "dst", "direction") and v is not None}
-                sk = d["src"] if isinstance(d["src"], int) else f"'{d['src']}'"
-                dk = d["dst"] if isinstance(d["dst"], int) else f"'{d['dst']}'"
-                arrow = d["direction"]
-                if props:
-                    pj = _dump_props(props, grp.meta)
-                    lines.append(f"{{upset: '{name}', edge: [{sk}, {arrow}: {pj}, {dk}]}};")
-                else:
-                    lines.append(f"{{upset: '{name}', edge: [{sk}, {arrow}, {dk}]}};")
+        # vertex groups first: every edge's endpoints exist on replay
+        for is_edge in (False, True):
+            for name in sorted(g.groups):
+                grp = g.groups[name]
+                df = grp.to_df() if grp.meta.is_edge == is_edge else None
+                if df is None:
+                    continue
+                keys = ("src", "dst", "direction") if is_edge else ("id",)
+                for r in df.orderBy(*keys[:2]).collect():
+                    d = r.asDict()
+                    props = {k: v for k, v in d.items()
+                             if k not in keys and v is not None}
+                    pj = _dump_props(props, grp.meta) if props else None
+                    if is_edge:
+                        sk, dk = (v if isinstance(v, int) else f"'{v}'"
+                                  for v in (d["src"], d["dst"]))
+                        arrow = d["direction"] + (f": {pj}" if pj else "")
+                        body = f"edge: [{sk}, {arrow}, {dk}]"
+                    else:
+                        key = (d["id"] if grp.meta.key_type == "integer"
+                               else f"'{d['id']}'")
+                        body = (f"vertex: [{key}, {pj}]" if pj
+                                else f"vertex: [{key}]")
+                    lines.append(f"{{upset: '{name}', {body}}};")
         return "\n".join(lines)
 
 
-def _check_vector_prop(df: DataFrame, group: str, prop: str,
-                       verb: str) -> None:
-    """The vector statements' one property check: ``group``'s frame
-    ``df`` must hold ``prop`` as an array of numbers; ``verb`` prefixes
-    the type error."""
-    from pyspark.sql import types as T
-    if prop not in df.columns:
-        raise GQLiteError(f"group '{group}' has no property '{prop}'")
-    dtype = df.schema[prop].dataType
-    if not (isinstance(dtype, T.ArrayType)
-            and isinstance(dtype.elementType,
-                           (T.DoubleType, T.FloatType, T.IntegerType,
-                            T.LongType, T.ShortType))):
-        raise GQLiteError(f"{verb}: property '{prop}' is "
-                          f"{dtype.simpleString()}, not a numeric vector")
+# statement class -> handler(engine, stmt); exact-type lookup, since no
+# statement class subclasses another
+_HANDLERS = {
+    CreateStmt: GQLite._create,
+    UpsetVertexStmt: GQLite._upsert_vertex,
+    UpsetEdgeStmt: GQLite._upsert_edge,
+    UpsetPropertyStmt: GQLite._upsert_property,
+    QueryStmt: GQLite._query,
+    RemoveVertexStmt: GQLite._remove_vertex,
+    RemoveEdgeStmt: GQLite._remove_edge,
+    DropStmt: GQLite._drop,
+    DumpStmt: GQLite._dump,
+    ShowGraphStmt: GQLite._show,
+    UseGraphStmt: GQLite._use,
+    AstStmt: GQLite._ast,
+    ProfileStmt: GQLite._profile,
+    ImportStmt: GQLite._import,
+    InferStmt: GQLite._infer_hmm,
+    TopcountStmt: GQLite._topcount,
+    QuantilesStmt: GQLite._quantiles,
+    ReadRollupStmt: GQLite._read_rollup,
+    LayoutStmt: GQLite._layout,
+    # the pipeline statements, behind the group-frame step
+    **{cls: functools.partial(GQLite._on_frame, handler=handler)
+       for cls, handler in (
+           (CurateStmt, GQLite._curate), (DedupStmt, GQLite._dedup),
+           (SimilarStmt, GQLite._similar), (ChunkStmt, GQLite._chunk),
+           (FunnelStmt, GQLite._funnel), (CohortStmt, GQLite._cohort),
+           (SampleStmt, GQLite._sample), (SplitStmt, GQLite._split),
+           (BudgetStmt, GQLite._budget), (RetrieveStmt, GQLite._retrieve),
+           (VIndexStmt, GQLite._vindex), (ShardsStmt, GQLite._shards),
+           (RollupStmt, GQLite._rollup))},
+}
 
 
 def _norm_fs_path(p: str) -> str:

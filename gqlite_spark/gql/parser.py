@@ -588,12 +588,23 @@ def _value(stmt: str, key: str, v: Any, shape: str) -> Any:
     return conv(v) if conv else v
 
 
+def _key(cls: type, name: str) -> str:
+    return _KEY.get((cls, name)) or _KEY.get(name, name)
+
+
+def field_shapes(cls: type) -> dict:
+    """Each field of statement ``cls`` after its head -> the shape of the
+    field's key (``"name"``, ``"group"``, ...)."""
+    return {f.name: _SHAPE.get((cls, _key(cls, f.name)))
+            or _SHAPE[_key(cls, f.name)]
+            for f in dataclasses.fields(cls)[1:]}
+
+
 def _read(stmt: str, head: str, obj: dict, cls: type) -> Any:
     """Build ``cls`` from the statement object: every key checked, every
     absent key left to the dataclass default."""
     fields = dataclasses.fields(cls)
-    keys = [head] + [_KEY.get((cls, f.name)) or _KEY.get(f.name, f.name)
-                     for f in fields[1:]]
+    keys = [head] + [_key(cls, f.name) for f in fields[1:]]
     extra = sorted(set(obj) - set(keys))
     if extra:
         raise GQLParseError(f"{stmt}: unknown key(s) {', '.join(extra)}")
@@ -630,6 +641,9 @@ def _similar_rules(s: SimilarStmt, keys: set):
     if s.queries is not None:
         if s.to is not None:
             return "to and queries are mutually exclusive"
+        if s.method not in ("brute", "ivf"):
+            return (f"join form (queries:) supports method brute|ivf, got "
+                    f"'{s.method}'")
     elif s.to is None:
         return "to: a non-empty numeric vector (or queries:) is required"
     elif keys & {"nlist", "nprobe", "qon"}:

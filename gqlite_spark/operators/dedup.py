@@ -37,18 +37,6 @@ def _shingles_expr(text_col: str, n: int = 3):
         f" i -> substring({text_col}, i, {n}))"))
 
 
-def _word_shingles_expr(text_col: str, n: int = 3):
-    """Distinct word n-gram shingles.  On natural/word-level corpora these
-    are far more discriminative than character n-grams (char 3-grams of a
-    shared vocabulary collide across most documents).  A document of
-    fewer than ``n`` words is one whole-text shingle (a start index of
-    0 would make ``slice`` fail)."""
-    toks = f"split({text_col}, ' ')"
-    return F.array_distinct(F.expr(
-        f"transform(sequence(1, greatest(size({toks}) - {n - 1}, 1)),"
-        f" i -> concat_ws(' ', slice({toks}, i, {n})))"))
-
-
 def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
              n: int = 3, unit: str = "char") -> DataFrame:
     """(id, shingle) exploded distinct shingle table; unit ∈ {char, word}.

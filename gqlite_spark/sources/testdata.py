@@ -21,9 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]
-
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # epoch arithmetic on timestamp_ntz columns must be TZ-stable regardless
@@ -54,10 +51,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "these encodings")
         return df
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
 
 
 def graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -194,6 +194,29 @@ def test_gql_pipeline_errors(pdb):
     assert r.error and "not exist" in r.error
 
 
+@pytest.mark.parametrize("gql", [
+    "{similar: 'docs', in: 'wk', on: 'text', to: [1.0, 0.0], top: 1};",
+    "{dedup: 'docs', in: 'wk', method: 'embedding', on: 'text',"
+    " threshold: 0.5};",
+    "{chunk: 'docs', in: 'wk', on: 'emb', size: 4, overlap: 1};",
+])
+def test_wrong_kind_property_is_an_engine_error(db, gql):
+    """A property of the wrong kind (text where a vector is read, a vector
+    where text is read) is an ERROR result naming the property, and the
+    rest of the script still runs."""
+    res = db.exec(
+        "{create: 'wk', group: ['docs']};"
+        "{upset: 'docs', vertex: ["
+        " [1, {text: 'a b c d e f', emb: [1.0, 0.0], lang: 'en'}],"
+        " [2, {text: 'g h i j k l', emb: [0.0, 1.0], lang: 'de'}]]};"
+        + gql + "{query: 'docs', in: 'wk'};")
+    assert [r.error for r in res[:2]] == [None, None]
+    assert res[2].error and ("not a numeric vector" in res[2].error
+                             or "not a string" in res[2].error), \
+        res[2].error
+    assert res[3].error is None and len(res[3].rows) == 2
+
+
 def test_gql_pipeline_profile_and_ast(pdb):
     """The pipeline statements compose with the generic wrappers the same
     way query does."""

@@ -1,7 +1,8 @@
 """Parser tests that need no Spark.  Property-based (hypothesis):
 arbitrary values survive the upsert→parse round-trip, and arbitrary input
 never crashes the lexer/parser with anything but GQLParseError.  Statement
-keys: a misspelled key or a malformed flag is an error."""
+keys: a misspelled key or a malformed flag is an error.  Every statement
+the parser builds has one handler in the executor's statement table."""
 
 import string
 
@@ -399,3 +400,15 @@ def test_keys_are_checked_in_place():
         parse_one("{budget: 'd'};")
     with pytest.raises(GQLParseError, match="per do not apply to rate:"):
         parse_one("{sample: 'd', rate: 0.5, per: 2};")
+
+
+def test_every_statement_has_one_handler():
+    """Each ``*Stmt`` dataclass of gql/ast.py is a key of the executor's
+    statement table, and the table holds nothing else — a new statement
+    fails here, not in a user's script with ``unsupported statement``."""
+    from gqlite_spark import executor
+    from gqlite_spark.gql import ast as gast
+    stmts = {c for name, c in vars(gast).items()
+             if name.endswith("Stmt") and isinstance(c, type)}
+    assert set(executor._HANDLERS) == stmts
+    assert all(callable(h) for h in executor._HANDLERS.values())

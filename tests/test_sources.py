@@ -3,6 +3,9 @@ INSERT parsing (basketballplayer fixture format)."""
 
 import os
 
+FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                        "fixtures")
+
 
 def test_csv_vertices_and_edges(db, tmp_path):
     movies = tmp_path / "movies.csv"
@@ -51,7 +54,7 @@ def test_ngql_loader_basketballplayer(db):
 def test_import_dot_statement(db):
     """GQL `import '<path>.dot';` ingests the reference DOT corpus
     (gql.y:225-229 surface; stub in the reference)."""
-    res = db.exec("import '/root/reference/test/graphs/simple_g.dot';")
+    res = db.exec(f"import '{FIXTURES}/simple_g.dot';")
     assert res[0].error is None, res[0].error
     g = db.catalog.graph("G3_LOOP")
     assert set(g.groups["node"].rows) == {"A", "B", "C"}
@@ -61,7 +64,7 @@ def test_import_dot_statement(db):
 
 
 def test_import_dot_weights_and_shortest_path(db):
-    res = db.exec("import '/root/reference/test/graphs/bipartile_weight.dot';")
+    res = db.exec(f"import '{FIXTURES}/bipartile_weight.dot';")
     assert res[0].error is None, res[0].error
     g = db.catalog.graph("G")
     # [weight = N] attribute lists become integer edge properties
